@@ -2413,7 +2413,7 @@ final case class ManifestWriterFactory(schema: StructType,
             })
           else {
             val encs = partIdx.indices.map(j => encodeVal(r, j))
-            open.getOrElseUpdate(encs.mkString(" "), {
+            open.getOrElseUpdate(encs.mkString("\u0000"), {
               seq += 1
               val segs = partIdx.indices
                 .map(j => dirSeg(partColNames(j), r, j))

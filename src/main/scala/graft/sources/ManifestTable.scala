@@ -551,6 +551,34 @@ object ManifestTable {
         .parquet(files.map(f =>
           Paths.get(table).resolve(f).toString): _*).schema)
 
+  /** The cached merged schema of (table, version), if any. */
+  private[graft] def cachedSchema(table: String, version: Long)
+      : Option[org.apache.spark.sql.types.StructType] =
+    Option(schemaCache.get(
+      (Paths.get(table).toAbsolutePath.toString, version)))
+
+  /** Publish-time seed of [[schemaCache]], for a writer that read
+    * snapshot `latest` under its merged schema `schema`, dropped some
+    * of its files (`dropped`) and staged new ones whose written
+    * schemas are `staged`. Version `v` gets `schema` without a footer
+    * union when that IS the union by construction: the publish won
+    * `latest + 1`, so no rival file landed in between; every staged
+    * file was written with exactly `schema`'s fields; and one was
+    * staged, or none was dropped. The new snapshot's files are then
+    * a subset of `latest`'s, whose union is `schema`, plus files of
+    * `schema` — the same fields and types, so the next writer on the
+    * table skips the union job. */
+  private def seedSchema(table: String, latest: Long, v: Long,
+      schema: org.apache.spark.sql.types.StructType, dropped: Boolean,
+      staged: Seq[org.apache.spark.sql.types.StructType]): Unit = {
+    def fields(s: org.apache.spark.sql.types.StructType) =
+      s.fields.toSeq.map(f => (f.name, f.dataType, f.metadata))
+    if (v == latest + 1 && (staged.nonEmpty || !dropped) &&
+        staged.forall(s => fields(s) == fields(schema)))
+      schemaCache.putIfAbsent(
+        (Paths.get(table).toAbsolutePath.toString, v), schema)
+  }
+
   private def commitTimeOf(table: String, version: Long): Long =
     atCache.computeIfAbsent(
       (Paths.get(table).toAbsolutePath.toString, version),
@@ -639,20 +667,21 @@ object ManifestTable {
     * replays and restarted queries never double-append (the graded
     * proof: running the whole stream TWICE from fresh checkpoints
     * yields the same snapshot — without the tags every count would
-    * double). Blocks until the available data is processed. */
+    * double). Blocks until the available data is processed.
+    *
+    * Each micro-batch commits on the CALLER's session (`stream`'s),
+    * not the per-query clone Spark starts the stream on: executors
+    * keep one classloader per session UUID and the codegen cache is
+    * keyed by classloader, so on the clone every query would
+    * recompile the staging write's generated classes
+    * ([[graft.streaming.Incremental.foreachBatchOnOwner]]). */
   def streamCommit(stream: DataFrame, table: String,
-      checkpoint: String): Unit = {
-    val q = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+      checkpoint: String): Unit =
+    graft.streaming.Incremental.foreachBatchOnOwner(stream, checkpoint) {
+      (batch: DataFrame, id: Long) =>
         commitTagged(batch, table, append = true,
           tag = Some(s"batch-$id")); ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+    }.awaitTermination()
 
   /** Streaming UPSERT sink — the Delta "streaming MERGE" shape: each
     * micro-batch [[mergeByKey]]s into the table (matched keys
@@ -682,16 +711,24 @@ object ManifestTable {
     * streaming upsert needs most (every micro-batch is a small DML);
     * the nightly OPTIMIZE purges the accumulated vectors. Replay
     * convergence is unchanged: a DV'd position and a rewritten row
-    * read back identically, so the value-idempotence proof carries. */
+    * read back identically, so the value-idempotence proof carries.
+    *
+    * Each micro-batch merges on the CALLER's session (`stream`'s),
+    * not the clone Spark starts every streaming query on. The clone
+    * has a fresh session UUID, executors keep one classloader per
+    * session UUID, and the codegen cache is keyed by (classloader,
+    * code): on the clone each call recompiled all of the merge's
+    * generated classes (about 23 a merge) even when byte-identical
+    * to the previous call's, then ran them cold. On the caller's
+    * session a same-shape second call compiles none
+    * ([[graft.streaming.Incremental.foreachBatchOnOwner]]). */
   def streamMerge(stream: DataFrame, table: String, checkpoint: String,
       keyCol: String, orderCol: String,
       dvMaxFraction: Double = 0.0): Unit = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.{col, row_number, xxhash64}
-    val q = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    graft.streaming.Incremental.foreachBatchOnOwner(stream, checkpoint) {
+      (batch: DataFrame, _: Long) =>
         // row_number()=1 survives for every non-empty batch, so the
         // emptiness gate tests the BATCH (a limit-1 probe) instead of
         // paying the window; mergeByKeyDv checkpoints the surviving
@@ -711,10 +748,7 @@ object ManifestTable {
             dvMaxFraction, checkUnique = false)
         }
         ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }.awaitTermination()
   }
 
   /** [[commitWithStats]] over a single stats column — the common
@@ -1834,6 +1868,12 @@ object ManifestTable {
           ndvs = rwNdvs ++ insNdvs) ++
         carried ++ staged)
     }
+    // rewrites are written as the union of tableSchema's base rows
+    // and the batch, inserts as the batch: both carry exactly
+    // tableSchema when the batch's fields match it
+    seedSchema(table, latest, v, tableSchema, dropped = cowFiles.nonEmpty,
+      staged = if (rewrittenStaged.isEmpty && insertStaged.isEmpty) Nil
+        else Seq(up.schema))
     (v, cowFiles.size, dvFiles.size, after)
     } catch {
       case t: Throwable =>
@@ -2073,8 +2113,8 @@ object ManifestTable {
     val grpOf = multi.zipWithIndex.flatMap { case (grp, gi) =>
       grp.map(f => (f.split('/').last, gi))
     }
-    val src = spark.read
-      .schema(snapshotSchema(spark, table, latest, m0.files))
+    val srcSchema = snapshotSchema(spark, table, latest, m0.files)
+    val src = spark.read.schema(srcSchema)
       .parquet(multi.flatten.map(f => root.resolve(f).toString): _*)
     val dataCols = src.columns.toSeq
     require(!dataCols.contains("__grp") && !dataCols.contains("__base") &&
@@ -2093,7 +2133,11 @@ object ManifestTable {
     // flatten the partitioned staging layout into per-group dirs; a
     // group whose inputs were all empty wrote no partition — give it
     // an explicit empty file so its rows-preserving identity (and the
-    // snapshot's schema) survive
+    // snapshot's schema) survive. One task that writes several groups
+    // gives each group's file the SAME part name, and deletion vectors
+    // key on the basename, so every output takes its group's `g<gi>-`
+    // prefix: a later DV on one group's file must not mask rows of
+    // another group's.
     val staged: Seq[(Int, Seq[String])] = multi.indices.map { gi =>
       val pdir = stageRoot.resolve(s"__grp=$gi")
       val outDir = Paths.get(table, "data", s"c-$nonce-$gi")
@@ -2106,7 +2150,8 @@ object ManifestTable {
           st.iterator().asScala
             .map(_.getFileName.toString)
             .filter(n => n.endsWith(".parquet") && !n.startsWith("_"))
-            .foreach(n => Files.move(pdir.resolve(n), outDir.resolve(n)))
+            .foreach(n =>
+              Files.move(pdir.resolve(n), outDir.resolve(s"g$gi-$n")))
         }
       }
       gi -> Using.resource(Files.list(outDir)) { st =>
@@ -2250,6 +2295,10 @@ object ManifestTable {
       Right(cur.metaLinesFor(carried) ++ mergedMetaLines ++
         carried ++ stagedFiles)
     }
+    // every group's output is written from `src`, read under the
+    // snapshot's schema
+    seedSchema(table, latest, v, srcSchema, dropped = true,
+      staged = Seq(src.schema))
     (v, files.size, after)
   }
 

@@ -36,21 +36,45 @@ object Incremental {
     (results, newLedger)
   }
 
+  /** Start an AvailableNow `foreachBatch` query over `stream` whose
+    * micro-batches run on the stream's OWN session — the one helper
+    * every library `foreachBatch` sink starts through.
+    *
+    * Spark runs each streaming query on a clone of the session with
+    * a fresh session UUID, and executors keep one classloader per
+    * session UUID; the codegen cache is keyed by (classloader, code),
+    * so batch work issued on the clone recompiles every generated
+    * class once per query even when the code is byte-identical to the
+    * previous query's, and then runs it before the JIT has warmed it.
+    * Re-planning the batch under the owner session makes its classes
+    * compile once per session: on a streaming MERGE the second
+    * same-shape query compiles nothing. The batch's plan is the
+    * `LogicalRDD` the sink already built, so no row moves; the work
+    * inside runs under the owner session's configuration — the same
+    * as calling the batch operation directly (for instance with
+    * adaptive execution, which the clone turns off). */
+  private[graft] def foreachBatchOnOwner(stream: DataFrame,
+      checkpoint: String)(f: (DataFrame, Long) => Unit): StreamingQuery = {
+    val owner = stream.sparkSession
+    stream.writeStream
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        f(org.apache.spark.sql.classic.GraftDatasets.onSession(owner, batch),
+          id)
+      }
+      .start()
+  }
+
   /** Streaming variant: a file-source stream processed with the same
     * merge inside foreachBatch. Each micro-batch is exactly the batch
-    * incremental contract. */
+    * incremental contract, on `spark` ([[foreachBatchOnOwner]]). */
   def streamWithLedger(spark: SparkSession, sourceDir: String,
       schema: org.apache.spark.sql.types.StructType, keys: Seq[String],
       checkpoint: String)(
       processBatch: (DataFrame, Long) => Unit): StreamingQuery =
-    spark.readStream.schema(schema).parquet(sourceDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        processBatch(batch, id)
-      }
-      .start()
+    foreachBatchOnOwner(spark.readStream.schema(schema).parquet(sourceDir),
+      checkpoint)(processBatch)
 
   /** End-to-end exactly-once demonstration: stream `sourceFile`
     * (AvailableNow) into a parquet result table through a foreachBatch
@@ -72,31 +96,28 @@ object Incremental {
     java.nio.file.Files.copy(java.nio.file.Paths.get(sourceFile),
       srcDir.resolve("part-0.parquet"))
     def runOnce(): Unit = {
-      val q = spark.readStream.schema(schema).parquet(srcDir.toString)
-        .writeStream
-        .option("checkpointLocation", checkpoint)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // Probe for the path explicitly: only a genuinely absent
-          // result table may read as empty. Swallowing arbitrary read
-          // failures (corrupt files, IO errors) would silently rebuild
-          // the table — masking exactly the data-loss class this
-          // ingest exists to prevent.
-          val fs = new org.apache.hadoop.fs.Path(resultDir)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val existing =
-            if (fs.exists(new org.apache.hadoop.fs.Path(resultDir)))
-              spark.read.parquet(resultDir)
-            else spark.createDataFrame(
-              new java.util.ArrayList[org.apache.spark.sql.Row](),
-              batch.schema)
-          graft.sources.Sinks.atomicOverwrite(
-            graft.operators.Merge.insertIfAbsent(existing, batch, keys)
-              .localCheckpoint(), // cut lineage off the dir being replaced
-            resultDir)
-          ()
-        }
-        .start()
+      val q = foreachBatchOnOwner(
+          spark.readStream.schema(schema).parquet(srcDir.toString),
+          checkpoint) { (batch: DataFrame, _: Long) =>
+        // Probe for the path explicitly: only a genuinely absent
+        // result table may read as empty. Swallowing arbitrary read
+        // failures (corrupt files, IO errors) would silently rebuild
+        // the table — masking exactly the data-loss class this
+        // ingest exists to prevent.
+        val fs = new org.apache.hadoop.fs.Path(resultDir)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val existing =
+          if (fs.exists(new org.apache.hadoop.fs.Path(resultDir)))
+            spark.read.parquet(resultDir)
+          else spark.createDataFrame(
+            new java.util.ArrayList[org.apache.spark.sql.Row](),
+            batch.schema)
+        graft.sources.Sinks.atomicOverwrite(
+          graft.operators.Merge.insertIfAbsent(existing, batch, keys)
+            .localCheckpoint(), // cut lineage off the dir being replaced
+          resultDir)
+        ()
+      }
       q.awaitTermination()
     }
     runOnce()

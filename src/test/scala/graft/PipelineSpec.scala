@@ -1763,6 +1763,124 @@ class PipelineSpec extends SparkSpec {
       "the DV-budget stream merge must take the merge-on-read path")
   }
 
+  test("ManifestTable.streamMerge / streamCommit: a second same-shape " +
+      "query on one session compiles no generated class") {
+    import graft.sources.ManifestTable
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val work = java.nio.file.Files
+      .createTempDirectory("graft-stream-compiles").toString
+    val srcDir = java.nio.file.Paths.get(work, "src").toString
+    Seq((2L, "old", 1L), (2L, "new", 2L), (9L, "ins", 1L),
+        (40L, "upd", 1L))
+      .toDF("k", "v", "ver").coalesce(1).write.parquet(srcDir)
+    val schema = spark.read.parquet(srcDir).schema
+    def stream() = spark.readStream.schema(schema).parquet(srcDir)
+    // two identical seeded tables; the first query warms the session
+    val tables = Seq("a", "b").map { n =>
+      val t = s"$work/merge-$n"
+      ManifestTable.commitWithStats(
+        (1L to 60L).map(k => (k, "base", 0L)).toDF("k", "v", "ver")
+          .repartitionByRange(3, $"k"), t, append = false, "k")
+      t
+    }
+    val added = tables.map { t =>
+      val c0 = compiles()
+      ManifestTable.streamMerge(stream(), t, s"$t-ckpt", "k", "ver",
+        dvMaxFraction = 0.5)
+      compiles() - c0
+    }
+    assert(added(1) == 0L,
+      s"streamMerge compiles per query: $added (warm-up, second)")
+    assert(ManifestTable.read(spark, tables(1)).filter($"k" === 2L)
+      .select("v").as[String].collect().toSeq == Seq("new"))
+    val commits = Seq("a", "b").map { n =>
+      val c0 = compiles()
+      ManifestTable.streamCommit(stream(), s"$work/commit-$n",
+        s"$work/commit-$n-ckpt")
+      compiles() - c0
+    }
+    assert(commits(1) == 0L,
+      s"streamCommit compiles per query: $commits (warm-up, second)")
+    assert(ManifestTable.read(spark, s"$work/commit-b").count() == 4L)
+  }
+
+  test("ManifestTable: mergeByKeyDv and compact seed the published " +
+      "snapshot's schema with its footer union; a batch whose types " +
+      "differ from the table's seeds nothing") {
+    import graft.sources.ManifestTable
+    val table = java.nio.file.Files
+      .createTempDirectory("graft-schema-seed").toString
+    ManifestTable.commitWithStats(
+      (1L to 90L).map(k => (k, s"v$k")).toDF("k", "v")
+        .repartitionByRange(3, $"k"), table, append = false, "k")
+    def union(v: Long) = spark.read.option("mergeSchema", "true")
+      .parquet(ManifestTable.snapshotFor(table, Some(v)).files
+        .map(f => java.nio.file.Paths.get(table, f).toString): _*)
+      .schema
+    def seeded(v: Long): Unit = {
+      val s = ManifestTable.cachedSchema(table, v)
+      assert(s.contains(union(v)), s"v$v seeded $s, union ${union(v)}")
+    }
+    // merge-on-read (DVs + one insert file), then copy-on-write
+    val (v1, r1, d1, _) = ManifestTable.mergeByKeyDv(spark, table,
+      Seq((5L, "a"), (200L, "b")).toDF("k", "v"), "k", dvMaxFraction = 0.5)
+    assert((r1, d1) == ((0, 1)), ManifestTable.snapshotFor(table, None))
+    seeded(v1)
+    val (v2, r2, _, _) = ManifestTable.mergeByKeyDv(spark, table,
+      Seq((40L, "c"), (41L, "d")).toDF("k", "v"), "k", dvMaxFraction = 0.0)
+    assert(r2 >= 1)
+    seeded(v2)
+    val (v3, _, _) = ManifestTable.compact(spark, table, Long.MaxValue / 2)
+    assert(v3 == v2 + 1)
+    seeded(v3)
+    // an INT key against the BIGINT table: the insert file is staged
+    // with a different type, so the union is not the table's schema
+    val (v4, _, _, _) = ManifestTable.mergeByKeyDv(spark, table,
+      Seq((300, "e")).toDF("k", "v"), "k", dvMaxFraction = 0.5)
+    assert(ManifestTable.cachedSchema(table, v4).isEmpty)
+  }
+
+  test("ManifestTable.compact: outputs of groups one task wrote keep " +
+      "distinct basenames, so a DV merge after a multi-group OPTIMIZE " +
+      "masks rows of its own file only") {
+    import graft.sources.ManifestTable
+    val table = java.nio.file.Files
+      .createTempDirectory("graft-compact-groups").toString
+    val n = 4000L
+    val model = scala.collection.mutable.Map[Long, String]()
+    (0L until n).foreach(k => model(k) = s"base-$k-payload")
+    ManifestTable.commitWithStats(model.toSeq.toDF("k", "v")
+        .repartitionByRange(8, $"k").sortWithinPartitions("k"),
+      table, append = false, "k")
+    def merge(keys: Seq[Long], round: Int): Unit = {
+      keys.foreach(k => model(k) = s"r$round-$k")
+      ManifestTable.mergeByKeyDv(spark, table,
+        keys.map(k => (k, model(k))).toDF("k", "v"), "k",
+        dvMaxFraction = 0.5)
+    }
+    merge(Seq(3L, 700L, 1999L, 3500L, n), 1)
+    merge(Seq(4L, 1200L, 2600L, n + 1), 2)
+    val (_, _, after) = ManifestTable.compact(spark, table, 20000L)
+    val names = ManifestTable.snapshotFor(table, None).files
+      .map(_.split('/').last)
+    assert(after > 1 && names.distinct.size == names.size,
+      s"compact staged duplicate basenames: $names")
+    // one more merge, with keys in every compacted output
+    merge((0L until n by 250L).map(_ + 7L), 3)
+    val want = model.toMap
+    for (lo <- 0L until n + 2 by 500L) {
+      val hi = lo + 499L
+      val (df, _, _) = ManifestTable.readPruned(spark, table, "k", lo, hi)
+      val got = df.as[(Long, String)].collect().toSeq.sorted
+      val exp = want.toSeq.filter { case (k, _) => k >= lo && k <= hi }
+        .sorted
+      val bad = got.diff(exp) ++ exp.diff(got)
+      assert(bad.isEmpty, s"range [$lo, $hi] read ${got.size} rows, " +
+        s"the model has ${exp.size}; differing rows ${bad.take(10)}")
+    }
+  }
+
   test("graft-manifest DSv2 WRITE: a distributed append commits ONE " +
       "atomic version with streamed zone stats, bootstraps a fresh " +
       "table, round-trips values, and accepts evolving schemas") {
