@@ -22,7 +22,8 @@ package graft
   * representative per operator family, listed in BASELINE.md) at
   * millisecond precision, while `value` is the total over the FULL
   * inventory. The complete per-query map goes to stderr and to
-  * bench_full.json for local regression diffing.
+  * bench_full.json for local regression diffing; the file also lists
+  * every query that threw in any pass under `failed`.
   */
 object Bench {
 
@@ -126,11 +127,16 @@ object Bench {
         require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
         inventory0.filter(q => want.contains(q._1))
       }
+    // a query that throws still gets its time-to-failure (the stdout
+    // line keeps its shape) but is named in the artifact's `failed`
+    // list, so a fast failure never reads as a fast query
+    val failed = scala.collection.mutable.TreeSet.empty[String]
     val timesByPass = (1 to passes).map { pass =>
       inventory.map { case (name, fn) =>
         val t0 = System.nanoTime()
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         catch { case e: Throwable =>
+          failed += name
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
         }
         val dt = (System.nanoTime() - t0) / 1e9
@@ -201,8 +207,9 @@ object Bench {
         timesByPass.map(p => fmt(p.toMap.apply(name))).mkString(",") +
         "]"
     }.mkString("{", ",", "}")
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val fileJson = fullJson.dropRight(1) +
-      s""","pass_sec":$passJson}"""
+      s""","pass_sec":$passJson,"failed":$failedJson}"""
     if (args.isEmpty)
       try java.nio.file.Files.write(java.nio.file.Paths.get("bench_full.json"),
         (fileJson + "\n").getBytes("UTF-8"))

@@ -727,10 +727,11 @@ object Dedup {
       val lsMin = sym.groupBy("u").agg(min("v").as("mn"))
         .select(col("u"), least(col("mn"), col("u")).as("m"))
       // the ls checkpoint was A/B-measured against a no-checkpoint
-      // round (ProfStar, alternating in one JVM): warm passes are a
-      // wash (3.4-4.0 s both ways at sf0.1) — dropping it doubles the
-      // ss-plan's ls subtree (ReusedExchange absorbs most of it) and
-      // saves one block write, net zero; kept for block hygiene
+      // round (alternating in one JVM; OPTIMIZATION_r18.md §11): warm
+      // passes are a wash (3.4-4.0 s both ways at sf0.1) — dropping
+      // it doubles the ss-plan's ls subtree (ReusedExchange absorbs
+      // most of it) and saves one block write, net zero; kept for
+      // block hygiene
       val ls = sym.join(lsMin, Seq("u"))
         .filter(col("v") > col("u"))
         .select(col("m").as("a"), col("v").as("b"))

@@ -340,7 +340,8 @@ object Graph {
     // degrees make the threshold unreachable: min(deg_a, deg_b) *
     // (1000+minMilli) < minMilli*(deg_a+deg_b), i.e. a >10x degree
     // ratio at minMilli=100) was implemented and A/B-measured on the
-    // q_g_link_jaccard graph (ProfJac, alternating passes, one JVM):
+    // q_g_link_jaccard graph (alternating passes, one JVM;
+    // OPTIMIZATION_r18.md §1):
     // it keeps 100.0% of the 24.6M wedges — the capped co-occurrence
     // graph has no co-neighbor pair past the 10x band — and carrying
     // degrees through the wedge shuffle made the aggregate ~15%

@@ -105,7 +105,7 @@ object ManifestTable {
     * — the merge-on-read half of DML (Delta deletion vectors /
     * Iceberg v2 position deletes): a small DELETE or MERGE marks the
     * dead positions in the manifest instead of rewriting every
-    * zone-overlapping file, and readers anti-join the positions out.
+    * zone-overlapping file, and readers filter the positions out.
     * Rides as `#dv=path|p1,p2,...` comment lines — invisible to any
     * reader that skips comments, same trick as `#stats=`. Production
     * systems encode the positions as roaring bitmaps; a capped
@@ -551,6 +551,44 @@ object ManifestTable {
         .parquet(files.map(f =>
           Paths.get(table).resolve(f).toString): _*).schema)
 
+  /** The read schema Spark's own inference gives `files` without
+    * `mergeSchema`, computed on the driver with no Spark job. Spark
+    * sorts the leaves by qualified path and reads the first data
+    * file's footer (`ParquetUtils.splitFiles`, then
+    * `mergeSchemasInParallel` over that one file, which launches a
+    * job); this reads the same footer here and converts it with the
+    * same `readSchemaFromFooter` and a converter built from the same
+    * session settings, so the schema is exactly the inferred one
+    * while planning a read starts no job. */
+  private def footerSchema(spark: SparkSession, root: Path,
+      files: Seq[String]): org.apache.spark.sql.types.StructType = {
+    import org.apache.hadoop.fs.{Path => HPath}
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    require(files.nonEmpty,
+      s"no data files under $root to read a schema from")
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val paths = files.map(f => new HPath(root.resolve(f).toString))
+    val fs = paths.head.getFileSystem(hadoopConf)
+    val first = paths.map(fs.makeQualified).minBy(_.toString)
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromPath(first, hadoopConf),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    val conf = spark.sessionState.conf
+    val converter = new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = conf.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+      nanosAsLong = conf.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation =
+        conf.parquetReaderRespectUnknownTypeAnnotation)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(first, footer),
+      converter)
+  }
+
   /** The cached merged schema of (table, version), if any. */
   private[graft] def cachedSchema(table: String, version: Long)
       : Option[org.apache.spark.sql.types.StructType] =
@@ -797,9 +835,7 @@ object ManifestTable {
     val (wrapped, fetchMeta) = observeStats(df, statsCols)
     val fresh = stage(wrapped, table, nonce)
     val (freshStats, freshSStats, freshRows, freshNdvs) =
-      fetchMeta(fresh).getOrElse(
-        fileMeta(spark, Paths.get(table, "data", s"s-$nonce").toString,
-          s"data/s-$nonce", statsCols, fresh))
+      fetchMeta(fresh).getOrElse(fileMeta(spark, table, fresh, statsCols))
     publishLoop(table, nonce, "commitWithStats") { snapshot =>
       taggedIn(snapshot) match {
         case Some(v) => Left(v)
@@ -869,16 +905,6 @@ object ManifestTable {
         graft.expressions.LogHistAgg(children(0)))
   }
 
-  /** The per-file metadata pass shared by every stats-recording
-    * writer ([[commitWithStats]], [[deleteRange]]'s rewrite): ONE
-    * distributed aggregation over the just-written files computing
-    * min/max per stats column, the [[NdvSketch]] HLL registers, plus
-    * the exact row count, keyed by `_metadata.file_path`. Costs one
-    * scan of data that is already hot (just written); the row counts
-    * make [[countRows]] metadata-only. Integer/date/timestamp
-    * columns land in the int64 stats, strings in the hex byte-wise
-    * string stats; every stats column gets an `#ndv=` register
-    * sketch over its canonical encoding. */
   /** The (kinds, aggregate columns) of the stats pass over
     * `statsCols` — shared by the grouped per-file pass ([[fileMeta]])
     * and the in-write observed pass ([[observeStats]]). Layout:
@@ -987,34 +1013,45 @@ object ManifestTable {
     (wrapped, fetch)
   }
 
-  private def fileMeta(spark: SparkSession, dir: String,
-      prefix: String, statsCols: Seq[String],
-      expect: Seq[String] = Seq.empty)
+  /** The per-file metadata pass shared by every stats-recording
+    * writer whose write landed several files ([[commitWithStats]],
+    * the DELETE/MERGE rewrites, the OPTIMIZE variants): ONE
+    * distributed aggregation over exactly the staged `files` (paths
+    * relative to `table`) computing min/max per stats column, the
+    * [[NdvSketch]] HLL registers, plus the exact row count, keyed by
+    * `_metadata.file_name`. The file list is already known and the
+    * read schema comes from the first file's footer on the driver
+    * ([[footerSchema]]), so the pass lists no directory and starts no
+    * schema-inference job: one job, one scan of data that is already
+    * hot (just written). The row counts make [[countRows]]
+    * metadata-only. Integer/date/timestamp columns land in the int64
+    * stats, strings in the hex byte-wise string stats; every stats
+    * column gets an `#ndv=` register sketch over its canonical
+    * encoding. */
+  private def fileMeta(spark: SparkSession, table: String,
+      files: Seq[String], statsCols: Seq[String])
       : (Stats, SStats, Map[String, Long], Ndvs) = {
     import org.apache.spark.sql.functions.col
     ensureHllFunction(spark)
-    val df = spark.read.parquet(dir)
+    // the aggregation keys on the basename; two staged files sharing
+    // one would silently last-win each other's stats — fail loudly
+    // instead (writers stage UUID-named files, so this is an
+    // invariant check)
+    val pathOf = files.map(f => f.split('/').last -> f).toMap
+    require(pathOf.size == files.size,
+      s"fileMeta: basename collision across $files — per-file stats " +
+        "would be corrupted")
+    val root = Paths.get(table)
+    val df = scanOf(spark, root, files, footerSchema(spark, root, files))
     val (kinds, aggs) = statAggCols(df.schema, statsCols)
-    // group by the FULL path, not the basename: a partitioned staging
-    // write can give files in different group dirs the same part
-    // basename, and a basename key would silently merge their stats
     val rows = df
-      .groupBy(col("_metadata.file_path").as("__f"))
+      .groupBy(col("_metadata.file_name").as("__f"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
-    // perFile re-keys on basename below; two files with identical
-    // basenames in different subdirs would silently last-win each
-    // other's stats maps — fail loudly instead (current writers
-    // stage flat, UUID-named files, so this is an invariant check)
-    require(rows.map(_.getString(0).split('/').last).distinct.length
-        == rows.length,
-      s"fileMeta: basename collision across $dir — per-file stats " +
-        "would be corrupted")
     val perFile = rows.map { r =>
-      val name = r.getString(0).split('/').last
       val (longs, strs, n, regs) =
         decodeStatFields(kinds, nm => r.get(r.fieldIndex(nm)))
-      (s"$prefix/$name", longs, strs, n, regs)
+      (pathOf(r.getString(0)), longs, strs, n, regs)
     }
     val stats: Stats = perFile
       .collect { case (f, ls, _, _, _) if ls.nonEmpty => f -> ls }.toMap
@@ -1026,54 +1063,72 @@ object ManifestTable {
     // a zero-row part file produces no aggregation group but its
     // count IS exactly 0 — backfill so countRows stays exact-or-None
     (stats, sstats, counts ++
-      expect.filterNot(counts.contains).map(_ -> 0L).toMap, ndvs)
+      files.filterNot(counts.contains).map(_ -> 0L).toMap, ndvs)
   }
+
+  /** Scan `files` (paths relative to `root`) under an explicit read
+    * schema: planning the frame starts no footer-inference job. */
+  private def scanOf(spark: SparkSession, root: Path, files: Seq[String],
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.read.schema(schema)
+      .parquet(files.map(f => root.resolve(f).toString): _*)
 
   /** Append the per-file identity columns every DV operation keys on:
     * `__b` (file basename — staged part names carry task UUIDs, so
     * basenames are snapshot-unique) and `__p` (the physical row
     * position `_metadata.row_index`). Must be projected directly on
     * the file-source relation (the hidden `_metadata` column does not
-    * survive joins). */
+    * survive joins); [[maskDvs]]' row filter reads both, inside the
+    * scan's own stage. */
   private def withFilePos(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.col
     // _metadata.file_name IS the basename — the constant metadata
     // field costs nothing per row, where a regexp_extract over
-    // file_path measured ~5x the whole anti-join's runtime (it ran
-    // per row on the join's probe side)
+    // file_path measured ~5x the whole DV mask's runtime (it ran
+    // per row on the scan side)
     df.select(col("*"),
       col("_metadata.file_name").as("__b"),
       col("_metadata.row_index").as("__p"))
   }
 
-  /** Anti-join a snapshot's deletion vectors out of a frame carrying
+  /** Drop a snapshot's deletion vectors from a frame carrying
     * [[withFilePos]]'s (`__b`, `__p`) columns, restricted to `files`.
     * No-op (same frame back) when none of the files carry a DV. The
-    * DV table is manifest-metadata-sized and broadcast — at 100 TB
-    * the mask costs a broadcast-hash anti-join on the scan, never a
-    * shuffle of the data. */
+    * mask is a row filter evaluated in the scan's stage: one
+    * `SparkContext.broadcast` ships the DV'd files' sorted positions
+    * (manifest-metadata-sized; broadcasting starts no job), and a
+    * deterministic UDF binary-searches a row's position in its
+    * file's vector. The positions reach the generated code as a
+    * reference object, never as literals, so a read over a new DV
+    * set compiles nothing new; and unlike a broadcast anti-join
+    * there is no broadcast job and no stage boundary — at 100 TB the
+    * mask stays a per-row lookup on the scan, never a shuffle. */
   private def maskDvs(spark: SparkSession, df: DataFrame, dvs: Dvs,
       files: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.broadcast
-    val relevant = files.flatMap(f =>
-      dvs.get(f).filter(_.nonEmpty).map(f.split('/').last -> _))
+    import org.apache.spark.sql.functions.{col, udf}
+    val relevant = files.flatMap(f => dvs.get(f).filter(_.nonEmpty)
+      .map(ps => f.split('/').last -> ps.toArray))
     if (relevant.isEmpty) df
     else {
-      import spark.implicits._
-      val dvRows = relevant
-        .flatMap { case (b, ps) => ps.map(p => (b, p)) }
-        .toDF("__b", "__p")
-      df.join(broadcast(dvRows), Seq("__b", "__p"), "left_anti")
+      val dead = spark.sparkContext.broadcast(relevant.toMap)
+      val live = udf((b: String, p: Long) => dead.value.get(b)
+        .forall(ps => java.util.Arrays.binarySearch(ps, p) < 0))
+      df.filter(live(col("__b"), col("__p")))
     }
   }
 
-  /** [[withFilePos]] + [[maskDvs]] + drop the identity columns — the
-    * LIVE rows of the given files under the snapshot's DVs. */
+  /** The LIVE rows of `files` under the snapshot's DVs, scanned under
+    * `schema`: [[withFilePos]] + [[maskDvs]] + drop the identity
+    * columns, or the plain scan when no file carries a DV. Every
+    * Scala-API snapshot read ([[read]], [[readPrunedTyped]],
+    * [[readChanges]]) comes through here with its schema already
+    * known — [[footerSchema]] for Spark's first-file semantics,
+    * [[snapshotSchema]] for a footer union — so building the frame
+    * starts no Spark job and collecting it runs the scan as one. */
   private def readLive(spark: SparkSession, root: Path,
       files: Seq[String], dvs: Dvs,
-      mergeSchema: Boolean = false): DataFrame = {
-    val raw = spark.read.option("mergeSchema", mergeSchema.toString)
-      .parquet(files.map(f => root.resolve(f).toString): _*)
+      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    val raw = scanOf(spark, root, files, schema)
     if (!files.exists(f => dvs.get(f).exists(_.nonEmpty))) raw
     else maskDvs(spark, withFilePos(raw), dvs, files)
       .drop("__b", "__p")
@@ -1193,11 +1248,14 @@ object ManifestTable {
               StrStat.intersects(mn, mx, Some(lo), Some(hi)) }
       }
     }
+    // the schema Spark would infer from the files the scan reads
+    // (all of them when pruning kept none), read on the driver
     val root = Paths.get(table)
     val base =
-      if (kept.nonEmpty) readLive(spark, root, kept, dvs)
+      if (kept.nonEmpty)
+        readLive(spark, root, kept, dvs, footerSchema(spark, root, kept))
       else
-        spark.read.parquet(files.map(f => root.resolve(f).toString): _*)
+        scanOf(spark, root, files, footerSchema(spark, root, files))
           .filter(lit(false))
     val filtered = preds.foldLeft(base) { case (d, (c, lo, hi)) =>
       d.filter(col(c).between(lit(lo), lit(hi)))
@@ -1303,13 +1361,13 @@ object ManifestTable {
         // toVersion's DVs apply to the added files too: a row both
         // inserted and DV-deleted inside the window is not a change
         // the consumer should see
-        readLive(spark, root, added, toM.dvs)
+        readLive(spark, root, added, toM.dvs,
+          footerSchema(spark, root, added))
       else {
         require(toFiles.nonEmpty,
           s"snapshot v$to of $table lists no data files — an empty " +
             "diff has no schema to produce")
-        spark.read
-          .parquet(toFiles.map(f => root.resolve(f).toString): _*)
+        scanOf(spark, root, toFiles, footerSchema(spark, root, toFiles))
           .filter(lit(false))
       }
     (frame, added.size)
@@ -1359,11 +1417,11 @@ object ManifestTable {
     *
     * `dvMaxFraction = 0.0` is exactly classic [[deleteRange]]: pure
     * zone-level planning, no match scan, every candidate rewritten.
-    * Read-side cost of a DV: a broadcast anti-join on (file,
-    * position) during scans of that file, purged by the next
-    * [[compact]] of its group. [[countRows]] stays exact (live =
-    * physical − |dv|); [[statsBounds]] degrades to None while DVs
-    * are live (exact-or-None).
+    * Read-side cost of a DV: a per-row (file, position) lookup in a
+    * broadcast vector during scans of that file ([[maskDvs]]),
+    * purged by the next [[compact]] of its group. [[countRows]]
+    * stays exact (live = physical − |dv|); [[statsBounds]] degrades
+    * to None while DVs are live (exact-or-None).
     *
     * Concurrency: the [[compact]]/CoW conflict rules, PLUS abort if
     * a rival DV landed on any of our inputs between plan and publish
@@ -1423,9 +1481,7 @@ object ManifestTable {
     // dropping it)
     val tableSchema = snapshotSchema(spark, table, latest, m.files)
     def liveOf(files: Seq[String]): DataFrame =
-      maskDvs(spark, withFilePos(
-        spark.read.schema(tableSchema)
-          .parquet(files.map(f => root.resolve(f).toString): _*)),
+      maskDvs(spark, withFilePos(scanOf(spark, root, files, tableSchema)),
         m.dvs, files)
     // DV vs rewrite, per candidate: one counting scan of the
     // candidates (dv mode only — CoW mode keeps the pure zone-level
@@ -1507,8 +1563,7 @@ object ManifestTable {
       if (staged.isEmpty)
         (noStats, noSStats, Map.empty[String, Long], noNdvs)
       else stagedMetaObs.getOrElse(
-        fileMeta(spark, stageDir.toString, s"data/d-$nonce",
-          keepCols, staged))
+        fileMeta(spark, table, staged, keepCols))
     val cowSet = cowFiles.toSet
     val inputSet = cowSet ++ dvFiles
     var after = 0
@@ -1527,8 +1582,7 @@ object ManifestTable {
         // survives) with one explicit empty file
         val emptyDir = Paths.get(table, "data", s"d-$nonce-empty")
         if (!Files.isDirectory(emptyDir))
-          spark.read.schema(tableSchema)
-            .parquet(cowFiles.map(f => root.resolve(f).toString): _*)
+          scanOf(spark, root, cowFiles, tableSchema)
             .limit(0).coalesce(1)
             .write.mode("errorifexists").parquet(emptyDir.toString)
         staged = Using.resource(Files.list(emptyDir)) { st =>
@@ -1704,9 +1758,7 @@ object ManifestTable {
     val up = up0.select(tableCols.map(col): _*)
     val upKeys = up.select(col(keyCol)).distinct()
     def liveOf(files: Seq[String]): DataFrame =
-      maskDvs(spark, withFilePos(
-        spark.read.schema(tableSchema)
-          .parquet(files.map(f => root.resolve(f).toString): _*)),
+      maskDvs(spark, withFilePos(scanOf(spark, root, files, tableSchema)),
         m.dvs, files)
     // DV vs rewrite, per candidate (dv mode only): ONE match scan
     // answers both the budget split and the DV position lists — the
@@ -1834,17 +1886,15 @@ object ManifestTable {
     // checkpoint) — release them now instead of pinning per-MERGE
     // copies for the session's life
     (up0 +: toFree).foreach(Lineage.freeLocalCheckpoint)
-    def metaOf(dir: Path, prefix: String, paths: Seq[String],
+    def metaOf(paths: Seq[String],
         observed: Option[(Stats, SStats, Map[String, Long], Ndvs)])
         : (Stats, SStats, Map[String, Long], Ndvs) =
       if (paths.isEmpty || keepCols.isEmpty) noMeta
-      else observed.getOrElse(
-        fileMeta(spark, dir.toString, prefix, keepCols, paths))
-    val (rwStats, rwSStats, rwRows, rwNdvs) = metaOf(
-      Paths.get(table, "data", s"m-$nonce"), s"data/m-$nonce",
-      rewrittenStaged, rwMetaObs)
-    val (insStats, insSStats, insRows, insNdvs) = metaOf(insertDir,
-      s"data/m-$nonce-ins", insertStaged, insMetaObs)
+      else observed.getOrElse(fileMeta(spark, table, paths, keepCols))
+    val (rwStats, rwSStats, rwRows, rwNdvs) =
+      metaOf(rewrittenStaged, rwMetaObs)
+    val (insStats, insSStats, insRows, insNdvs) =
+      metaOf(insertStaged, insMetaObs)
     val cowSet = cowFiles.toSet
     val inputSet = cowSet ++ dvFiles
     var after = 0
@@ -1949,7 +1999,8 @@ object ManifestTable {
             // #nrows count) rides the rewrite job itself — the
             // separate fileMeta/count scan per rewritten file is gone
             val (wrapped, fetchMeta) = observeStats(
-              readLive(spark, root, Seq(f), Map(f -> rewrite(f))),
+              readLive(spark, root, Seq(f), Map(f -> rewrite(f)),
+                footerSchema(spark, root, Seq(f))),
               cols)
             wrapped.coalesce(1)
               .write.mode("errorifexists").parquet(dir.toString)
@@ -1961,17 +2012,15 @@ object ManifestTable {
             }
             require(staged.size == 1,
               s"single-file rewrite staged ${staged.size} files")
-            (f, staged.head, dir, cols,
+            (f, staged.head, cols,
               fetchMeta(staged).getOrElse(
-                fileMeta(spark, dir.toString,
-                  staged.head.split('/').dropRight(1).mkString("/"),
-                  cols, staged)))
+                fileMeta(spark, table, staged, cols)))
         }
         var st: Stats = noStats
         var sst: SStats = noSStats
         var rw = Map.empty[String, Long]
         var nd: Ndvs = noNdvs
-        outs.foreach { case (_, out, _, cols, (a, b, c, e)) =>
+        outs.foreach { case (_, _, cols, (a, b, c, e)) =>
           if (cols.isEmpty) {
             // stat-less input: record only the exact #nrows count
             // (the observed pass carries it; stats maps stay absent)
@@ -1981,7 +2030,7 @@ object ManifestTable {
           }
         }
         (outs.map(_._2), st, sst, rw, nd,
-          outs.flatMap { case (f, out, _, _, _) =>
+          outs.flatMap { case (f, out, _, _) =>
             m.pvals.get(f).filter(_.nonEmpty).map(out -> _)
           }.toMap)
       }
@@ -2114,8 +2163,7 @@ object ManifestTable {
       grp.map(f => (f.split('/').last, gi))
     }
     val srcSchema = snapshotSchema(spark, table, latest, m0.files)
-    val src = spark.read.schema(srcSchema)
-      .parquet(multi.flatten.map(f => root.resolve(f).toString): _*)
+    val src = scanOf(spark, root, multi.flatten, srcSchema)
     val dataCols = src.columns.toSeq
     require(!dataCols.contains("__grp") && !dataCols.contains("__base") &&
         !dataCols.contains("__b") && !dataCols.contains("__p"),
@@ -2187,9 +2235,7 @@ object ManifestTable {
                 (m0.stats.getOrElse(f, Seq.empty).map(_._1) ++
                   m0.sstats.getOrElse(f, Seq.empty).map(_._1)).toSet)
               .reduce(_ intersect _).toSeq.sorted
-          Some(gi -> fileMeta(spark,
-            Paths.get(table, "data", s"c-$nonce-$gi").toString,
-            s"data/c-$nonce-$gi", common, outs))
+          Some(gi -> fileMeta(spark, table, outs, common))
         }
       }.toMap
     var after = 0
@@ -2368,8 +2414,7 @@ object ManifestTable {
     // mergeSchema job PER PARTITION GROUP in the driver loop below
     val tableSchema = snapshotSchema(spark, table, latest, m0.files)
     val stagedAll = todo.zipWithIndex.map { case ((tuple, fs), gi) =>
-      val src = spark.read.schema(tableSchema)
-        .parquet(fs.map(f => root.resolve(f).toString): _*)
+      val src = scanOf(spark, root, fs, tableSchema)
       val dataCols = src.columns.toSeq
       val bytes = fs.map(f => Files.size(root.resolve(f))).sum
       val nOut = math.max(1L,
@@ -2396,8 +2441,7 @@ object ManifestTable {
           .toSeq.sorted.map(n => s"data/cp-$nonce-$gi/$n")
       }
       val (st, ss, rw, nd) = fetchMeta(outs).getOrElse(
-        fileMeta(spark, outDir.toString,
-          s"data/cp-$nonce-$gi", common, outs))
+        fileMeta(spark, table, outs, common))
       (tuple, outs, st, ss, rw, nd)
     }
     val rewritten = todo.flatMap(_._2).toSet
@@ -2474,7 +2518,7 @@ object ManifestTable {
       s"snapshot v$latest of $table lists no data files")
     val root = Paths.get(table)
     val src = readLive(spark, root, m0.files, m0.dvs,
-      mergeSchema = true)
+      snapshotSchema(spark, table, latest, m0.files))
     val dataCols = src.columns.toSeq
     require(clusterCols.forall(dataCols.contains),
       s"cluster columns $clusterCols must exist in $dataCols")
@@ -2649,8 +2693,7 @@ object ManifestTable {
     val (newStats, newSStats, newRows, newNdvs) =
       if (staged.isEmpty)
         (noStats, noSStats, Map.empty[String, Long], noNdvs)
-      else fileMeta(spark, stageDir.toString, s"data/cc-$nonce",
-        statsCols, staged)
+      else fileMeta(spark, table, staged, statsCols)
     val rewritten = m0.files.toSet
     var after = 0
     val v = publishLoop(table, nonce, "compactClustered") { snapshot =>
@@ -2760,7 +2803,11 @@ object ManifestTable {
     * that ADDED columns reads as one frame with the older commits'
     * missing columns as NULL — and because the merge runs over the
     * manifest's file list, its cost is per-LIVE-file, bounded by the
-    * snapshot, not the directory's full history). */
+    * snapshot, not the directory's full history). The union is the
+    * version's cached [[snapshotSchema]], so it is paid once per
+    * snapshot; without `mergeSchema` the schema is Spark's first-file
+    * inference, read on the driver ([[footerSchema]]), and building
+    * the frame starts no Spark job. */
   def read(spark: SparkSession, table: String,
       version: Option[Long] = None,
       mergeSchema: Boolean = false): DataFrame = {
@@ -2769,26 +2816,23 @@ object ManifestTable {
     val v = version.getOrElse(vs.last)
     require(vs.contains(v), s"no snapshot v$v under $table (have $vs)")
     val m = manifestOf(table, v)
-    readLive(spark, Paths.get(table), m.files, m.dvs, mergeSchema)
+    val root = Paths.get(table)
+    readLive(spark, root, m.files, m.dvs,
+      if (mergeSchema) snapshotSchema(spark, table, v, m.files)
+      else footerSchema(spark, root, m.files))
   }
 }
 
-/** STRING zone-stat encoding shared by the manifest (`#sstats=`
-  * lines) and the DSv2 scan's pruning: values are UTF-8 BYTES,
-  * compared unsigned byte-wise — identical to Spark's UTF8String
-  * ordering and DuckDB's string comparison, so a zone test can never
-  * disagree with the engine's own row-level filter. Hex keeps the
-  * manifest line format delimiter-safe for arbitrary content
-  * (including '|', newlines, and invalid-UTF-8-after-truncation
-  * upper bounds that no String round-trip could carry). */
 /** The `#ndv=` register sketch: a fixed-[[M]] HyperLogLog whose
   * update/merge/estimate discipline is BIT-IDENTICAL to the engine's
   * K1 sketches ([[graft.expressions.HllRegistersAgg]] with m = M,
   * unsalted): h = top 60 md5 bits of the canonical string, bucket =
   * h % M, rho = (60 − log2 M) + 1 − bitlen(h div M). The streaming
-  * DSv2 writer updates registers per row; [[ManifestTable.fileMeta]]
-  * computes the same registers through the native aggregate — one
-  * blob format, any write path. */
+  * DSv2 writer updates registers per row; the Scala-API writers
+  * compute the same registers through the native aggregate, observed
+  * inside a single-file write or in [[ManifestTable.fileMeta]]'s one
+  * aggregation over a multi-file stage — one blob format, any write
+  * path. */
 private[graft] object NdvSketch {
   /** Register count: 256 bytes/column/file (512 hex chars on the
     * manifest line — metadata-sized), standard error ≈ 1.04/√M ≈
@@ -2847,6 +2891,14 @@ private[graft] object NdvSketch {
   }
 }
 
+/** STRING zone-stat encoding shared by the manifest (`#sstats=`
+  * lines) and the DSv2 scan's pruning: values are UTF-8 BYTES,
+  * compared unsigned byte-wise — identical to Spark's UTF8String
+  * ordering and DuckDB's string comparison, so a zone test can never
+  * disagree with the engine's own row-level filter. Hex keeps the
+  * manifest line format delimiter-safe for arbitrary content
+  * (including '|', newlines, and invalid-UTF-8-after-truncation
+  * upper bounds that no String round-trip could carry). */
 private[graft] object StrStat {
 
   /** Stored bound length cap — a manifest line stays metadata-sized

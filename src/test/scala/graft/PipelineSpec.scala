@@ -3177,4 +3177,278 @@ class PipelineSpec extends SparkSpec {
       (1000L, 3L), (Long.MaxValue - 1L, 4L)),
       s"extreme-domain rows must survive the clustered rewrite: $back")
   }
+
+  /** (result, number of Spark jobs `body` started). Jobs are matched
+    * by a job group set on this thread, which SQL executions and
+    * their broadcast and AQE stage threads inherit; a sentinel job
+    * in a second group drains the listener bus, which delivers
+    * events in order, so no sleep guesses when counting is done. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = "jobs-" + java.util.UUID.randomUUID()
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p =>
+            Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some(g) if g == group => n.incrementAndGet(); ()
+          case Some(g) if g == s"$group-end" => drained.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-end", "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not drain")
+      (out, n.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The `#stats`/`#sstats`/`#ndv`/`#nrows` lines a manifest carries
+    * for `file`, with the file's path replaced by `F`. */
+  private def fileMetaLines(table: String, version: Long,
+      file: String): Set[String] = {
+    val ls = Files.readAllLines(
+      java.nio.file.Paths.get(table, "_manifests", s"v$version"))
+    scala.jdk.CollectionConverters.ListHasAsScala(ls).asScala
+      .filter(l => Seq("#stats=", "#sstats=", "#ndv=", "#nrows=")
+        .exists(l.startsWith))
+      .map(l => l.split('|'))
+      .filter(q => q(0).endsWith("=" + file))
+      .map(q => ((q(0).takeWhile(_ != '=') + "=F") +: q.tail)
+        .mkString("|"))
+      .toSet
+  }
+
+  test("ManifestTable.commitWithStats: a multi-file stage gathers its " +
+      "per-file stats in one job with no schema-inference job, and " +
+      "records the lines a single-file commit of each file records") {
+    import graft.sources.ManifestTable
+    val table = Files.createTempDirectory("graft-filemeta").toString
+    // three input partitions, no shuffle: the write lands three files
+    val df = spark.range(1L, 301L, 1L, 3)
+      .select($"id".as("k"), concat(lit("s"), ($"id" % 37L).cast("string"))
+        .as("s"), ($"id" % 5L).as("g"))
+    val (v, jobs) = jobsOf(ManifestTable.commitWithStats(df, table,
+      append = false, Seq("k", "s"), None))
+    val files = ManifestTable.snapshotFor(table, Some(v)).files
+    assert(files.size == 3, files)
+    // the staging write, then one stats aggregation and its AQE
+    // result stage: the aggregation scans under the first footer's
+    // schema, so no listing-plus-inference job precedes it
+    assert(jobs == 3, s"multi-file commitWithStats started $jobs jobs")
+    // reference: each staged file committed alone, whose stats ride
+    // the write job's observed aggregation instead of fileMeta
+    files.foreach { f =>
+      val ref = Files.createTempDirectory("graft-filemeta-ref").toString
+      val rv = ManifestTable.commitWithStats(
+        spark.read.parquet(java.nio.file.Paths.get(table, f).toString)
+          .coalesce(1), ref, append = false, Seq("k", "s"), None)
+      val rf = ManifestTable.snapshotFor(ref, Some(rv)).files
+      assert(rf.size == 1)
+      val got = fileMetaLines(table, v, f)
+      // k's #stats, s's #sstats, an #ndv line each, one #nrows
+      assert(got.size == 5, got)
+      assert(got == fileMetaLines(ref, rv, rf.head), f)
+    }
+  }
+
+  test("manifest reads plan with no Spark job and keep Spark's " +
+      "inferred schema") {
+    import graft.sources.ManifestTable
+    import org.apache.spark.sql.types.StructType
+    val ts = java.sql.Timestamp.valueOf("2023-03-01 10:30:00.123456")
+    // Spark-written files: INT96 timestamps (Spark's default output
+    // type) and an array column, as in the importer tables
+    def sparkFile(dir: String, extra: Boolean): String = {
+      val base = Seq((1L, ts, Seq("a", "b")), (2L, ts, Seq.empty[String]),
+        (3L, ts, Seq("c"))).toDF("k", "ts", "arr")
+      (if (extra) base.withColumn("extra", $"k" * 10L) else base)
+        .coalesce(1).write.parquet(dir)
+      val st = Files.list(java.nio.file.Paths.get(dir))
+      try scala.jdk.CollectionConverters.IteratorHasAsScala(st.iterator())
+        .asScala.map(_.getFileName.toString)
+        .filter(n => n.endsWith(".parquet")).toSeq.head
+      finally st.close()
+    }
+    // a file with no Spark schema in its footer: the schema then
+    // comes from the parquet converter (INT96 as timestamp, LIST as
+    // array)
+    def rawFile(path: String): Unit = {
+      import org.apache.parquet.example.data.simple.SimpleGroupFactory
+      import org.apache.parquet.hadoop.example.ExampleParquetWriter
+      import org.apache.parquet.io.api.Binary
+      val schema = org.apache.parquet.schema.MessageTypeParser
+        .parseMessageType(
+          """message raw {
+            |  required int64 k;
+            |  optional int96 ts;
+            |  optional group arr (LIST) {
+            |    repeated group list { optional binary element (STRING); }
+            |  }
+            |}""".stripMargin)
+      val w = ExampleParquetWriter
+        .builder(new org.apache.hadoop.fs.Path(path))
+        .withType(schema).build()
+      try {
+        val g = new SimpleGroupFactory(schema).newGroup()
+        g.add("k", 4L)
+        // INT96: nanos of day, then the Julian day, little-endian
+        val i96 = java.nio.ByteBuffer.allocate(12)
+          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+          .putLong(37800000000000L).putInt(2460005).array()
+        g.add("ts", Binary.fromConstantByteArray(i96))
+        g.addGroup("arr").addGroup("list").add("element", "d")
+        w.write(g)
+      } finally w.close()
+    }
+    def publish(table: String, v: Long, files: Seq[String]): Unit = {
+      val m = java.nio.file.Paths.get(table, "_manifests")
+      Files.createDirectories(m)
+      Files.write(m.resolve(s"v$v"),
+        files.mkString("", "\n", "\n").getBytes("UTF-8"))
+    }
+    // v1 holds the smaller path only, v2 both: the evolved column sits
+    // in the smaller-path file, the larger-path file, or neither (the
+    // converter-read file sorts first)
+    val tables = Seq("extra-first", "extra-last", "raw-first").map { n =>
+      val t = Files.createTempDirectory(s"graft-plan-$n").toString
+      val a = s"$t/data/a"
+      val b = s"$t/data/b"
+      val fa = n match {
+        case "raw-first" =>
+          Files.createDirectories(java.nio.file.Paths.get(a))
+          rawFile(s"$a/raw.parquet"); "raw.parquet"
+        case _ => sparkFile(a, extra = n == "extra-first")
+      }
+      val fb = sparkFile(b, extra = n == "extra-last")
+      publish(t, 1L, Seq(s"data/a/$fa"))
+      publish(t, 2L, Seq(s"data/a/$fa", s"data/b/$fb"))
+      t
+    }
+    def filesOf(t: String, v: Long) = ManifestTable.snapshotFor(t, Some(v))
+      .files.map(f => java.nio.file.Paths.get(t, f).toString)
+    def inferred(t: String, v: Long): StructType =
+      spark.read.parquet(filesOf(t, v): _*).schema
+    tables.foreach { t =>
+      val (frames, jobs) = jobsOf(Seq(
+        "read" -> ManifestTable.read(spark, t),
+        "read v1" -> ManifestTable.read(spark, t, Some(1L)),
+        "readPruned" -> ManifestTable.readPruned(spark, t, "k", 1L, 3L)._1,
+        "readPrunedTyped" -> ManifestTable.readPrunedTyped(spark, t,
+          Seq(("k", 1L, 4L), ("ts", ts, ts)), Some(2L))._1,
+        "readChanges" -> ManifestTable.readChanges(spark, t, 1L)._1,
+        "readChanges empty" ->
+          ManifestTable.readChanges(spark, t, 2L, Some(2L))._1))
+      assert(jobs == 0, s"$t: building the reads started $jobs jobs")
+      val want = Map("read" -> inferred(t, 2L),
+        "read v1" -> inferred(t, 1L),
+        "readPruned" -> inferred(t, 2L),
+        "readPrunedTyped" -> inferred(t, 2L),
+        "readChanges" -> spark.read.parquet(filesOf(t, 2L).last).schema,
+        "readChanges empty" -> inferred(t, 2L))
+      frames.foreach { case (name, df) =>
+        assert(df.schema == want(name), s"$t $name")
+      }
+      // the frames still read their rows
+      assert(frames.toMap.apply("read").count() ==
+        spark.read.parquet(filesOf(t, 2L): _*).count())
+      assert(frames.toMap.apply("readChanges empty").count() == 0L)
+      val union = spark.read.option("mergeSchema", "true")
+        .parquet(filesOf(t, 2L): _*).schema
+      assert(ManifestTable.read(spark, t, mergeSchema = true).schema ==
+        union, t)
+    }
+    // each evolved table read its schema from the smaller path
+    assert(ManifestTable.read(spark, tables(0)).columns.contains("extra"))
+    assert(!ManifestTable.read(spark, tables(1)).columns.contains("extra"))
+    assert(ManifestTable.read(spark, tables(1), mergeSchema = true)
+      .columns.contains("extra"))
+    assert(ManifestTable.read(spark, tables(2)).schema("ts").dataType ==
+      org.apache.spark.sql.types.TimestampType)
+  }
+
+  test("deletion vectors mask inside the scan: DV'd reads and " +
+      "OPTIMIZE match a latest-wins model and the anti-join mask, a " +
+      "point read is one job, and a new DV set compiles nothing") {
+    import graft.sources.ManifestTable
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val table = Files.createTempDirectory("graft-dv-scan").toString
+    var model: Map[Long, String] =
+      (1L to 400L).map(k => k -> s"v$k").toMap
+    ManifestTable.commitWithStats(
+      spark.range(1L, 401L, 1L, 4)
+        .select($"id".as("k"), concat(lit("v"), $"id".cast("string"))
+          .as("v")), table, append = false, "k")
+    def merge(keys: Seq[Long], tag: String): Unit = {
+      val (_, rewritten, dvd, _) = ManifestTable.mergeByKeyDv(spark,
+        table, keys.map(k => (k, s"$tag$k")).toDF("k", "v"), "k",
+        dvMaxFraction = 0.5)
+      assert(rewritten == 0 && dvd > 0, (rewritten, dvd))
+      model = model ++ keys.map(k => k -> s"$tag$k")
+    }
+    merge(Seq(5L, 150L, 250L, 390L, 401L, 402L), "a")
+    val (_, rw, dvd, _) = ManifestTable.deleteRangeDv(spark, table, "k",
+      200L, 210L, dvMaxFraction = 0.5)
+    assert(rw == 0 && dvd == 2, (rw, dvd))
+    model = model -- (200L to 210L)
+    merge(Seq(6L, 250L, 300L), "b")
+    // the reference mask: the anti-join on (file basename, row index)
+    // against the snapshot's vectors
+    def antiJoined(lo: Long, hi: Long): Set[(Long, String)] = {
+      val snap = ManifestTable.snapshotFor(table, None)
+      val dead = snap.dvs.toSeq.flatMap { case (f, ps) =>
+        ps.map(p => (f.split('/').last, p)) }.toDF("__b", "__p")
+      spark.read.parquet(snap.files
+          .map(f => java.nio.file.Paths.get(table, f).toString): _*)
+        .select(col("*"), col("_metadata.file_name").as("__b"),
+          col("_metadata.row_index").as("__p"))
+        .join(dead, Seq("__b", "__p"), "left_anti")
+        .filter($"k".between(lo, hi))
+        .select("k", "v").as[(Long, String)].collect().toSet
+    }
+    def modelIn(lo: Long, hi: Long): Set[(Long, String)] =
+      model.filter { case (k, _) => k >= lo && k <= hi }.toSet
+    def pruned(lo: Long, hi: Long): Set[(Long, String)] =
+      ManifestTable.readPruned(spark, table, "k", lo, hi)._1
+        .select("k", "v").as[(Long, String)].collect().toSet
+    // the four base files and the first merge's insert file
+    assert(ManifestTable.snapshotFor(table, None).dvs.size == 5)
+    val all = ManifestTable.read(spark, table).select("k", "v")
+      .as[(Long, String)].collect().toSet
+    assert(all == model.toSet)
+    assert(all == antiJoined(Long.MinValue, Long.MaxValue))
+    for ((lo, hi) <- Seq((5L, 5L), (250L, 250L), (205L, 205L),
+        (401L, 401L), (190L, 260L), (1L, 402L))) {
+      assert(pruned(lo, hi) == modelIn(lo, hi), s"[$lo, $hi]")
+      assert(pruned(lo, hi) == antiJoined(lo, hi), s"[$lo, $hi]")
+    }
+    // a point read over a DV'd file: the mask runs inside the scan's
+    // own job — no broadcast job, no stage boundary
+    val (rows, jobs) = jobsOf(
+      ManifestTable.readPruned(spark, table, "k", 150L, 150L)._1.collect())
+    assert(rows.length == 1 && jobs == 1, s"${rows.toSeq}, $jobs jobs")
+    // same bounds over a different DV set: the vectors reach the
+    // generated code as a reference object, so nothing recompiles
+    pruned(120L, 120L)
+    merge(Seq(120L), "c")
+    val c0 = compiles()
+    assert(pruned(120L, 120L) == Set((120L, "c120")))
+    assert(compiles() - c0 == 0L,
+      s"a new DV set compiled ${compiles() - c0} classes")
+    // OPTIMIZE rewrites through the mask and purges every vector
+    ManifestTable.compact(spark, table, 128L << 20)
+    val snap = ManifestTable.snapshotFor(table, None)
+    assert(snap.dvs.values.forall(_.isEmpty), snap.dvs)
+    assert(ManifestTable.read(spark, table).select("k", "v")
+      .as[(Long, String)].collect().toSet == model.toSet)
+    assert(antiJoined(Long.MinValue, Long.MaxValue) == model.toSet)
+  }
 }

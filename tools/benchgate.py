@@ -12,10 +12,13 @@ into its own artifact (1.0 on a host as quiet as the freeze host).
 Queries with adjusted_ratio > THRESHOLD (default 2.0, the judge's
 perf-weak line) are flagged; queries present in the run but missing
 from the floor file are listed so the next freeze covers them.
+Queries the artifact lists under `failed` (they threw, and their time
+is only a time-to-failure) fail the gate outright.
 
 Usage:
     python3 tools/benchgate.py [bench.json] [--threshold 2.0]
-    # exit 0 = clean, exit 1 = flags raised (usable as a round gate)
+    # exit 0 = clean, exit 1 = flags raised or a query failed
+    # (usable as a round gate)
 
 Run it right after any full bench so excursions are caught the day
 they land, not at round end (round-10 verdict stretch item).
@@ -57,6 +60,7 @@ def main():
     floors = base["queries"]
     run = bench["queries"]
     hf = bench.get("host_factor") or 1.0
+    failed = bench.get("failed") or []
     flagged, watch, missing = [], [], []
     for name, t in sorted(run.items()):
         floor = floors.get(name)
@@ -80,11 +84,13 @@ def main():
     for name, t, floor, raw, adj in watch:
         print(f"  watch {name:<32} {t:7.2f}s vs {floor:7.2f}s "
               f"floor  ({raw:.2f}x raw, {adj:.2f}x adjusted)")
+    for name in failed:
+        print(f"  FAILED {name} (threw; its time is a time-to-failure)")
     if missing:
         print(f"  no floor (freeze these next): {', '.join(missing)}")
-    if not flagged and not watch and not missing:
+    if not flagged and not watch and not missing and not failed:
         print("  clean: every query within budget")
-    sys.exit(1 if flagged else 0)
+    sys.exit(1 if flagged or failed else 0)
 
 
 if __name__ == "__main__":
