@@ -67,7 +67,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // lifecycle queries (manifest tables, sinks, checkpoints) write
     // their transient state under a DEDICATED per-run workspace
     // instead of shared /tmp — their I/O timing samples were the
@@ -89,25 +88,7 @@ object Bench {
         }
       } catch { case _: Throwable => () }
     }
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // codegen class cache sized to the INVENTORY, not the default
-      // 100: a session serving 429 distinct queries (~2600 generated
-      // fragments per 120 queries measured) evicts everything between
-      // passes at the default, so every run re-pays Janino
-      // compilation for every stage (ProfCodegen A/B: pass-2
-      // compiles 2280 -> 51, pass-2 wall 116.9 -> 77.0 s on the
-      // first 120 queries). The same posture a long-lived production
-      // session (Thrift server, streaming driver) runs with; entry
-      // count scales with distinct plan shapes, not cores or data.
-      .config("spark.sql.codegen.cache.maxEntries", "20000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(32, logLevel = "WARN")
     // warm the JVM/codegen/scan path once so the alphabetically-first
     // query doesn't absorb several seconds of one-time session cost
     try spark.read.parquet(s"$sfDir/lineitem.parquet").limit(100)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-sample generator: `runMain graft.ScaleGen <srcSfDir> <outDir>
@@ -28,16 +28,7 @@ object ScaleGen {
       "usage: ScaleGen <srcSfDir> <outDir> [copies]")
     val (src, out) = (args(0), args(1))
     val copies = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(32, logLevel = "WARN")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
 
     def t(name: String): DataFrame =

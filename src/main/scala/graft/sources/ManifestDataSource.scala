@@ -1964,8 +1964,9 @@ class ManifestReplaceWrite(schema: StructType,
         s.dv.toSeq).toMap
     val pvals = files.flatMap(f =>
       if (f.pvals.isEmpty) None else Some(f.rel -> f.pvals)).toMap
-    ManifestTable.publishReplace(opts.path, replaced, staged, stats,
-      sstats, rows, expectDvs, pvals)
+    ManifestTable.publishReplace(opts.path, replaced, staged,
+      ManifestTable.FileMeta(stats, sstats, rows, pvals = pvals),
+      expectDvs)
     ()
   }
 
@@ -2167,8 +2168,8 @@ private[sources] object ManifestCommit {
       val abs = java.nio.file.Paths.get(path).resolve(rel)
       ManifestParquet.openWriter(abs,
         ManifestParquet.messageTypeOf(schema)).close()
-      ManifestTable.publishStaged(path, Seq(rel), Map.empty,
-        Map(rel -> 0L), append = false)
+      ManifestTable.publishStaged(path, Seq(rel),
+        ManifestTable.FileMeta(rows = Map(rel -> 0L)), append = false)
       return
     }
     val stats = files.flatMap { f =>
@@ -2190,8 +2191,9 @@ private[sources] object ManifestCommit {
       if (entries.isEmpty) None else Some(f.rel -> entries)
     }.toMap
     ManifestTable.publishStaged(path, files.map(_.rel),
-      stats, files.map(f => f.rel -> f.rows).toMap, append, sstats,
-      pvals, tag, ndvs)
+      ManifestTable.FileMeta(stats, sstats,
+        files.map(f => f.rel -> f.rows).toMap, ndvs, pvals),
+      append, tag)
     ()
   }
 

@@ -156,25 +156,46 @@ object ManifestTable {
 
   private[sources] val noNdvs: Ndvs = Map.empty
 
-  private val emptyManifest =
-    Manifest(Seq.empty, noStats, Map.empty, noDvs, noSStats, noPvals,
-      noNdvs)
+  /** The per-file metadata a manifest carries for its data files,
+    * each kind keyed by table-relative path: zone stats (`#stats=`),
+    * string zone stats (`#sstats=`), row counts (`#nrows=` — the
+    * PHYSICAL count; live rows = nrows − |dv|), NDV sketches
+    * (`#ndv=`), partition values (`#pval=`) and deletion vectors
+    * (`#dv=`). `++` is right-biased per kind and file, so a writer's
+    * entries layered over a snapshot's replace exactly the files it
+    * touched; [[lines]] renders the comment lines of `files`. */
+  private[graft] final case class FileMeta(stats: Stats = noStats,
+      sstats: SStats = noSStats, rows: Map[String, Long] = Map.empty,
+      ndvs: Ndvs = noNdvs, pvals: Pvals = noPvals, dvs: Dvs = noDvs) {
+    def ++(o: FileMeta): FileMeta = FileMeta(stats ++ o.stats,
+      sstats ++ o.sstats, rows ++ o.rows, ndvs ++ o.ndvs,
+      pvals ++ o.pvals, dvs ++ o.dvs)
 
-  /** One parsed manifest: data-file list, per-file zone stats
-    * (`#stats=path|col|min|max` lines), per-file row counts
-    * (`#nrows=path|n` lines — [[commitWithStats]] records them from
-    * the same distributed pass as the zones; files committed without
-    * the pass have no entry), per-file deletion vectors
-    * (`#dv=path|positions` lines; `#nrows` stays the PHYSICAL row
-    * count — live rows = nrows − |dv|), and per-file STRING zone
-    * stats (`#sstats=` lines). */
-  private final case class Manifest(files: Seq[String], stats: Stats,
-      rows: Map[String, Long], dvs: Dvs, sstats: SStats,
-      pvals: Pvals, ndvs: Ndvs) {
-    def metaLinesFor(fs: Seq[String]): Seq[String] =
-      ManifestTable.metaLines(fs, stats, rows, dvs, sstats, pvals,
-        ndvs)
+    def lines(files: Seq[String]): Seq[String] =
+      files.flatMap(f => stats.getOrElse(f, Seq.empty)
+        .map { case (c, mn, mx) => s"#stats=$f|$c|$mn|$mx" }) ++
+        files.flatMap(f => sstats.getOrElse(f, Seq.empty)
+          .map { case (c, mn, mx) => s"#sstats=$f|$c|$mn|$mx" }) ++
+        files.flatMap(f => pvals.getOrElse(f, Seq.empty)
+          .map { case (c, enc) => s"#pval=$f|$c|$enc" }) ++
+        files.flatMap(f => ndvs.getOrElse(f, Seq.empty)
+          .map { case (c, nulls, regs, hist) =>
+            s"#ndv=$f|$c|$nulls|$regs|$hist" }) ++
+        files.flatMap(f => rows.get(f).map(n => s"#nrows=$f|$n")) ++
+        files.flatMap(f => dvs.get(f).filter(_.nonEmpty)
+          .map(ps => s"#dv=$f|${DvCodec.encode(ps)}"))
+
+    /** The stats columns (integer or string zones) `f` carries. */
+    def zoneCols(f: String): Seq[String] =
+      stats.getOrElse(f, Seq.empty).map(_._1) ++
+        sstats.getOrElse(f, Seq.empty).map(_._1)
   }
+
+  /** One parsed manifest: its data-file list and their [[FileMeta]]
+    * (files committed without a stats pass have no entries). */
+  private final case class Manifest(files: Seq[String], meta: FileMeta)
+
+  private val emptyManifest = Manifest(Seq.empty, FileMeta())
 
   /** One manifest read parsed into [[Manifest]]: data lines are
     * relative paths; comment lines carry the file metadata. The zone
@@ -232,11 +253,20 @@ object ManifestTable {
           if (q.length > 4) q(4) else ""))
       }
       .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    Manifest(files, stats, rows, dvs, sstats, pvals, ndvs)
+    Manifest(files, FileMeta(stats, sstats, rows, ndvs, pvals, dvs))
   }
 
-  private def filesOf(table: String, version: Long): Seq[String] =
-    manifestOf(table, version).files
+  /** Snapshot `version` of `table` (the latest when None) as
+    * (version, parsed manifest) — loud when the table has no
+    * snapshot or not that one. */
+  private def snapshotOf(table: String,
+      version: Option[Long] = None): (Long, Manifest) = {
+    val vs = versions(table)
+    require(vs.nonEmpty, s"no committed snapshot under $table")
+    val v = version.getOrElse(vs.last)
+    require(vs.contains(v), s"no snapshot v$v under $table (have $vs)")
+    (v, manifestOf(table, v))
+  }
 
   /** Resolved snapshot view for the DSv2 source ([[ManifestV2]]):
     * the PINNED version, live files, per-file zone stats (integer +
@@ -256,13 +286,9 @@ object ManifestTable {
 
   private[graft] def snapshotFor(table: String,
       version: Option[Long]): Snapshot = {
-    val vs = versions(table)
-    require(vs.nonEmpty, s"no committed snapshot under $table")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v), s"no snapshot v$v under $table (have $vs)")
-    val m = manifestOf(table, v)
-    Snapshot(v, m.files, m.stats, m.rows, m.dvs, m.sstats, m.pvals,
-      m.ndvs)
+    val (v, m) = snapshotOf(table, version)
+    Snapshot(v, m.files, m.meta.stats, m.meta.rows, m.meta.dvs,
+      m.meta.sstats, m.meta.pvals, m.meta.ndvs)
   }
 
   /** Publish files the CALLER's tasks already staged as the next
@@ -273,22 +299,36 @@ object ManifestTable {
     * contract [[commitWithStats]] gives the Scala API). Same
     * append/carry semantics and put-if-absent loop. */
   private[sources] def publishStaged(table: String,
-      staged: Seq[String],
-      stats: Map[String, Seq[(String, Long, Long)]],
-      rows: Map[String, Long], append: Boolean,
-      sstats: Map[String, Seq[(String, String, String)]] = noSStats,
-      pvals: Map[String, Seq[(String, String)]] = noPvals,
-      tag: Option[String] = None,
-      ndvs: Ndvs = noNdvs): Long = {
+      staged: Seq[String], meta: FileMeta, append: Boolean,
+      tag: Option[String] = None): Long = {
     require(staged.nonEmpty, "publishStaged needs at least one file")
-    val nonce = java.util.UUID.randomUUID().toString.take(12)
-    publishLoop(table, nonce, "publishStaged") { snapshot =>
-      // tagged publishes are IDEMPOTENT: a replay whose tag is
-      // already published short-circuits to that version — the
-      // exactly-once seam the DSv2 streaming sink commits epochs
-      // through (same discipline as commitTagged)
-      tag.flatMap(t =>
-          snapshot.find(v => tagOf(table, v).contains(t))) match {
+    publishAppend(table, staged, meta, append, tag)
+  }
+
+  private def newNonce(): String =
+    java.util.UUID.randomUUID().toString.take(12)
+
+  /** The version among `vs` that already carries `tag`, if any. */
+  private def taggedIn(table: String, tag: Option[String],
+      vs: Seq[Long]): Option[Long] =
+    tag.flatMap(t => vs.find(v => tagOf(table, v).contains(t)))
+
+  /** The append publish every committer shares: `staged` (with its
+    * `meta`) joins the latest snapshot's files, which are carried by
+    * reference with ALL their metadata lines — dropping a `#dv=` line
+    * here would resurrect merge-on-read deletes — or, with `append =
+    * false`, becomes the whole snapshot. A `tag` makes the publish
+    * IDEMPOTENT: the tag check and the version derivation share one
+    * versions() snapshot per attempt, so a rival that publishes the
+    * same tag first either is seen here (short-circuit to its
+    * version) or wins the version this attempt tries to link (the
+    * retry then sees its tag) — never a double append. The
+    * exactly-once seam of [[commitTagged]] and of the DSv2 streaming
+    * sink's epochs. */
+  private def publishAppend(table: String, staged: Seq[String],
+      meta: FileMeta, append: Boolean, tag: Option[String]): Long =
+    publishLoop(table, "commit") { snapshot =>
+      taggedIn(table, tag, snapshot) match {
         case Some(v) => Left(v)
         case None =>
           val prev =
@@ -297,55 +337,54 @@ object ManifestTable {
                 .getOrElse(emptyManifest)
             else emptyManifest
           Right(tag.map(t => s"#tag=$t").toSeq ++
-            prev.metaLinesFor(prev.files) ++
-            metaLines(staged, stats, rows, sstats = sstats,
-              pvals = pvals, ndvs = ndvs) ++
+            (prev.meta ++ meta).lines(prev.files ++ staged) ++
             prev.files ++ staged)
       }
     }
-  }
 
-  /** Publish a GROUP REPLACEMENT as the next snapshot — the seam the
-    * SQL row-level operations (MERGE INTO / UPDATE / rewritten
-    * DELETE) commit through: the files the operation's scan read are
-    * dropped, its staged outputs appended, everything else carried by
-    * reference with its metadata lines. Same optimistic loop and the
-    * DML conflict rules: a rival removing a replaced input aborts
-    * (rather than resurrecting dropped rows), a rival DV landing on a
-    * replaced input aborts (the replacement was computed from the
-    * PINNED read — publishing would resurrect the rival's deletes);
-    * rival appends ride along untouched (write-serializable). A
-    * replacement that empties the table publishes `staged` as-is —
-    * the caller stages an explicit empty file to keep the snapshot
-    * readable. */
-  private[sources] def publishReplace(table: String,
-      replaced: Seq[String], staged: Seq[String],
-      stats: Map[String, Seq[(String, Long, Long)]],
-      sstats: Map[String, Seq[(String, String, String)]],
-      rows: Map[String, Long],
-      expectDvs: Map[String, Seq[Long]],
-      pvals: Pvals = noPvals,
-      ndvs: Ndvs = noNdvs): Long = {
-    val nonce = java.util.UUID.randomUUID().toString.take(12)
-    val replacedSet = replaced.toSet
-    publishLoop(table, nonce, "publishReplace") { snapshot =>
+  /** Publish a REPLACEMENT as the next snapshot — the one publish
+    * every rewriting writer shares: the SQL row-level operations
+    * (MERGE INTO / UPDATE / rewritten DELETE), DELETE and MERGE by
+    * key, the delta commit and the OPTIMIZE variants. `replaced`
+    * files are dropped, `staged` ones (with `meta`) appended, files
+    * in `dvUpdates` stay but publish that deletion vector instead of
+    * their current one, and everything else is carried by reference
+    * with its metadata lines. The DML conflict rules hold per
+    * attempt over the inputs (`replaced` and the `dvUpdates` files):
+    * a rival that removed an input aborts (rather than resurrecting
+    * dropped rows or double-applying DML), a rival DV landing on an
+    * input aborts (the replacement was computed from the deletion
+    * vectors `expectDvs` the writer read — publishing would resurrect
+    * the rival's deletes); rival appends ride along untouched
+    * (write-serializable). A replacement that empties the table
+    * publishes `staged` as-is — the caller stages an explicit empty
+    * file to keep the snapshot readable. `what` names the writer in
+    * the abort messages. Returns (version, files in the new
+    * snapshot). */
+  private[graft] def publishReplace(table: String,
+      replaced: Seq[String], staged: Seq[String], meta: FileMeta,
+      expectDvs: Dvs, dvUpdates: Dvs = noDvs,
+      what: String = "row-level-operation"): (Long, Int) = {
+    val dropped = replaced.toSet
+    val inputs = dropped ++ dvUpdates.keySet
+    var after = 0
+    val v = publishLoop(table, what) { snapshot =>
       require(snapshot.nonEmpty,
         s"publishReplace on $table needs an existing snapshot")
       val cur = manifestOf(table, snapshot.last)
-      require(replacedSet.subsetOf(cur.files.toSet),
-        s"concurrent rewrite removed a row-level-operation input of " +
-          s"$table — aborting rather than double-applying DML")
-      require(replaced.forall(f => cur.dvs.getOrElse(f, Seq.empty) ==
+      require(inputs.subsetOf(cur.files.toSet),
+        s"concurrent rewrite removed a $what input of $table — " +
+          "aborting rather than double-applying DML")
+      require(inputs.forall(f => cur.meta.dvs.getOrElse(f, Seq.empty) ==
           expectDvs.getOrElse(f, Seq.empty)),
-        s"concurrent DV landed on a row-level-operation input of " +
-          s"$table — aborting rather than resurrecting the rival's " +
-          "deletes")
-      val carried = cur.files.filterNot(replacedSet)
-      Right(cur.metaLinesFor(carried) ++
-        metaLines(staged, stats, rows, sstats = sstats,
-          pvals = pvals, ndvs = ndvs) ++
-        carried ++ staged)
+        s"concurrent DV landed on a $what input of $table — aborting " +
+          "rather than resurrecting the rival's deletes")
+      val carried = cur.files.filterNot(dropped)
+      after = carried.size + staged.size
+      Right((cur.meta ++ FileMeta(dvs = dvUpdates)).lines(carried) ++
+        meta.lines(staged) ++ carried ++ staged)
     }
+    (v, after)
   }
 
   /** Compressed deletion-vector POSITION encoding for `#dv=` lines —
@@ -435,40 +474,6 @@ object ManifestTable {
     }
   }
 
-  private def metaLines(files: Seq[String], stats: Stats,
-      rows: Map[String, Long], dvs: Dvs = noDvs,
-      sstats: SStats = noSStats, pvals: Pvals = noPvals,
-      ndvs: Ndvs = noNdvs): Seq[String] =
-    files.flatMap(f => stats.getOrElse(f, Seq.empty)
-      .map { case (c, mn, mx) => s"#stats=$f|$c|$mn|$mx" }) ++
-      files.flatMap(f => sstats.getOrElse(f, Seq.empty)
-        .map { case (c, mn, mx) => s"#sstats=$f|$c|$mn|$mx" }) ++
-      files.flatMap(f => pvals.getOrElse(f, Seq.empty)
-        .map { case (c, enc) => s"#pval=$f|$c|$enc" }) ++
-      files.flatMap(f => ndvs.getOrElse(f, Seq.empty)
-        .map { case (c, nulls, regs, hist) =>
-          s"#ndv=$f|$c|$nulls|$regs|$hist" }) ++
-      files.flatMap(f => rows.get(f).map(n => s"#nrows=$f|$n")) ++
-      files.flatMap(f => dvs.get(f).filter(_.nonEmpty)
-        .map(ps => s"#dv=$f|${DvCodec.encode(ps)}"))
-
-  /** Stage `df`'s data files under a writer-unique prefix and return
-    * their sorted relative paths. Conflict-free by construction, so
-    * the data write happens exactly once no matter how many publish
-    * attempts the contention loop takes. */
-  private def stage(df: DataFrame, table: String,
-      nonce: String): Seq[String] = {
-    val stageDir = Paths.get(table, "data", s"s-$nonce")
-    df.write.mode("errorifexists").parquet(stageDir.toString)
-    Using.resource(Files.list(stageDir)) { stream =>
-      stream.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(n => n.endsWith(".parquet") && !n.startsWith("_"))
-        .toSeq.sorted
-        .map(n => s"data/s-$nonce/$n")
-    }
-  }
-
   /** The optimistic put-if-absent publish loop every committer
     * shares: per attempt, ONE versions() snapshot feeds `mkLines`,
     * which either short-circuits (Left: e.g. an idempotence tag is
@@ -476,9 +481,11 @@ object ManifestTable {
     * manifest's lines (Right); the hard-link publish then either
     * wins version last+1 or the loop re-derives against the new
     * latest. Hard-link into place is atomic AND put-if-absent —
-    * a rename would silently replace a concurrent winner. */
-  private def publishLoop(table: String, nonce: String, what: String)
+    * a rename would silently replace a concurrent winner; the temp
+    * file's name is unique to this publish. */
+  private def publishLoop(table: String, what: String)
       (mkLines: Seq[Long] => Either[Long, Seq[String]]): Long = {
+    val nonce = newNonce()
     Files.createDirectories(manifestDir(table))
     var attempt = 0
     while (true) {
@@ -666,39 +673,22 @@ object ManifestTable {
     * line inside the manifest — still one atomic publish, no side
     * ledger to drift. */
   def commitTagged(df: DataFrame, table: String, append: Boolean,
-      tag: Option[String]): Long = {
-    // tag check + version derivation share ONE versions() snapshot
-    // per attempt (below). With separate reads there is a TOCTOU: a
-    // rival publishes tag T at vN between our tag check and our
-    // prev read, we then see vN as prev and link v(N+1) with the
-    // same tag — double-append. With one snapshot, publishing
-    // v(N+1) REQUIRES having observed vN, and the tag check ran
-    // over that same list; a rival landing after the snapshot makes
-    // our createLink lose, and the retry's fresh snapshot sees its
-    // tag.
-    def taggedIn(vs: Seq[Long]): Option[Long] =
-      tag.flatMap(t => vs.find(v => tagOf(table, v).contains(t)))
-    val pre = taggedIn(versions(table))
-    if (pre.isDefined) return pre.get
-    val nonce = java.util.UUID.randomUUID().toString.take(12)
-    val fresh = stage(df, table, nonce)
-    publishLoop(table, nonce, "commit") { snapshot =>
-      // a competing commit may have published our tag while we staged
-      taggedIn(snapshot) match {
-        case Some(v) => Left(v)
-        case None =>
-          val prev =
-            if (append)
-              snapshot.lastOption.map(manifestOf(table, _))
-                .getOrElse(emptyManifest)
-            else emptyManifest
-          // carried files keep their #stats=/#nrows= lines (file
-          // metadata survives unrelated appends)
-          Right(tag.map(t => s"#tag=$t").toSeq ++
-            prev.metaLinesFor(prev.files) ++ prev.files ++ fresh)
-      }
+      tag: Option[String]): Long =
+    commitFrame(df, table, append, tag, statsCols = None)
+
+  /** Stage `df` under `data/s-<nonce>` — recording per-file stats
+    * over `statsCols` when given — and publish it with
+    * [[publishAppend]]. A tag already published returns its version
+    * before anything is written; a rival publishing it while this
+    * call stages is caught by the publish's own tag check. */
+  private def commitFrame(df: DataFrame, table: String,
+      append: Boolean, tag: Option[String],
+      statsCols: Option[Seq[String]]): Long =
+    taggedIn(table, tag, versions(table)).getOrElse {
+      val nonce = newNonce()
+      val (fresh, meta) = writeStaged(df, table, s"s-$nonce", statsCols)
+      publishAppend(table, fresh, meta, append, tag)
     }
-  }
 
   /** Exactly-once streaming sink into the manifest table: each
     * micro-batch commits under tag `batch-<id>`, so checkpoint
@@ -802,7 +792,7 @@ object ManifestTable {
     * ONE small-file read and never opens data files whose range
     * can't match. Stats ride as `#stats=path|col|min|max` comment
     * lines, one per (file, column) — invisible to every existing
-    * reader (comments are skipped by [[read]]/filesOf), and carried
+    * reader (comments are skipped by [[read]]), and carried
     * forward for still-live files on append so a snapshot's stats
     * stay complete across commits. All columns' per-file min/max
     * come from ONE distributed pass over the staged files (grouped
@@ -823,39 +813,7 @@ object ManifestTable {
     require(statsCols.nonEmpty, "need at least one stats column")
     statsCols.foreach(c => require(!c.contains("|"),
       s"stats column name cannot contain '|': $c"))
-    def taggedIn(vs: Seq[Long]): Option[Long] =
-      tag.flatMap(t => vs.find(v => tagOf(table, v).contains(t)))
-    val pre = taggedIn(versions(table))
-    if (pre.isDefined) return pre.get
-    val spark = df.sparkSession
-    val nonce = java.util.UUID.randomUUID().toString.take(12)
-    // the stats aggregation rides the staging write job itself; the
-    // single-file commit (the dominant shape) skips the separate
-    // just-written-data scan, a multi-file stage falls back to it
-    val (wrapped, fetchMeta) = observeStats(df, statsCols)
-    val fresh = stage(wrapped, table, nonce)
-    val (freshStats, freshSStats, freshRows, freshNdvs) =
-      fetchMeta(fresh).getOrElse(fileMeta(spark, table, fresh, statsCols))
-    publishLoop(table, nonce, "commitWithStats") { snapshot =>
-      taggedIn(snapshot) match {
-        case Some(v) => Left(v)
-        case None =>
-          val prev =
-            if (append)
-              snapshot.lastOption.map(manifestOf(table, _))
-                .getOrElse(emptyManifest)
-            else emptyManifest
-          // carried files keep their dv/sstats lines too — dropping
-          // a #dv= line here would RESURRECT merge-on-read deletes
-          Right(tag.map(t => s"#tag=$t").toSeq ++
-            metaLines(prev.files ++ fresh,
-              prev.stats ++ freshStats, prev.rows ++ freshRows,
-              prev.dvs, prev.sstats ++ freshSStats,
-              pvals = prev.pvals,
-              ndvs = prev.ndvs ++ freshNdvs) ++
-            prev.files ++ fresh)
-      }
-    }
+    commitFrame(df, table, append, tag, Some(statsCols))
   }
 
   /** How a stats column's values ENCODE into zone lines, decided by
@@ -907,7 +865,7 @@ object ManifestTable {
 
   /** The (kinds, aggregate columns) of the stats pass over
     * `statsCols` — shared by the grouped per-file pass ([[fileMeta]])
-    * and the in-write observed pass ([[observeStats]]). Layout:
+    * and the in-write observed pass ([[writeStaged]]). Layout:
     * leading `__n` row count, then per column i the fields
     * `__mn_i`, `__mx_i`, `__ndv_i`, `__nn_i`, `__h_i`. */
   private def statAggCols(
@@ -941,14 +899,12 @@ object ManifestTable {
   }
 
   /** Decode one stats-aggregation result — a per-file group row or
-    * the observed whole-write row — into (int zones, string zones,
-    * row count, ndv entries), [[fileMeta]]'s per-file tuple sans the
-    * path. `field` resolves an aggregate alias to its value (boxed
-    * Long/String/Seq, null for an empty min/max). */
-  private def decodeStatFields(kinds: Seq[(String, Char)],
-      field: String => Any)
-      : (Seq[(String, Long, Long)], Seq[(String, String, String)],
-        Long, Seq[(String, Long, String, String)]) = {
+    * the observed whole-write row — into file `f`'s [[FileMeta]].
+    * `field` resolves an aggregate alias to its value (boxed
+    * Long/String/Seq, null for an empty min/max). A zero-row file
+    * records its exact 0 count and no stats/sstats/ndv lines. */
+  private def decodeStatFields(kinds: Seq[(String, Char)], f: String,
+      field: String => Any): FileMeta = {
     def longOf(v: Any): Long = v.asInstanceOf[Number].longValue
     val longs = kinds.zipWithIndex.flatMap { case ((c, k), i) =>
       val (mn, mx) = (field(s"__mn_$i"), field(s"__mx_$i"))
@@ -973,52 +929,74 @@ object ManifestTable {
         StrStat.hex(arr.map(v =>
           v.asInstanceOf[Number].byteValue).toArray), hist)
     }
-    (longs, strs, longOf(field("__n")), regs)
+    val n = longOf(field("__n"))
+    if (n == 0L) FileMeta(rows = Map(f -> 0L))
+    else FileMeta(Map(f -> longs), Map(f -> strs), Map(f -> n),
+      Map(f -> regs))
   }
 
-  /** Fold the stats pass INTO the write job (guide §2.4 — remove the
-    * redundant pass over just-written data): wraps `df` with an
-    * observed [[statAggCols]] aggregation, and after the write the
-    * returned fetch yields the per-file metadata WHEN exactly one
-    * data file landed — the observed whole-write aggregates ARE that
-    * file's stats (same rows, same aggregates, byte-identical
-    * manifest lines). A multi-file stage returns None and the caller
-    * falls back to the per-file [[fileMeta]] scan — correct, one
-    * extra job, exactly the pre-observation cost. A zero-row single
-    * file mirrors fileMeta's no-group shape: count 0, no stats/ndv
-    * lines. */
-  private def observeStats(df: DataFrame, statsCols: Seq[String])
-      : (DataFrame, Seq[String] =>
-        Option[(Stats, SStats, Map[String, Long], Ndvs)]) = {
-    ensureHllFunction(df.sparkSession)
-    val (kinds, aggs) = statAggCols(df.schema, statsCols)
+  /** The data files directly under `rel` (a directory relative to
+    * `table`) as sorted table-relative paths; write markers and
+    * hidden files are skipped. */
+  private def stagedFiles(table: String, rel: String): Seq[String] =
+    Using.resource(Files.list(Paths.get(table, rel))) { st =>
+      st.iterator().asScala
+        .map(_.getFileName.toString)
+        .filter(n => n.endsWith(".parquet") && !n.startsWith("_"))
+        .toSeq.sorted
+        .map(n => s"$rel/$n")
+    }
+
+  /** Stage `df` under `data/<dir>` and return its data files with
+    * their metadata — the one staging step every writer shares. `dir`
+    * is writer-unique (it carries the writer's nonce), so staging is
+    * conflict-free and the data write happens exactly once however
+    * many publish attempts follow. `files > 0` coalesces the write to
+    * that many files. With `statsCols` the per-file stats are
+    * recorded: the [[statAggCols]] aggregation is OBSERVED inside the
+    * write job (guide §2.4 — no second pass over just-written data),
+    * and when exactly one file lands the whole-write aggregates ARE
+    * its stats; a multi-file stage pays one [[fileMeta]] scan
+    * instead. Without `statsCols` nothing is recorded. */
+  private def writeStaged(df: DataFrame, table: String, dir: String,
+      statsCols: Option[Seq[String]] = None,
+      files: Int = 0): (Seq[String], FileMeta) = {
+    val spark = df.sparkSession
     val obs = new org.apache.spark.sql.Observation()
-    val wrapped = df.observe(obs, aggs.head, aggs.tail: _*)
-    val fetch = (staged: Seq[String]) =>
-      if (staged.size != 1) None
-      else {
+    val pass = statsCols.map { cols =>
+      ensureHllFunction(spark)
+      (cols, statAggCols(df.schema, cols))
+    }
+    val out = pass.fold(df) { case (_, (_, aggs)) =>
+      df.observe(obs, aggs.head, aggs.tail: _*) }
+    (if (files > 0) out.coalesce(files) else out)
+      .write.mode("errorifexists")
+      .parquet(Paths.get(table, "data", dir).toString)
+    val staged = stagedFiles(table, s"data/$dir")
+    val meta = pass match {
+      case Some((_, (kinds, _))) if staged.size == 1 =>
         val m = obs.get
-        val (longs, strs, n, regs) = decodeStatFields(kinds, m(_))
-        val f = staged.head
-        if (n == 0L)
-          // fileMeta's zero-row shape: the expect backfill records
-          // the exact 0 count, no stats/sstats/ndv lines
-          Some((noStats, noSStats, Map(f -> 0L), noNdvs))
-        else Some((
-          if (longs.nonEmpty) Map(f -> longs) else noStats,
-          if (strs.nonEmpty) Map(f -> strs) else noSStats,
-          Map(f -> n),
-          if (regs.nonEmpty) Map(f -> regs.toSeq) else noNdvs))
-      }
-    (wrapped, fetch)
+        decodeStatFields(kinds, staged.head, m(_))
+      case Some((cols, _)) if staged.nonEmpty =>
+        fileMeta(spark, table, staged, cols)
+      case _ => FileMeta()
+    }
+    (staged, meta)
   }
 
-  /** The per-file metadata pass shared by every stats-recording
-    * writer whose write landed several files ([[commitWithStats]],
-    * the DELETE/MERGE rewrites, the OPTIMIZE variants): ONE
-    * distributed aggregation over exactly the staged `files` (paths
-    * relative to `table`) computing min/max per stats column, the
-    * [[NdvSketch]] HLL registers, plus the exact row count, keyed by
+  /** The columns every one of `files` carries per `cols` (sorted;
+    * none when there are no files) — what a rewrite of those files
+    * can re-record, or what their merged metadata can state. */
+  private def colsInAll(files: Seq[String])
+      (cols: String => Seq[String]): Seq[String] =
+    if (files.isEmpty) Seq.empty
+    else files.map(f => cols(f).toSet).reduce(_ intersect _).toSeq.sorted
+
+  /** The per-file metadata pass over a multi-file stage
+    * ([[writeStaged]]) or a compaction's outputs: ONE distributed
+    * aggregation over exactly the staged `files` (paths relative to
+    * `table`) computing min/max per stats column, the [[NdvSketch]]
+    * HLL registers, plus the exact row count, keyed by
     * `_metadata.file_name`. The file list is already known and the
     * read schema comes from the first file's footer on the driver
     * ([[footerSchema]]), so the pass lists no directory and starts no
@@ -1029,8 +1007,7 @@ object ManifestTable {
     * column gets an `#ndv=` register sketch over its canonical
     * encoding. */
   private def fileMeta(spark: SparkSession, table: String,
-      files: Seq[String], statsCols: Seq[String])
-      : (Stats, SStats, Map[String, Long], Ndvs) = {
+      files: Seq[String], statsCols: Seq[String]): FileMeta = {
     import org.apache.spark.sql.functions.col
     ensureHllFunction(spark)
     // the aggregation keys on the basename; two staged files sharing
@@ -1044,26 +1021,14 @@ object ManifestTable {
     val root = Paths.get(table)
     val df = scanOf(spark, root, files, footerSchema(spark, root, files))
     val (kinds, aggs) = statAggCols(df.schema, statsCols)
-    val rows = df
-      .groupBy(col("_metadata.file_name").as("__f"))
+    // a zero-row part file produces no aggregation group but its
+    // count IS exactly 0 — the seed keeps countRows exact-or-None
+    df.groupBy(col("_metadata.file_name").as("__f"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
-    val perFile = rows.map { r =>
-      val (longs, strs, n, regs) =
-        decodeStatFields(kinds, nm => r.get(r.fieldIndex(nm)))
-      (pathOf(r.getString(0)), longs, strs, n, regs)
-    }
-    val stats: Stats = perFile
-      .collect { case (f, ls, _, _, _) if ls.nonEmpty => f -> ls }.toMap
-    val sstats: SStats = perFile
-      .collect { case (f, _, ss, _, _) if ss.nonEmpty => f -> ss }.toMap
-    val ndvs: Ndvs = perFile
-      .map { case (f, _, _, _, regs) => f -> regs.toSeq }.toMap
-    val counts = perFile.map { case (f, _, _, n, _) => f -> n }.toMap
-    // a zero-row part file produces no aggregation group but its
-    // count IS exactly 0 — backfill so countRows stays exact-or-None
-    (stats, sstats, counts ++
-      files.filterNot(counts.contains).map(_ -> 0L).toMap, ndvs)
+      .map(r => decodeStatFields(kinds, pathOf(r.getString(0)),
+        nm => r.get(r.fieldIndex(nm))))
+      .foldLeft(FileMeta(rows = files.map(_ -> 0L).toMap))(_ ++ _)
   }
 
   /** Scan `files` (paths relative to `root`) under an explicit read
@@ -1189,14 +1154,7 @@ object ManifestTable {
       version: Option[Long]): (DataFrame, Int, Int) = {
     import org.apache.spark.sql.functions.{col, lit}
     require(preds.nonEmpty, "need at least one prune predicate")
-    val vs = versions(table)
-    require(vs.nonEmpty, s"no published version in $table")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v),
-      s"version $v of $table does not exist (live: " +
-        s"${vs.mkString(", ")})")
-    val Manifest(files, stats, nrows, dvs, sstats, _, _) =
-      manifestOf(table, v)
+    val (v, Manifest(files, meta)) = snapshotOf(table, version)
     require(files.nonEmpty,
       s"snapshot v$v of $table lists no data files — a pruned read " +
         "has no schema to produce; read() an earlier version or " +
@@ -1217,9 +1175,10 @@ object ManifestTable {
     // each predicate encodes to ONE zone form: int64 (integer, date,
     // timestamp — against #stats) or bytes (string — against #sstats)
     val enc: Seq[Either[(String, Long, Long),
-        (String, Array[Byte], Array[Byte])]] = preds.map {
+        (String, ManifestScan.StrRange)]] = preds.map {
       case (c, lo: String, hi: String) =>
-        Right((c, StrStat.bytesOf(lo), StrStat.bytesOf(hi)))
+        Right((c, ManifestScan.StrRange(Some(StrStat.bytesOf(lo)), true,
+          Some(StrStat.bytesOf(hi)), true)))
       case (c, lo, hi) =>
         (encLong(lo), encLong(hi)) match {
           case (Some(l), Some(h)) => Left((c, l, h))
@@ -1228,32 +1187,27 @@ object ManifestTable {
               s"timestamp, or string values: ($lo, $hi)")
         }
     }
-    // an entry recorded for ANOTHER column never prunes — the file
-    // simply scans (skipping is an optimization, never a filter);
-    // a file KNOWN empty (#nrows=0 — an empty range slice has no
-    // stats lines to prune on) skips exactly: zero rows match. A
-    // DV'd file's zones stay CONSERVATIVE (deleting rows can only
-    // narrow the true range), so pruning on them is always sound.
-    val kept = files.filter { f =>
-      val lines = stats.getOrElse(f, Seq.empty)
-      val sLines = sstats.getOrElse(f, Seq.empty)
-      !nrows.get(f).contains(0L) &&
-      enc.forall {
-        case Left((statsCol, lo, hi)) =>
-          lines.find(_._1 == statsCol)
-            .forall { case (_, mn, mx) => mx >= lo && mn <= hi }
-        case Right((statsCol, lo, hi)) =>
-          sLines.find(_._1 == statsCol)
-            .forall { case (_, mn, mx) =>
-              StrStat.intersects(mn, mx, Some(lo), Some(hi)) }
-      }
-    }
+    // the DSv2 scan's own file test: an entry recorded for ANOTHER
+    // column never prunes (the file simply scans — skipping is an
+    // optimization, never a filter), a file KNOWN empty (#nrows=0)
+    // skips exactly, and a DV'd file's zones stay conservative
+    // (deleting rows only narrows the true range). A file meets every
+    // range on a column iff it meets their intersection, so repeated
+    // integer predicates on one column fold into one range; string
+    // ranges are each checked.
+    val longRanges = enc.collect { case Left(r) => r }.groupBy(_._1)
+      .map { case (c, rs) => c -> (rs.map(_._2).max, rs.map(_._3).min) }
+    val strRanges = enc.collect { case Right(r) => r }
+    val kept = files.filter(f => ManifestScan.survives(meta.rows.get(f),
+      meta.stats.getOrElse(f, Seq.empty),
+      meta.sstats.getOrElse(f, Seq.empty), longRanges, strRanges))
     // the schema Spark would infer from the files the scan reads
     // (all of them when pruning kept none), read on the driver
     val root = Paths.get(table)
     val base =
       if (kept.nonEmpty)
-        readLive(spark, root, kept, dvs, footerSchema(spark, root, kept))
+        readLive(spark, root, kept, meta.dvs,
+          footerSchema(spark, root, kept))
       else
         scanOf(spark, root, files, footerSchema(spark, root, files))
           .filter(lit(false))
@@ -1274,17 +1228,13 @@ object ManifestTable {
     * only ever served when it is exact. */
   def countRows(table: String,
       version: Option[Long] = None): Option[Long] = {
-    val vs = versions(table)
-    require(vs.nonEmpty, s"no published version in $table")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v), s"no snapshot v$v under $table (have $vs)")
-    val m = manifestOf(table, v)
+    val (_, Manifest(files, meta)) = snapshotOf(table, version)
     // live rows = physical rows − the file's DV cardinality:
     // positions are distinct and each names exactly one physical
     // row, so the subtraction is exact, and metadata-only counts
     // survive merge-on-read DML
-    val counts = m.files.map(f => m.rows.get(f)
-      .map(_ - m.dvs.getOrElse(f, Seq.empty).size))
+    val counts = files.map(f => meta.rows.get(f)
+      .map(_ - meta.dvs.getOrElse(f, Seq.empty).size))
     if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None
   }
 
@@ -1305,17 +1255,13 @@ object ManifestTable {
     * bounds metadata-answerable again). */
   def statsBounds(table: String, colName: String,
       version: Option[Long] = None): Option[(Long, Long)] = {
-    val vs = versions(table)
-    require(vs.nonEmpty, s"no published version in $table")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v), s"no snapshot v$v under $table (have $vs)")
-    val m = manifestOf(table, v)
-    if (m.files.exists(f => m.dvs.get(f).exists(_.nonEmpty)))
+    val (_, Manifest(files, meta)) = snapshotOf(table, version)
+    if (files.exists(f => meta.dvs.get(f).exists(_.nonEmpty)))
       return None
-    val perFile: Seq[Option[Option[(Long, Long)]]] = m.files.map { f =>
-      m.stats.getOrElse(f, Seq.empty).find(_._1 == colName) match {
+    val perFile: Seq[Option[Option[(Long, Long)]]] = files.map { f =>
+      meta.stats.getOrElse(f, Seq.empty).find(_._1 == colName) match {
         case Some((_, mn, mx)) => Some(Some((mn, mx)))
-        case None if m.rows.get(f).contains(0L) => Some(None)
+        case None if meta.rows.get(f).contains(0L) => Some(None)
         case None => None // unknown — cannot answer exactly
       }
     }
@@ -1351,7 +1297,7 @@ object ManifestTable {
       s"need live versions: since=$sinceVersion to=$to (have $vs)")
     require(sinceVersion <= to,
       s"sinceVersion $sinceVersion is after toVersion $to")
-    val before = filesOf(table, sinceVersion).toSet
+    val before = manifestOf(table, sinceVersion).files.toSet
     val toM = manifestOf(table, to)
     val toFiles = toM.files
     val added = toFiles.filterNot(before)
@@ -1361,7 +1307,7 @@ object ManifestTable {
         // toVersion's DVs apply to the added files too: a row both
         // inserted and DV-deleted inside the window is not a change
         // the consumer should see
-        readLive(spark, root, added, toM.dvs,
+        readLive(spark, root, added, toM.meta.dvs,
           footerSchema(spark, root, added))
       else {
         require(toFiles.nonEmpty,
@@ -1444,12 +1390,9 @@ object ManifestTable {
       s"dvMaxFraction must be in [0, 1]: $dvMaxFraction")
     require(dvMaxPositions > 0,
       s"dvMaxPositions must be positive: $dvMaxPositions")
-    val vs = versions(table)
-    require(vs.nonEmpty, s"no published version in $table")
-    val latest = vs.last
-    val m = manifestOf(table, latest)
+    val (latest, m) = snapshotOf(table)
     val candidates = m.files.filter { f =>
-      m.stats.getOrElse(f, Seq.empty).find(_._1 == statsCol) match {
+      m.meta.stats.getOrElse(f, Seq.empty).find(_._1 == statsCol) match {
         case Some((_, mn, mx)) => mx >= lo && mn <= hi
         case None => true // no zones — might hold matches
       }
@@ -1482,7 +1425,7 @@ object ManifestTable {
     val tableSchema = snapshotSchema(spark, table, latest, m.files)
     def liveOf(files: Seq[String]): DataFrame =
       maskDvs(spark, withFilePos(scanOf(spark, root, files, tableSchema)),
-        m.dvs, files)
+        m.meta.dvs, files)
     // DV vs rewrite, per candidate: one counting scan of the
     // candidates (dv mode only — CoW mode keeps the pure zone-level
     // plan and never pays a pre-scan)
@@ -1520,94 +1463,39 @@ object ManifestTable {
           .select(col("__b"), col("__p"))
           .collect().map(r => (pathOf(r.getString(0)), r.getLong(1)))
         hits.groupBy(_._1).view.mapValues { ps =>
-          (m.dvs.getOrElse(ps.head._1, Seq.empty) ++ ps.map(_._2))
+          (m.meta.dvs.getOrElse(ps.head._1, Seq.empty) ++ ps.map(_._2))
             .distinct.sorted
         }.toMap
       }
-    val nonce = java.util.UUID.randomUUID().toString.take(12)
-    val stageDir = Paths.get(table, "data", s"d-$nonce")
-    // columns every rewritten input carried stats for (integer OR
-    // string zones) — recompute so the rewrite doesn't erode the
-    // snapshot's prunability; computed BEFORE the write so the stats
-    // aggregation can ride the rewrite job itself
-    val keepCols =
-      if (cowFiles.isEmpty) Seq.empty[String]
-      else cowFiles.map(f =>
-          (m.stats.getOrElse(f, Seq.empty).map(_._1) ++
-            m.sstats.getOrElse(f, Seq.empty).map(_._1)).toSet)
-        .reduce(_ intersect _).toSeq.sorted
-    var stagedMetaObs
-        : Option[(Stats, SStats, Map[String, Long], Ndvs)] = None
-    var staged =
-      if (cowFiles.isEmpty) Seq.empty[String]
+    val nonce = newNonce()
+    // the rewrite re-records stats over the columns every rewritten
+    // input carried (integer OR string zones), so it doesn't erode
+    // the snapshot's prunability; the stats pass rides the rewrite
+    // job. NOT(match) keeps NULL rows by construction: match is
+    // isNotNull && between, so its negation is true on NULL — a
+    // range predicate is UNKNOWN on NULL, per SQL DELETE
+    val (rewritten, rewrittenMeta) =
+      if (cowFiles.isEmpty) (Seq.empty[String], FileMeta())
       else {
-        // NOT(match) keeps NULL rows by construction: match is
-        // isNotNull && between, so its negation is true on NULL —
-        // a range predicate is UNKNOWN on NULL, per SQL DELETE
         val cowSrc = liveOf(cowFiles)
-        val (wrapped, fetchMeta) = observeStats(
+        writeStaged(
           cowSrc.filter(not(matchPredOf(cowSrc))).drop("__b", "__p"),
-          keepCols)
-        wrapped.write.mode("errorifexists").parquet(stageDir.toString)
-        val listed = Using.resource(Files.list(stageDir)) { st =>
-          st.iterator().asScala
-            .map(_.getFileName.toString)
-            .filter(n => n.endsWith(".parquet") && !n.startsWith("_"))
-            .toSeq.sorted
-            .map(n => s"data/d-$nonce/$n")
-        }
-        stagedMetaObs = fetchMeta(listed)
-        listed
+          table, s"d-$nonce", Some(colsInAll(cowFiles)(m.meta.zoneCols)))
       }
-    val (newStats, newSStats, newRows, newNdvs) =
-      if (staged.isEmpty)
-        (noStats, noSStats, Map.empty[String, Long], noNdvs)
-      else stagedMetaObs.getOrElse(
-        fileMeta(spark, table, staged, keepCols))
-    val cowSet = cowFiles.toSet
-    val inputSet = cowSet ++ dvFiles
-    var after = 0
-    val v = publishLoop(table, nonce, "deleteRange") { snapshot =>
-      val cur = manifestOf(table, snapshot.last)
-      require(inputSet.subsetOf(cur.files.toSet),
-        s"concurrent rewrite removed a delete input of $table — " +
-          "aborting rather than double-applying DML")
-      require(inputSet.forall(f => cur.dvs.getOrElse(f, Seq.empty) ==
-          m.dvs.getOrElse(f, Seq.empty)),
-        s"concurrent DV landed on a delete input of $table — " +
-          "aborting rather than resurrecting the rival's deletes")
-      val carried = cur.files.filterNot(cowSet)
-      if (carried.isEmpty && staged.isEmpty) {
-        // everything deleted: keep the snapshot readable (schema
-        // survives) with one explicit empty file
-        val emptyDir = Paths.get(table, "data", s"d-$nonce-empty")
-        if (!Files.isDirectory(emptyDir))
-          scanOf(spark, root, cowFiles, tableSchema)
-            .limit(0).coalesce(1)
-            .write.mode("errorifexists").parquet(emptyDir.toString)
-        staged = Using.resource(Files.list(emptyDir)) { st =>
-          st.iterator().asScala
-            .map(_.getFileName.toString)
-            .filter(n => n.endsWith(".parquet") && !n.startsWith("_"))
-            .toSeq.sorted
-            .map(n => s"data/d-$nonce-empty/$n")
-        }
+    // everything deleted: keep the snapshot readable (its schema
+    // survives) with one explicit empty file, whose #nrows line is
+    // exactly 0 so countRows/statsBounds stay exact after a full purge
+    val (staged, stagedMeta) =
+      if (rewritten.nonEmpty || !m.files.forall(cowFiles.toSet))
+        (rewritten, rewrittenMeta)
+      else {
+        val (empty, _) = writeStaged(
+          scanOf(spark, root, cowFiles, tableSchema).limit(0).coalesce(1),
+          table, s"d-$nonce-empty")
+        (empty, FileMeta(rows = empty.map(_ -> 0L).toMap))
       }
-      after = carried.size + staged.size
-      // the delete-all placeholder is staged AFTER fileMeta ran, so
-      // backfill its #nrows line here — its count is exactly 0 by
-      // construction (same zero-row backfill fileMeta applies), which
-      // keeps countRows/statsBounds exact instead of degrading to
-      // None after a full purge
-      val rowsAll = newRows ++
-        staged.filterNot(newRows.contains).map(_ -> 0L)
-      Right(metaLines(carried, cur.stats, cur.rows,
-          cur.dvs ++ dvUpdates, cur.sstats, pvals = cur.pvals,
-          ndvs = cur.ndvs) ++
-        metaLines(staged, newStats, rowsAll, sstats = newSStats,
-          ndvs = newNdvs) ++
-        carried ++ staged)
-    }
+    val (v, after) = publishReplace(table, cowFiles, staged, stagedMeta,
+      m.meta.dvs, dvUpdates, "delete")
     (v, cowFiles.size, dvFiles.size, after)
   }
 
@@ -1669,10 +1557,7 @@ object ManifestTable {
       s"dvMaxFraction must be in [0, 1]: $dvMaxFraction")
     require(dvMaxPositions > 0,
       s"dvMaxPositions must be positive: $dvMaxPositions")
-    val vs = versions(table)
-    require(vs.nonEmpty, s"no published version in $table")
-    val latest = vs.last
-    val m = manifestOf(table, latest)
+    val (latest, m) = snapshotOf(table)
     require(m.files.nonEmpty, s"snapshot v$latest of $table is empty")
     // the batch feeds MANY jobs (dup check, zone hits, the match
     // scan, the rewrite and insert writes) — materialize it once so
@@ -1712,7 +1597,7 @@ object ManifestTable {
       keyKind match {
         case 'S' =>
           val zonedS = m.files.flatMap(f =>
-            m.sstats.getOrElse(f, Seq.empty).find(_._1 == keyCol)
+            m.meta.sstats.getOrElse(f, Seq.empty).find(_._1 == keyCol)
               .map { case (_, mn, mx) => (f, mn, mx) })
           val hits =
             if (zonedS.isEmpty) Set.empty[String]
@@ -1728,7 +1613,7 @@ object ManifestTable {
             case _   => unix_micros(col(keyCol))
           }
           val zoned = m.files.flatMap(f =>
-            m.stats.getOrElse(f, Seq.empty).find(_._1 == keyCol)
+            m.meta.stats.getOrElse(f, Seq.empty).find(_._1 == keyCol)
               .map { case (_, mn, mx) => (f, mn, mx) })
           val hits =
             if (zoned.isEmpty) Set.empty[String]
@@ -1742,7 +1627,7 @@ object ManifestTable {
     val candidates = m.files.filter(f =>
       hitFiles.contains(f) || zoneless.contains(f))
     val root = Paths.get(table)
-    val nonce = java.util.UUID.randomUUID().toString.take(12)
+    val nonce = newNonce()
     // align the batch to the table schema (by name, loud on drift) —
     // the snapshot's merged schema is cached per version and passed
     // explicitly to every scan below, so the footer-union job runs
@@ -1759,7 +1644,7 @@ object ManifestTable {
     val upKeys = up.select(col(keyCol)).distinct()
     def liveOf(files: Seq[String]): DataFrame =
       maskDvs(spark, withFilePos(scanOf(spark, root, files, tableSchema)),
-        m.dvs, files)
+        m.meta.dvs, files)
     // DV vs rewrite, per candidate (dv mode only): ONE match scan
     // answers both the budget split and the DV position lists — the
     // matched live rows' (file, pos) pairs are collected once;
@@ -1784,14 +1669,15 @@ object ManifestTable {
         val mCount: Map[String, Long] =
           matched.groupBy(_._1).view.mapValues(_.length.toLong).toMap
         val missing = candidates.filter(f =>
-          mCount.getOrElse(f, 0L) > 0L && !m.rows.contains(f))
+          mCount.getOrElse(f, 0L) > 0L && !m.meta.rows.contains(f))
         val scannedN: Map[String, Long] =
           if (missing.isEmpty) Map.empty
           else liveOf(missing).groupBy(col("__b"))
             .agg(count(lit(1)).as("__n")).collect()
             .map(r => pathOf(r.getString(0)) -> r.getLong(1)).toMap
         def liveN(f: String): Long = scannedN.getOrElse(f,
-          m.rows(f) - m.dvs.get(f).map(_.size.toLong).getOrElse(0L))
+          m.meta.rows(f) -
+            m.meta.dvs.get(f).map(_.size.toLong).getOrElse(0L))
         val split = candidates.flatMap { f =>
           mCount.getOrElse(f, 0L) match {
             case 0L => None // proven key-free: carry
@@ -1810,34 +1696,20 @@ object ManifestTable {
           if (dvF.isEmpty) noDvs
           else matched.filter(p => dvSet.contains(p._1))
             .groupBy(_._1).view.mapValues { ps =>
-              (m.dvs.getOrElse(ps.head._1, Seq.empty) ++ ps.map(_._2))
+              (m.meta.dvs.getOrElse(ps.head._1, Seq.empty) ++
+                ps.map(_._2))
                 .distinct.sorted
             }.toMap
         (dvF, split.collect { case (f, false) => f }, dvUp)
       }
-    def listStaged(dir: Path, prefix: String): Seq[String] =
-      Using.resource(Files.list(dir)) { st =>
-        st.iterator().asScala
-          .map(_.getFileName.toString)
-          .filter(n => n.endsWith(".parquet") && !n.startsWith("_"))
-          .toSeq.sorted
-          .map(n => s"$prefix/$n")
-      }
     // re-record metadata over the columns all rewritten inputs
     // carried — integer or string zones (fresh tables / no rewrite:
-    // just the key column). Computed BEFORE the staged writes so the
-    // stats aggregation can ride the write jobs themselves.
+    // just the key column); the stats pass rides the write jobs
     val keepCols =
       if (cowFiles.isEmpty) Seq(keyCol)
-      else cowFiles.map(f =>
-          (m.stats.getOrElse(f, Seq.empty).map(_._1) ++
-            m.sstats.getOrElse(f, Seq.empty).map(_._1)).toSet)
-        .reduce(_ intersect _).toSeq.sorted
-    val noMeta = (noStats, noSStats, Map.empty[String, Long], noNdvs)
-    val (rewrittenStaged, inserts, rwMetaObs) =
-      if (cowFiles.isEmpty)
-        (Seq.empty[String], up,
-          None: Option[(Stats, SStats, Map[String, Long], Ndvs)])
+      else colsInAll(cowFiles)(m.meta.zoneCols)
+    val (rewritten, rewrittenMeta, inserts) =
+      if (cowFiles.isEmpty) (Seq.empty[String], FileMeta(), up)
       else {
         val base = liveOf(cowFiles)
           .select(tableCols.map(col): _*)
@@ -1848,23 +1720,15 @@ object ManifestTable {
         val replaced = base
           .join(up.select(col(keyCol)), Seq(keyCol), "left_anti")
           .unionByName(up.join(baseKeys, Seq(keyCol), "left_semi"))
-        val stageDir = Paths.get(table, "data", s"m-$nonce")
-        // the rewrite's stats pass rides the write job (single-output
-        // rewrites — the common shape — skip the separate scan)
-        val (wrappedRw, fetchRw) =
-          if (keepCols.isEmpty) (replaced, null)
-          else observeStats(replaced, keepCols)
         // keep the file count at the rewritten-file count: the rewrite
         // replaces N files with N, not with one-per-shuffle-partition
-        wrappedRw.coalesce(cowFiles.size)
-          .write.mode("errorifexists").parquet(stageDir.toString)
-        val staged = listStaged(stageDir, s"data/m-$nonce")
+        val (rw, rwMeta) = writeStaged(replaced, table, s"m-$nonce",
+          Some(keepCols).filter(_.nonEmpty), files = cowFiles.size)
         // inserts: update keys matching NO rewritten file (untouched
         // files provably hold none of the batch's keys — the zone or
         // match-scan proof; DV'd rows are dead, so their keys' new
         // rows insert)
-        (staged, up.join(baseKeys, Seq(keyCol), "left_anti"),
-          if (keepCols.isEmpty) None else fetchRw(staged))
+        (rw, rwMeta, up.join(baseKeys, Seq(keyCol), "left_anti"))
       }
     // the batch's new keys land as ONE append file (batch-sized),
     // with the count (and stats) OBSERVED in the write job — the
@@ -1872,57 +1736,28 @@ object ManifestTable {
     // with no inserts deletes the staged junk file after the fact
     // instead of having probed first, so an empty file never lands
     // in the snapshot (it would poison the exact-or-None row count)
-    val insertDir = Paths.get(table, "data", s"m-$nonce-ins")
-    val (wrappedIns, fetchIns) = observeStats(inserts, keepCols)
-    wrappedIns.coalesce(1)
-      .write.mode("errorifexists").parquet(insertDir.toString)
-    val insListed = listStaged(insertDir, s"data/m-$nonce-ins")
-    val insMetaObs = fetchIns(insListed)
-    val insEmpty = insListed.isEmpty ||
-      insMetaObs.exists(_._3.values.sum == 0L)
-    if (insEmpty && insListed.nonEmpty) deleteRecursively(insertDir)
+    val (insListed, insMeta) = writeStaged(inserts, table,
+      s"m-$nonce-ins", Some(keepCols), files = 1)
+    val insEmpty = insListed.isEmpty || insMeta.rows.values.sum == 0L
+    if (insEmpty && insListed.nonEmpty)
+      deleteRecursively(Paths.get(table, "data", s"m-$nonce-ins"))
     val insertStaged = if (insEmpty) Seq.empty[String] else insListed
     // both writes consumed the base checkpoints (and the batch's own
     // checkpoint) — release them now instead of pinning per-MERGE
     // copies for the session's life
     (up0 +: toFree).foreach(Lineage.freeLocalCheckpoint)
-    def metaOf(paths: Seq[String],
-        observed: Option[(Stats, SStats, Map[String, Long], Ndvs)])
-        : (Stats, SStats, Map[String, Long], Ndvs) =
-      if (paths.isEmpty || keepCols.isEmpty) noMeta
-      else observed.getOrElse(fileMeta(spark, table, paths, keepCols))
-    val (rwStats, rwSStats, rwRows, rwNdvs) =
-      metaOf(rewrittenStaged, rwMetaObs)
-    val (insStats, insSStats, insRows, insNdvs) =
-      metaOf(insertStaged, insMetaObs)
-    val cowSet = cowFiles.toSet
-    val inputSet = cowSet ++ dvFiles
-    var after = 0
-    val v = publishLoop(table, nonce, "mergeByKey") { snapshot =>
-      val cur = manifestOf(table, snapshot.last)
-      require(inputSet.subsetOf(cur.files.toSet),
-        s"concurrent rewrite removed a merge input of $table — " +
-          "aborting rather than double-applying DML")
-      require(inputSet.forall(f => cur.dvs.getOrElse(f, Seq.empty) ==
-          m.dvs.getOrElse(f, Seq.empty)),
-        s"concurrent DV landed on a merge input of $table — " +
-          "aborting rather than resurrecting the rival's deletes")
-      val carried = cur.files.filterNot(cowSet)
-      val staged = rewrittenStaged ++ insertStaged
-      after = carried.size + staged.size
-      Right(metaLines(carried, cur.stats, cur.rows,
-          cur.dvs ++ dvUpdates, cur.sstats, pvals = cur.pvals,
-          ndvs = cur.ndvs) ++
-        metaLines(staged, rwStats ++ insStats, rwRows ++ insRows,
-          sstats = rwSStats ++ insSStats,
-          ndvs = rwNdvs ++ insNdvs) ++
-        carried ++ staged)
-    }
+    // no column every rewritten input carried: nothing is recorded,
+    // not even row counts
+    val meta =
+      if (keepCols.isEmpty) FileMeta()
+      else rewrittenMeta ++ (if (insEmpty) FileMeta() else insMeta)
+    val (v, after) = publishReplace(table, cowFiles,
+      rewritten ++ insertStaged, meta, m.meta.dvs, dvUpdates, "merge")
     // rewrites are written as the union of tableSchema's base rows
     // and the batch, inserts as the batch: both carry exactly
     // tableSchema when the batch's fields match it
     seedSchema(table, latest, v, tableSchema, dropped = cowFiles.nonEmpty,
-      staged = if (rewrittenStaged.isEmpty && insertStaged.isEmpty) Nil
+      staged = if (rewritten.isEmpty && insertStaged.isEmpty) Nil
         else Seq(up.schema))
     (v, cowFiles.size, dvFiles.size, after)
     } catch {
@@ -1965,9 +1800,7 @@ object ManifestTable {
       ndvs: Ndvs = noNdvs): (Long, Int, Int) = {
     require(dvMaxFraction >= 0.0 && dvMaxFraction <= 1.0,
       s"dvMaxFraction must be in [0, 1]: $dvMaxFraction")
-    val vs = versions(table)
-    require(vs.nonEmpty, s"no published version in $table")
-    val m = manifestOf(table, vs.last)
+    val (_, m) = snapshotOf(table)
     deletes.keys.foreach(f => require(m.files.contains(f),
       s"delta commit deletes from $f, which is not live in $table"))
     // merged per-file vectors; split into keep-as-DV vs rewrite
@@ -1976,105 +1809,46 @@ object ManifestTable {
     }
     val (dvKeep, rewrite) = merged.partition { case (f, all) =>
       val overCap = all.size > dvMaxPositions
-      val overFrac = m.rows.get(f)
+      val overFrac = m.meta.rows.get(f)
         .exists(n => all.size.toDouble > dvMaxFraction * n)
       !(overCap || overFrac)
     }
     val root = Paths.get(table)
-    val nonce = java.util.UUID.randomUUID().toString.take(12)
+    val nonce = newNonce()
     // CoW fallback: rewrite each over-budget file live-minus-DV —
-    // ONE staged file per input (a file-local rewrite keeps the
-    // partition tuple and zone columns of its input)
-    val (rwStaged, rwStats, rwSStats, rwRows, rwNdvs, rwPvals) =
-      if (rewrite.isEmpty)
-        (Seq.empty[String], noStats, noSStats,
-          Map.empty[String, Long], noNdvs, noPvals)
-      else {
-        val outs = rewrite.keys.toSeq.sorted.zipWithIndex.map {
-          case (f, i) =>
-            val dir = Paths.get(table, "data", s"dx-$nonce-$i")
-            val cols = (m.stats.getOrElse(f, Seq.empty).map(_._1) ++
-              m.sstats.getOrElse(f, Seq.empty).map(_._1)).distinct
-            // the file's stats pass (or, stat-less, just its exact
-            // #nrows count) rides the rewrite job itself — the
-            // separate fileMeta/count scan per rewritten file is gone
-            val (wrapped, fetchMeta) = observeStats(
-              readLive(spark, root, Seq(f), Map(f -> rewrite(f)),
-                footerSchema(spark, root, Seq(f))),
-              cols)
-            wrapped.coalesce(1)
-              .write.mode("errorifexists").parquet(dir.toString)
-            val staged = Using.resource(Files.list(dir)) { st =>
-              st.iterator().asScala.map(_.getFileName.toString)
-                .filter(n => n.endsWith(".parquet") &&
-                  !n.startsWith("_"))
-                .toSeq.sorted.map(n => s"data/dx-$nonce-$i/$n")
-            }
-            require(staged.size == 1,
-              s"single-file rewrite staged ${staged.size} files")
-            (f, staged.head, cols,
-              fetchMeta(staged).getOrElse(
-                fileMeta(spark, table, staged, cols)))
-        }
-        var st: Stats = noStats
-        var sst: SStats = noSStats
-        var rw = Map.empty[String, Long]
-        var nd: Ndvs = noNdvs
-        outs.foreach { case (_, _, cols, (a, b, c, e)) =>
-          if (cols.isEmpty) {
-            // stat-less input: record only the exact #nrows count
-            // (the observed pass carries it; stats maps stay absent)
-            rw = rw ++ c
-          } else {
-            st = st ++ a; sst = sst ++ b; rw = rw ++ c; nd = nd ++ e
-          }
-        }
-        (outs.map(_._2), st, sst, rw, nd,
-          outs.flatMap { case (f, out, _, _) =>
-            m.pvals.get(f).filter(_.nonEmpty).map(out -> _)
-          }.toMap)
-      }
-    val touched = merged.keySet
-    val rewriteSet = rewrite.keySet
-    // on a conflict abort (require-failure below) the CoW-fallback
-    // rewrites staged under data/dx-<nonce>-* are unreferenced by any
-    // manifest — reclaim them eagerly rather than leave orphans for
-    // vacuum (the delta write's own s-<nonce> staging is dropped by
+    // ONE staged file per input, keeping its partition tuple and
+    // re-recording its zone columns (or, stat-less, just its exact
+    // #nrows count) in the rewrite job itself
+    val rewrites = rewrite.keys.toSeq.sorted.zipWithIndex.map {
+      case (f, i) =>
+        val (out, meta) = writeStaged(
+          readLive(spark, root, Seq(f), Map(f -> rewrite(f)),
+            footerSchema(spark, root, Seq(f))),
+          table, s"dx-$nonce-$i", Some(colsInAll(Seq(f))(m.meta.zoneCols)),
+          files = 1)
+        require(out.size == 1,
+          s"single-file rewrite staged ${out.size} files")
+        (out.head, meta ++ FileMeta(pvals = m.meta.pvals.get(f)
+          .filter(_.nonEmpty).map(out.head -> _).toMap))
+    }
+    // on a conflict abort the CoW-fallback rewrites staged under
+    // data/dx-<nonce>-* are unreferenced by any manifest — reclaim
+    // them eagerly rather than leave orphans for vacuum (the delta
+    // write's own s-<nonce> staging is dropped by
     // ManifestDeltaBatchWrite.abort; these dirs are staged HERE, so
     // they are cleaned HERE)
-    val v = try {
-      publishLoop(table, nonce, "applyDeltaCommit") { snapshot =>
-        val cur = manifestOf(table, snapshot.last)
-        require(touched.subsetOf(cur.files.toSet),
-          s"concurrent rewrite removed a delta-operation input of " +
-            s"$table — aborting rather than double-applying DML")
-        require(touched.forall(f => cur.dvs.getOrElse(f, Seq.empty) ==
-            expectDvs.getOrElse(f, Seq.empty)),
-          s"concurrent DV landed on a delta-operation input of $table " +
-            "— aborting rather than conflating two serializations")
-        val carried = cur.files.filterNot(rewriteSet)
-        val allStaged = staged ++ rwStaged
-        Right(metaLines(carried, cur.stats, cur.rows,
-            cur.dvs ++ dvKeep, cur.sstats, pvals = cur.pvals,
-            ndvs = cur.ndvs) ++
-          metaLines(allStaged, stats ++ rwStats, rows ++ rwRows,
-            sstats = sstats ++ rwSStats, pvals = pvals ++ rwPvals,
-            ndvs = ndvs ++ rwNdvs) ++
-          carried ++ allStaged)
+    val (v, _) =
+      try publishReplace(table, rewrite.keys.toSeq,
+        staged ++ rewrites.map(_._1),
+        rewrites.map(_._2).foldLeft(
+          FileMeta(stats, sstats, rows, ndvs, pvals))(_ ++ _),
+        expectDvs, dvKeep, "delta-operation")
+      catch {
+        case e: Throwable =>
+          rewrites.indices.foreach(i =>
+            deleteRecursively(Paths.get(table, "data", s"dx-$nonce-$i")))
+          throw e
       }
-    } catch {
-      case e: Throwable =>
-        rewrite.keys.toSeq.indices.foreach { i =>
-          val dir = Paths.get(table, "data", s"dx-$nonce-$i")
-          if (Files.isDirectory(dir)) {
-            Using.resource(Files.list(dir)) { st =>
-              st.iterator().asScala.toSeq.foreach(Files.deleteIfExists)
-            }
-            Files.deleteIfExists(dir)
-          }
-        }
-        throw e
-    }
     (v, dvKeep.size, rewrite.size)
   }
 
@@ -2123,14 +1897,11 @@ object ManifestTable {
   def compact(spark: SparkSession, table: String,
       targetBytes: Long): (Long, Int, Int) = {
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
-    val vs = versions(table)
-    require(vs.nonEmpty, s"no published version in $table")
-    val latest = vs.last
-    val m0 = manifestOf(table, latest)
+    val (latest, m0) = snapshotOf(table)
     val files = m0.files
     val root = Paths.get(table)
     def hasDv(f: String): Boolean =
-      m0.dvs.get(f).exists(_.nonEmpty)
+      m0.meta.dvs.get(f).exists(_.nonEmpty)
     // prefix-sum packing in manifest order (compactionPlan's rule,
     // driver-side: the file list IS metadata)
     var cum = 0L
@@ -2147,7 +1918,7 @@ object ManifestTable {
     val (single, multi) = grouped.partition(g =>
       g.size == 1 && !g.exists(hasDv))
     if (multi.isEmpty) return (latest, files.size, files.size)
-    val nonce = java.util.UUID.randomUUID().toString.take(12)
+    val nonce = newNonce()
     // ONE job rewrites every group: tag each input row with its
     // group via a broadcast basename→group join (staged part-file
     // names carry task UUIDs, so basenames are unique), cluster by
@@ -2171,7 +1942,7 @@ object ManifestTable {
     val stageRoot = Paths.get(table, "data", s".c-$nonce-stage")
     // DV'd inputs rewrite through their mask (the dead rows fall out
     // here, once, instead of at every subsequent read)
-    maskDvs(spark, withFilePos(src), m0.dvs, multi.flatten)
+    maskDvs(spark, withFilePos(src), m0.meta.dvs, multi.flatten)
       .withColumnRenamed("__b", "__base")
       .join(broadcast(grpOf.toDF("__base", "__grp")), "__base")
       .repartition(multi.size, col("__grp"))
@@ -2186,161 +1957,84 @@ object ManifestTable {
     // key on the basename, so every output takes its group's `g<gi>-`
     // prefix: a later DV on one group's file must not mask rows of
     // another group's.
-    val staged: Seq[(Int, Seq[String])] = multi.indices.map { gi =>
-      val pdir = stageRoot.resolve(s"__grp=$gi")
-      val outDir = Paths.get(table, "data", s"c-$nonce-$gi")
-      if (!Files.isDirectory(pdir)) {
-        src.limit(0).select(dataCols.map(col): _*).coalesce(1)
-          .write.mode("errorifexists").parquet(outDir.toString)
-      } else {
+    val staged: Seq[Seq[String]] = multi.indices.map { gi =>
+      val pdir = s"data/.c-$nonce-stage/__grp=$gi"
+      if (!Files.isDirectory(Paths.get(table, pdir)))
+        writeStaged(src.limit(0).select(dataCols.map(col): _*)
+          .coalesce(1), table, s"c-$nonce-$gi")._1
+      else {
+        val outDir = Paths.get(table, "data", s"c-$nonce-$gi")
         Files.createDirectories(outDir)
-        Using.resource(Files.list(pdir)) { st =>
-          st.iterator().asScala
-            .map(_.getFileName.toString)
-            .filter(n => n.endsWith(".parquet") && !n.startsWith("_"))
-            .foreach(n =>
-              Files.move(pdir.resolve(n), outDir.resolve(s"g$gi-$n")))
-        }
-      }
-      gi -> Using.resource(Files.list(outDir)) { st =>
-        st.iterator().asScala
-          .map(_.getFileName.toString)
-          .filter(n => n.endsWith(".parquet") && !n.startsWith("_"))
-          .toSeq.sorted
-          .map(n => s"data/c-$nonce-$gi/$n")
+        stagedFiles(table, pdir).foreach(p =>
+          Files.move(root.resolve(p),
+            outDir.resolve(s"g$gi-${p.split('/').last}")))
+        stagedFiles(table, s"data/c-$nonce-$gi")
       }
     }
     deleteRecursively(stageRoot)
-    val stagedFiles = staged.flatMap(_._2)
-    val rewritten = multi.flatten.toSet
     // groups that paid down merge-on-read debt: the inputs' manifest
     // arithmetic no longer bounds their output EXACTLY (the masked
     // rows may have held the min/max), so re-derive stats + counts
     // from the rewritten files — one scan of just-written hot data,
     // only for DV-carrying groups; statsBounds turns exact again the
-    // moment the DVs purge
-    val dvGroupMeta
-        : Map[Int, (Stats, SStats, Map[String, Long], Ndvs)] =
-      staged.flatMap { case (gi, outs) =>
-        if (!multi(gi).exists(hasDv)) None
-        else {
-          // KNOWN-empty inputs (#nrows=0) contribute no rows, so
-          // their (absent) stats must not erase the output's — only
-          // inputs that can hold rows join the column intersection
-          val counted = multi(gi).filterNot(f =>
-            m0.rows.get(f).contains(0L))
-          val common =
-            if (counted.isEmpty) Seq.empty[String]
-            else counted.map(f =>
-                (m0.stats.getOrElse(f, Seq.empty).map(_._1) ++
-                  m0.sstats.getOrElse(f, Seq.empty).map(_._1)).toSet)
-              .reduce(_ intersect _).toSeq.sorted
-          Some(gi -> fileMeta(spark, table, outs, common))
+    // moment the DVs purge. Other groups' outputs get MERGED lines
+    // for every column all their inputs carry — the union's
+    // min(mins)/max(maxes) bounds any output file exactly — and the
+    // summed row count when every input carries one (the output
+    // holds exactly its inputs' rows). KNOWN-empty inputs (#nrows=0)
+    // contribute no rows, so their (absent) stats must not erase the
+    // output's: only inputs that can hold rows join the column
+    // intersection.
+    val meta = multi.zip(staged).map { case (grp, outs) =>
+      val counted = grp.filterNot(f => m0.meta.rows.get(f).contains(0L))
+      def fold[E](entries: Map[String, Seq[E]], name: E => String)
+          (merge: Seq[E] => E): Seq[E] =
+        colsInAll(counted)(f => entries.getOrElse(f, Seq.empty).map(name))
+          .map(c => merge(counted.map(f => entries(f).find(name(_) == c).get)))
+      if (grp.exists(hasDv))
+        fileMeta(spark, table, outs, colsInAll(counted)(m0.meta.zoneCols))
+      else {
+        val st = fold(m0.meta.stats, (_: (String, Long, Long))._1) { es =>
+          (es.head._1, es.map(_._2).min, es.map(_._3).max) }
+        // string zones merge the same way — min of stored mins / max
+        // of stored maxes by BYTE comparison; stored bounds are
+        // already conservative, so their fold bounds any output file
+        // exactly as soundly
+        def pick(keep: Int => Boolean)(a: String, b: String): String =
+          if (keep(StrStat.cmp(StrStat.unhex(a), StrStat.unhex(b)))) a
+          else b
+        val sst = fold(m0.meta.sstats,
+            (_: (String, String, String))._1) { es =>
+          (es.head._1, es.map(_._2).reduce(pick(_ <= 0)),
+            es.map(_._3).reduce(pick(_ >= 0))) }
+        // NDV sketches merge by register max (HLL union law) and
+        // histogram counts by vector ADD (fixed log frame, emitted
+        // only when every input carries one) — pure manifest
+        // arithmetic. A multi-output group stamps each output with
+        // the union sketch: per-file it only over-covers, and the
+        // table-level register max over any subset stays the exact
+        // union.
+        val nd = fold(m0.meta.ndvs,
+            (_: (String, Long, String, String))._1) { es =>
+          val regs = es.map(e => StrStat.unhex(e._3)).reduce(NdvSketch.merge)
+          val hist =
+            if (es.exists(_._4.isEmpty)) ""
+            else graft.expressions.LogHist.encode(
+              es.map(e => graft.expressions.LogHist.decode(e._4))
+                .reduce(graft.expressions.LogHist.merge))
+          (es.head._1, es.map(_._2).sum, StrStat.hex(regs), hist)
         }
-      }.toMap
-    var after = 0
-    val v = publishLoop(table, nonce, "compact") { snapshot =>
-      val cur = manifestOf(table, snapshot.last)
-      require(rewritten.subsetOf(cur.files.toSet),
-        s"concurrent rewrite removed a compacted input of $table — " +
-          "aborting rather than resurrecting dropped rows")
-      require(rewritten.forall(f => cur.dvs.getOrElse(f, Seq.empty) ==
-          m0.dvs.getOrElse(f, Seq.empty)),
-        s"concurrent DV landed on a compacted input of $table — " +
-          "aborting rather than resurrecting the rival's deletes")
-      // rivals' appends since our snapshot ride along untouched;
-      // survivors keep their zone lines, and compacted outputs get
-      // MERGED lines for every column all their inputs carry — the
-      // union's min(mins)/max(maxes) bounds any output file exactly.
-      // Row counts merge the same way (the output holds exactly the
-      // sum of its inputs' rows) when every input carries one.
-      // DV-carrying groups use the recomputed meta instead.
-      val carried = cur.files.filterNot(rewritten.contains)
-      val mergedMetaLines = staged.flatMap { case (gi, outs) =>
-        dvGroupMeta.get(gi) match {
-          case Some((st, ss, rw, nd)) =>
-            metaLines(outs, st, rw, sstats = ss, ndvs = nd)
-          case None =>
-            // same known-empty exclusion as the DV recompute: an
-            // input that provably holds no rows adds nothing to the
-            // output's range, so its missing stats must not force
-            // the output to always-scan
-            val counted = multi(gi).filterNot(f =>
-              cur.rows.get(f).contains(0L))
-            val entryLists = counted.map(f =>
-              cur.stats.getOrElse(f, Seq.empty))
-            val common =
-              if (entryLists.isEmpty) Set.empty[String]
-              else entryLists.map(_.map(_._1).toSet)
-                .reduce(_ intersect _)
-            val perCol = common.toSeq.sorted.map { c =>
-              val es = entryLists.map(_.find(_._1 == c).get)
-              (c, es.map(_._2).min, es.map(_._3).max)
-            }
-            // string zones merge the same way — min of stored mins /
-            // max of stored maxes by BYTE comparison; stored bounds
-            // are already conservative, so their fold bounds any
-            // output file exactly as soundly
-            val sEntryLists = counted.map(f =>
-              cur.sstats.getOrElse(f, Seq.empty))
-            val sCommon =
-              if (sEntryLists.isEmpty) Set.empty[String]
-              else sEntryLists.map(_.map(_._1).toSet)
-                .reduce(_ intersect _)
-            def hexMin(a: String, b: String): String =
-              if (StrStat.cmp(StrStat.unhex(a), StrStat.unhex(b)) <= 0)
-                a else b
-            def hexMax(a: String, b: String): String =
-              if (StrStat.cmp(StrStat.unhex(a), StrStat.unhex(b)) >= 0)
-                a else b
-            val sPerCol = sCommon.toSeq.sorted.map { c =>
-              val es = sEntryLists.map(_.find(_._1 == c).get)
-              (c, es.map(_._2).reduce(hexMin),
-                es.map(_._3).reduce(hexMax))
-            }
-            val counts = multi(gi).map(cur.rows.get)
-            val nLine =
-              if (outs.size == 1 && counts.forall(_.isDefined))
-                Seq(s"#nrows=${outs.head}|${counts.flatten.sum}")
-              else Seq.empty
-            // NDV sketches merge by register max (HLL union law) —
-            // pure manifest arithmetic, same carry-through contract
-            // as the zone bounds. A multi-output group stamps each
-            // output with the union sketch: per-file it only
-            // over-covers, and the table-level register max over any
-            // subset stays the exact union.
-            val nEntryLists = counted.map(f =>
-              cur.ndvs.getOrElse(f, Seq.empty))
-            val nCommon =
-              if (nEntryLists.isEmpty) Set.empty[String]
-              else nEntryLists.map(_.map(_._1).toSet)
-                .reduce(_ intersect _)
-            val nPerCol = nCommon.toSeq.sorted.map { c =>
-              val es = nEntryLists.map(_.find(_._1 == c).get)
-              val regs = es.map(e => StrStat.unhex(e._3))
-                .reduce(NdvSketch.merge)
-              // histogram counts merge by vector ADD (fixed log
-              // frame) — emitted only when every input carries one
-              val hist =
-                if (es.exists(_._4.isEmpty)) ""
-                else graft.expressions.LogHist.encode(
-                  es.map(e => graft.expressions.LogHist.decode(e._4))
-                    .reduce(graft.expressions.LogHist.merge))
-              (c, es.map(_._2).sum, StrStat.hex(regs), hist)
-            }
-            outs.flatMap(o => perCol.map { case (c, mn, mx) =>
-              s"#stats=$o|$c|$mn|$mx" }) ++
-              outs.flatMap(o => sPerCol.map { case (c, mn, mx) =>
-                s"#sstats=$o|$c|$mn|$mx" }) ++
-              outs.flatMap(o => nPerCol.map {
-                case (c, nulls, regs, hist) =>
-                  s"#ndv=$o|$c|$nulls|$regs|$hist" }) ++ nLine
-        }
+        val counts = grp.map(m0.meta.rows.get)
+        FileMeta(outs.map(_ -> st).toMap, outs.map(_ -> sst).toMap,
+          if (outs.size == 1 && counts.forall(_.isDefined))
+            Map(outs.head -> counts.flatten.sum)
+          else Map.empty,
+          outs.map(_ -> nd).toMap)
       }
-      after = carried.size + stagedFiles.size
-      Right(cur.metaLinesFor(carried) ++ mergedMetaLines ++
-        carried ++ stagedFiles)
-    }
+    }.reduce(_ ++ _)
+    // rivals' appends since our snapshot ride along untouched
+    val (v, after) = publishReplace(table, multi.flatten, staged.flatten,
+      meta, m0.meta.dvs, what = "compacted")
     // every group's output is written from `src`, read under the
     // snapshot's schema
     seedSchema(table, latest, v, srcSchema, dropped = true,
@@ -2390,26 +2084,23 @@ object ManifestTable {
     import org.apache.spark.sql.functions.col
     require(targetBytes > 0,
       s"targetBytes must be positive: $targetBytes")
-    val vs = versions(table)
-    require(vs.nonEmpty, s"no published version in $table")
-    val latest = vs.last
-    val m0 = manifestOf(table, latest)
+    val (latest, m0) = snapshotOf(table)
     val cands = pvalCandidates(value)
     val eligible = m0.files.filter(f =>
-      m0.pvals.getOrElse(f, Seq.empty)
+      m0.meta.pvals.getOrElse(f, Seq.empty)
         .exists { case (c, e) => c == partCol && cands.contains(e) })
     require(eligible.nonEmpty,
       s"no live file of $table carries partition $partCol=$value — " +
         "nothing to compact (check the column and value)")
     val root = Paths.get(table)
-    def hasDv(f: String): Boolean = m0.dvs.get(f).exists(_.nonEmpty)
+    def hasDv(f: String): Boolean = m0.meta.dvs.get(f).exists(_.nonEmpty)
     val byTuple = eligible
-      .groupBy(f => m0.pvals.getOrElse(f, Seq.empty).sorted)
+      .groupBy(f => m0.meta.pvals.getOrElse(f, Seq.empty).sorted)
       .toSeq.sortBy(_._1.mkString("|"))
     val todo = byTuple.filter { case (_, fs) =>
       fs.size > 1 || fs.exists(hasDv) }
     if (todo.isEmpty) return (latest, m0.files.size, m0.files.size)
-    val nonce = java.util.UUID.randomUUID().toString.take(12)
+    val nonce = newNonce()
     // one cached footer-union for the snapshot instead of one
     // mergeSchema job PER PARTITION GROUP in the driver loop below
     val tableSchema = snapshotSchema(spark, table, latest, m0.files)
@@ -2419,54 +2110,20 @@ object ManifestTable {
       val bytes = fs.map(f => Files.size(root.resolve(f))).sum
       val nOut = math.max(1L,
         (bytes + targetBytes - 1) / targetBytes).toInt
-      val outDir = Paths.get(table, "data", s"cp-$nonce-$gi")
-      val counted = fs.filterNot(f => m0.rows.get(f).contains(0L))
-      val common =
-        if (counted.isEmpty) Seq.empty[String]
-        else counted.map(f =>
-            (m0.stats.getOrElse(f, Seq.empty).map(_._1) ++
-              m0.sstats.getOrElse(f, Seq.empty).map(_._1)).toSet)
-          .reduce(_ intersect _).toSeq.sorted
+      val counted = fs.filterNot(f => m0.meta.rows.get(f).contains(0L))
       // the group's stats pass rides its rewrite job — a single-output
       // group (the common shape at target size) skips the separate
       // just-written-data scan
-      val (wrapped, fetchMeta) = observeStats(
-        maskDvs(spark, withFilePos(src), m0.dvs, fs)
-          .select(dataCols.map(col): _*), common)
-      wrapped.coalesce(nOut)
-        .write.mode("errorifexists").parquet(outDir.toString)
-      val outs = Using.resource(Files.list(outDir)) { st =>
-        st.iterator().asScala.map(_.getFileName.toString)
-          .filter(n => n.endsWith(".parquet") && !n.startsWith("_"))
-          .toSeq.sorted.map(n => s"data/cp-$nonce-$gi/$n")
-      }
-      val (st, ss, rw, nd) = fetchMeta(outs).getOrElse(
-        fileMeta(spark, table, outs, common))
-      (tuple, outs, st, ss, rw, nd)
+      val (outs, meta) = writeStaged(
+        maskDvs(spark, withFilePos(src), m0.meta.dvs, fs)
+          .select(dataCols.map(col): _*),
+        table, s"cp-$nonce-$gi", Some(colsInAll(counted)(m0.meta.zoneCols)),
+        files = nOut)
+      (outs, meta ++ FileMeta(pvals = outs.map(_ -> tuple).toMap))
     }
-    val rewritten = todo.flatMap(_._2).toSet
-    var after = 0
-    val v = publishLoop(table, nonce, "compactPartition") { snapshot =>
-      val cur = manifestOf(table, snapshot.last)
-      require(rewritten.subsetOf(cur.files.toSet),
-        s"concurrent rewrite removed a partition-OPTIMIZE input of " +
-          s"$table — aborting rather than resurrecting dropped rows")
-      require(rewritten.forall(f => cur.dvs.getOrElse(f, Seq.empty) ==
-          m0.dvs.getOrElse(f, Seq.empty)),
-        s"concurrent DV landed on a partition-OPTIMIZE input of " +
-          s"$table — aborting rather than resurrecting the rival's " +
-          "deletes")
-      val carried = cur.files.filterNot(rewritten.contains)
-      val stagedLines = stagedAll.flatMap {
-        case (tuple, outs, st, ss, rw, nd) =>
-          metaLines(outs, st, rw, sstats = ss,
-            pvals = outs.map(o => o -> tuple).toMap, ndvs = nd)
-      }
-      val stagedFiles = stagedAll.flatMap(_._2)
-      after = carried.size + stagedFiles.size
-      Right(cur.metaLinesFor(carried) ++ stagedLines ++
-        carried ++ stagedFiles)
-    }
+    val (v, after) = publishReplace(table, todo.flatMap(_._2),
+      stagedAll.flatMap(_._1), stagedAll.map(_._2).reduce(_ ++ _),
+      m0.meta.dvs, what = "partition-OPTIMIZE")
     (v, m0.files.size, after)
   }
 
@@ -2510,14 +2167,11 @@ object ManifestTable {
         s"is a plain sort): $clusterCols")
     require(bits > 0 && clusterCols.size.toLong * bits <= 62,
       s"dims*bits must be in (0, 62]: ${clusterCols.size}*$bits")
-    val vs = versions(table)
-    require(vs.nonEmpty, s"no published version in $table")
-    val latest = vs.last
-    val m0 = manifestOf(table, latest)
+    val (latest, m0) = snapshotOf(table)
     require(m0.files.nonEmpty,
       s"snapshot v$latest of $table lists no data files")
     val root = Paths.get(table)
-    val src = readLive(spark, root, m0.files, m0.dvs,
+    val src = readLive(spark, root, m0.files, m0.meta.dvs,
       snapshotSchema(spark, table, latest, m0.files))
     val dataCols = src.columns.toSeq
     require(clusterCols.forall(dataCols.contains),
@@ -2587,7 +2241,7 @@ object ManifestTable {
     val totalBytes = m0.files.map(f => Files.size(root.resolve(f))).sum
     val nOut = math.max(1L,
       (totalBytes + targetBytes - 1) / targetBytes).toInt
-    val nonce = java.util.UUID.randomUUID().toString.take(12)
+    val nonce = newNonce()
     val stageDir = Paths.get(table, "data", s"cc-$nonce")
     require(!dataCols.contains("__c") && !dataCols.contains("__bkt"),
       s"compactClustered's internal columns collide with a table " +
@@ -2638,81 +2292,36 @@ object ManifestTable {
     // buckets' files
     Files.createDirectories(stageDir)
     val distinctBkts = cellBkt.map(_._2).distinct.sorted
-    distinctBkts.foreach { b =>
-      val pdir = stage0.resolve(s"__bkt=$b")
-      if (Files.isDirectory(pdir)) {
-        Using.resource(Files.list(pdir)) { st =>
-          st.iterator().asScala
-            .map(_.getFileName.toString)
-            .filter(n => n.endsWith(".parquet") && !n.startsWith("_"))
-            .toSeq.sorted.zipWithIndex
-            .foreach { case (n, i) =>
-              Files.move(pdir.resolve(n),
-                stageDir.resolve(f"part-b$b%05d-$i%03d-$nonce.parquet"))
-            }
-        }
+    def moveInto(rel: String, b: Int): Unit =
+      stagedFiles(table, rel).zipWithIndex.foreach { case (p, i) =>
+        Files.move(root.resolve(p),
+          stageDir.resolve(f"part-b$b%05d-$i%03d-$nonce.parquet"))
       }
+    distinctBkts.foreach { b =>
+      val pdir = s"data/.cc-$nonce-stage/__bkt=$b"
+      if (Files.isDirectory(Paths.get(table, pdir))) moveInto(pdir, b)
     }
     deleteRecursively(stage0)
     // a fully-DV'd (zero live rows) snapshot wrote no bucket: stage
     // one explicit empty file so the snapshot's schema survives the
     // rewrite (compact's empty-group rule)
     if (distinctBkts.isEmpty) {
-      val tmpE = Paths.get(table, "data", s".cc-$nonce-empty")
-      src.limit(0).select(dataCols.map(col): _*).coalesce(1)
-        .write.mode("errorifexists").parquet(tmpE.toString)
-      Using.resource(Files.list(tmpE)) { st =>
-        st.iterator().asScala
-          .map(_.getFileName.toString)
-          .filter(n => n.endsWith(".parquet") && !n.startsWith("_"))
-          .toSeq.sorted.zipWithIndex
-          .foreach { case (n, i) =>
-            Files.move(tmpE.resolve(n),
-              stageDir.resolve(f"part-b00000-$i%03d-$nonce.parquet"))
-          }
-      }
-      deleteRecursively(tmpE)
+      writeStaged(src.limit(0).select(dataCols.map(col): _*).coalesce(1),
+        table, s".cc-$nonce-empty")
+      moveInto(s"data/.cc-$nonce-empty", 0)
+      deleteRecursively(Paths.get(table, "data", s".cc-$nonce-empty"))
     }
-    val staged = Using.resource(Files.list(stageDir)) { st =>
-      st.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(n => n.endsWith(".parquet") && !n.startsWith("_"))
-        .toSeq.sorted
-        .map(n => s"data/cc-$nonce/$n")
-    }
+    val staged = stagedFiles(table, s"data/cc-$nonce")
     // stats: the cluster columns (that's what the layout now serves)
     // plus whatever every counted input already carried
-    val counted = m0.files.filterNot(f => m0.rows.get(f).contains(0L))
-    val prevCols =
-      if (counted.isEmpty) Seq.empty[String]
-      else counted.map(f =>
-          (m0.stats.getOrElse(f, Seq.empty).map(_._1) ++
-            m0.sstats.getOrElse(f, Seq.empty).map(_._1)).toSet)
-        .reduce(_ intersect _).toSeq
-    val statsCols = (clusterCols ++ prevCols).distinct.sorted
-    val (newStats, newSStats, newRows, newNdvs) =
-      if (staged.isEmpty)
-        (noStats, noSStats, Map.empty[String, Long], noNdvs)
+    val counted = m0.files.filterNot(f => m0.meta.rows.get(f).contains(0L))
+    val statsCols =
+      (clusterCols ++ colsInAll(counted)(m0.meta.zoneCols)).distinct.sorted
+    val meta =
+      if (staged.isEmpty) FileMeta()
       else fileMeta(spark, table, staged, statsCols)
-    val rewritten = m0.files.toSet
-    var after = 0
-    val v = publishLoop(table, nonce, "compactClustered") { snapshot =>
-      val cur = manifestOf(table, snapshot.last)
-      require(rewritten.subsetOf(cur.files.toSet),
-        s"concurrent rewrite removed a clustered-OPTIMIZE input of " +
-          s"$table — aborting rather than resurrecting dropped rows")
-      require(rewritten.forall(f => cur.dvs.getOrElse(f, Seq.empty) ==
-          m0.dvs.getOrElse(f, Seq.empty)),
-        s"concurrent DV landed on a clustered-OPTIMIZE input of " +
-          s"$table — aborting rather than resurrecting the rival's " +
-          "deletes")
-      val carried = cur.files.filterNot(rewritten.contains)
-      after = carried.size + staged.size
-      Right(cur.metaLinesFor(carried) ++
-        metaLines(staged, newStats, newRows, sstats = newSStats,
-          ndvs = newNdvs) ++
-        carried ++ staged)
-    }
+    val (v, after) = publishReplace(table, m0.files, staged, meta,
+      m0.meta.dvs, what = "clustered-OPTIMIZE")
     (v, m0.files.size, after)
   }
 
@@ -2750,7 +2359,7 @@ object ManifestTable {
     require(keepVersions >= 1, s"keepVersions must be ≥1: $keepVersions")
     val vs = versions(table)
     val keep = vs.takeRight(keepVersions)
-    val live = keep.flatMap(filesOf(table, _)).toSet
+    val live = keep.flatMap(manifestOf(table, _).files).toSet
     val dataRoot = Paths.get(table, "data")
     val all =
       if (!Files.isDirectory(dataRoot)) Seq.empty[Path]
@@ -2785,12 +2394,12 @@ object ManifestTable {
     require(vs.nonEmpty, s"no committed snapshot under $table")
     vs.map { v =>
       val m = manifestOf(table, v)
-      val live = m.files.map(f => m.rows.get(f)
-        .map(_ - m.dvs.getOrElse(f, Seq.empty).size))
+      val live = m.files.map(f => m.meta.rows.get(f)
+        .map(_ - m.meta.dvs.getOrElse(f, Seq.empty).size))
       val nRows =
         if (live.forall(_.isDefined)) live.flatten.sum else -1L
       val nDv = m.files.map(f =>
-        m.dvs.getOrElse(f, Seq.empty).size.toLong).sum
+        m.meta.dvs.getOrElse(f, Seq.empty).size.toLong).sum
       (v, m.files.size.toLong, nRows, nDv,
         tagOf(table, v).getOrElse(""))
     }.toDF("version", "n_files", "n_rows", "dv_positions", "tag")
@@ -2811,13 +2420,9 @@ object ManifestTable {
   def read(spark: SparkSession, table: String,
       version: Option[Long] = None,
       mergeSchema: Boolean = false): DataFrame = {
-    val vs = versions(table)
-    require(vs.nonEmpty, s"no committed snapshot under $table")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v), s"no snapshot v$v under $table (have $vs)")
-    val m = manifestOf(table, v)
+    val (v, m) = snapshotOf(table, version)
     val root = Paths.get(table)
-    readLive(spark, root, m.files, m.dvs,
+    readLive(spark, root, m.files, m.meta.dvs,
       if (mergeSchema) snapshotSchema(spark, table, v, m.files)
       else footerSchema(spark, root, m.files))
   }
@@ -2967,15 +2572,4 @@ private[graft] object StrStat {
       mx: String): Option[(String, String, String)] =
     truncUpper(bytesOf(mx)).map(hi =>
       (c, hex(truncLower(bytesOf(mn))), hex(hi)))
-
-  /** Zone test: can a file whose stored bounds are (hexMn, hexMx)
-    * hold a value in [lo, hi] (inclusive byte ranges, None =
-    * unbounded)? Sound under truncation: stored bounds only ever
-    * WIDEN the file's true range. */
-  def intersects(hexMn: String, hexMx: String, lo: Option[Array[Byte]],
-      hi: Option[Array[Byte]]): Boolean = {
-    val mn = unhex(hexMn)
-    val mx = unhex(hexMx)
-    lo.forall(l => cmp(mx, l) >= 0) && hi.forall(h => cmp(mn, h) <= 0)
-  }
 }

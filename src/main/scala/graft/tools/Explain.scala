@@ -3,21 +3,11 @@
 // Run: sbt 'runMain graft.tools.Explain q_s4_scan_prune ...'
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession(4)
     val names = if (args.nonEmpty) args.toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>

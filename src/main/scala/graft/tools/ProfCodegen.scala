@@ -1,30 +1,21 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Codegen-compilation accounting across bench passes: runs the full
   * inventory twice in one JVM (what Bench does) and reports, per
   * pass, how many wholestage/expression fragments were compiled by
-  * Janino and the approximate time spent compiling. If pass 2
-  * compiles nearly as much as pass 1, the 100-entry codegen cache is
-  * thrashing across the 429-query inventory and every pass pays full
-  * compilation. Optional first arg -n<k> limits to the first k
-  * queries for a fast probe. Throwaway optimization-round tool. */
+  * Janino and the approximate time spent compiling, on Bench's
+  * session. If pass 2 compiles nearly as much as pass 1, the codegen
+  * cache is thrashing across the 429-query inventory and every pass
+  * pays full compilation (the default-100 vs inventory-sized cache
+  * A/B is recorded in `OPTIMIZATION_r18.md` §18). Optional first arg
+  * -n<k> limits to the first k queries for a fast probe. Throwaway
+  * optimization-round tool. */
 object ProfCodegen {
   def main(args: Array[String]): Unit = {
     val sfDir = args.find(!_.startsWith("-")).getOrElse("/root/testdata/sf0.1")
     val limit = args.find(_.startsWith("-n")).map(_.drop(2).toInt)
       .getOrElse(Int.MaxValue)
-    val cacheEntries = args.find(_.startsWith("-c")).map(_.drop(2).toInt)
-      .getOrElse(100)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.codegen.cache.maxEntries", cacheEntries)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession(32)
     spark.read.parquet(s"$sfDir/lineitem.parquet").limit(100)
       .write.format("noop").mode("overwrite").save()
     import org.apache.spark.metrics.source.CodegenMetrics._

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Planning-vs-execution split: for each named query, times (a) the
   * DataFrame construction (query fn, includes analysis of
   * intermediate frames), (b) forcing the executed plan (Catalyst
@@ -11,13 +9,7 @@ import org.apache.spark.sql.SparkSession
 object ProfPlan {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession(32)
     spark.read.parquet(s"$sfDir/lineitem.parquet").limit(100)
       .write.format("noop").mode("overwrite").save()
     args.drop(1).foreach { n =>

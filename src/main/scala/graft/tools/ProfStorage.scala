@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Session-state pressure probe: times a target query FRESH, runs the
   * whole inventory once (what a bench pass does), dumps the pinned-RDD
   * storage footprint, then times the same target again in the same
@@ -12,13 +10,7 @@ object ProfStorage {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val target = args.drop(1).headOption.getOrElse("q_g_link_jaccard")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession(32)
     spark.read.parquet(s"$sfDir/lineitem.parquet").limit(100)
       .write.format("noop").mode("overwrite").save()
 

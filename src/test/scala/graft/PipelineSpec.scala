@@ -3259,6 +3259,190 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  /** Assert every file version `v` of `table` added over `v - 1`
+    * (`added` of them) records the `#stats`/`#sstats`/`#ndv`/`#nrows`
+    * lines a single-file commitWithStats of that file on `cols`
+    * records (the observed in-write path); returns the added files. */
+  private def assertStatsOfSingleCommit(table: String, v: Long,
+      cols: Seq[String], added: Int): Seq[String] = {
+    import graft.sources.ManifestTable
+    val before = ManifestTable.snapshotFor(table, Some(v - 1L)).files.toSet
+    val files = ManifestTable.snapshotFor(table, Some(v)).files
+      .filterNot(before)
+    assert(files.size == added, files)
+    files.foreach { f =>
+      val ref = Files.createTempDirectory("graft-stats-ref").toString
+      val rv = ManifestTable.commitWithStats(
+        spark.read.parquet(java.nio.file.Paths.get(table, f).toString)
+          .coalesce(1), ref, append = false, cols, None)
+      val rf = ManifestTable.snapshotFor(ref, Some(rv)).files
+      assert(rf.size == 1)
+      val got = fileMetaLines(table, v, f)
+      assert(got.exists(_.startsWith("#nrows=")), got)
+      assert(got == fileMetaLines(ref, rv, rf.head), s"$table $f")
+    }
+    files
+  }
+
+  test("every writer that recomputes per-file stats records the lines " +
+      "a single-file commitWithStats of each output file records") {
+    import graft.sources.ManifestTable
+    val cols = Seq("k", "s")
+    def frame(lo: Long, hi: Long, parts: Int) =
+      spark.range(lo, hi + 1L, 1L, parts).select($"id".as("k"),
+        concat(lit("s"), ($"id" % 37L).cast("string")).as("s"),
+        (($"id" * 7L) % 100L).as("g"))
+    // four files, k zones [1,100] [101,200] [201,300] [301,400]
+    def seeded(name: String): String = {
+      val t = Files.createTempDirectory(s"graft-restats-$name").toString
+      ManifestTable.commitWithStats(frame(1L, 400L, 4), t,
+        append = false, cols, None)
+      t
+    }
+    // deleteRangeDv copy-on-write: two inputs rewritten, one job's
+    // output lands one file per input partition
+    val del = seeded("delete")
+    val (dv, dRw, _, _) = ManifestTable.deleteRangeDv(spark, del, "k",
+      150L, 250L, dvMaxFraction = 0.0)
+    assert(dRw == 2)
+    assertStatsOfSingleCommit(del, dv, cols, added = 2)
+    // mergeByKeyDv: a two-file rewrite (coalesced to two outputs)
+    // plus the single insert file
+    val mer = seeded("merge")
+    val upd = ((150L to 250L) :+ 1000L).toDF("k")
+      .select($"k", lit("u").as("s"), ($"k" + 1L).as("g"))
+    val (mv, mRw, _, _) = ManifestTable.mergeByKeyDv(spark, mer, upd,
+      "k", dvMaxFraction = 0.0)
+    assert(mRw == 2)
+    assertStatsOfSingleCommit(mer, mv, cols, added = 3)
+    // applyDeltaCommit: the over-budget file is rewritten live-minus-DV
+    val dl = seeded("delta")
+    val dlf = ManifestTable.snapshotFor(dl, None).files
+    val (xv, _, xRw) = ManifestTable.applyDeltaCommit(spark, dl,
+      Map(dlf(1) -> (0L until 60L)), Seq.empty, Map.empty, Map.empty,
+      Map.empty, Map.empty, Map.empty, dvMaxFraction = 0.5)
+    assert(xRw == 1)
+    assertStatsOfSingleCommit(dl, xv, cols, added = 1)
+    // compact: a DV-carrying group recomputes its output's stats
+    val cp = seeded("compact")
+    ManifestTable.deleteRangeDv(spark, cp, "k", 10L, 12L,
+      dvMaxFraction = 0.5)
+    val (cv, _, cAfter) = ManifestTable.compact(spark, cp, Long.MaxValue / 2)
+    assert(cAfter == 1)
+    assertStatsOfSingleCommit(cp, cv, cols, added = 1)
+    // compactPartition over a partitioned DSv2 table (stats on k)
+    val pt = Files.createTempDirectory("graft-restats-part").toString
+    for (c <- 0 to 1)
+      (1L to 90L).map(i => (i + 90 * c, i % 3)).toDF("k", "bucket")
+        .coalesce(1).write.format("graft-manifest").option("path", pt)
+        .option("partitionColumns", "bucket").option("statsColumns", "k")
+        .mode("append").save()
+    val (pv, _, _) = ManifestTable.compactPartition(spark, pt,
+      Long.MaxValue / 2, "bucket", 0L)
+    assertStatsOfSingleCommit(pt, pv, Seq("k"), added = 1)
+    // compactClustered: two outputs, stats over the cluster columns
+    // plus every column the inputs carried
+    val cc = seeded("clustered")
+    val ccBytes = ManifestTable.snapshotFor(cc, None).files
+      .map(f => Files.size(java.nio.file.Paths.get(cc, f))).sum
+    val (ccv, _, ccAfter) = ManifestTable.compactClustered(spark, cc,
+      ccBytes / 2 + 1, Seq("k", "g"))
+    assert(ccAfter == 2)
+    assertStatsOfSingleCommit(cc, ccv, Seq("g", "k", "s"), added = 2)
+  }
+
+  test("the shared replace-publish aborts when a rival removed an " +
+      "input or landed a DV on one, and carries a rival's append") {
+    import graft.sources.ManifestTable
+    // two files, k zones [1,50] and [51,100]
+    def mk(): String = {
+      val t = Files.createTempDirectory("graft-replace-race").toString
+      ManifestTable.commitWithStats(spark.range(1L, 101L, 1L, 2)
+        .select($"id".as("k")), t, append = false, Seq("k"), None)
+      t
+    }
+    // the writer under test: it pinned the snapshot, replaces the first
+    // file by a staged copy of its rows above 10 and marks position 0
+    // of the second file dead
+    def pin(t: String) = {
+      val snap = ManifestTable.snapshotFor(t, None)
+      (snap.files, snap.dvs)
+    }
+    def replace(t: String,
+        pinned: (Seq[String], Map[String, Seq[Long]])): (Long, Int) = {
+      val (a, b) = (pinned._1(0), pinned._1(1))
+      val dir = s"data/t-${java.util.UUID.randomUUID()}"
+      spark.read.parquet(java.nio.file.Paths.get(t, a).toString)
+        .filter($"k" > 10L).coalesce(1)
+        .write.parquet(java.nio.file.Paths.get(t, dir).toString)
+      val staged = Files.list(java.nio.file.Paths.get(t, dir))
+      val out = try scala.jdk.CollectionConverters.IteratorHasAsScala(
+          staged.iterator()).asScala.map(_.getFileName.toString)
+        .filter(_.endsWith(".parquet")).map(n => s"$dir/$n").toSeq
+      finally staged.close()
+      ManifestTable.publishReplace(t, Seq(a), out,
+        ManifestTable.FileMeta(rows = out.map(_ -> 40L).toMap),
+        pinned._2, dvUpdates = Map(b -> Seq(0L)))
+    }
+    // (a) a rival rewrite removed the replaced input: abort
+    val tA = mk()
+    val pinA = pin(tA)
+    ManifestTable.deleteRange(spark, tA, "k", 1L, 5L)
+    val exA = intercept[IllegalArgumentException](replace(tA, pinA))
+    assert(exA.getMessage.contains("concurrent rewrite removed"),
+      exA.getMessage)
+    // (b) a rival DV landed on the file this publish marks: abort
+    val tB = mk()
+    val pinB = pin(tB)
+    ManifestTable.deleteRangeDv(spark, tB, "k", 60L, 60L,
+      dvMaxFraction = 1.0)
+    val exB = intercept[IllegalArgumentException](replace(tB, pinB))
+    assert(exB.getMessage.contains("concurrent DV"), exB.getMessage)
+    assert(ManifestTable.versions(tA) == Seq(1L, 2L) &&
+      ManifestTable.versions(tB) == Seq(1L, 2L), "an abort publishes nothing")
+    // (c) a rival append rides along with its metadata lines
+    val tC = mk()
+    val pinC = pin(tC)
+    ManifestTable.commitWithStats(Seq(200L, 201L).toDF("k").coalesce(1),
+      tC, append = true, Seq("k"), None)
+    val (v, after) = replace(tC, pinC)
+    assert(v == 3L && after == 3, s"$v/$after")
+    val snap = ManifestTable.snapshotFor(tC, None)
+    val rival = ManifestTable.snapshotFor(tC, Some(2L)).files.last
+    assert(snap.files.contains(rival) && snap.stats(rival) ==
+      Seq(("k", 200L, 201L)) && snap.rows(rival) == 2L)
+    assert(!snap.files.contains(pinC._1(0)))
+    assert(snap.dvs == Map(pinC._1(1) -> Seq(0L)))
+    assert(ManifestTable.read(spark, tC).as[Long].collect().sorted.toSeq ==
+      (11L to 50L) ++ (52L to 100L) ++ Seq(200L, 201L))
+    assert(ManifestTable.countRows(tC).contains(40L + 49L + 2L))
+  }
+
+  test("readPruned folds repeated ranges on one column into their " +
+      "intersection") {
+    import graft.sources.ManifestTable
+    val t = Files.createTempDirectory("graft-prune-fold").toString
+    // k zones [1,100] [101,200] [201,300] [301,400]; s is k's
+    // zero-padded string, so its zones follow k's
+    ManifestTable.commitWithStats(spark.range(1L, 401L, 1L, 4)
+      .select($"id".as("k"), format_string("%04d", $"id").as("s")),
+      t, append = false, Seq("k", "s"), None)
+    // [50,250] and [150,350] meet in [150,250]: the 2nd and 3rd files
+    val (df, files, kept) = ManifestTable.readPruned(spark, t,
+      Seq(("k", 50L, 250L), ("k", 150L, 350L)), None)
+    assert((files, kept) == (4, 2), s"$files/$kept")
+    assert(df.count() == 101L)
+    // the same on a string column
+    val (sdf, sFiles, sKept) = ManifestTable.readPrunedTyped(spark, t,
+      Seq(("s", "0050", "0250"), ("s", "0150", "0350")), None)
+    assert((sFiles, sKept) == (4, 2), s"$sFiles/$sKept")
+    assert(sdf.count() == 101L)
+    // ranges that miss each other keep the files meeting both
+    val (_, _, apart) = ManifestTable.readPruned(spark, t,
+      Seq(("k", 1L, 120L), ("k", 180L, 400L)), None)
+    assert(apart == 1)
+  }
+
   test("manifest reads plan with no Spark job and keep Spark's " +
       "inferred schema") {
     import graft.sources.ManifestTable
