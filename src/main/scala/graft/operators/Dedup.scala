@@ -151,19 +151,10 @@ object Dedup {
       bands)
     // bucket-size cap: a bucket shared by B docs yields B^2 candidate
     // pairs; giant buckets are boilerplate signatures, not near-dups —
-    // dropping them bounds every join key (standard LSH hygiene).
-    // The cap tests membership in the HOT minority (buckets past the
-    // cap), which broadcasts — the anti-join costs the banded stream
-    // no exchange, where the former semi-join against the small-bucket
-    // MAJORITY shuffled the stream a second time and exchanged a
-    // bucket-universe build side. Exact: broadcast hash anti-join has
-    // no false drops.
-    val bigBuckets = bandedAll.groupBy("band", "bucket")
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > maxBucket)
-      .select("band", "bucket")
-    val banded = bandedAll.join(broadcast(bigBuckets),
-      Seq("band", "bucket"), "left_anti")
+    // dropping them bounds every join key (standard LSH hygiene)
+    val key = Seq("band", "bucket")
+    val banded = HotKeys.drop(bandedAll,
+      HotKeys.over(bandedAll, key, maxBucket), key)
     val l = banded.select(col("band"), col("bucket"),
       col("id").as("id_a"), col("sig").as("sig_a"))
     val r = banded.select(col("band"), col("bucket"),
@@ -180,7 +171,7 @@ object Dedup {
   /** Shared banding step of the LSH paths: minhash signature (fused
     * native kernel), one row per (id, band) with the band-slice md5
     * bucket. The signature table is localCheckpointed — it is
-    * consumed several times (cap count, semi-join, join sides) and is
+    * consumed several times (cap census, cap anti join, join sides) and is
     * tiny relative to the text it summarizes (id + k longs); on a
     * real cluster persist it explicitly instead. */
   private def bandedBuckets(df: DataFrame, idCol: String,
@@ -220,15 +211,8 @@ object Dedup {
         bandedBuckets(indexDf, idCol, textCol, shingleSize, k, bands)
           .withColumn("__new", lit(false)))
       .localCheckpoint(eager = false)
-    // hot-bucket cap as a broadcast anti-join on the HOT minority —
-    // same inversion as minHashLshPairs: no second exchange of the
-    // combined stream, exact survivors
-    val big = all.groupBy("band", "bucket")
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > maxBucket)
-      .select("band", "bucket")
-    val kept = all.join(broadcast(big), Seq("band", "bucket"),
-      "left_anti")
+    val key = Seq("band", "bucket")
+    val kept = HotKeys.drop(all, HotKeys.over(all, key, maxBucket), key)
     val l = kept.filter(col("__new")).select(col("band"), col("bucket"),
       col("id").as("new_id"), col("sig").as("sig_a"))
     val r = kept.select(col("band"), col("bucket"),
@@ -262,24 +246,16 @@ object Dedup {
       n: Int, threshold: Double, dfCap: Int = 1000): DataFrame = {
     val df = spread(df0)
     // materialize the exploded shingle table once: it feeds the df-cap
-    // count, the semi-join, the per-doc sizes, and BOTH self-join
+    // census, the cap's anti join, the per-doc sizes, and BOTH self-join
     // sides — without the checkpoint the interpreted shingle HOF is
     // re-evaluated for each consumer (cluster runs: persist instead)
     val shRaw = df.select(col(idCol).as("id"),
         explode(array_distinct(call_function("graft_shingles",
           tokens(col(textCol)), lit(n)))).as("shingle"))
       .localCheckpoint(eager = false)
-    // df cap as a broadcast anti-join on the HOT minority (shingles
-    // past the cap are boilerplate): no second exchange of the
-    // shingle stream, no vocabulary-sized build side; exact survivors
-    val hotSh = shRaw.groupBy("shingle")
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") > dfCap)
-      .select("shingle")
-    // isNotNull mirrors the former semi-join exactly (a semi drops
-    // null keys, an anti keeps them)
-    val sh = shRaw.join(broadcast(hotSh), Seq("shingle"), "left_anti")
-      .filter(col("shingle").isNotNull)
+    // df cap: shingles past it are boilerplate
+    val sh = HotKeys.drop(shRaw,
+        HotKeys.over(shRaw, Seq("shingle"), dfCap), Seq("shingle"))
       .localCheckpoint(eager = false)
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
     val pairs = sh.select(col("id").as("id_a"), col("shingle"))
@@ -437,17 +413,9 @@ object Dedup {
         explode(array_distinct(call_function("graft_shingles",
           tokens(col(textCol)), lit(n)))).as("shingle"))
       .localCheckpoint(eager = false)
-    // df cap as a broadcast anti-join on the HOT minority (shingles
-    // past the cap are boilerplate): no second exchange of the
-    // shingle stream, no vocabulary-sized build side; exact survivors
-    val hotSh = shRaw.groupBy("shingle")
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") > dfCap)
-      .select("shingle")
-    // isNotNull mirrors the former semi-join exactly (a semi drops
-    // null keys, an anti keeps them)
-    val sh = shRaw.join(broadcast(hotSh), Seq("shingle"), "left_anti")
-      .filter(col("shingle").isNotNull)
+    // df cap: shingles past it are boilerplate
+    val sh = HotKeys.drop(shRaw,
+        HotKeys.over(shRaw, Seq("shingle"), dfCap), Seq("shingle"))
       .localCheckpoint(eager = false)
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
     val pairs = sh.select(col("id").as("id_a"), col("shingle"))
@@ -547,15 +515,9 @@ object Dedup {
         explode(sequence(lit(0), lit(bands - 1))).as("band"))
       .withColumn("chunk",
         expr(s"shiftright(fp, band * $width)").bitwiseAND(lit(mask)))
-    // hot-chunk cap via broadcast anti-join on the HOT minority —
-    // same inversion as minHashLshPairs: the banded fingerprint
-    // stream keeps its single self-join exchange, exact survivors
-    val bigBuckets = bandedAll.groupBy("band", "chunk")
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > maxBucket)
-      .select("band", "chunk")
-    val banded = bandedAll.join(broadcast(bigBuckets),
-      Seq("band", "chunk"), "left_anti")
+    val key = Seq("band", "chunk")
+    val banded = HotKeys.drop(bandedAll,
+      HotKeys.over(bandedAll, key, maxBucket), key)
     banded.select(col("band"), col("chunk"),
         col("id").as("id_a"), col("fp").as("fp_a"))
       .join(banded.select(col("band"), col("chunk"),
@@ -598,15 +560,8 @@ object Dedup {
     val all = banded(newSigs, isNew = true)
       .unionByName(banded(indexSigs, isNew = false))
       .localCheckpoint(eager = false)
-    // hot-chunk cap as a broadcast anti-join on the HOT minority —
-    // same inversion as hammingPairs: exact survivors, no second
-    // exchange of the combined batch+index stream
-    val big = all.groupBy("band", "chunk")
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > maxBucket)
-      .select("band", "chunk")
-    val kept = all.join(broadcast(big), Seq("band", "chunk"),
-      "left_anti")
+    val key = Seq("band", "chunk")
+    val kept = HotKeys.drop(all, HotKeys.over(all, key, maxBucket), key)
     val l = kept.filter(col("__new")).select(col("band"), col("chunk"),
       col("id").as("new_id"), col("fp").as("fp_a"))
     val r = kept.select(col("band"), col("chunk"),
@@ -870,14 +825,8 @@ object Dedup {
             concat(col("s").substr(lit(1), i - 1),
               col("s").substr(i + 1, length(col("s"))))))).as("k"))
       .distinct()
-    // variant-df cap as a broadcast anti-join on the HOT minority —
-    // same inversion as the shingle df caps: the deletion-keyed
-    // stream keeps its single self-join exchange, exact survivors
-    val hotK = keyed.groupBy("k")
-      .agg(count(lit(1)).as("df_k"))
-      .filter(col("df_k") > maxVariantDf)
-      .select("k")
-    val blocked = keyed.join(broadcast(hotK), Seq("k"), "left_anti")
+    val blocked = HotKeys.drop(keyed,
+      HotKeys.over(keyed, Seq("k"), maxVariantDf), Seq("k"))
     blocked.select(col("k"), col("id").as("id_a"), col("s").as("s_a"))
       .join(blocked.select(col("k"), col("id").as("id_b"),
         col("s").as("s_b")), Seq("k"))
@@ -934,33 +883,19 @@ object Dedup {
       .select(col(idCol).as("__id"),
         posexplode(call_function("graft_shingle_pos_hashes",
           tokens(col(textCol)), lit(k))).as(Seq("__p", "__gh")))
-    // HOT-GRAM PREFILTER before the collect: grams past the df cap
-    // are dropped BEFORE aggregation, so no corpus-hot stop-gram ever
-    // BUILDS a collect_list buffer (filtering after aggregation
-    // bounded nothing — a million-occurrence gram's array had to
-    // exist before the cap could drop it, an unspillable OOM at
-    // corpus scale). The membership test is an exact census of the
-    // HOT side only: grams on more than maxGramDf documents are the
-    // template stop-grams the cap exists for — a set orders of
-    // magnitude smaller than the vocabulary — so it BROADCASTS and
-    // the anti-join costs the fingerprint stream NO exchange (the
-    // earlier semi-join against the rare-gram majority shuffled the
-    // full stream a second time AND exchanged a vocabulary-sized
-    // build side; plan evidence in plans/r18). Surviving grams are
-    // exactly the old post-filter's (distinct-doc count <= maxGramDf;
-    // a broadcast hash anti-join is exact — no false drops).
-    val hot = pos.groupBy("__gh")
-      .agg(count_distinct(col("__id")).as("__df"))
-      .filter(col("__df") > maxGramDf)
-      .select("__gh")
-    // the matched-position pairs and the diagonal derive MAP-SIDE
+    // HOT-GRAM PREFILTER before the collect: grams on more than
+    // maxGramDf documents are dropped BEFORE aggregation, so no
+    // corpus-hot stop-gram ever BUILDS a collect_list buffer
+    // (filtering after aggregation bounded nothing — a
+    // million-occurrence gram's array had to exist before the cap
+    // could drop it, an unspillable OOM at corpus scale).
+    // The matched-position pairs and the diagonal derive MAP-SIDE
     // from the per-gram occurrence array (two chained generators,
     // a < b by id order inside the struct array); the per-gram
-    // buffer is now HARD-bounded by maxGramDf docs x per-doc repeats.
-    val m = pos.join(broadcast(hot), Seq("__gh"), "left_anti")
-      // isNotNull mirrors the former semi-join exactly (a semi drops
-      // null keys, an anti keeps them)
-      .filter(col("__gh").isNotNull)
+    // buffer is HARD-bounded by maxGramDf docs x per-doc repeats.
+    val hot = HotKeys.over(pos, Seq("__gh"), maxGramDf,
+      census = count_distinct(col("__id")))
+    val m = HotKeys.drop(pos, hot, Seq("__gh"))
       .groupBy("__gh")
       .agg(collect_list(struct(col("__id"), col("__p"))).as("__xs"))
       .select(explode(expr(
@@ -1199,18 +1134,8 @@ object Dedup {
       maxBucket: Int = 1000): DataFrame = {
     require(minShared >= 1, s"minShared must be >= 1: $minShared")
     val u = fp.select(col(idCol).as("id"), col("fp_hash")).distinct()
-    // the bucket cap tests membership in the HOT side only: buckets
-    // past maxBucket are boilerplate fingerprints — a set orders of
-    // magnitude smaller than the bucket universe — so the census of
-    // the big buckets BROADCASTS and the anti-join costs the
-    // fingerprint table no exchange (the earlier semi-join against
-    // the small-bucket majority shuffled it a second time and
-    // exchanged a bucket-universe-sized build side). Exact: a
-    // broadcast hash anti-join has no false drops, so survivors are
-    // precisely the buckets of size <= maxBucket.
-    val big = u.groupBy("fp_hash").agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > maxBucket).select("fp_hash")
-    val kept = u.join(broadcast(big), Seq("fp_hash"), "left_anti")
+    val kept = HotKeys.drop(u,
+      HotKeys.over(u, Seq("fp_hash"), maxBucket), Seq("fp_hash"))
     val l = kept.select(col("fp_hash"), col("id").as("id_a"))
     val r = kept.select(col("fp_hash"), col("id").as("id_b"))
     l.join(r, Seq("fp_hash"))

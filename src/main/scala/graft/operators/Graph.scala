@@ -195,11 +195,11 @@ object Graph {
         greatest(col(srcCol), col(dstCol)).as("v"))
       .filter(col("u") =!= col("v")).distinct()
       .localCheckpoint(eager = false)
-    val keep = e0.select(explode(array(col("u"), col("v"))).as("node"))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-      .filter(col("deg") <= maxDegree).select("node")
-    e0.join(keep.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
-      .join(keep.withColumnRenamed("node", "v"), Seq("v"), "left_semi")
+    val hubs = HotKeys.over(
+      e0.select(explode(array(col("u"), col("v"))).as("node")),
+      Seq("node"), maxDegree)
+    HotKeys.drop(HotKeys.drop(e0, hubs.toDF("u"), Seq("u")),
+        hubs.toDF("v"), Seq("v"))
       .localCheckpoint(eager = false)
   }
 

@@ -31,7 +31,8 @@ import org.apache.spark.sql.functions._
   * Scale shape: one shuffle on the blocking key; block sizes are
   * capped (a block of B rows yields B² pairs — an over-coarse block
   * is a config error, not a reason to melt the cluster), and the
-  * pair fan-out happens AFTER the cap's semi-join. Nothing all-pairs.
+  * pair fan-out happens AFTER the cap (a [[HotKeys]] anti join).
+  * Nothing all-pairs.
   * Multi-pass blocking (union of several blocking keys — standard
   * recall insurance) composes by unioning calls and re-aggregating
   * max score per pair.
@@ -77,9 +78,8 @@ object Linkage {
     val cols = Seq(idCol) ++ fields.map(_._1)
     val base = df.select(col(blockCol).as("__blk") +:
       cols.map(c => col(c)): _*)
-    val small = base.groupBy("__blk").agg(count(lit(1)).as("__n"))
-      .filter(col("__n") <= maxBlock).select("__blk")
-    val kept = base.join(small, Seq("__blk"), "left_semi")
+    val kept = HotKeys.drop(base,
+      HotKeys.over(base, Seq("__blk"), maxBlock), Seq("__blk"))
     def side(tag: String) = kept.select(col("__blk") +:
       cols.map(c => col(c).as(s"${c}_$tag")): _*)
     val score = fields.map { case (c, mode, agree, disagree) =>

@@ -59,8 +59,8 @@ object Retrieval {
         explode(array_distinct(tokens(col(textCol)))).as("term"))
       .localCheckpoint(eager = false)
     val dfs = terms.groupBy("term").agg(count(lit(1)).as("df"))
-    val small = terms.join(dfs.filter(col("df") <= maxDf)
-        .select("term"), Seq("term"))
+    val small = HotKeys.drop(terms,
+        HotKeys.over(terms, Seq("term"), maxDf), Seq("term"))
       .groupBy("term")
       .agg(array_join(sort_array(collect_list(col("doc"))), ",")
         .as("postings_csv"))

@@ -1025,10 +1025,11 @@ object TextAnalysis {
     * units above df > f·N number at most (total unit occurrences) /
     * (f·N), e.g. ≤ 1700·avg_units_per_doc distinct units at f = 0.06%
     * — so it BROADCASTS, and the corpus side is one narrow
-    * split/explode plus a broadcast anti-join: the 100 TB side never
-    * shuffles until the per-document reassembly groupBy (whose state
-    * is one document's own units, the same bounded shape as A8
-    * group-concat). The df count itself partial-aggregates. */
+    * split/explode plus the [[HotKeys.drop]] broadcast anti join: the
+    * 100 TB side never shuffles until the per-document reassembly
+    * groupBy (whose state is one document's own units, the same
+    * bounded shape as A8 group-concat). The df count itself
+    * partial-aggregates. */
   /** The rest of the Gopher repetition-filter family (Rae et al.
     * 2021 §A1.1) beyond [[duplicateNgramStats]]: per-document
     * duplicate-UNIT fractions and the heaviest-n-gram character
@@ -1157,7 +1158,7 @@ object TextAnalysis {
       .crossJoin(broadcast(nDocs))
       .filter(col("__df") * 1000L > lit(maxDfMilli) * col("__n"))
       .select("__u")
-    val kept = units.join(broadcast(boiler), Seq("__u"), "left_anti")
+    val kept = HotKeys.drop(units, boiler, Seq("__u"))
     val agg = kept.groupBy(col(idCol))
       .agg(count(lit(1)).as("n_kept"),
         array_join(

@@ -1524,24 +1524,18 @@ object Approx {
       // compact them CONCURRENTLY (guide §2.6) — each leg's serial
       // 8-commit build leaves most cores idle, so the two legs
       // back-fill each other
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val plainF = Future {
+      val (plain, (clustered, fc)) = concurrentLegs(s, "compact-cluster")({
         val plain = build()
         graft.sources.ManifestTable
           .compact(s, plain, bytesOf(plain) / 4 + 1)
         plain
-      }
-      val clusteredF = Future {
+      }, {
         val clustered = build()
         val (_, _, n) = graft.sources.ManifestTable.compactClustered(
           s, clustered, bytesOf(clustered) / 4 + 1, Seq("x", "y"),
           bits = 7)
         (clustered, n)
-      }
-      val plain = Await.result(plainF, Duration.Inf)
-      val (clustered, fc) = Await.result(clusteredF, Duration.Inf)
+      })
       graft.operators.Lineage.freeLocalCheckpoint(rows)
       val (_, fp, sp) = graft.sources.ManifestTable.readPruned(
         s, plain, Seq(("x", 0L, 63L), ("y", 0L, 63L)), None)
@@ -2947,13 +2941,8 @@ object Approx {
       // run CONCURRENTLY (guide §2.6 overlapping independent jobs):
       // each leg's many small driver-side steps (stream bookkeeping,
       // manifest publishes) overlap the other leg's executor work
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val morF = Future(leg("mor", 1.0))
-      val cowF = Future(leg("cow", 0.0))
-      val (morTbl, morDv) = Await.result(morF, Duration.Inf)
-      val (cowTbl, cowDv) = Await.result(cowF, Duration.Inf)
+      val ((morTbl, morDv), (cowTbl, cowDv)) =
+        concurrentLegs(s, "merge-budget")(leg("mor", 1.0), leg("cow", 0.0))
       val morRows = graft.sources.ManifestTable.read(s, morTbl)
         .select("k", "p")
       val cowRows = graft.sources.ManifestTable.read(s, cowTbl)

@@ -84,6 +84,43 @@ package object queries {
         build.localCheckpoint(eager = false))
   }
 
+  /** Run two independent legs of one query concurrently and return
+    * both results. The legs must touch disjoint tables; each leg's
+    * driver-side steps (commits, publishes, stream bookkeeping) then
+    * overlap the other's executor work. The legs run on a two-thread
+    * pool named after the query, and each leg's Spark jobs carry the
+    * leg's own job tag. When a leg fails, the running jobs of its
+    * sibling are cancelled; the call returns once both legs have
+    * ended and rethrows the first failure. */
+  private[graft] def concurrentLegs[A, B](s: SparkSession, name: String)(
+      left: => A, right: => B): (A, B) = {
+    import scala.concurrent.{Await, ExecutionContext, Future, Promise}
+    import scala.concurrent.duration.Duration
+    val sc = s.sparkContext
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2,
+      (r: Runnable) => new Thread(r, s"graft-$name-leg"))
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    val id = java.util.UUID.randomUUID()
+    val tags = Seq(s"graft-$name-left-$id", s"graft-$name-right-$id")
+    val firstFailure = Promise[Throwable]()
+    def leg[T](tag: String, sibling: String, body: => T): Future[T] =
+      Future {
+        sc.addJobTag(tag)
+        try body
+        catch { case e: Throwable =>
+          if (firstFailure.trySuccess(e)) sc.cancelJobsWithTag(sibling)
+          throw e
+        } finally sc.removeJobTag(tag)
+      }
+    try {
+      val l = leg(tags(0), tags(1), left)
+      val r = leg(tags(1), tags(0), right)
+      Seq(l, r).foreach(f => Await.ready(f, Duration.Inf))
+      firstFailure.future.value.foreach(t => throw t.get)
+      (l.value.get.get, r.value.get.get)
+    } finally pool.shutdown()
+  }
+
   /** Load the events table with `ts` as a proper timestamp. The
     * testdata parquet stores TIMESTAMP(NANOS), which Spark only reads
     * under spark.sql.legacy.parquet.nanosAsLong=true (set by

@@ -2058,6 +2058,9 @@ class ManifestWriteBuilder(schema: StructType,
     extends org.apache.spark.sql.connector.write.WriteBuilder
     with org.apache.spark.sql.connector.write.SupportsTruncate {
   import org.apache.spark.sql.connector.write._
+  // refuse a non-flat frame while the write is planned, before any
+  // task starts and stages a file
+  ManifestParquet.messageTypeOf(schema)
   statsCols.foreach { c =>
     require(schema.fieldNames.contains(c),
       s"statsColumns entry $c is not a written column")

@@ -34,6 +34,37 @@ class DedupSpec extends SparkSpec {
     assert(!pairs.contains((1L, 4L)))  // unrelated
   }
 
+  test("minHashLshPairs: over-cap buckets are dropped, small buckets " +
+      "still pair") {
+    // docs 1, 2, 5 sign identically, so each of their band buckets
+    // holds at least 3 docs; doc 6 copies doc 4 (buckets of 2)
+    val d = docs.unionByName(Seq((6L,
+        "completely different text about spark query engines and shuffles"))
+      .toDF("doc_id", "text"))
+    def pairs(cap: Int) = Dedup
+      .minHashLshPairs(d, "doc_id", "text", 3, 8, 4, maxBucket = cap)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    assert(pairs(2) == Set((4L, 6L)), pairs(2).toString)
+    assert(Set((1L, 2L), (1L, 5L), (2L, 5L), (4L, 6L))
+      .subsetOf(pairs(1000)), pairs(1000).toString)
+  }
+
+  test("incrementalLshPairs: the cap counts batch and index together") {
+    val t = "the quick brown fox jumps over the lazy dog near the old river"
+    val u = "completely different text about spark query engines and shuffles"
+    // t's band buckets hold one batch doc but three docs in all
+    val index = Seq((1L, t), (2L, t)).toDF("doc_id", "text")
+    val batch = Seq((100L, t), (101L, u), (102L, u)).toDF("doc_id", "text")
+    def pairs(cap: Int) = Dedup
+      .incrementalLshPairs(batch, index, "doc_id", "text", 3, 8, 4,
+        maxBucket = cap)
+      .select("new_id", "other_id", "other_is_new")
+      .as[(Long, Long, Boolean)].collect().toSet
+    assert(pairs(2) == Set((101L, 102L, true)), pairs(2).toString)
+    assert(pairs(1000) == Set((100L, 1L, false), (100L, 2L, false),
+      (101L, 102L, true)), pairs(1000).toString)
+  }
+
   test("ngramJaccardPairs: exact jaccard with df cap") {
     val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 2, 0.5, 1000)
       .collect()
@@ -72,6 +103,24 @@ class DedupSpec extends SparkSpec {
     // asymmetric direction is what finds it
     assert(Dedup.ngramJaccardPairs(d, "doc_id", "text", 2, 0.9, 1000)
       .filter("id_a = 11 and id_b = 12").count() == 0)
+  }
+
+  test("containmentPairs: the df cap drops shingles shared by more " +
+      "docs than the cap, before sizes are counted") {
+    // docs 21-23 share the three shingles of "aa bb cc dd" (df 3) and
+    // differ in their two tail shingles; 24 and 25 are copies (df 2)
+    val d = Seq(
+      (21L, "aa bb cc dd e1 f1"), (22L, "aa bb cc dd e2 f2"),
+      (23L, "aa bb cc dd e3 f3"), (24L, "gg hh ii"), (25L, "gg hh ii")
+    ).toDF("doc_id", "text")
+    def rows(cap: Int) = Dedup
+      .containmentPairs(d, "doc_id", "text", 2, 0.5, cap)
+      .select("id_a", "id_b", "cont_a_milli", "cont_b_milli")
+      .as[(Long, Long, Long, Long)].collect().toSet
+    assert(rows(2) == Set((24L, 25L, 1000L, 1000L)), rows(2).toString)
+    assert(rows(1000) == Set((21L, 22L, 600L, 600L),
+      (21L, 23L, 600L, 600L), (22L, 23L, 600L, 600L),
+      (24L, 25L, 1000L, 1000L)), rows(1000).toString)
   }
 
   test("containmentPairs: threshold applies to either direction") {
@@ -926,6 +975,24 @@ class DedupSpec extends SparkSpec {
       .hammingPairs(sigs, "id", "fp", 16, 4, 3)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(all == Set((1L, 2L), (1L, 3L), (2L, 3L), (100L, 101L)))
+  }
+
+  test("incrementalHammingPairs: the cap counts batch and index " +
+      "together") {
+    // index ids 1, 2 and batch id 100 carry one fingerprint, so each
+    // of its (band, chunk) buckets holds 3 ids in all (1 in the batch);
+    // batch ids 101, 102 share 3 of their 4 buckets
+    val index = Seq((1L, 0x0F0FL), (2L, 0x0F0FL)).toDF("id", "fp")
+    val batch = Seq((100L, 0x0F0FL), (101L, 0xA5A0L), (102L, 0xA5A1L))
+      .toDF("id", "fp")
+    def pairs(cap: Int) = Dedup
+      .incrementalHammingPairs(batch, index, "id", "fp", 16, 4, 3,
+        maxBucket = cap)
+      .select("new_id", "other_id", "other_is_new")
+      .as[(Long, Long, Boolean)].collect().toSet
+    assert(pairs(2) == Set((101L, 102L, true)), pairs(2).toString)
+    assert(pairs(1000) == Set((100L, 1L, false), (100L, 2L, false),
+      (101L, 102L, true)), pairs(1000).toString)
   }
 
   test("incrementalHammingPairs: batch probes index, index never self-pairs") {

@@ -3635,4 +3635,71 @@ class PipelineSpec extends SparkSpec {
       .as[(Long, String)].collect().toSet == model.toSet)
     assert(antiJoined(Long.MinValue, Long.MaxValue) == model.toSet)
   }
+
+  test("a graft-manifest write of a non-flat frame is refused while " +
+      "it is planned: no Spark job starts and nothing is staged") {
+    val table = Files.createTempDirectory("graft-nonflat").toString
+    val frame = Seq((1L, Seq("a", "b")), (2L, Seq("c"))).toDF("k", "arr")
+    val (err, jobs) = jobsOf(intercept[Exception](
+      frame.write.format("graft-manifest").option("path", table)
+        .mode("append").save()))
+    val messages = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).map(e => String.valueOf(e.getMessage)).toSeq
+    assert(messages.exists(_.contains("writes flat relational rows")),
+      messages.mkString("\n"))
+    assert(jobs == 0, s"$jobs Spark jobs started")
+    val data = java.nio.file.Paths.get(table, "data")
+    val staged = if (!Files.exists(data)) 0L
+      else { val w = Files.walk(data)
+        try w.filter(Files.isRegularFile(_)).count() finally w.close() }
+    assert(staged == 0L, s"$staged files staged under $data")
+  }
+
+  test("concurrent query legs: the first failure cancels the " +
+      "sibling's running job and is rethrown") {
+    import org.apache.spark.scheduler.{JobFailed, JobResult, SparkListener,
+      SparkListenerJobEnd, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val leftJob = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val leftEnd = scala.concurrent.Promise[JobResult]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).flatMap(p =>
+            Option(p.getProperty("spark.job.tags")))
+            .exists(_.contains("graft-legspec-left-"))) {
+          leftJob.set(j.jobId); started.countDown()
+        }
+      override def onJobEnd(j: SparkListenerJobEnd): Unit =
+        if (j.jobId == leftJob.get) leftEnd.trySuccess(j.jobResult)
+    }
+    sc.addSparkListener(listener)
+    val t0 = System.nanoTime()
+    try {
+      val err = intercept[IllegalStateException](
+        graft.queries.concurrentLegs(spark, "legspec")(
+          // a long job that ends early only when its tasks are killed
+          sc.parallelize(1 to 2, 2).map { x =>
+            val ctx = org.apache.spark.TaskContext.get()
+            val end = System.nanoTime() + 120L * 1000000000L
+            while (!ctx.isInterrupted() && System.nanoTime() < end)
+              Thread.sleep(20)
+            x
+          }.count(),
+          {
+            assert(started.await(60, java.util.concurrent.TimeUnit.SECONDS))
+            throw new IllegalStateException("right leg failed")
+          }))
+      assert(err.getMessage == "right leg failed")
+      val result = scala.concurrent.Await.result(leftEnd.future,
+        scala.concurrent.duration.Duration(60, "s"))
+      result match {
+        case JobFailed(e) => assert(
+          String.valueOf(e.getMessage).contains("cancelled"), e.getMessage)
+        case other => fail(s"the sibling's job ended as $other")
+      }
+      val secs = (System.nanoTime() - t0) / 1e9
+      assert(secs < 100, s"the legs took $secs s")
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -358,6 +358,47 @@ class PlanSpec extends SparkSpec {
       s"no cartesian in the triangle pipeline:\n$plan")
   }
 
+  test("hot-key caps: the capped graph prelude and record linkage drop " +
+      "the hot minority by a broadcast anti join, never by a semi join " +
+      "against the majority") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val antiBhj = "BroadcastHashJoin \\[[^\\]]*\\], \\[[^\\]]*\\], LeftAnti".r
+    def assertCapShape(what: String, plan: String): Unit = {
+      assert(antiBhj.findFirstIn(plan).isDefined,
+        s"$what: the cap must be a broadcast hash anti join:\n$plan")
+      assert(!plan.contains("LeftSemi"),
+        s"$what: no semi join against the majority:\n$plan")
+    }
+    // the prelude returns a lazy localCheckpoint, so its capped plan is
+    // the one the checkpoint action executed
+    val plans = new java.util.concurrent.LinkedBlockingQueue[String]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.put(qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val li = spark.read.parquet(s"$sf/lineitem.parquet")
+        .select(col("l_orderkey"), col("l_partkey"))
+      val pairs = li.select(col("l_orderkey"), col("l_partkey").as("u"))
+        .join(li.select(col("l_orderkey"), col("l_partkey").as("v")),
+          Seq("l_orderkey"))
+        .filter(col("u") < col("v"))
+      operators.Graph.cappedCanonicalEdges(pairs, "u", "v", 128)
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      var capped: Option[String] = None
+      while (capped.isEmpty && System.nanoTime() < deadline)
+        capped = Option(plans.poll(1, java.util.concurrent.TimeUnit.SECONDS))
+          .filter(p => p.contains("LeftAnti") || p.contains("LeftSemi"))
+      assert(capped.isDefined, "no capped prelude plan was executed")
+      assertCapShape("cappedCanonicalEdges", capped.get)
+    } finally spark.listenerManager.unregister(listener)
+    assertCapShape("q_d_linkage", planOf("q_d_linkage"))
+  }
+
   test("round-4 additions: delta joins broadcast; semdedup verifies on the native kernel") {
     // IVM join delta: history probes the broadcast delta, never a
     // data-sized shuffle or cartesian

@@ -557,6 +557,46 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("HotKeys law: drop(s, over(s, keys, cap), keys) keeps exactly " +
+      "the rows with non-null keys whose census is at most cap") {
+    import graft.operators.HotKeys
+    import org.apache.spark.sql.Column
+    val cap = 3
+    // two-column keys over small domains, so counts straddle the cap,
+    // with a null in either column; four pinned keys sit exactly at
+    // and one past the cap under each census
+    def stream(domain: Int) = for {
+      a <- Gen.frequency(1 -> Gen.const(Option.empty[Int]),
+        6 -> Gen.choose(0, domain).map(Option(_)))
+      b <- Gen.frequency(1 -> Gen.const(Option.empty[String]),
+        6 -> Gen.oneOf("x", "y").map(Option(_)))
+      doc <- Gen.choose(0L, 4L)
+    } yield (a, b, doc)
+    val pinned =
+      Seq.fill(cap)((Option(100), Option("x"), 0L)) ++
+      Seq.fill(cap + 1)((Option(101), Option("x"), 0L)) ++
+      (0L until cap.toLong).flatMap(d =>
+        Seq.fill(2)((Option(102), Option("y"), d))) ++
+      (0L to cap.toLong).map(d => (Option(103), Option("y"), d))
+    type R = (Long, Option[Int], Option[String], Long)
+    val keys = Seq("a", "b")
+    for (domain <- Seq(2, 6, 30)) {
+      val rows = (samples(stream(domain), 120) ++ pinned).zipWithIndex
+        .map { case ((a, b, doc), i) => (i.toLong, a, b, doc) }
+      val s = rows.toDF("rid", "a", "b", "doc")
+      val byKey = rows.groupBy(r => (r._2, r._3))
+      for ((census, ref) <- Seq[(Column, Seq[R] => Long)](
+          (count(lit(1)), _.size.toLong),
+          (count_distinct(col("doc")), _.map(_._4).distinct.size.toLong))) {
+        val got = HotKeys.drop(s, HotKeys.over(s, keys, cap, census), keys)
+          .select("rid").as[Long].collect().sorted.toSeq
+        val want = rows.filter(r => r._2.isDefined && r._3.isDefined &&
+          ref(byKey((r._2, r._3))) <= cap).map(_._1).sorted
+        assert(got == want, s"domain $domain, census $census")
+      }
+    }
+  }
+
   // ---- xlsx round-trip ------------------------------------------------
 
   private def xmlEsc(s: String): String = s
