@@ -1936,8 +1936,10 @@ class ManifestReplaceWrite(schema: StructType,
     val replaced = op.scan.replacedFiles
     val files = ManifestCommit.taskFiles(msgs)
     if (replaced.isEmpty && files.isEmpty) return // no-op operation
-    var staged = files.map(_.rel).toSeq
-    var rows = files.map(f => f.rel -> f.rows).toMap
+    // a row-level replacement records no #ndv= lines
+    var staged = files.map(_.rel)
+    var meta = files.map(_.meta.copy(ndvs = ManifestTable.noNdvs))
+      .foldLeft(ManifestTable.FileMeta())(_ ++ _)
     if (staged.isEmpty) {
       // the operation deleted every row of the replaced files and
       // nothing else survives alongside: keep the snapshot readable
@@ -1946,26 +1948,13 @@ class ManifestReplaceWrite(schema: StructType,
       ManifestParquet.openWriter(abs,
         ManifestParquet.messageTypeOf(schema)).close()
       staged = Seq(rel)
-      rows = Map(rel -> 0L)
+      meta = ManifestTable.FileMeta(rows = Map(rel -> 0L))
     }
-    val stats = files.flatMap { f =>
-      val entries = statsCols.flatMap(c =>
-        f.stats.get(c).map { case (mn, mx) => (c, mn, mx) })
-      if (entries.isEmpty) None else Some(f.rel -> entries)
-    }.toMap
-    val sstats = files.flatMap { f =>
-      val entries = statsCols.flatMap(c =>
-        f.sstats.get(c).map { case (mn, mx) => (c, mn, mx) })
-      if (entries.isEmpty) None else Some(f.rel -> entries)
-    }.toMap
     val root = java.nio.file.Paths.get(opts.path)
     val expectDvs = op.scan.pinned.slices.map(s =>
       root.relativize(java.nio.file.Paths.get(s.path)).toString ->
         s.dv.toSeq).toMap
-    val pvals = files.flatMap(f =>
-      if (f.pvals.isEmpty) None else Some(f.rel -> f.pvals)).toMap
-    ManifestTable.publishReplace(opts.path, replaced, staged,
-      ManifestTable.FileMeta(stats, sstats, rows, pvals = pvals),
+    ManifestTable.publishReplace(opts.path, replaced, staged, meta,
       expectDvs)
     ()
   }
@@ -1993,6 +1982,10 @@ private[sources] object ManifestParquet {
       f.dataType match {
         case LongType    => Types.optional(INT64).named(f.name)
         case IntegerType => Types.optional(INT32).named(f.name)
+        case ShortType   => Types.optional(INT32)
+          .as(LogicalTypeAnnotation.intType(16, true)).named(f.name)
+        case ByteType    => Types.optional(INT32)
+          .as(LogicalTypeAnnotation.intType(8, true)).named(f.name)
         case DoubleType  => Types.optional(DOUBLE).named(f.name)
         case FloatType   => Types.optional(FLOAT).named(f.name)
         case BooleanType => Types.optional(BOOLEAN).named(f.name)
@@ -2033,19 +2026,19 @@ private[sources] object ManifestParquet {
   * file under the job's writer-unique `data/w-<nonce>/` prefix —
   * with the nonce ALSO in the file basename, because deletion-vector
   * masking and compaction key on snapshot-unique basenames — and
-  * reports (path, row count, per-stats-column min/max) in its commit
+  * reports the path and its manifest metadata in its commit
   * message; the job-level `BatchWrite.commit` then runs exactly ONE
   * optimistic manifest publish — the whole distributed write is
   * atomic (readers see all of the job's files or none), task retries
   * overwrite nothing (attempt-unique file names, losers deleted on
   * abort), and an aborted job leaves only unreferenced staging that
   * [[ManifestTable.vacuum]] reclaims. `option("statsColumns",
-  * "a,b")` records zone lines from per-task streaming min/max — no
-  * post-write scan, the DSv2 analog of
-  * [[ManifestTable.commitWithStats]]: integer/date/timestamp
-  * columns land as int64 `#stats=` lines (epoch days / micros),
-  * string columns as `#sstats=` hex byte-wise lines with the
-  * truncation-conservative bounds. Schema is ACCEPT_ANY (the
+  * "a,b")` records the same per-file lines as
+  * [[ManifestTable.commitWithStats]], from the same per-row
+  * accumulator ([[FileStats]]) — no post-write scan: integer, date
+  * and timestamp columns land as int64 `#stats=` lines (epoch days /
+  * micros), string columns as `#sstats=` hex byte-wise lines with
+  * the truncation-conservative bounds. Schema is ACCEPT_ANY (the
   * manifest's read side owns evolution: by-name union, late columns
   * NULL, same-name type drift loud at read). An OVERWRITE of an
   * empty frame still publishes — a snapshot holding one explicit
@@ -2143,9 +2136,8 @@ class ManifestWriteBuilder(schema: StructType,
 }
 
 /** Job-level commit bookkeeping the batch AND streaming writes
-  * share: collect the tasks' staged files, fold their streamed
-  * min/max into `#stats=`/`#sstats=` lines, their partition tuples
-  * into `#pval=` lines, and publish ONE atomic version. */
+  * share: collect the tasks' staged files, fold their metadata into
+  * one [[ManifestTable.FileMeta]], and publish ONE atomic version. */
 private[sources] object ManifestCommit {
   import org.apache.spark.sql.connector.write.WriterCommitMessage
 
@@ -2157,9 +2149,9 @@ private[sources] object ManifestCommit {
       case _ => Seq.empty
     }.filter(_.rel.nonEmpty).sortBy(_.rel)
 
-  def publish(path: String, schema: StructType,
-      statsCols: Seq[String], append: Boolean, nonce: String,
-      files: Seq[ManifestTaskFile], tag: Option[String]): Unit = {
+  def publish(path: String, schema: StructType, append: Boolean,
+      nonce: String, files: Seq[ManifestTaskFile],
+      tag: Option[String]): Unit = {
     if (files.isEmpty) {
       // append of nothing publishes nothing; OVERWRITE of nothing
       // must still truncate (Spark/Delta semantics) — publish a
@@ -2175,27 +2167,8 @@ private[sources] object ManifestCommit {
         ManifestTable.FileMeta(rows = Map(rel -> 0L)), append = false)
       return
     }
-    val stats = files.flatMap { f =>
-      val entries = statsCols.flatMap(c =>
-        f.stats.get(c).map { case (mn, mx) => (c, mn, mx) })
-      if (entries.isEmpty) None else Some(f.rel -> entries)
-    }.toMap
-    val sstats = files.flatMap { f =>
-      val entries = statsCols.flatMap(c =>
-        f.sstats.get(c).map { case (mn, mx) => (c, mn, mx) })
-      if (entries.isEmpty) None else Some(f.rel -> entries)
-    }.toMap
-    val pvals = files.flatMap(f =>
-      if (f.pvals.isEmpty) None else Some(f.rel -> f.pvals)).toMap
-    val ndvs = files.flatMap { f =>
-      val entries = statsCols.flatMap(c =>
-        f.ndvs.get(c).map { case (nulls, regs, hist) =>
-          (c, nulls, regs, hist) })
-      if (entries.isEmpty) None else Some(f.rel -> entries)
-    }.toMap
     ManifestTable.publishStaged(path, files.map(_.rel),
-      ManifestTable.FileMeta(stats, sstats,
-        files.map(f => f.rel -> f.rows).toMap, ndvs, pvals),
+      files.map(_.meta).foldLeft(ManifestTable.FileMeta())(_ ++ _),
       append, tag)
     ()
   }
@@ -2224,8 +2197,8 @@ class ManifestBatchWrite(schema: StructType, opts: ManifestV2Options,
       partCols)
 
   override def commit(msgs: Array[WriterCommitMessage]): Unit =
-    ManifestCommit.publish(opts.path, schema, statsCols, append,
-      nonce, ManifestCommit.taskFiles(msgs), tag = None)
+    ManifestCommit.publish(opts.path, schema, append, nonce,
+      ManifestCommit.taskFiles(msgs), tag = None)
 
   // unreferenced staging is already invisible to readers; delete
   // what this job staged so vacuum has less to sweep
@@ -2262,8 +2235,8 @@ class ManifestStreamingWrite(schema: StructType,
 
   override def commit(epochId: Long,
       msgs: Array[WriterCommitMessage]): Unit =
-    ManifestCommit.publish(opts.path, schema, statsCols,
-      append = true, nonce, ManifestCommit.taskFiles(msgs),
+    ManifestCommit.publish(opts.path, schema, append = true, nonce,
+      ManifestCommit.taskFiles(msgs),
       tag = Some(s"stream:$queryId:$epochId"))
 
   override def abort(epochId: Long,
@@ -2286,22 +2259,18 @@ final case class ManifestStreamingWriterFactory(schema: StructType,
       statsCols, partCols).createWriter(partitionId, taskId)
 }
 
-/** One task's staged file: manifest-relative path, row count,
-  * per-stats-column bounds observed while streaming the rows —
-  * int64 (min, max) for integer/date/timestamp columns, hex-encoded
-  * truncation-conservative byte bounds for string columns — and, for
-  * partitioned writes, the file's exact partition tuple (encoded
-  * `#pval=` values). */
-final case class ManifestTaskFile(rel: String, rows: Long,
-    stats: Map[String, (Long, Long)],
-    sstats: Map[String, (String, String)],
-    pvals: Seq[(String, String)] = Seq.empty,
-    ndvs: Map[String, (Long, String, String)] = Map.empty)
+/** One task's staged file: its manifest-relative path and its
+  * metadata — the [[FileStats]] lines gathered while the rows were
+  * written and, for partitioned writes, the file's exact partition
+  * tuple (`#pval=` lines). An empty `rel` stands for no file. */
+private[sources] final case class ManifestTaskFile(rel: String,
+    meta: ManifestTable.FileMeta)
     extends org.apache.spark.sql.connector.write.WriterCommitMessage
 
 /** A PARTITIONED task's staged files — one [[ManifestTaskFile]] per
   * partition tuple the task's rows touched. */
-final case class ManifestTaskFileSet(files: Seq[ManifestTaskFile])
+private[sources] final case class ManifestTaskFileSet(
+    files: Seq[ManifestTaskFile])
     extends org.apache.spark.sql.connector.write.WriterCommitMessage
 
 final case class ManifestWriterFactory(schema: StructType,
@@ -2438,7 +2407,7 @@ final case class ManifestWriterFactory(schema: StructType,
           // unpartitioned: one (or zero) staged file — keep the
           // single-message shape the rest of the engine pattern-matches
           open.values.headOption.map(_.finish())
-            .getOrElse(ManifestTaskFile("", 0L, Map.empty, Map.empty))
+            .getOrElse(ManifestTaskFile("", ManifestTable.FileMeta()))
         else ManifestTaskFileSet(open.values.map(_.finish()).toSeq)
 
       // attempt-unique file names make retries conflict-free; the
@@ -2447,7 +2416,7 @@ final case class ManifestWriterFactory(schema: StructType,
       override def close(): Unit = ()
     }
 
-  /** One staged parquet file with its streamed per-column bounds —
+  /** One staged parquet file with its per-row [[FileStats]] —
     * the unit both the unpartitioned (one per task) and partitioned
     * (one per task × partition tuple) writers stage. `pvals` is the
     * file's exact partition tuple; partition columns stay IN the
@@ -2463,24 +2432,7 @@ final case class ManifestWriterFactory(schema: StructType,
     // must never stage the same basename
     private val abs = java.nio.file.Paths.get(table).resolve(rel)
     private val msgType = ManifestParquet.messageTypeOf(schema)
-    private val statIdx = statsCols.map(schema.fieldIndex)
-    private val statKind = statsCols.map(c =>
-      ManifestTable.statKindOf(schema(c).dataType, c))
-    private val mins = Array.fill(statsCols.size)(Long.MaxValue)
-    private val maxs = Array.fill(statsCols.size)(Long.MinValue)
-    private val strMins = Array.fill[UTF8String](statsCols.size)(null)
-    private val strMaxs = Array.fill[UTF8String](statsCols.size)(null)
-    // streamed per-column NDV sketch over the canonical encoding —
-    // byte-identical to fileMeta's aggregate build (one blob format,
-    // any write path)
-    private val ndvRegs =
-      Array.fill(statsCols.size)(NdvSketch.empty())
-    private val nullCnt = Array.fill(statsCols.size)(0L)
-    // streamed log-frame distribution histogram (int64 kinds; the
-    // `#ndv=` line's histogram field — one update per row, a bitlen)
-    private val histCnt = Array.fill(statsCols.size)(
-      new Array[Long](graft.expressions.LogHist.B))
-    private var n = 0L
+    private val stats = new FileStats(schema, statsCols)
     // open lazily on the FIRST row: empty partitions stage no file
     private var writer: org.apache.parquet.hadoop.ParquetWriter[
       org.apache.parquet.example.data.Group] = null
@@ -2503,6 +2455,8 @@ final case class ManifestWriterFactory(schema: StructType,
           schema(i).dataType match {
             case LongType    => g.append(name, r.getLong(i))
             case IntegerType => g.append(name, r.getInt(i))
+            case ShortType   => g.append(name, r.getShort(i).toInt)
+            case ByteType    => g.append(name, r.getByte(i).toInt)
             case DoubleType  => g.append(name, r.getDouble(i))
             case FloatType   => g.append(name, r.getFloat(i))
             case BooleanType => g.append(name, r.getBoolean(i))
@@ -2520,71 +2474,16 @@ final case class ManifestWriterFactory(schema: StructType,
         }
         i += 1
       }
-      var j = 0
-      while (j < statIdx.length) {
-        val idx = statIdx(j)
-        if (r.isNullAt(idx)) nullCnt(j) += 1L
-        if (!r.isNullAt(idx)) {
-          statKind(j) match {
-            case 'S' =>
-              // clone: the row's UTF8String may alias a reused
-              // buffer; UTF8String.compareTo IS the unsigned
-              // byte-wise order the zone lines need
-              val v = r.getUTF8String(idx)
-              if (strMins(j) == null ||
-                  v.compareTo(strMins(j)) < 0)
-                strMins(j) = v.clone()
-              if (strMaxs(j) == null ||
-                  v.compareTo(strMaxs(j)) > 0)
-                strMaxs(j) = v.clone()
-              NdvSketch.update(ndvRegs(j), v.getBytes)
-            case k =>
-              val v = schema(idx).dataType match {
-                case LongType | TimestampType => r.getLong(idx)
-                case IntegerType | DateType => r.getInt(idx).toLong
-                case ShortType => r.getShort(idx).toLong
-                case ByteType => r.getByte(idx).toLong
-                case other => throw new IllegalStateException(
-                  s"unreachable stat kind $k for $other")
-              }
-              if (v < mins(j)) mins(j) = v
-              if (v > maxs(j)) maxs(j) = v
-              histCnt(j)(graft.expressions.LogHist.bucketOf(v)) += 1L
-              // canonical NDV input = the int64 encoding's decimal
-              // string (what fileMeta's cast-to-string hashes too)
-              NdvSketch.update(ndvRegs(j),
-                String.valueOf(v).getBytes(
-                  java.nio.charset.StandardCharsets.UTF_8))
-          }
-        }
-        j += 1
-      }
+      stats.update(r)
       writer.write(g)
-      n += 1
     }
 
     def finish(): ManifestTaskFile =
-      if (writer == null)
-        ManifestTaskFile("", 0L, Map.empty, Map.empty)
+      if (writer == null) ManifestTaskFile("", ManifestTable.FileMeta())
       else {
         writer.close()
-        val stats = statsCols.zipWithIndex.flatMap { case (c, j) =>
-          if (statKind(j) == 'S' || mins(j) > maxs(j)) None
-          else Some(c -> (mins(j), maxs(j)))
-        }.toMap
-        val sstats = statsCols.zipWithIndex.flatMap { case (c, j) =>
-          if (statKind(j) != 'S' || strMins(j) == null) None
-          else StrStat.entry(c, strMins(j).toString,
-              strMaxs(j).toString)
-            .map { case (_, mnH, mxH) => c -> (mnH, mxH) }
-        }.toMap
-        val ndvs = statsCols.zipWithIndex.map { case (c, j) =>
-          val hist =
-            if (statKind(j) == 'S') ""
-            else graft.expressions.LogHist.encode(histCnt(j))
-          c -> (nullCnt(j), StrStat.hex(ndvRegs(j)), hist)
-        }.toMap
-        ManifestTaskFile(rel, n, stats, sstats, pvals, ndvs)
+        ManifestTaskFile(rel, stats.meta(rel, statsCols) ++
+          ManifestTable.FileMeta(pvals = Map(rel -> pvals)))
       }
 
     def drop(): Unit = if (writer != null) {

@@ -183,27 +183,16 @@ class ManifestDeltaBatchWrite(info: LogicalWriteInfo,
       .groupBy(_._1).view
       .mapValues(_.flatMap(_._2).distinct.sorted.toSeq).toMap
     if (inserts.isEmpty && deletes.isEmpty) return // no-op operation
-    val stats = inserts.flatMap { f =>
-      val entries = statsCols.flatMap(c =>
-        f.stats.get(c).map { case (mn, mx) => (c, mn, mx) })
-      if (entries.isEmpty) None else Some(f.rel -> entries)
-    }.toMap
-    val sstats = inserts.flatMap { f =>
-      val entries = statsCols.flatMap(c =>
-        f.sstats.get(c).map { case (mn, mx) => (c, mn, mx) })
-      if (entries.isEmpty) None else Some(f.rel -> entries)
-    }.toMap
-    val pvals = inserts.flatMap(f =>
-      if (f.pvals.isEmpty) None else Some(f.rel -> f.pvals)).toMap
+    val meta = inserts.map(_.meta)
+      .foldLeft(ManifestTable.FileMeta())(_ ++ _)
     val root = java.nio.file.Paths.get(opts.path)
     val expectDvs = op.scan.pinned.slices.map(s =>
       root.relativize(java.nio.file.Paths.get(s.path)).toString ->
         s.dv.toSeq).toMap
     ManifestTable.applyDeltaCommit(
       org.apache.spark.sql.SparkSession.active, opts.path,
-      deletes, inserts.map(_.rel),
-      stats, sstats, inserts.map(f => f.rel -> f.rows).toMap, pvals,
-      expectDvs, opts.dvMaxFraction)
+      deletes, inserts.map(_.rel), meta.stats, meta.sstats, meta.rows,
+      meta.pvals, expectDvs, opts.dvMaxFraction)
     ()
   }
 

@@ -148,8 +148,9 @@ object ManifestTable {
     * compaction unions its inputs' sketches without a data scan.
     * Hash input is the column's CANONICAL string (the int64 zone
     * encoding's decimal string for integer/date/timestamp, the raw
-    * string otherwise), identical across the Scala and DSv2 write
-    * paths so mixed-writer tables merge coherently. Tuple =
+    * string otherwise); every writer builds the lines through one
+    * accumulator ([[FileStats]]), so mixed-writer tables merge
+    * coherently. Tuple =
     * (column, nullCount, hexRegisters, sparseLogHist). */
   private[sources] type Ndvs =
     Map[String, Seq[(String, Long, String, String)]]
@@ -206,53 +207,44 @@ object ManifestTable {
     * skipped. Parsing everything from one read keeps the hot commit
     * path at a single manifest I/O per publish attempt. */
   private def manifestOf(table: String, version: Long): Manifest = {
-    val ls = Files
-      .readAllLines(manifestDir(table).resolve(s"v$version"))
-      .asScala.toSeq
+    val path = manifestDir(table).resolve(s"v$version")
+    val ls = Files.readAllLines(path).asScala.toSeq
     val files = ls.filter(l => l.nonEmpty && !l.startsWith("#"))
-    val stats = ls.filter(_.startsWith("#stats="))
-      .map { l =>
-        val q = l.drop(7).split('|')
-        (q(0), (q(1), q(2).toLong, q(3).toLong))
+    // every metadata kind parses here: a line with the wrong field
+    // count or a malformed number (a write torn mid-line) fails
+    // loudly, naming the manifest, the line number and the line. -1
+    // keeps empty fields: an empty-string hexMin and an empty
+    // histogram are legal
+    def kind[T](prefix: String, arity: Int*)(parse: Array[String] => T)
+        : Seq[T] =
+      ls.zipWithIndex.collect { case (l, i) if l.startsWith(prefix) =>
+        val q = l.drop(prefix.length).split("\\|", -1)
+        try {
+          require(arity.contains(q.length), s"${q.length} fields")
+          parse(q)
+        } catch {
+          case e @ (_: IllegalArgumentException |
+              _: IndexOutOfBoundsException) =>
+            throw new IllegalStateException(
+              s"torn manifest line ${i + 1} of $path: $l", e)
+        }
       }
-      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    val rows = ls.filter(_.startsWith("#nrows="))
-      .map { l =>
-        val q = l.drop(7).split('|')
-        q(0) -> q(1).toLong
-      }.toMap
+    def byFile[V](kvs: Seq[(String, V)]): Map[String, Seq[V]] =
+      kvs.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    val stats = byFile(kind("#stats=", 4)(q =>
+      (q(0), (q(1), q(2).toLong, q(3).toLong))))
+    val rows = kind("#nrows=", 2)(q => q(0) -> q(1).toLong).toMap
     // several #dv= lines for one file union (each marks more dead
     // positions); parsed form is always sorted distinct
-    val dvs: Dvs = ls.filter(_.startsWith("#dv="))
-      .map { l =>
-        val q = l.drop(4).split('|')
-        q(0) -> DvCodec.decode(q(1))
-      }
-      .groupBy(_._1).view
-      .mapValues(_.flatMap(_._2).distinct.sorted.toSeq).toMap
-    val sstats: SStats = ls.filter(_.startsWith("#sstats="))
-      .map { l =>
-        // -1 keeps empty fields: an empty-string hexMin IS legal
-        // (the empty string is a valid minimum)
-        val q = l.drop(8).split("\\|", -1)
-        (q(0), (q(1), q(2), q(3)))
-      }
-      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    val pvals: Pvals = ls.filter(_.startsWith("#pval="))
-      .map { l =>
-        val q = l.drop(6).split("\\|", -1)
-        (q(0), (q(1), q(2)))
-      }
-      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    val ndvs: Ndvs = ls.filter(_.startsWith("#ndv="))
-      .map { l =>
-        // -1 keeps the (legal) empty histogram field; 4-field lines
-        // from pre-histogram snapshots parse with no histogram
-        val q = l.drop(5).split("\\|", -1)
-        (q(0), (q(1), q(2).toLong, q(3),
-          if (q.length > 4) q(4) else ""))
-      }
-      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    val dvs: Dvs = byFile(kind("#dv=", 2)(q => q(0) -> DvCodec.decode(q(1))))
+      .view.mapValues(_.flatten.distinct.sorted).toMap
+    val sstats: SStats = byFile(kind("#sstats=", 4)(q =>
+      (q(0), (q(1), q(2), q(3)))))
+    val pvals: Pvals = byFile(kind("#pval=", 3)(q => (q(0), (q(1), q(2)))))
+    // 4-field lines from pre-histogram snapshots parse with no
+    // histogram
+    val ndvs: Ndvs = byFile(kind("#ndv=", 4, 5)(q =>
+      (q(0), (q(1), q(2).toLong, q(3), if (q.length > 4) q(4) else ""))))
     Manifest(files, FileMeta(stats, sstats, rows, ndvs, pvals, dvs))
   }
 
@@ -794,9 +786,10 @@ object ManifestTable {
     * lines, one per (file, column) — invisible to every existing
     * reader (comments are skipped by [[read]]), and carried
     * forward for still-live files on append so a snapshot's stats
-    * stay complete across commits. All columns' per-file min/max
-    * come from ONE distributed pass over the staged files (grouped
-    * by `_metadata.file_path`); an all-NULL column in a file gets no
+    * stay complete across commits. Every column's per-file lines are
+    * gathered row by row inside the tasks that write the file
+    * ([[FileStats]]), so the commit runs the write's job alone,
+    * whatever its file count; an all-NULL column in a file gets no
     * stats line for that column and the file is always scanned for
     * predicates on it — skipping is only ever an optimization, never
     * a filter.
@@ -836,152 +829,110 @@ object ManifestTable {
     }
   }
 
-  /** Register `graft_hll_regs` in the session's function registry
-    * when [[graft.plans.GraftExtensions]] was not installed — the
-    * stats-recording paths (commitWithStats, DELETE/MERGE rewrites,
-    * OPTIMIZE, the delta CoW fallback) must work in a session
-    * configured with only `spark.sql.catalog.*`. Idempotent;
-    * `registerFunction` overwrites, so a racing double-register is
-    * harmless (both register the identical builder). */
-  private def ensureHllFunction(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-    val fr = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier("graft_hll_regs")
-    if (!fr.functionExists(id)) fr.registerFunction(id,
-      new ExpressionInfo(
-        classOf[graft.expressions.HllRegistersAgg].getName,
-        "graft_hll_regs"),
-      (children: Seq[Expression]) =>
-        graft.expressions.HllRegistersAgg(children(0), children(1)))
-    val hid = FunctionIdentifier("graft_log_hist")
-    if (!fr.functionExists(hid)) fr.registerFunction(hid,
-      new ExpressionInfo(
-        classOf[graft.expressions.LogHistAgg].getName,
-        "graft_log_hist"),
-      (children: Seq[Expression]) =>
-        graft.expressions.LogHistAgg(children(0)))
+  /** Write `df` as parquet under `data/<dir>`, hive-partitioned by
+    * `partitionBy`, as `df.write.mode("errorifexists").parquet(...)`
+    * does (same format, options, commit protocol and checks), with a
+    * [[ManifestStatsTracker]] gathering each file's [[FileStats]] over
+    * `statsCols` inside the write's own tasks. Returns (table-relative
+    * path, stats) per written file, sorted by path. */
+  private def writeFiles(df: DataFrame, table: String, dir: String,
+      statsCols: Seq[String],
+      partitionBy: Seq[String] = Nil): Seq[(String, FileStats)] = {
+    import org.apache.spark.internal.io.FileCommitProtocol
+    import org.apache.spark.sql.execution.SQLExecution
+    import org.apache.spark.sql.execution.datasources.{
+      BasicWriteJobStatsTracker, FileFormatWriter}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val spark = df.sparkSession
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    org.apache.spark.sql.classic.GraftDatasets.checkParquetWrite(df,
+      partitionBy)
+    val out = new org.apache.hadoop.fs.Path(
+      Paths.get(table, "data", dir).toString)
+    val options = Map("path" -> out.toString)
+    val hadoopConf = spark.sessionState.newHadoopConfWithOptions(options)
+    val fs = out.getFileSystem(hadoopConf)
+    val qualified = out.makeQualified(fs.getUri, fs.getWorkingDirectory)
+    require(!fs.exists(qualified),
+      s"staging directory $qualified already exists")
+    // a fresh execution of the frame's analyzed plan, as a save plans
+    val qe = spark.sessionState.executePlan(df.queryExecution.analyzed)
+    val output = qe.optimizedPlan.output
+    val tracker = new ManifestStatsTracker(
+      org.apache.spark.sql.types.StructType(
+        df.schema.filterNot(f => partitionBy.contains(f.name))),
+      statsCols, partitionBy.size)
+    val committer = FileCommitProtocol.instantiate(
+      spark.sessionState.conf.fileCommitProtocolClass,
+      java.util.UUID.randomUUID().toString, qualified.toString)
+    SQLExecution.withNewExecutionId(qe, Some("save")) {
+      FileFormatWriter.write(spark, qe.executedPlan, new ParquetFileFormat,
+        committer,
+        FileFormatWriter.OutputSpec(qualified.toString, Map.empty, output),
+        hadoopConf, output.filter(a => partitionBy.contains(a.name)), None,
+        // Spark's basic tracker keeps the task output metrics (bytes
+        // and records written) a save reports
+        Seq(new BasicWriteJobStatsTracker(
+          new org.apache.spark.util.SerializableConfiguration(hadoopConf),
+          BasicWriteJobStatsTracker.metrics), tracker),
+        options)
+    }
+    tracker.files.map { case (rel, st) => (s"data/$dir/$rel", st) }
   }
 
-  /** The (kinds, aggregate columns) of the stats pass over
-    * `statsCols` — shared by the grouped per-file pass ([[fileMeta]])
-    * and the in-write observed pass ([[writeStaged]]). Layout:
-    * leading `__n` row count, then per column i the fields
-    * `__mn_i`, `__mx_i`, `__ndv_i`, `__nn_i`, `__h_i`. */
-  private def statAggCols(
-      schema: org.apache.spark.sql.types.StructType,
-      statsCols: Seq[String])
-      : (Seq[(String, Char)], Seq[org.apache.spark.sql.Column]) = {
-    import org.apache.spark.sql.functions.{call_function, col, count,
-      lit, min, max, unix_date, unix_micros}
-    val kinds = statsCols.map(c => c -> statKindOf(schema(c).dataType, c))
-    def enc(c: String, k: Char) = k match {
-      case 'L' => col(c).cast("long")
-      case 'D' => unix_date(col(c)).cast("long")
-      case 'T' => unix_micros(col(c))
-      case 'S' => col(c)
-    }
-    val aggs = count(lit(1)).as("__n") +:
-      kinds.zipWithIndex.flatMap { case ((c, k), i) =>
-        Seq(min(enc(c, k)).as(s"__mn_$i"),
-          max(enc(c, k)).as(s"__mx_$i"),
-          call_function("graft_hll_regs",
-            enc(c, k).cast("string"), lit(NdvSketch.M))
-            .as(s"__ndv_$i"),
-          (count(lit(1)) - count(enc(c, k))).as(s"__nn_$i"),
-          // log-scale distribution histogram (int64 kinds only —
-          // catalyst CBO histograms are numeric)
-          (if (k == 'S') min(lit(""))
-           else call_function("graft_log_hist", enc(c, k)))
-            .as(s"__h_$i"))
-      }
-    (kinds, aggs)
+  /** `written`'s files with their stats as [[FileMeta]] over `cols`.
+    * Deletion vectors and compaction key on basenames, so two of one
+    * stage's files sharing one fail loudly (writers stage UUID-named
+    * files: an invariant check). */
+  private def metaOf(written: Seq[(String, FileStats)],
+      cols: Seq[String]): FileMeta = {
+    require(written.map(_._1.split('/').last).distinct.size ==
+        written.size,
+      s"basename collision across ${written.map(_._1)} — per-file " +
+        "metadata would be corrupted")
+    written.map { case (f, st) => st.meta(f, cols) }
+      .foldLeft(FileMeta())(_ ++ _)
   }
-
-  /** Decode one stats-aggregation result — a per-file group row or
-    * the observed whole-write row — into file `f`'s [[FileMeta]].
-    * `field` resolves an aggregate alias to its value (boxed
-    * Long/String/Seq, null for an empty min/max). A zero-row file
-    * records its exact 0 count and no stats/sstats/ndv lines. */
-  private def decodeStatFields(kinds: Seq[(String, Char)], f: String,
-      field: String => Any): FileMeta = {
-    def longOf(v: Any): Long = v.asInstanceOf[Number].longValue
-    val longs = kinds.zipWithIndex.flatMap { case ((c, k), i) =>
-      val (mn, mx) = (field(s"__mn_$i"), field(s"__mx_$i"))
-      if (k == 'S' || mn == null || mx == null) None
-      else Some((c, longOf(mn), longOf(mx)))
-    }
-    val strs = kinds.zipWithIndex.flatMap { case ((c, k), i) =>
-      val (mn, mx) = (field(s"__mn_$i"), field(s"__mx_$i"))
-      if (k != 'S' || mn == null || mx == null) None
-      else StrStat.entry(c, mn.asInstanceOf[String],
-        mx.asInstanceOf[String])
-    }
-    val regs = kinds.zipWithIndex.map { case ((c, k), i) =>
-      val arr = field(s"__ndv_$i")
-        .asInstanceOf[scala.collection.Seq[Any]]
-      val hist =
-        if (k == 'S') ""
-        else graft.expressions.LogHist.encode(
-          field(s"__h_$i").asInstanceOf[scala.collection.Seq[Any]]
-            .map(longOf).toArray)
-      (c, longOf(field(s"__nn_$i")),
-        StrStat.hex(arr.map(v =>
-          v.asInstanceOf[Number].byteValue).toArray), hist)
-    }
-    val n = longOf(field("__n"))
-    if (n == 0L) FileMeta(rows = Map(f -> 0L))
-    else FileMeta(Map(f -> longs), Map(f -> strs), Map(f -> n),
-      Map(f -> regs))
-  }
-
-  /** The data files directly under `rel` (a directory relative to
-    * `table`) as sorted table-relative paths; write markers and
-    * hidden files are skipped. */
-  private def stagedFiles(table: String, rel: String): Seq[String] =
-    Using.resource(Files.list(Paths.get(table, rel))) { st =>
-      st.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(n => n.endsWith(".parquet") && !n.startsWith("_"))
-        .toSeq.sorted
-        .map(n => s"$rel/$n")
-    }
 
   /** Stage `df` under `data/<dir>` and return its data files with
     * their metadata — the one staging step every writer shares. `dir`
     * is writer-unique (it carries the writer's nonce), so staging is
     * conflict-free and the data write happens exactly once however
     * many publish attempts follow. `files > 0` coalesces the write to
-    * that many files. With `statsCols` the per-file stats are
-    * recorded: the [[statAggCols]] aggregation is OBSERVED inside the
-    * write job (guide §2.4 — no second pass over just-written data),
-    * and when exactly one file lands the whole-write aggregates ARE
-    * its stats; a multi-file stage pays one [[fileMeta]] scan
-    * instead. Without `statsCols` nothing is recorded. */
+    * that many files. With `statsCols` each file's row count, zone,
+    * NDV and histogram lines are recorded from the write tasks
+    * themselves ([[writeFiles]]): one job, no pass over written data.
+    * Without `statsCols` nothing is recorded. */
   private def writeStaged(df: DataFrame, table: String, dir: String,
       statsCols: Option[Seq[String]] = None,
       files: Int = 0): (Seq[String], FileMeta) = {
-    val spark = df.sparkSession
-    val obs = new org.apache.spark.sql.Observation()
-    val pass = statsCols.map { cols =>
-      ensureHllFunction(spark)
-      (cols, statAggCols(df.schema, cols))
-    }
-    val out = pass.fold(df) { case (_, (_, aggs)) =>
-      df.observe(obs, aggs.head, aggs.tail: _*) }
-    (if (files > 0) out.coalesce(files) else out)
-      .write.mode("errorifexists")
-      .parquet(Paths.get(table, "data", dir).toString)
-    val staged = stagedFiles(table, s"data/$dir")
-    val meta = pass match {
-      case Some((_, (kinds, _))) if staged.size == 1 =>
-        val m = obs.get
-        decodeStatFields(kinds, staged.head, m(_))
-      case Some((cols, _)) if staged.nonEmpty =>
-        fileMeta(spark, table, staged, cols)
-      case _ => FileMeta()
-    }
-    (staged, meta)
+    val written = writeFiles(if (files > 0) df.coalesce(files) else df,
+      table, dir, statsCols.getOrElse(Nil))
+    (written.map(_._1),
+      statsCols.fold(FileMeta())(metaOf(written, _)))
+  }
+
+  /** Move the files a write partitioned by ONE integer column staged
+    * under `data/<stage>` — as its tracker reported them — to their
+    * final table-relative paths `to(value, basename, index)`, `index`
+    * counting the partition's files in name order, then drop the
+    * stage (its markers and checksums). Returns (partition value,
+    * final path, stats) in final-path order. */
+  private def flatten(table: String, stage: String,
+      written: Seq[(String, FileStats)])
+      (to: (Int, String, Int) => String): Seq[(Int, String, FileStats)] = {
+    val moved = written
+      .groupBy(w => w._1.split('/').reverse(1).split('=')(1).toInt)
+      .toSeq.flatMap { case (v, fs) =>
+        fs.sortBy(_._1).zipWithIndex.map { case ((f, st), i) =>
+          val dst = to(v, f.split('/').last, i)
+          Files.createDirectories(Paths.get(table, dst).getParent)
+          Files.move(Paths.get(table, f), Paths.get(table, dst))
+          (v, dst, st)
+        }
+      }
+    deleteRecursively(Paths.get(table, "data", stage))
+    moved.sortBy(_._2)
   }
 
   /** The columns every one of `files` carries per `cols` (sorted;
@@ -991,45 +942,6 @@ object ManifestTable {
       (cols: String => Seq[String]): Seq[String] =
     if (files.isEmpty) Seq.empty
     else files.map(f => cols(f).toSet).reduce(_ intersect _).toSeq.sorted
-
-  /** The per-file metadata pass over a multi-file stage
-    * ([[writeStaged]]) or a compaction's outputs: ONE distributed
-    * aggregation over exactly the staged `files` (paths relative to
-    * `table`) computing min/max per stats column, the [[NdvSketch]]
-    * HLL registers, plus the exact row count, keyed by
-    * `_metadata.file_name`. The file list is already known and the
-    * read schema comes from the first file's footer on the driver
-    * ([[footerSchema]]), so the pass lists no directory and starts no
-    * schema-inference job: one job, one scan of data that is already
-    * hot (just written). The row counts make [[countRows]]
-    * metadata-only. Integer/date/timestamp columns land in the int64
-    * stats, strings in the hex byte-wise string stats; every stats
-    * column gets an `#ndv=` register sketch over its canonical
-    * encoding. */
-  private def fileMeta(spark: SparkSession, table: String,
-      files: Seq[String], statsCols: Seq[String]): FileMeta = {
-    import org.apache.spark.sql.functions.col
-    ensureHllFunction(spark)
-    // the aggregation keys on the basename; two staged files sharing
-    // one would silently last-win each other's stats — fail loudly
-    // instead (writers stage UUID-named files, so this is an
-    // invariant check)
-    val pathOf = files.map(f => f.split('/').last -> f).toMap
-    require(pathOf.size == files.size,
-      s"fileMeta: basename collision across $files — per-file stats " +
-        "would be corrupted")
-    val root = Paths.get(table)
-    val df = scanOf(spark, root, files, footerSchema(spark, root, files))
-    val (kinds, aggs) = statAggCols(df.schema, statsCols)
-    // a zero-row part file produces no aggregation group but its
-    // count IS exactly 0 — the seed keeps countRows exact-or-None
-    df.groupBy(col("_metadata.file_name").as("__f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map(r => decodeStatFields(kinds, pathOf(r.getString(0)),
-        nm => r.get(r.fieldIndex(nm))))
-      .foldLeft(FileMeta(rows = files.map(_ -> 0L).toMap))(_ ++ _)
-  }
 
   /** Scan `files` (paths relative to `root`) under an explicit read
     * schema: planning the frame starts no footer-inference job. */
@@ -1470,8 +1382,8 @@ object ManifestTable {
     val nonce = newNonce()
     // the rewrite re-records stats over the columns every rewritten
     // input carried (integer OR string zones), so it doesn't erode
-    // the snapshot's prunability; the stats pass rides the rewrite
-    // job. NOT(match) keeps NULL rows by construction: match is
+    // the snapshot's prunability; the rewrite's own tasks gather
+    // them. NOT(match) keeps NULL rows by construction: match is
     // isNotNull && between, so its negation is true on NULL — a
     // range predicate is UNKNOWN on NULL, per SQL DELETE
     val (rewritten, rewrittenMeta) =
@@ -1704,7 +1616,7 @@ object ManifestTable {
       }
     // re-record metadata over the columns all rewritten inputs
     // carried — integer or string zones (fresh tables / no rewrite:
-    // just the key column); the stats pass rides the write jobs
+    // just the key column); the write tasks gather them
     val keepCols =
       if (cowFiles.isEmpty) Seq(keyCol)
       else colsInAll(cowFiles)(m.meta.zoneCols)
@@ -1731,7 +1643,7 @@ object ManifestTable {
         (rw, rwMeta, up.join(baseKeys, Seq(keyCol), "left_anti"))
       }
     // the batch's new keys land as ONE append file (batch-sized),
-    // with the count (and stats) OBSERVED in the write job — the
+    // with the count (and stats) gathered by the write task — the
     // previous isEmpty pre-probe job folds into the write: a batch
     // with no inserts deletes the staged junk file after the fact
     // instead of having probed first, so an empty file never lands
@@ -1868,8 +1780,8 @@ object ManifestTable {
     * Grouping runs DRIVER-SIDE over the manifest's file list — the
     * same manifest-sized metadata every commit already reads; the
     * data itself moves through ONE distributed job for ALL groups
-    * (inputs tagged with their group id via a broadcast
-    * basename→group join, clustered by group, written partitioned
+    * (inputs tagged with their group id by a broadcast
+    * basename→group lookup, clustered by group, written partitioned
     * by group), so a nightly OPTIMIZE over thousands of groups never
     * serializes group-at-a-time on the driver. Groups that are
     * already one file are carried untouched (no write amplification
@@ -1920,35 +1832,55 @@ object ManifestTable {
     if (multi.isEmpty) return (latest, files.size, files.size)
     val nonce = newNonce()
     // ONE job rewrites every group: tag each input row with its
-    // group via a broadcast basename→group join (staged part-file
-    // names carry task UUIDs, so basenames are unique), cluster by
-    // group so each group lands whole in one task, and write
-    // partitioned by group — N groups never become N sequential
+    // group through a broadcast basename→group lookup on the scan's
+    // `_metadata.file_name` (staged part-file names carry task UUIDs,
+    // so basenames are unique; like the DV mask, the lookup ships as a
+    // broadcast variable — no broadcast job, no stage boundary),
+    // cluster by group so each group lands whole in one task, and
+    // write partitioned by group — N groups never become N sequential
     // driver-looped jobs. The snapshot's cached merged schema keeps
     // the union-schema evolution contract (groups spanning a
     // schema-evolution boundary rewrite under it, late columns NULL)
     // without re-running the footer-union job per OPTIMIZE.
-    import org.apache.spark.sql.functions.{broadcast, col}
-    import spark.implicits._
-    val grpOf = multi.zipWithIndex.flatMap { case (grp, gi) =>
-      grp.map(f => (f.split('/').last, gi))
-    }
+    import org.apache.spark.sql.functions.{col, udf}
+    val groupOf = spark.sparkContext.broadcast(
+      multi.zipWithIndex.flatMap { case (grp, gi) =>
+        grp.map(f => f.split('/').last -> gi) }.toMap)
     val srcSchema = snapshotSchema(spark, table, latest, m0.files)
     val src = scanOf(spark, root, multi.flatten, srcSchema)
     val dataCols = src.columns.toSeq
-    require(!dataCols.contains("__grp") && !dataCols.contains("__base") &&
+    require(!dataCols.contains("__grp") &&
         !dataCols.contains("__b") && !dataCols.contains("__p"),
       s"compact's internal columns collide with table columns of $table")
-    val stageRoot = Paths.get(table, "data", s".c-$nonce-stage")
+    // groups that paid down merge-on-read debt: the inputs' manifest
+    // arithmetic no longer bounds their output EXACTLY (the masked
+    // rows may have held the min/max), so their outputs' stats and
+    // counts come from the rewrite's own tasks, over the columns every
+    // counted input carried (the write tracks the union of those
+    // groups' columns; each group keeps its own); statsBounds turns
+    // exact again the moment the DVs purge. Other groups' outputs get
+    // MERGED lines for every column all their inputs carry — the
+    // union's min(mins)/max(maxes) bounds any output file exactly —
+    // and the summed row count when every input carries one (the
+    // output holds exactly its inputs' rows). KNOWN-empty inputs
+    // (#nrows=0) contribute no rows, so their (absent) stats must not
+    // erase the output's: only inputs that can hold rows join the
+    // column intersection.
+    val countedOf = multi.map(_.filterNot(f =>
+      m0.meta.rows.get(f).contains(0L)))
+    val dvCols = multi.zip(countedOf).map { case (grp, counted) =>
+      if (grp.exists(hasDv)) colsInAll(counted)(m0.meta.zoneCols)
+      else Seq.empty }
+    val tracked = dvCols.flatten.distinct
     // DV'd inputs rewrite through their mask (the dead rows fall out
     // here, once, instead of at every subsequent read)
-    maskDvs(spark, withFilePos(src), m0.meta.dvs, multi.flatten)
-      .withColumnRenamed("__b", "__base")
-      .join(broadcast(grpOf.toDF("__base", "__grp")), "__base")
-      .repartition(multi.size, col("__grp"))
-      .select((dataCols.map(col) :+ col("__grp")): _*)
-      .write.mode("errorifexists").partitionBy("__grp")
-      .parquet(stageRoot.toString)
+    val grp = udf((b: String) => groupOf.value(b))
+    val written = writeFiles(
+      maskDvs(spark, withFilePos(src), m0.meta.dvs, multi.flatten)
+        .withColumn("__grp", grp(col("__b")))
+        .repartition(multi.size, col("__grp"))
+        .select((dataCols.map(col) :+ col("__grp")): _*),
+      table, s".c-$nonce-stage", tracked, partitionBy = Seq("__grp"))
     // flatten the partitioned staging layout into per-group dirs; a
     // group whose inputs were all empty wrote no partition — give it
     // an explicit empty file so its rows-preserving identity (and the
@@ -1957,42 +1889,22 @@ object ManifestTable {
     // key on the basename, so every output takes its group's `g<gi>-`
     // prefix: a later DV on one group's file must not mask rows of
     // another group's.
-    val staged: Seq[Seq[String]] = multi.indices.map { gi =>
-      val pdir = s"data/.c-$nonce-stage/__grp=$gi"
-      if (!Files.isDirectory(Paths.get(table, pdir)))
-        writeStaged(src.limit(0).select(dataCols.map(col): _*)
-          .coalesce(1), table, s"c-$nonce-$gi")._1
-      else {
-        val outDir = Paths.get(table, "data", s"c-$nonce-$gi")
-        Files.createDirectories(outDir)
-        stagedFiles(table, pdir).foreach(p =>
-          Files.move(root.resolve(p),
-            outDir.resolve(s"g$gi-${p.split('/').last}")))
-        stagedFiles(table, s"data/c-$nonce-$gi")
-      }
+    val moved = flatten(table, s".c-$nonce-stage", written) {
+      (gi, name, _) => s"data/c-$nonce-$gi/g$gi-$name" }
+    val staged: Seq[Seq[(String, FileStats)]] = multi.indices.map { gi =>
+      val outs = moved.collect { case (g, f, st) if g == gi => (f, st) }
+      if (outs.nonEmpty) outs
+      else writeFiles(src.limit(0).select(dataCols.map(col): _*)
+        .coalesce(1), table, s"c-$nonce-$gi", tracked)
     }
-    deleteRecursively(stageRoot)
-    // groups that paid down merge-on-read debt: the inputs' manifest
-    // arithmetic no longer bounds their output EXACTLY (the masked
-    // rows may have held the min/max), so re-derive stats + counts
-    // from the rewritten files — one scan of just-written hot data,
-    // only for DV-carrying groups; statsBounds turns exact again the
-    // moment the DVs purge. Other groups' outputs get MERGED lines
-    // for every column all their inputs carry — the union's
-    // min(mins)/max(maxes) bounds any output file exactly — and the
-    // summed row count when every input carries one (the output
-    // holds exactly its inputs' rows). KNOWN-empty inputs (#nrows=0)
-    // contribute no rows, so their (absent) stats must not erase the
-    // output's: only inputs that can hold rows join the column
-    // intersection.
-    val meta = multi.zip(staged).map { case (grp, outs) =>
-      val counted = grp.filterNot(f => m0.meta.rows.get(f).contains(0L))
+    val meta = multi.indices.map { gi =>
+      val (grp, counted, outs) = (multi(gi), countedOf(gi),
+        staged(gi).map(_._1))
       def fold[E](entries: Map[String, Seq[E]], name: E => String)
           (merge: Seq[E] => E): Seq[E] =
         colsInAll(counted)(f => entries.getOrElse(f, Seq.empty).map(name))
           .map(c => merge(counted.map(f => entries(f).find(name(_) == c).get)))
-      if (grp.exists(hasDv))
-        fileMeta(spark, table, outs, colsInAll(counted)(m0.meta.zoneCols))
+      if (grp.exists(hasDv)) metaOf(staged(gi), dvCols(gi))
       else {
         val st = fold(m0.meta.stats, (_: (String, Long, Long))._1) { es =>
           (es.head._1, es.map(_._2).min, es.map(_._3).max) }
@@ -2033,8 +1945,8 @@ object ManifestTable {
       }
     }.reduce(_ ++ _)
     // rivals' appends since our snapshot ride along untouched
-    val (v, after) = publishReplace(table, multi.flatten, staged.flatten,
-      meta, m0.meta.dvs, what = "compacted")
+    val (v, after) = publishReplace(table, multi.flatten,
+      staged.flatten.map(_._1), meta, m0.meta.dvs, what = "compacted")
     // every group's output is written from `src`, read under the
     // snapshot's schema
     seedSchema(table, latest, v, srcSchema, dropped = true,
@@ -2072,8 +1984,8 @@ object ManifestTable {
     * files whose `#pval=` tuple matches `partCol = value`, each FULL
     * partition tuple independently (multi-column layouts never merge
     * across partitions). Outputs inherit their tuple's pval lines
-    * and re-derived zone stats (one scan of just-written hot data —
-    * partition-sized by construction); DV'd inputs rewrite through
+    * and zone stats re-derived by the rewrite's own tasks; DV'd
+    * inputs rewrite through
     * their mask, paying down merge-on-read debt. Everything else is
     * carried by reference: cost scales with the selected partition's
     * bytes, not the table's. Same optimistic conflict rules as
@@ -2111,9 +2023,7 @@ object ManifestTable {
       val nOut = math.max(1L,
         (bytes + targetBytes - 1) / targetBytes).toInt
       val counted = fs.filterNot(f => m0.meta.rows.get(f).contains(0L))
-      // the group's stats pass rides its rewrite job — a single-output
-      // group (the common shape at target size) skips the separate
-      // just-written-data scan
+      // the group's stats ride its rewrite job's tasks
       val (outs, meta) = writeStaged(
         maskDvs(spark, withFilePos(src), m0.meta.dvs, fs)
           .select(dataCols.map(col): _*),
@@ -2145,9 +2055,9 @@ object ManifestTable {
     * not the exact bucket). One distributed job range-partitions the
     * live rows by the Hilbert value and sorts within partitions —
     * the write IS the layout. Per-file stats are RE-derived over
-    * (clusterCols ∪ columns every counted input carried) by the
-    * standard [[fileMeta]] pass: merged input arithmetic would be
-    * worthless here, the whole point is that rows MOVED.
+    * (clusterCols ∪ columns every counted input carried) inside the
+    * rewrite's tasks: merged input arithmetic would be worthless
+    * here, the whole point is that rows MOVED.
     *
     * Concurrency: [[compact]]'s rules — all inputs must still be
     * live with unchanged DVs at publish; rival appends ride along
@@ -2242,7 +2152,6 @@ object ManifestTable {
     val nOut = math.max(1L,
       (totalBytes + targetBytes - 1) / targetBytes).toInt
     val nonce = newNonce()
-    val stageDir = Paths.get(table, "data", s"cc-$nonce")
     require(!dataCols.contains("__c") && !dataCols.contains("__bkt"),
       s"compactClustered's internal columns collide with a table " +
         s"column of $table")
@@ -2277,49 +2186,35 @@ object ManifestTable {
       pair
     }
     import spark.implicits._
-    val stage0 = Paths.get(table, "data", s".cc-$nonce-stage")
-    withH
+    // stats: the cluster columns (that's what the layout now serves)
+    // plus whatever every counted input already carried — gathered by
+    // the rewrite's own tasks: merged input arithmetic would be
+    // worthless here, the whole point is that rows MOVED
+    val counted = m0.files.filterNot(f => m0.meta.rows.get(f).contains(0L))
+    val statsCols =
+      (clusterCols ++ colsInAll(counted)(m0.meta.zoneCols)).distinct.sorted
+    val written = writeFiles(withH
       .withColumn("__c", shiftright(col("__h"), shift))
       .join(broadcast(cellBkt.toSeq.toDF("__c", "__bkt")), "__c")
       .repartition(math.max(1, nOut), col("__bkt"))
       .sortWithinPartitions(col("__bkt"), col("__h"))
-      .select((dataCols.map(col) :+ col("__bkt")): _*)
-      .write.mode("errorifexists").partitionBy("__bkt")
-      .parquet(stage0.toString)
+      .select((dataCols.map(col) :+ col("__bkt")): _*),
+      table, s".cc-$nonce-stage", statsCols, partitionBy = Seq("__bkt"))
     // flatten the partitioned staging layout into the final stage dir
     // with bucket-prefixed names: curve order survives in the file
     // names, and names stay unique even when one task wrote several
     // buckets' files
-    Files.createDirectories(stageDir)
-    val distinctBkts = cellBkt.map(_._2).distinct.sorted
-    def moveInto(rel: String, b: Int): Unit =
-      stagedFiles(table, rel).zipWithIndex.foreach { case (p, i) =>
-        Files.move(root.resolve(p),
-          stageDir.resolve(f"part-b$b%05d-$i%03d-$nonce.parquet"))
-      }
-    distinctBkts.foreach { b =>
-      val pdir = s"data/.cc-$nonce-stage/__bkt=$b"
-      if (Files.isDirectory(Paths.get(table, pdir))) moveInto(pdir, b)
-    }
-    deleteRecursively(stage0)
+    val moved = flatten(table, s".cc-$nonce-stage", written) {
+      (b, _, i) => f"data/cc-$nonce/part-b$b%05d-$i%03d-$nonce.parquet" }
     // a fully-DV'd (zero live rows) snapshot wrote no bucket: stage
     // one explicit empty file so the snapshot's schema survives the
     // rewrite (compact's empty-group rule)
-    if (distinctBkts.isEmpty) {
-      writeStaged(src.limit(0).select(dataCols.map(col): _*).coalesce(1),
-        table, s".cc-$nonce-empty")
-      moveInto(s"data/.cc-$nonce-empty", 0)
-      deleteRecursively(Paths.get(table, "data", s".cc-$nonce-empty"))
-    }
-    val staged = stagedFiles(table, s"data/cc-$nonce")
-    // stats: the cluster columns (that's what the layout now serves)
-    // plus whatever every counted input already carried
-    val counted = m0.files.filterNot(f => m0.meta.rows.get(f).contains(0L))
-    val statsCols =
-      (clusterCols ++ colsInAll(counted)(m0.meta.zoneCols)).distinct.sorted
-    val meta =
-      if (staged.isEmpty) FileMeta()
-      else fileMeta(spark, table, staged, statsCols)
+    val outs =
+      if (moved.nonEmpty) moved.map(m => (m._2, m._3))
+      else writeFiles(src.limit(0).select(dataCols.map(col): _*)
+        .coalesce(1), table, s"cc-$nonce", statsCols)
+    val staged = outs.map(_._1)
+    val meta = metaOf(outs, statsCols)
     val (v, after) = publishReplace(table, m0.files, staged, meta,
       m0.meta.dvs, what = "clustered-OPTIMIZE")
     (v, m0.files.size, after)
@@ -2433,11 +2328,9 @@ object ManifestTable {
   * K1 sketches ([[graft.expressions.HllRegistersAgg]] with m = M,
   * unsalted): h = top 60 md5 bits of the canonical string, bucket =
   * h % M, rho = (60 − log2 M) + 1 − bitlen(h div M). The streaming
-  * DSv2 writer updates registers per row; the Scala-API writers
-  * compute the same registers through the native aggregate, observed
-  * inside a single-file write or in [[ManifestTable.fileMeta]]'s one
-  * aggregation over a multi-file stage — one blob format, any write
-  * path. */
+  * writers update registers per row through [[FileStats]], the one
+  * accumulator the DSv2 task writer and the Scala API's write tasks
+  * share — one blob format, any write path. */
 private[graft] object NdvSketch {
   /** Register count: 256 bytes/column/file (512 hex chars on the
     * manifest line — metadata-sized), standard error ≈ 1.04/√M ≈

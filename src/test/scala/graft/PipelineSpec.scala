@@ -3226,6 +3226,57 @@ class PipelineSpec extends SparkSpec {
       .toSet
   }
 
+  /** An independent reference for [[fileMetaLines]]: the lines data
+    * file `f` of `table` must carry over stats columns `cols`, from
+    * plain Spark `min`/`max`/`count` over the file and the
+    * `graft_hll_regs`/`graft_log_hist` aggregates over each column's
+    * canonical encoding (integers as long, DATE as epoch days,
+    * TIMESTAMP as epoch micros, strings as-is), rendered as the
+    * manifest renders them. Strings must stay under the stored-bound
+    * cap (no truncation here). */
+  private def referenceLines(table: String, f: String,
+      cols: Seq[String]): Set[String] = {
+    import org.apache.spark.sql.types.{DateType, StringType, TimestampType}
+    import graft.sources.{NdvSketch, StrStat}
+    val df = spark.read.parquet(java.nio.file.Paths.get(table, f).toString)
+    def enc(c: String) = df.schema(c).dataType match {
+      case StringType => col(c)
+      case DateType => unix_date(col(c)).cast("long")
+      case TimestampType => unix_micros(col(c))
+      case _ => col(c).cast("long")
+    }
+    val aggs = count(lit(1)) +: cols.flatMap(c => Seq(min(enc(c)),
+      max(enc(c)), count(enc(c)),
+      call_function("graft_hll_regs", enc(c).cast("string"),
+        lit(NdvSketch.M)),
+      if (df.schema(c).dataType == StringType) lit("")
+      else call_function("graft_log_hist", enc(c))))
+    val r = df.agg(aggs.head, aggs.tail: _*).head()
+    val n = r.getLong(0)
+    def hexOf(s: String) = {
+      val b = StrStat.bytesOf(s)
+      assert(b.length <= StrStat.MaxBytes, s)
+      StrStat.hex(b)
+    }
+    if (n == 0L) Set("#nrows=F|0")
+    else cols.zipWithIndex.flatMap { case (c, j) =>
+      val i = 1 + 5 * j
+      val str = df.schema(c).dataType == StringType
+      val zone =
+        if (r.isNullAt(i)) None
+        else if (str) Some(s"#sstats=F|$c|${hexOf(r.getString(i))}|" +
+          hexOf(r.getString(i + 1)))
+        else Some(s"#stats=F|$c|${r.getLong(i)}|${r.getLong(i + 1)}")
+      val regs = StrStat.hex(r.getSeq[Int](i + 3).map(_.toByte).toArray)
+      val hist =
+        if (str) ""
+        else graft.expressions.LogHist.encode(r.getSeq[Long](i + 4).toArray)
+      // split drops a trailing empty field, as fileMetaLines does
+      zone.toSeq :+ s"#ndv=F|$c|${n - r.getLong(i + 2)}|$regs|$hist"
+        .split('|').mkString("|")
+    }.toSet + s"#nrows=F|$n"
+  }
+
   test("ManifestTable.commitWithStats: a multi-file stage gathers its " +
       "per-file stats in one job with no schema-inference job, and " +
       "records the lines a single-file commit of each file records") {
@@ -3239,12 +3290,11 @@ class PipelineSpec extends SparkSpec {
       append = false, Seq("k", "s"), None))
     val files = ManifestTable.snapshotFor(table, Some(v)).files
     assert(files.size == 3, files)
-    // the staging write, then one stats aggregation and its AQE
-    // result stage: the aggregation scans under the first footer's
-    // schema, so no listing-plus-inference job precedes it
-    assert(jobs == 3, s"multi-file commitWithStats started $jobs jobs")
-    // reference: each staged file committed alone, whose stats ride
-    // the write job's observed aggregation instead of fileMeta
+    // the staging write alone: its tasks gather every file's stats,
+    // so no aggregation job and no listing-plus-inference job follow
+    assert(jobs == 1, s"multi-file commitWithStats started $jobs jobs")
+    // references: each staged file committed alone, and plain Spark
+    // aggregates over the file
     files.foreach { f =>
       val ref = Files.createTempDirectory("graft-filemeta-ref").toString
       val rv = ManifestTable.commitWithStats(
@@ -3256,6 +3306,7 @@ class PipelineSpec extends SparkSpec {
       // k's #stats, s's #sstats, an #ndv line each, one #nrows
       assert(got.size == 5, got)
       assert(got == fileMetaLines(ref, rv, rf.head), f)
+      assert(got == referenceLines(table, f, Seq("k", "s")), f)
     }
   }
 
@@ -3280,6 +3331,7 @@ class PipelineSpec extends SparkSpec {
       val got = fileMetaLines(table, v, f)
       assert(got.exists(_.startsWith("#nrows=")), got)
       assert(got == fileMetaLines(ref, rv, rf.head), s"$table $f")
+      assert(got == referenceLines(table, f, cols), s"$table $f")
     }
     files
   }
@@ -3349,6 +3401,117 @@ class PipelineSpec extends SparkSpec {
       ccBytes / 2 + 1, Seq("k", "g"))
     assert(ccAfter == 2)
     assertStatsOfSingleCommit(cc, ccv, Seq("g", "k", "s"), added = 2)
+  }
+
+  test("commitWithStats and a graft-manifest write record the same " +
+      "per-file lines over byte, short, int, long, date, timestamp and " +
+      "string columns, an all-NULL column and an empty input " +
+      "partition, and both match a plain-Spark reference") {
+    import graft.sources.ManifestTable
+    val cols = Seq("b", "h", "i", "l", "d", "ts", "s", "z")
+    // four range partitions of 75 ids; the third is filtered empty
+    val df = spark.range(0L, 300L, 1L, 4)
+      .filter(!($"id" >= 150L && $"id" < 225L))
+      .select(($"id" % 100L - 50L).cast("byte").as("b"),
+        ($"id" * 37L % 2000L - 1000L).cast("short").as("h"),
+        ($"id" * 7L % 90L).cast("int").as("i"),
+        ($"id" * 1000003L - 5000L).as("l"),
+        date_add(lit(java.sql.Date.valueOf("1969-12-01")),
+          ($"id" % 60L).cast("int")).as("d"),
+        timestamp_micros($"id" * 1000000007L - 123456L).as("ts"),
+        when($"id" % 4L === 0L, lit(null))
+          .otherwise(concat(lit("s"), ($"id" % 23L).cast("string")))
+          .as("s"),
+        lit(null).cast("long").as("z"))
+    val api = Files.createTempDirectory("graft-parity-scala").toString
+    val sv = ManifestTable.commitWithStats(df, api, append = false,
+      cols, None)
+    val dsv2 = Files.createTempDirectory("graft-parity-dsv2").toString
+    df.write.format("graft-manifest").option("path", dsv2)
+      .option("statsColumns", cols.mkString(",")).mode("append").save()
+    val dv = ManifestTable.versions(dsv2).last
+    def perFile(t: String, v: Long): Seq[(Set[String], Set[String])] =
+      ManifestTable.snapshotFor(t, Some(v)).files
+        .map(f => (fileMetaLines(t, v, f), referenceLines(t, f, cols)))
+    val (sc, ds) = (perFile(api, sv), perFile(dsv2, dv))
+    // no file for the empty partition on either side
+    assert(sc.size == 3 && ds.size == 3, (sc.size, ds.size))
+    sc.foreach { case (got, ref) => assert(got == ref) }
+    ds.foreach { case (got, ref) => assert(got == ref) }
+    // each file: 7 zone lines (z is all NULL), 8 #ndv, one #nrows
+    assert(sc.forall(_._1.size == 16), sc.map(_._1.size))
+    assert(sc.map(_._1.toSeq.sorted.mkString("\n")).sorted ==
+      ds.map(_._1.toSeq.sorted.mkString("\n")).sorted)
+  }
+
+  test("a manifest line torn mid-line fails the read loudly, naming " +
+      "the manifest, the line number and the line") {
+    import graft.sources.ManifestTable
+    val table = Files.createTempDirectory("graft-torn").toString
+    (1L to 60L).map(k => (k, k % 2, s"v$k")).toDF("k", "p", "s")
+      .coalesce(1).write.format("graft-manifest").option("path", table)
+      .option("partitionColumns", "p").option("statsColumns", "k,s")
+      .mode("append").save()
+    ManifestTable.deleteRangeDv(spark, table, "k", 5L, 6L,
+      dvMaxFraction = 1.0)
+    val v = ManifestTable.versions(table).last
+    val text = Files.readString(
+      java.nio.file.Paths.get(table, "_manifests", s"v$v"))
+    val lines = text.split("\n").toSeq
+    val torn = java.nio.file.Paths.get(table, "_manifests", s"v${v + 1}")
+    // (kind, offset of the cut inside the line): the middle of the
+    // path for every kind, and an #nrows= line cut just past its bar
+    val cuts = Seq("#stats=", "#sstats=", "#pval=", "#ndv=", "#nrows=",
+      "#dv=").map { k =>
+        val l = lines.find(_.startsWith(k)).get
+        (k, k.length + (l.indexOf('|') - k.length) / 2)
+      } :+ ("#nrows=", lines.find(_.startsWith("#nrows=")).get
+        .indexOf('|') + 1)
+    cuts.foreach { case (k, at) =>
+      val i = lines.indexWhere(_.startsWith(k))
+      val start = lines.take(i).map(_.length + 1).sum
+      Files.writeString(torn, text.substring(0, start + at))
+      val e = intercept[IllegalStateException](
+        ManifestTable.snapshotFor(table, None))
+      assert(e.getMessage == s"torn manifest line ${i + 1} of $torn: " +
+        lines(i).substring(0, at), e.getMessage)
+    }
+    // the intact snapshot still reads
+    Files.delete(torn)
+    assert(ManifestTable.snapshotFor(table, None).files.size == 2)
+  }
+
+  test("ManifestTable.compact tags a multi-group rewrite of a DV'd " +
+      "table with its groups through a broadcast lookup: no broadcast " +
+      "job, and the survivors match a latest-wins model") {
+    import graft.sources.ManifestTable
+    val table = Files.createTempDirectory("graft-compact-jobs").toString
+    val n = 2000L
+    val model = scala.collection.mutable.Map[Long, String]()
+    (0L until n).foreach(k => model(k) = s"base-$k")
+    ManifestTable.commitWithStats(model.toSeq.toDF("k", "v")
+        .repartitionByRange(8, $"k").sortWithinPartitions("k"),
+      table, append = false, "k")
+    def merge(keys: Seq[Long], round: Int): Unit = {
+      keys.foreach(k => model(k) = s"r$round-$k")
+      ManifestTable.mergeByKeyDv(spark, table,
+        keys.map(k => (k, model(k))).toDF("k", "v"), "k",
+        dvMaxFraction = 0.5)
+    }
+    merge(Seq(3L, 700L, 1300L, 1999L, n), 1)
+    val files = ManifestTable.snapshotFor(table, None).files
+    val bytes = files.map(f =>
+      Files.size(java.nio.file.Paths.get(table, f))).sum
+    val ((_, before, after), jobs) = jobsOf(
+      ManifestTable.compact(spark, table, bytes / 3))
+    assert(before == files.size && after > 1 && after < before,
+      s"$before -> $after")
+    // the rewrite's shuffle map stage and its write
+    assert(jobs == 2, s"multi-group compact started $jobs jobs")
+    val snap = ManifestTable.snapshotFor(table, None)
+    assert(snap.dvs.values.forall(_.isEmpty), snap.dvs)
+    assert(ManifestTable.read(spark, table).as[(Long, String)].collect()
+      .toMap == model.toMap)
   }
 
   test("the shared replace-publish aborts when a rival removed an " +
