@@ -66,12 +66,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *    commits ONE tagged version per epoch
   *    (`stream:<queryId>:<epochId>`) — checkpoint replays
   *    short-circuit, exactly-once at the SQL surface;
-  *  - **vectorized reads**: scans plan COLUMNAR through Spark's own
-  *    vectorized parquet reader (ColumnarBatch into whole-stage
-  *    codegen); DV'd files stay columnar via a zero-copy
-  *    row-id-mapping mask ([[FilteredColumnVector]]); the row path
-  *    remains exactly where row-level semantics demand it
-  *    (`_graft_pos`);
+  *  - **vectorized reads**: every scan that reads data files — batch,
+  *    `_graft_pos`, SQL row-level and CDC — plans COLUMNAR through
+  *    Spark's own vectorized parquet reader (ColumnarBatch into
+  *    whole-stage codegen); DV'd files stay columnar via a zero-copy
+  *    row-id-mapping mask ([[FilteredColumnVector]]), and
+  *    `_graft_pos` is one more vector filled from the reader's file
+  *    ordinal;
   *  - **row-group splits**: files past ~1.5× `splitBytes` (default
   *    128 MiB) plan several row-group-aligned InputPartitions — no
   *    straggler task on a hot compacted file;
@@ -92,15 +93,16 @@ import org.apache.spark.unsafe.types.UTF8String
   *    counts — CBO join cardinality and broadcast decisions run on
   *    manifest arithmetic.
   *
-  * The partition reader decodes parquet directly via parquet-mr's
-  * Group API (the same bundled library Spark's own scan uses
-  * underneath) with the projection pushed into the read schema —
-  * column pruning costs nothing at the I/O layer. Surface contract:
-  * FLAT relational snapshots (boolean/int/long/float/double/binary/
-  * string/date/timestamp-micros columns — what the manifest DML
-  * writes); nested types fail loudly at schema inference. Schema is
-  * the by-name union of the LIVE files' footers (the S16 read-side
-  * evolution contract: files missing a late column read it as NULL).
+  * One decoder serves every file read: [[ManifestColumnarReader]],
+  * with the projection pushed into the requested schema — column
+  * pruning costs nothing at the I/O layer. Surface contract: FLAT
+  * relational snapshots; nested types fail loudly at schema
+  * inference. Schema is the by-name union of the LIVE files' footers,
+  * each converted exactly as Spark's parquet inference converts it
+  * (decimals, byte/short, INT96 and MICROS timestamps keep their
+  * types — a DSv2 read returns what [[ManifestTable.read]] returns),
+  * under the S16 read-side evolution contract: files missing a late
+  * column read it as NULL.
   */
 class ManifestTableProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-manifest"
@@ -263,66 +265,17 @@ object ManifestV2 {
       }
     }
 
-  private def footerSchema(path: String): StructType = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(path),
-      new org.apache.hadoop.conf.Configuration())
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      val msg = reader.getFooter.getFileMetaData.getSchema
-      import scala.jdk.CollectionConverters._
-      import org.apache.parquet.schema.LogicalTypeAnnotation
-      StructType(msg.getFields.asScala.toSeq.map { f =>
-        require(f.isPrimitive,
-          s"graft-manifest serves flat relational snapshots; " +
-            s"column ${f.getName} is nested")
-        val p = f.asPrimitiveType()
-        import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-        val ann = p.getLogicalTypeAnnotation
-        val dt = p.getPrimitiveTypeName match {
-          case INT64
-              if ann.isInstanceOf[LogicalTypeAnnotation
-                .TimestampLogicalTypeAnnotation] =>
-            val t = ann.asInstanceOf[LogicalTypeAnnotation
-              .TimestampLogicalTypeAnnotation]
-            require(t.getUnit ==
-                LogicalTypeAnnotation.TimeUnit.MICROS,
-              s"graft-manifest reads MICROS timestamps; column " +
-                s"${f.getName} is ${t.getUnit}")
-            TimestampType
-          // Spark's parquet writer defaults to INT96 timestamps
-          // (spark.sql.parquet.outputTimestampType=INT96), which is
-          // what the Scala-path commits stage via df.write.parquet —
-          // the DSv2 reader decodes both encodings so the two write
-          // surfaces stay interchangeable on one table
-          case INT96   => TimestampType
-          case INT64   => LongType
-          case INT32
-              if ann.isInstanceOf[LogicalTypeAnnotation
-                .DateLogicalTypeAnnotation] => DateType
-          case INT32   => IntegerType
-          case DOUBLE  => DoubleType
-          case FLOAT   => FloatType
-          case BOOLEAN => BooleanType
-          case BINARY
-              if ann == LogicalTypeAnnotation.stringType() =>
-            StringType
-          case BINARY  => BinaryType
-          case other => throw new IllegalArgumentException(
-            s"graft-manifest serves flat relational snapshots; " +
-              s"column ${f.getName} has unsupported type $other")
-        }
-        StructField(f.getName, dt)
-      })
-    } finally reader.close()
-  }
-
   /** By-name union of the live files' footers — per-LIVE-file
-    * metadata reads, bounded by the snapshot. Same-name columns must
-    * agree on type (loud otherwise). A table with NO published
-    * snapshot yet has no schema to infer — EMPTY, the write-bootstrap
-    * case (the first `df.write.format("graft-manifest")` creates the
-    * table; a read of it still fails loudly at scan planning). */
+    * metadata reads, bounded by the snapshot, each converted exactly
+    * as Spark's own parquet inference converts it
+    * ([[ManifestTable.fileSchema]]: INT96 and MICROS timestamps,
+    * decimals, byte/short annotations all keep their Spark types).
+    * Every column reads nullable and without field metadata; nested
+    * columns are refused. Same-name columns must agree on type (loud
+    * otherwise). A table with NO published snapshot yet has no schema
+    * to infer — EMPTY, the write-bootstrap case (the first
+    * `df.write.format("graft-manifest")` creates the table; a read of
+    * it still fails loudly at scan planning). */
   def schemaFor(opts: ManifestV2Options): StructType = {
     if (ManifestTable.versions(opts.path).isEmpty &&
         opts.version.isEmpty)
@@ -330,7 +283,20 @@ object ManifestV2 {
     val pinned = resolvePinned(opts)
     require(pinned.slices.nonEmpty,
       s"graft-manifest: snapshot of ${opts.path} lists no data files")
-    pinned.slices.map(s => footerSchema(s.path)).reduce { (a, b) =>
+    val spark = org.apache.spark.sql.SparkSession.active
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    pinned.slices.map { s =>
+      StructType(ManifestTable.fileSchema(spark, hadoopConf,
+          new org.apache.hadoop.fs.Path(s.path)).fields.map { f =>
+        f.dataType match {
+          case _: StructType | _: ArrayType | _: MapType =>
+            throw new IllegalArgumentException(
+              s"graft-manifest serves flat relational snapshots; " +
+                s"column ${f.name} is nested")
+          case dt => StructField(f.name, dt)
+        }
+      })
+    }.reduce { (a, b) =>
       val known = a.fieldNames.toSet
       b.fields.foldLeft(a) { (acc, f) =>
         if (!known.contains(f.name)) acc.add(f)
@@ -362,8 +328,9 @@ private[sources] object GraftFileColumn
 /** The `_graft_pos` metadata column: the row's physical file ordinal
   * (`_metadata.row_index`) — together with `_graft_file` it is the
   * ROW ID the delta-based (merge-on-read) row-level operations key
-  * their deletion-vector lines on. Row-path only: a scan requiring
-  * it plans row readers (whose position counter IS the ordinal). */
+  * their deletion-vector lines on. The columnar reader fills it from
+  * its running ordinal, so a scan requiring it reads every row group
+  * (no predicate skipping). */
 private[sources] object GraftPosColumn
     extends org.apache.spark.sql.connector.catalog.MetadataColumn {
   override def name(): String = "_graft_pos"
@@ -785,9 +752,9 @@ object ManifestScan {
     * whole-file partition — splitting is an optimization, never a
     * correctness step. */
   def splitPartitions(s: ManifestV2.FileSlice, rel: String,
-      cols: Array[String], targetBytes: Long): Seq[InputPartition] = {
+      targetBytes: Long): Seq[InputPartition] = {
     def whole = Seq(
-      ManifestFilePartition(s.path, rel, s.dv, cols): InputPartition)
+      ManifestFilePartition(s.path, rel, s.dv): InputPartition)
     if (targetBytes <= 0L) return whole
     val size =
       try java.nio.file.Files.size(java.nio.file.Paths.get(s.path))
@@ -823,8 +790,8 @@ object ManifestScan {
     groups.toSeq.zipWithIndex.map { case ((pos, rb), i) =>
       val end =
         if (i + 1 < groups.length) groups(i + 1)._1 else size
-      ManifestFilePartition(s.path, rel, s.dv, cols, pos, end - pos,
-        rb): InputPartition
+      ManifestFilePartition(s.path, rel, s.dv, pos, end - pos, rb)
+        : InputPartition
     }
   }
 
@@ -836,15 +803,13 @@ object ManifestScan {
   private def literalLong(schema: StructType, a: String,
       v: Any): Option[Long] = {
     val dt = schema.fields.find(_.name == a).map(_.dataType)
+    val integral = dt.exists(t => t == LongType || t == IntegerType ||
+      t == ShortType || t == ByteType)
     (dt, v) match {
-      case (Some(LongType) | Some(IntegerType), l: java.lang.Long) =>
-        Some(l)
-      case (Some(LongType) | Some(IntegerType), i: java.lang.Integer) =>
-        Some(i.toLong)
-      case (Some(LongType) | Some(IntegerType), s: java.lang.Short) =>
-        Some(s.toLong)
-      case (Some(LongType) | Some(IntegerType), b: java.lang.Byte) =>
-        Some(b.toLong)
+      case (_, l: java.lang.Long) if integral => Some(l)
+      case (_, i: java.lang.Integer) if integral => Some(i.toLong)
+      case (_, s: java.lang.Short) if integral => Some(s.toLong)
+      case (_, b: java.lang.Byte) if integral => Some(b.toLong)
       case (Some(DateType), d: java.sql.Date) =>
         Some(d.toLocalDate.toEpochDay)
       case (Some(DateType), d: java.time.LocalDate) =>
@@ -1278,7 +1243,7 @@ class ManifestScan(required: StructType, pushed: Array[Filter],
     * filters — shared by partition planning AND statistics reporting,
     * so the planner's size estimate reflects the pruned scan, not the
     * whole table. Runtime filters subtract from this via
-    * [[surviving]]; the columnar decision reads the static set (it
+    * [[surviving]]; the key-grouped report reads the static set (it
     * must be stable across re-planning). */
   private lazy val survivingStatic: Seq[ManifestV2.FileSlice] = {
     val root = java.nio.file.Paths.get(opts.path)
@@ -1404,6 +1369,8 @@ class ManifestScan(required: StructType, pushed: Array[Filter],
                 case Some(LongType | TimestampType) => Some((lo, hi))
                 case Some(IntegerType | DateType) =>
                   Some((lo.toInt, hi.toInt))
+                case Some(ShortType) => Some((lo.toShort, hi.toShort))
+                case Some(ByteType) => Some((lo.toByte, hi.toByte))
                 case _ => None
               }
             }
@@ -1517,7 +1484,7 @@ class ManifestScan(required: StructType, pushed: Array[Filter],
           val rel = root.relativize(
             java.nio.file.Paths.get(s.path)).toString
           val parts = ManifestScan.splitPartitions(s, rel,
-            required.fieldNames, opts.splitBytes)
+            opts.splitBytes)
           if (!spj) parts
           else {
             // key-grouped report: every partition carries its tuple
@@ -1532,20 +1499,13 @@ class ManifestScan(required: StructType, pushed: Array[Filter],
         }.toArray
     }
 
-  /** Columnar (vectorized) whenever the scan serves plain rows —
-    * deletion vectors included ([[FilteredColumnVector]] masks them
-    * by row-id mapping, zero copies). Only a required `_graft_pos`
-    * row id (the delta-operation scan) forces the row path, where
-    * per-row ordinals are the point. The pushed filters ride along
-    * so the columnar reader can skip ROW GROUPS and PAGES inside
-    * each surviving file (zone stats prune per file; OPTIMIZE makes
-    * files big — the intra-file skip is what keeps a selective
-    * predicate cheap on a 1 GiB compacted file). */
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val columnar = metaAgg.isEmpty &&
-      !required.fieldNames.contains("_graft_pos")
-    ManifestReaderFactory(required, columnar, pushed.toSeq)
-  }
+  /** The pushed filters ride along so the columnar reader can skip
+    * ROW GROUPS and PAGES inside each surviving file (zone stats
+    * prune per file; OPTIMIZE makes files big — the intra-file skip
+    * is what keeps a selective predicate cheap on a 1 GiB compacted
+    * file). */
+  override def createReaderFactory(): PartitionReaderFactory =
+    ManifestReaderFactory(required, pushed.toSeq)
 }
 
 /** The CDC micro-batch source: offset = manifest version; batch
@@ -1627,8 +1587,7 @@ class ManifestMicroBatchStream(required: StructType,
     val root = java.nio.file.Paths.get(opts.path)
     snap.files.filterNot(before).map { f =>
       ManifestFilePartition(root.resolve(f).toString, f,
-        snap.dvs.getOrElse(f, Seq.empty).toArray,
-        required.fieldNames): InputPartition
+        snap.dvs.getOrElse(f, Seq.empty).toArray): InputPartition
     }.toArray
   }
 
@@ -1875,8 +1834,7 @@ class ManifestRowScan(required: StructType, opts: ManifestV2Options,
     pinned.slices.flatMap { s =>
       val rel = relOf(s.path)
       if (keep.forall(_.contains(rel)) && survivesRuntime(rel, s.rows))
-        Some(ManifestFilePartition(s.path, rel, s.dv,
-          required.fieldNames): InputPartition)
+        Some(ManifestFilePartition(s.path, rel, s.dv): InputPartition)
       else None
     }.toArray
   }
@@ -1936,9 +1894,8 @@ class ManifestReplaceWrite(schema: StructType,
     val replaced = op.scan.replacedFiles
     val files = ManifestCommit.taskFiles(msgs)
     if (replaced.isEmpty && files.isEmpty) return // no-op operation
-    // a row-level replacement records no #ndv= lines
     var staged = files.map(_.rel)
-    var meta = files.map(_.meta.copy(ndvs = ManifestTable.noNdvs))
+    var meta = files.map(_.meta)
       .foldLeft(ManifestTable.FileMeta())(_ ++ _)
     if (staged.isEmpty) {
       // the operation deleted every row of the replaced files and
@@ -1997,6 +1954,13 @@ private[sources] object ManifestParquet {
         case StringType  => Types.optional(BINARY)
           .as(LogicalTypeAnnotation.stringType()).named(f.name)
         case BinaryType  => Types.optional(BINARY).named(f.name)
+        // Spark's own layout: unscaled INT32 up to 9 digits, INT64 up
+        // to 18
+        case d: DecimalType if d.precision <= Decimal.MAX_LONG_DIGITS =>
+          Types.optional(
+              if (d.precision <= Decimal.MAX_INT_DIGITS) INT32 else INT64)
+            .as(LogicalTypeAnnotation.decimalType(d.scale, d.precision))
+            .named(f.name)
         case other => throw new IllegalArgumentException(
           s"graft-manifest writes flat relational rows; column " +
             s"${f.name} has unsupported type $other")
@@ -2462,12 +2426,18 @@ final case class ManifestWriterFactory(schema: StructType,
             case BooleanType => g.append(name, r.getBoolean(i))
             case DateType    => g.append(name, r.getInt(i))
             case TimestampType => g.append(name, r.getLong(i))
+            // the raw bytes, as Spark's writer and FileStats see them
             case StringType  => g.append(name,
               org.apache.parquet.io.api.Binary
-                .fromString(r.getUTF8String(i).toString))
+                .fromReusedByteArray(r.getUTF8String(i).getBytes))
             case BinaryType  => g.append(name,
               org.apache.parquet.io.api.Binary
                 .fromConstantByteArray(r.getBinary(i)))
+            case d: DecimalType =>
+              val u = r.getDecimal(i, d.precision, d.scale).toUnscaledLong
+              if (d.precision <= Decimal.MAX_INT_DIGITS)
+                g.append(name, u.toInt)
+              else g.append(name, u)
             case other => throw new IllegalStateException(
               s"unreachable: $other passed messageTypeOf")
           }
@@ -2508,7 +2478,7 @@ final case class ManifestMetaPartition(values: Array[Any])
   * range's first row — what keeps deletion-vector positions (and the
   * `_graft_pos` row id) correct on a split read. */
 final case class ManifestFilePartition(path: String, rel: String,
-    dv: Array[Long], cols: Array[String], start: Long = 0L,
+    dv: Array[Long], start: Long = 0L,
     length: Long = Long.MaxValue, rowOffset: Long = 0L)
     extends InputPartition
 
@@ -2525,24 +2495,23 @@ final case class ManifestKeyedPartition(base: ManifestFilePartition,
       .GenericInternalRow(keyVals)
 }
 
+/** Every data file reads COLUMNAR ([[ManifestColumnarReader]]); the
+  * one row reader left answers a metadata aggregate's one-row
+  * partition, which decodes no file. A batch never mixes the two:
+  * a scan plans either that one partition or file partitions. */
 final case class ManifestReaderFactory(required: StructType,
-    columnar: Boolean = false,
     filters: Seq[Filter] = Seq.empty)
     extends PartitionReaderFactory {
 
-  /** Scan-wide (Spark requires all partitions of a batch to agree):
-    * the scan sets `columnar` unless a row-position column
-    * (`_graft_pos`) is required — DV'd files stay columnar behind
-    * the zero-copy row-id mapping ([[FilteredColumnVector]]). */
   override def supportColumnarReads(partition: InputPartition)
-      : Boolean = columnar
+      : Boolean = !partition.isInstanceOf[ManifestMetaPartition]
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     partition match {
       case ManifestKeyedPartition(base, _) =>
         createColumnarReader(base)
-      case ManifestFilePartition(path, rel, dv, _, start, length,
+      case ManifestFilePartition(path, rel, dv, start, length,
           rowOffset) =>
         new ManifestColumnarReader(path, rel, start, length, required,
           dv, rowOffset, filters)
@@ -2563,16 +2532,13 @@ final case class ManifestReaderFactory(required: StructType,
               .GenericInternalRow(values)
           override def close(): Unit = ()
         }
-      case ManifestKeyedPartition(base, _) => createReader(base)
-      case ManifestFilePartition(path, rel, dv, _, start, length,
-          rowOffset) =>
-        new ManifestFileReader(path, rel, dv, required, start, length,
-          rowOffset)
+      case other => throw new IllegalStateException(
+        s"row read of file partition $other")
     }
 }
 
-/** VECTORIZED file reader — the hot path of every DV-free manifest
-  * scan: Spark's own [[org.apache.spark.sql.execution.datasources
+/** VECTORIZED file reader — the one decoder of every manifest scan:
+  * Spark's own [[org.apache.spark.sql.execution.datasources
   * .parquet.VectorizedParquetRecordReader]] decodes the parquet
   * pages straight into ColumnarBatch vectors (the same reader the
   * built-in parquet source runs), so the DSv2 scan feeds whole-stage
@@ -2582,10 +2548,11 @@ final case class ManifestReaderFactory(required: StructType,
   * free: a required column ABSENT from this file's footer is clipped
   * to a constant-NULL vector by the reader's missing-column handling.
   * `_graft_file` (when required) lands as a constant string vector
-  * through the reader's partition-column seam; when it is not the
-  * trailing column, the batch is re-wrapped in required order (the
-  * vectors are shared — no copy). Byte range [start, start+length)
-  * selects row groups by the parquet midpoint rule — the split seam.
+  * through the reader's partition-column seam, `_graft_pos` as a
+  * long vector filled from the running file ordinal; the batch is
+  * re-wrapped in required order (the vectors are shared — no copy).
+  * Byte range [start, start+length) selects row groups by the
+  * parquet midpoint rule — the split seam.
   */
 final class ManifestColumnarReader(path: String, rel: String,
     start: Long, length: Long, required: StructType,
@@ -2596,9 +2563,13 @@ final class ManifestColumnarReader(path: String, rel: String,
   import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, VectorizedParquetRecordReader}
   import org.apache.spark.sql.vectorized.ColumnarBatch
 
-  private val dataSchema = StructType(
-    required.fields.filterNot(_.name == "_graft_file"))
+  private val dataSchema = StructType(required.fields.filterNot(f =>
+    f.name == "_graft_file" || f.name == "_graft_pos"))
   private val wantsFile = required.fieldNames.contains("_graft_file")
+  private val posVector =
+    if (!required.fieldNames.contains("_graft_pos")) null
+    else new org.apache.spark.sql.execution.vectorized
+      .OnHeapColumnVector(ManifestColumnarReader.BatchRows, LongType)
 
   private val reader: VectorizedParquetRecordReader = {
     val conf = new org.apache.hadoop.conf.Configuration()
@@ -2611,14 +2582,15 @@ final class ManifestColumnarReader(path: String, rel: String,
     // THIS file's footer schema (absent / drifted columns simply do
     // not convert — Spark's ParquetFilters discipline), so the
     // decoder skips whole ROW GROUPS by min/max + dictionary +
-    // bloom, and PAGES by the column index. DV'd reads skip the
-    // skip: the deletion-vector mapping (and split `rowOffset`
-    // arithmetic) needs the running ordinal to equal the file row
-    // index, which only holds when no row group is elided. Any
+    // bloom, and PAGES by the column index. DV'd and `_graft_pos`
+    // reads skip the skip: the deletion-vector mapping, the position
+    // vector and split `rowOffset` arithmetic need the running
+    // ordinal to equal the file row index, which only holds when no
+    // row group or page is elided. Any
     // metadata hiccup disables it — pushdown is an optimization,
     // never a correctness step (Spark re-applies every filter
     // row-level above the scan).
-    if (filters.nonEmpty && dv.isEmpty) {
+    if (filters.nonEmpty && dv.isEmpty && posVector == null) {
       try {
         val inF = org.apache.parquet.hadoop.util.HadoopInputFile
           .fromPath(new org.apache.hadoop.fs.Path(path), conf)
@@ -2652,9 +2624,8 @@ final class ManifestColumnarReader(path: String, rel: String,
     conf.set(sql.SESSION_LOCAL_TIMEZONE.key, "UTC")
     // files are written by this engine (Spark 4 / the DSv2 writer) —
     // modern proleptic-Gregorian values, CORRECTED on both rebases
-    // (exactly the semantics the row-path INT96 decoder applies)
     val r = new VectorizedParquetRecordReader(null, "CORRECTED",
-      "UTC", "CORRECTED", "UTC", false, 4096)
+      "UTC", "CORRECTED", "UTC", false, ManifestColumnarReader.BatchRows)
     val len = if (length == Long.MaxValue) {
       try java.nio.file.Files.size(java.nio.file.Paths.get(path))
       catch { case _: java.io.IOException => Long.MaxValue - 1L }
@@ -2681,14 +2652,16 @@ final class ManifestColumnarReader(path: String, rel: String,
   }
 
   // batch column order = dataSchema then the appended constant; remap
-  // to `required` order when they differ (shared vectors, no copy)
+  // to `required` order, the position vector in its slot (shared
+  // vectors, no copy)
   private val inner: ColumnarBatch = reader.resultBatch()
   private val ordered: Array[org.apache.spark.sql.vectorized
       .ColumnVector] = {
     val batchOrder = dataSchema.fieldNames ++
       (if (wantsFile) Array("_graft_file") else Array.empty[String])
     val idx = batchOrder.zipWithIndex.toMap
-    required.fieldNames.map(n => inner.column(idx(n)))
+    required.fieldNames.map(n =>
+      if (n == "_graft_pos") posVector else inner.column(idx(n)))
   }
 
   // ---- DELETION-VECTOR masking, columnar (the Iceberg
@@ -2696,8 +2669,8 @@ final class ManifestColumnarReader(path: String, rel: String,
   // the LIVE ordinals' index mapping (dv is sorted; one merge pass)
   // and serve delegating vectors that translate rowId through it —
   // dead rows vanish with zero copying, and merge-on-read tables
-  // keep vectorized scan speed instead of dropping to the row path.
-  private val mapping = new Array[Int](4096)
+  // keep vectorized scan speed.
+  private val mapping = new Array[Int](ManifestColumnarReader.BatchRows)
   private val mapped: Array[FilteredColumnVector] =
     if (dv.isEmpty) Array.empty
     else ordered.map(new FilteredColumnVector(_, mapping))
@@ -2708,8 +2681,7 @@ final class ManifestColumnarReader(path: String, rel: String,
       mapped.map(v => v: org.apache.spark.sql.vectorized.ColumnVector))
   // next file ordinal = rows served so far within this partition's
   // byte range (row groups stream in order), offset by the range's
-  // first ordinal — the same `_metadata.row_index` discipline as the
-  // row path
+  // first ordinal — `_metadata.row_index`
   private var ordinal = rowOffset
   private var dvIdx = {
     var i = 0
@@ -2722,24 +2694,36 @@ final class ManifestColumnarReader(path: String, rel: String,
     if (!reader.nextBatch()) return false
     val n = inner.numRows()
     ManifestColumnarReader.rowsDecoded.addAndGet(n)
-    if (dv.isEmpty) { out.setNumRows(n); return true }
-    live = 0
-    var i = 0
-    while (i < n) {
-      if (dvIdx < dv.length && dv(dvIdx) == ordinal + i) dvIdx += 1
-      else { mapping(live) = i; live += 1 }
-      i += 1
+    if (posVector != null) {
+      var i = 0
+      while (i < n) { posVector.putLong(i, ordinal + i); i += 1 }
+    }
+    if (dv.isEmpty) out.setNumRows(n)
+    else {
+      live = 0
+      var i = 0
+      while (i < n) {
+        if (dvIdx < dv.length && dv(dvIdx) == ordinal + i) dvIdx += 1
+        else { mapping(live) = i; live += 1 }
+        i += 1
+      }
+      out.setNumRows(live)
     }
     ordinal += n
-    out.setNumRows(live)
     true
   }
 
   override def get(): ColumnarBatch = out
-  override def close(): Unit = reader.close()
+  override def close(): Unit = {
+    reader.close()
+    if (posVector != null) posVector.close()
+  }
 }
 
 object ManifestColumnarReader {
+  /** Rows per decoded batch — the vector capacity. */
+  val BatchRows = 4096
+
   /** JVM-wide decoded-row counter — a local-mode DIAGNOSTIC (specs
     * and the graded row-group-skip probe reset it, run one scan, and
     * read it back; at local[32] every task shares this JVM). One
@@ -2789,134 +2773,4 @@ private[sources] final class FilteredColumnVector(
       : org.apache.spark.sql.vectorized.ColumnVector =
     throw new UnsupportedOperationException(
       "manifest tables serve flat relational columns")
-}
-
-/** One file's ROW reader (the DV-masking / row-id path; DV-free
-  * scans take [[ManifestColumnarReader]]): parquet-mr Group API with
-  * the projection pushed into the read schema, deletion-vector
-  * positions skipped by ordinal (parquet-mr yields rows in file
-  * order, so the running counter — seeded with the partition's
-  * `rowOffset` on a split read — IS `_metadata.row_index`). Byte
-  * range [start, start+length) selects row groups by the same
-  * midpoint rule as the columnar reader. */
-final class ManifestFileReader(path: String, rel: String,
-    dv: Array[Long],
-    required: StructType, start: Long = 0L,
-    length: Long = Long.MaxValue,
-    rowOffset: Long = 0L) extends PartitionReader[InternalRow] {
-  private val conf = new org.apache.hadoop.conf.Configuration()
-  private val fileSchema = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(path), conf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try r.getFooter.getFileMetaData.getSchema finally r.close()
-  }
-  // projection: only requested columns THIS file has (evolution —
-  // missing columns read as NULL); parquet-mr takes it via the
-  // read-schema conf key
-  private val present = required.fieldNames.filter(fileSchema.containsField)
-  locally {
-    if (present.nonEmpty) {
-      val fields = present.toSeq
-        .map(n => fileSchema.getType(fileSchema.getFieldIndex(n)))
-      val msg = new org.apache.parquet.schema.MessageType(
-        "spark_schema", fields: _*)
-      conf.set(org.apache.parquet.hadoop.api.ReadSupport
-        .PARQUET_READ_SCHEMA, msg.toString)
-    }
-  }
-  private val reader: org.apache.parquet.hadoop.ParquetReader[
-      org.apache.parquet.example.data.Group] = {
-    val end =
-      if (length == Long.MaxValue) Long.MaxValue
-      else Math.addExact(start, length)
-    org.apache.parquet.hadoop.ParquetReader
-      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-        new org.apache.hadoop.fs.Path(path))
-      .withConf(conf)
-      .withFileRange(start, end)
-      .build()
-  }
-  private val dead: java.util.HashSet[java.lang.Long] = {
-    val s = new java.util.HashSet[java.lang.Long]()
-    dv.foreach(p => s.add(p))
-    s
-  }
-  // TIMESTAMP columns arrive in either parquet encoding: INT64
-  // MICROS (the DSv2 writer) or legacy 12-byte INT96 (Spark's
-  // default df.write.parquet, i.e. the Scala-path staged commits)
-  private val int96Fields: java.util.HashSet[String] = {
-    import scala.jdk.CollectionConverters._
-    val s = new java.util.HashSet[String]()
-    fileSchema.getFields.asScala.foreach { f =>
-      if (f.isPrimitive && f.asPrimitiveType().getPrimitiveTypeName ==
-          org.apache.parquet.schema.PrimitiveType
-            .PrimitiveTypeName.INT96)
-        s.add(f.getName)
-    }
-    s
-  }
-
-  /** INT96 parquet timestamp → epoch microseconds: 8 little-endian
-    * bytes of nanos-within-day followed by 4 little-endian bytes of
-    * Julian day (the public parquet layout Spark/Hive/Impala share).
-    */
-  private def int96Micros(b: Array[Byte]): Long = {
-    val buf = java.nio.ByteBuffer.wrap(b)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val nanos = buf.getLong
-    val julianDay = buf.getInt
-    (julianDay - 2440588L) * 86400000000L + nanos / 1000L
-  }
-
-  private var pos = rowOffset - 1L
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    var g = reader.read()
-    pos += 1
-    while (g != null && dead.contains(pos)) {
-      g = reader.read()
-      pos += 1
-    }
-    if (g == null) false
-    else { current = decode(g); true }
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = reader.close()
-
-  private def decode(
-      g: org.apache.parquet.example.data.Group): InternalRow = {
-    val vals = new Array[Any](required.length)
-    var i = 0
-    while (i < required.length) {
-      val name = required(i).name
-      vals(i) =
-        if (name == "_graft_file") UTF8String.fromString(rel)
-        else if (name == "_graft_pos") pos // physical file ordinal
-        else if (!fileSchema.containsField(name)) null // evolution
-        else if (g.getFieldRepetitionCount(name) == 0) null
-        else required(i).dataType match {
-          case LongType    => g.getLong(name, 0)
-          case IntegerType => g.getInteger(name, 0)
-          case DoubleType  => g.getDouble(name, 0)
-          case FloatType   => g.getFloat(name, 0)
-          case BooleanType => g.getBoolean(name, 0)
-          case DateType    => g.getInteger(name, 0) // epoch days
-          case TimestampType => // epoch micros
-            if (int96Fields.contains(name))
-              int96Micros(g.getInt96(name, 0).getBytes)
-            else g.getLong(name, 0)
-          case StringType  =>
-            UTF8String.fromBytes(g.getBinary(name, 0).getBytes)
-          case BinaryType  => g.getBinary(name, 0).getBytes
-          case other => throw new IllegalStateException(
-            s"unreachable: $other passed schema inference")
-        }
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.expressions
-      .GenericInternalRow(vals)
-  }
 }

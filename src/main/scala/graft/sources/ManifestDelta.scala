@@ -192,7 +192,7 @@ class ManifestDeltaBatchWrite(info: LogicalWriteInfo,
     ManifestTable.applyDeltaCommit(
       org.apache.spark.sql.SparkSession.active, opts.path,
       deletes, inserts.map(_.rel), meta.stats, meta.sstats, meta.rows,
-      meta.pvals, expectDvs, opts.dvMaxFraction)
+      meta.pvals, expectDvs, opts.dvMaxFraction, ndvs = meta.ndvs)
     ()
   }
 

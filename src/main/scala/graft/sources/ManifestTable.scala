@@ -562,19 +562,30 @@ object ManifestTable {
   private def footerSchema(spark: SparkSession, root: Path,
       files: Seq[String]): org.apache.spark.sql.types.StructType = {
     import org.apache.hadoop.fs.{Path => HPath}
-    import org.apache.parquet.format.converter.ParquetMetadataConverter
-    import org.apache.parquet.hadoop.Footer
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.spark.sql.execution.datasources.parquet.{
-      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
     require(files.nonEmpty,
       s"no data files under $root to read a schema from")
     val hadoopConf = spark.sessionState.newHadoopConf()
     val paths = files.map(f => new HPath(root.resolve(f).toString))
     val fs = paths.head.getFileSystem(hadoopConf)
-    val first = paths.map(fs.makeQualified).minBy(_.toString)
+    fileSchema(spark, hadoopConf, paths.map(fs.makeQualified)
+      .minBy(_.toString))
+  }
+
+  /** The Spark schema of ONE data file: its footer (row groups
+    * skipped) converted by `readSchemaFromFooter` with a converter
+    * built from the session's parquet settings — exactly what Spark's
+    * own inference gives the file. */
+  private[sources] def fileSchema(spark: SparkSession,
+      hadoopConf: org.apache.hadoop.conf.Configuration,
+      file: org.apache.hadoop.fs.Path)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
     val footer = ParquetFooterReader.readFooter(
-      HadoopInputFile.fromPath(first, hadoopConf),
+      HadoopInputFile.fromPath(file, hadoopConf),
       ParquetMetadataConverter.SKIP_ROW_GROUPS)
     val conf = spark.sessionState.conf
     val converter = new ParquetToSparkSchemaConverter(
@@ -584,7 +595,7 @@ object ManifestTable {
       nanosAsLong = conf.legacyParquetNanosAsLong,
       respectUnknownTypeAnnotation =
         conf.parquetReaderRespectUnknownTypeAnnotation)
-    ParquetFileFormat.readSchemaFromFooter(new Footer(first, footer),
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
       converter)
   }
 

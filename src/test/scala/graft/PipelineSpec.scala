@@ -3444,6 +3444,76 @@ class PipelineSpec extends SparkSpec {
       ds.map(_._1.toSeq.sorted.mkString("\n")).sorted)
   }
 
+  test("SQL row-level writes keep #ndv= lines: after a copy-on-write " +
+      "MERGE INTO and a merge-on-read MERGE and DELETE every live file " +
+      "has one and the scan reports a distinct count") {
+    import graft.sources.ManifestTable
+    import org.apache.spark.sql.connector.read.SupportsReportStatistics
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+    val root = Files.createTempDirectory("graft-ndv-dml").toString
+    spark.conf.set("spark.sql.catalog.gndv", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.gndv.root", root)
+    def table(mode: String): (String, String) = {
+      val t = "t_" + java.util.UUID.randomUUID().toString.replace("-", "")
+      spark.sql(s"CREATE TABLE gndv.$t (k BIGINT, p BIGINT) USING " +
+        s"`graft-manifest` TBLPROPERTIES ('merge.mode'='$mode')")
+      val dir = s"$root/$t"
+      for (lo <- Seq(0L, 50L))
+        ManifestTable.commitWithStats(spark.range(lo, lo + 50)
+          .select($"id".as("k"), ($"id" * 10).as("p")).coalesce(1),
+          dir, append = true, "k")
+      (t, dir)
+    }
+    def assertNdvs(t: String, dir: String): Unit = {
+      val snap = ManifestTable.snapshotFor(dir, None)
+      snap.files.foreach(f => assert(
+        snap.ndvs.getOrElse(f, Seq.empty).exists(_._1 == "k"),
+        s"$f has no #ndv= line for k"))
+      val scan = spark.table(s"gndv.$t").queryExecution.optimizedPlan
+        .collectFirst { case r: DataSourceV2ScanRelation => r.scan }
+        .getOrElse(fail("no DSv2 scan"))
+      val stats = scan.asInstanceOf[SupportsReportStatistics]
+        .estimateStatistics().columnStats()
+      val k = org.apache.spark.sql.connector.expressions.Expressions
+        .column("k")
+      assert(stats.containsKey(k) &&
+        stats.get(k).distinctCount().isPresent, stats)
+    }
+    Seq((60L, 65L), (200L, 203L)).map { case (lo, hi) =>
+      spark.range(lo, hi).select($"id".as("k"), lit(-1L).as("p"))
+    }.reduce(_ unionByName _).createOrReplaceTempView("ndv_src")
+    val merge = "USING ndv_src s ON t.k = s.k " +
+      "WHEN MATCHED THEN UPDATE SET t.p = s.p " +
+      "WHEN NOT MATCHED THEN INSERT (k, p) VALUES (s.k, s.p)"
+    val (cow, cowDir) = table("copy-on-write")
+    spark.sql(s"MERGE INTO gndv.$cow t $merge")
+    assertNdvs(cow, cowDir)
+    val (mor, morDir) = table("merge-on-read")
+    spark.sql(s"MERGE INTO gndv.$mor t $merge")
+    spark.sql(s"DELETE FROM gndv.$mor WHERE k % 7 = 0")
+    assert(ManifestTable.snapshotFor(morDir, None).dvs.nonEmpty)
+    assertNdvs(mor, morDir)
+    assert(ManifestTable.read(spark, morDir).count() == 103L - 15L)
+  }
+
+  test("a graft-manifest write stores string bytes unchanged, as " +
+      "ManifestTable.commit does, invalid UTF-8 included") {
+    import graft.sources.ManifestTable
+    val df = spark.range(1).select(unhex(lit("41FF42")).cast("string")
+      .as("s"))
+    val api = Files.createTempDirectory("graft-bytes-api").toString
+    ManifestTable.commit(df, api, append = false)
+    val dsv2 = Files.createTempDirectory("graft-bytes-dsv2").toString
+    df.write.format("graft-manifest").option("path", dsv2)
+      .option("statsColumns", "s").mode("append").save()
+    def stored(t: String): Seq[String] =
+      ManifestTable.snapshotFor(t, None).files.flatMap(f =>
+        spark.read.parquet(s"$t/$f").select(hex($"s".cast("binary")))
+          .as[String].collect())
+    assert(stored(api) == Seq("41FF42"))
+    assert(stored(dsv2) == Seq("41FF42"))
+  }
+
   test("a manifest line torn mid-line fails the read loudly, naming " +
       "the manifest, the line number and the line") {
     import graft.sources.ManifestTable

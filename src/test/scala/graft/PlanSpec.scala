@@ -1075,6 +1075,173 @@ class PlanSpec extends SparkSpec {
         org.apache.spark.sql.functions.unix_micros(col("ts"))))
   }
 
+  test("every graft-manifest scan kind — batch, _graft_pos (split " +
+      "and filtered), SQL UPDATE and CDC — plans columnar and returns " +
+      "ManifestTable.read's types and values over every flat type, " +
+      "an evolved column and a DV; _graft_pos is _metadata.row_index") {
+    import graft.sources.ManifestTable
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.datasources.v2.{
+      BatchScanExec, MicroBatchScanExec}
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-parity-root").toString
+    spark.conf.set("spark.sql.catalog.g_par",
+      "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.g_par.root", root)
+    val t = "t_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val dir = s"$root/$t"
+    def rows(lo: Long, hi: Long): DataFrame = {
+      val id = col("id")
+      spark.range(lo, hi).select(id.as("l"),
+        (id * 7 % 1000).cast("int").as("i"),
+        (id % 3000 - 1500).cast("short").as("h"),
+        (id % 200 - 100).cast("byte").as("b"),
+        expr("CAST(id % 500 + 0.99 AS DECIMAL(12,2))").as("price"),
+        when(id % 11 === 0, lit(null)).otherwise(id * 1.5).as("x"),
+        (id / 4).cast("float").as("f"),
+        (id % 3 === 0).as("flag"),
+        date_add(lit(java.sql.Date.valueOf("2020-01-01")),
+          (id % 400).cast("int")).as("d"),
+        timestamp_micros(id * 1000003L + 17L).as("ts"),
+        when(id % 5 === 0, lit(null))
+          .otherwise(concat(lit("s"), id.cast("string"))).as("s"),
+        when(id % 7 === 0, lit(null))
+          .otherwise(unhex(lpad(hex(id), 8, "0"))).as("bin"))
+    }
+    def plans(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: org.apache.spark.sql.execution.adaptive
+        .AdaptiveSparkPlanExec => plans(a.executedPlan)
+      case q: org.apache.spark.sql.execution.adaptive
+        .QueryStageExec => plans(q.plan)
+      case c: org.apache.spark.sql.execution.CommandResultExec =>
+        plans(c.commandPhysicalPlan)
+      case other => other +: (other.children ++ other.subqueries)
+        .flatMap(plans)
+    }
+    def assertColumnar(p: SparkPlan): Unit = {
+      val scans = plans(p).collect {
+        case b: BatchScanExec => b.supportsColumnar
+        case m: MicroBatchScanExec => m.supportsColumnar
+      }
+      assert(scans.nonEmpty && scans.forall(identity), s"$scans\n$p")
+    }
+    def types(df: DataFrame): Map[String, DataType] =
+      df.schema.fields.map(f => f.name -> f.dataType).toMap
+    // values in one column order, binary as hex (canon compares
+    // strings)
+    def shown(df: DataFrame): DataFrame = df.select(
+      df.schema.fieldNames.sorted.map(n =>
+        if (df.schema(n).dataType == BinaryType) hex(col(n)).as(n)
+        else col(n)).toSeq: _*)
+    def assertSame(got: DataFrame, want: DataFrame): Unit = {
+      assert(types(got) == types(want), (got.schema, want.schema))
+      assertSameRows(shown(got), shown(want))
+    }
+    def load(extra: (String, String)*): DataFrame =
+      extra.foldLeft(spark.read.format("graft-manifest")
+        .option("path", dir)) { case (r, (k, v)) => r.option(k, v) }
+        .load()
+    // CDC: one AvailableNow drain per commit on one checkpoint; each
+    // drain's last micro-batch delivers that commit's file
+    val cdcOut = java.nio.file.Files
+      .createTempDirectory("graft-parity-cdc").toString + "/out"
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft-parity-ckpt").toString
+    def drainCdc(): Unit = {
+      val q = spark.readStream.format("graft-manifest")
+        .option("path", dir).option("startingVersion", "1").load()
+        .writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          b.write.mode("append").parquet(cdcOut)
+        }
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      val last = q.asInstanceOf[org.apache.spark.sql.execution
+        .streaming.runtime.StreamingQueryWrapper].streamingQuery
+        .lastExecution.executedPlan
+      assertColumnar(last)
+    }
+
+    // v1: a Scala-API commit (INT96 timestamps) in many row groups;
+    // v2: a DSv2 append (MICROS timestamps) adding a `late` column;
+    // v3: a DV on the first file
+    val hconf = spark.sparkContext.hadoopConfiguration
+    try {
+      hconf.set("parquet.block.size", "16384")
+      hconf.set("parquet.page.size", "4096")
+      ManifestTable.commit(rows(0L, 4000L).coalesce(1), dir,
+        append = false)
+    } finally {
+      hconf.unset("parquet.block.size")
+      hconf.unset("parquet.page.size")
+    }
+    drainCdc()
+    rows(10000L, 10500L).withColumn("late", col("l") * 2).coalesce(1)
+      .write.format("graft-manifest").option("path", dir)
+      .mode("append").save()
+    drainCdc()
+    ManifestTable.deleteRangeDv(spark, dir, "l", 100L, 149L,
+      dvMaxFraction = 1.0)
+    val snap = ManifestTable.snapshotFor(dir, None)
+    val tsKinds = snap.files.map { f =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(s"$dir/$f"), hconf)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try {
+        val m = r.getFooter.getFileMetaData.getSchema
+        m.getType(m.getFieldIndex("ts")).asPrimitiveType()
+          .getPrimitiveTypeName.toString
+      } finally r.close()
+    }.toSet
+    assert(tsKinds == Set("INT96", "INT64"), tsKinds)
+    assertSame(spark.read.option("mergeSchema", "true").parquet(cdcOut),
+      ManifestTable.read(spark, dir, Some(2L), mergeSchema = true))
+
+    val want = ManifestTable.read(spark, dir, mergeSchema = true)
+    assert(want.schema("price").dataType == DecimalType(12, 2) &&
+      want.schema("b").dataType == ByteType &&
+      want.schema("h").dataType == ShortType)
+    // batch scan
+    val batch = load()
+    assertColumnar(batch.queryExecution.executedPlan)
+    assertSame(batch, want)
+    // _graft_pos scans: split into row-group ranges, and filtered
+    // (a pushed filter must not skip row groups under the ordinal)
+    def rowIndex(version: Option[Long]): DataFrame = {
+      val s = ManifestTable.snapshotFor(dir, version)
+      s.files.map { f =>
+        val dead = s.dvs.getOrElse(f, Seq.empty)
+        spark.read.parquet(s"$dir/$f").select(lit(f).as("_graft_file"),
+            col("l"), col("_metadata.row_index").as("_graft_pos"))
+          .where(!col("_graft_pos").isin(dead: _*))
+      }.reduce(_ unionByName _)
+    }
+    val withPos = load("splitBytes" -> "16384").select(col("*"),
+      col("_graft_file"), col("_graft_pos"))
+    assert(withPos.rdd.getNumPartitions > 2,
+      withPos.rdd.getNumPartitions)
+    assertColumnar(withPos.queryExecution.executedPlan)
+    assertSame(withPos.drop("_graft_file", "_graft_pos"), want)
+    assertSameRows(withPos.select("_graft_file", "l", "_graft_pos"),
+      rowIndex(None))
+    val filtered = load("version" -> "2").where(col("l") >= 3000L)
+      .select("_graft_file", "l", "_graft_pos")
+    assertColumnar(filtered.queryExecution.executedPlan)
+    assertSameRows(filtered,
+      rowIndex(Some(2L)).where(col("l") >= 3000L))
+    // SQL UPDATE: its scans plan columnar and carry every type through
+    // the replacement write
+    val upd = spark.sql(s"UPDATE g_par.$t SET x = x + 1 WHERE l < 100")
+    assertColumnar(upd.queryExecution.executedPlan)
+    val updated = ManifestTable.read(spark, dir, mergeSchema = true)
+    assertSame(updated, want.withColumn("x",
+      when(col("l") < 100L, col("x") + 1).otherwise(col("x"))))
+    assertSame(load(), updated)
+  }
+
   test("large manifest files split into row-group-aligned " +
       "InputPartitions; values stay exact, with and without a DV") {
     import graft.sources.ManifestTable
