@@ -25,11 +25,24 @@ import graft.model.ColumnMapping
   * Spark-stable concept, so the engine uses the smallest SKU instead
   * — a total order on the same data.
   *
-  * Scale: the only wide operations are one window partitioned by
-  * master_code and one broadcast join; at 100 TB the window becomes a
-  * shuffle on master_code (the natural partition key) and the join
-  * flips to sort-merge automatically when collections outgrow the
-  * broadcast threshold.
+  * Scale: the raw input is parsed, projected and ranked by the W1
+  * window ONCE per import into one base frame, which ends in a lazy
+  * `localCheckpoint`; all 14 tables derive from that base, so they
+  * see the same master row and no commit re-reads the raw input or
+  * reruns the window, however many commits and driver threads consume
+  * them. Declaring the checkpoint runs the parse and the window's
+  * shuffle (AQE executes a plan's shuffle stages when it is
+  * checkpointed); the first job that reads the base stores the ranked
+  * rows, and its blocks live as long as any table built on it: Spark's
+  * ContextCleaner frees them once the `Tables` become unreachable. At
+  * 100 TB the window is a shuffle on master_code (the natural
+  * partition key); the base's blocks sit MEMORY_AND_DISK on the
+  * executors (the local checkpoint's level), and because its lineage
+  * is truncated, losing an executor fails the import instead of
+  * recomputing the lost blocks.
+  * The other wide operation is one broadcast join, which flips to
+  * sort-merge automatically when collections outgrow the broadcast
+  * threshold.
   */
 object Importer {
 
@@ -113,15 +126,16 @@ object Importer {
       .na.drop(Seq("Master Code"))                       // P5 guard
     val w = Window.partitionBy("master_code").orderBy("__sku")
 
-    // one projected frame carrying both tables' mapped columns
-    val projected = raw.select(
-      (mapping.projectionFor("product_collection") ++
-        mapping.projectionFor("product") :+
-        col("Product SKU").as("__sku")): _*)
-
-    val masters = projected
+    // the one base every table derives from: both tables' mapped
+    // columns plus the W1 rank, parsed and ranked once per import
+    val base = raw.select(
+        (mapping.projectionFor("product_collection") ++
+          mapping.projectionFor("product") :+
+          col("Product SKU").as("__sku")): _*)
       .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)                          // W1
+      .localCheckpoint(eager = false)
+
+    val masters = base.filter(col("__rn") === 1)          // W1
 
     val collections = masters.select(
       deterministicId(lit("pc"), col("master_code")).as("collection_id"),
@@ -131,7 +145,7 @@ object Importer {
       col("attributes_raw"),
       col("video_url"))
 
-    val products = projected
+    val products = base
       .filter(col("sku").isNotNull)
       .select(
         stripDotZero(cleanString(col("sku"))).as("sku"),  // F7
@@ -210,11 +224,11 @@ object Importer {
       translationsOf(categories, "category_id", "category_name",
         Seq("category_name"), entity = "cat")
     val detailsHtmlTranslations =
-      translationsOf(detailsHtml.join(
-          collectionDetailsHtml.join(
-            collections.select(col("collection_id"), col("master_code")),
-            Seq("collection_id")),
-          Seq("details_html_id")),
+      translationsOf(detRaw.select(
+          deterministicId(lit("dh"), col("master_code"))
+            .as("details_html_id"),
+          col("master_code"),
+          col("details_html_raw").as("details_html")),
         "details_html_id", "master_code", Seq("details_html"),
         entity = "dh")
 

@@ -23,9 +23,11 @@ object Pipelines {
   /** The imported fixture tables, built ONCE per session and shared
     * by the twelve q_e2e_import / q_audit consumers — the same
     * materialized-intermediate discipline as `queries.materialized`
-    * (a production load writes its tables once; re-deriving the whole
-    * importer DAG from the raw CSV per consumer query re-reads the
-    * source ~30x in the FK audit's 10-branch union alone). */
+    * (a production load writes its tables once). The importer already
+    * parses the raw CSV once into its checkpointed base; checkpointing
+    * each table as well keeps the consumers, the FK audit's 10-branch
+    * union among them, from re-running the per-table derivations (the
+    * J11 broadcast join, the dictionary DISTINCTs) on every query. */
   private val importedCache = scala.collection.concurrent.TrieMap
     .empty[String, graft.pipelines.Importer.Tables]
   private def imported(

@@ -41,6 +41,114 @@ class PipelineSpec extends SparkSpec {
     assert(top.toSeq == Seq(("M001", 3L), ("M002", 3L), ("M003", 1L)))
   }
 
+  /** The importer's 14 tables with the stats column each is committed
+    * under, in the order the catalog load commits them. */
+  private def importerTables(t: Importer.Tables)
+      : Seq[(String, org.apache.spark.sql.DataFrame, String)] = Seq(
+    ("collections", t.collections, "collection_id"),
+    ("products", t.products, "sku"),
+    ("categories", t.categories, "category_id"),
+    ("collection_category", t.collectionCategory, "collection_id"),
+    ("collection_translations", t.collectionTranslations, "id"),
+    ("details_html", t.detailsHtml, "details_html_id"),
+    ("collection_details_html", t.collectionDetailsHtml, "collection_id"),
+    ("img_arrays", t.imgArrays, "img_array_id"),
+    ("collection_img_array", t.collectionImgArray, "collection_id"),
+    ("langs", t.langs, "lang_id"),
+    ("sources", t.sources, "source_id"),
+    ("source_translations", t.sourceTranslations, "id"),
+    ("category_translations", t.categoryTranslations, "id"),
+    ("details_html_translations", t.detailsHtmlTranslations, "id"))
+
+  test("importer: one parse of the raw CSV feeds all 14 table commits") {
+    import org.apache.spark.scheduler.{SparkListener,
+      SparkListenerJobStart, SparkListenerStageSubmitted}
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    import graft.sources.ManifestTable
+    // jobs and file-scan stages, per phase of the import
+    val phase = "graft.spec.importPhase"
+    val jobs, scans = scala.collection.concurrent.TrieMap.empty[String, Int]
+    def bump(m: scala.collection.concurrent.TrieMap[String, Int],
+        props: java.util.Properties): Unit =
+      Option(props).flatMap(p => Option(p.getProperty(phase)))
+        .foreach(k => m.put(k, m.getOrElse(k, 0) + 1))
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        bump(jobs, j.properties)
+      override def onStageSubmitted(s: SparkListenerStageSubmitted)
+          : Unit =
+        if (s.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
+          bump(scans, s.properties)
+    }
+    val root = Files.createTempDirectory("graft-import-onescan").toString
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val tables =
+      try {
+        sc.setLocalProperty(phase, "run")
+        val tables = importerTables(Importer.run(spark, RawCsv, MapCsv))
+        sc.setLocalProperty(phase, "commit")
+        tables.foreach { case (name, df, key) =>
+          ManifestTable.commitWithStats(df, s"$root/$name", append = false,
+            key)
+        }
+        tables
+      } finally {
+        sc.setLocalProperty(phase, null)
+        Thread.sleep(1000L) // let queued listener events drain
+        sc.removeSparkListener(listener)
+      }
+    // every table reads the one checkpointed base, none the CSV itself
+    val rdds = tables.flatMap { case (name, df, _) =>
+      val plan = df.queryExecution.analyzed
+      assert(plan.collectFirst { case r: LogicalRelation => r }.isEmpty,
+        s"$name still plans a file relation")
+      plan.collect { case r: LogicalRDD => r.rdd.id }
+    }
+    assert(rdds.nonEmpty && rdds.distinct.size == 1,
+      s"tables read several bases: ${rdds.distinct}")
+    // the run reads the mapping file twice (header, rows), the raw
+    // CSV's header, and parses the raw CSV once: AQE runs the W1
+    // window's shuffle stage as the base's checkpoint is declared.
+    // The commits then scan no file. Before the shared base, the run
+    // started 3 jobs and 3 file-scan stages, and the commits 33 jobs
+    // and 14 file-scan stages: every commit re-parsed the CSV.
+    assert(scans.get("run").contains(4) && !scans.contains("commit"),
+      s"file-scan stages per phase: $scans")
+    assert(jobs.get("run").contains(4) && jobs.get("commit").contains(18),
+      s"jobs per phase: $jobs")
+  }
+
+  test("importer: commits from three driver threads equal the serial " +
+      "commits row for row") {
+    // the 14 tables share one lazily checkpointed base, so with three
+    // threads several commits race to store its blocks first
+    import graft.sources.ManifestTable
+    def commitAll(threads: Int): Map[String, Seq[Seq[String]]] = {
+      val root = Files.createTempDirectory("graft-import-par").toString
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+      try importerTables(Importer.run(spark, RawCsv, MapCsv))
+        .map { case (name, df, key) =>
+          pool.submit(new java.util.concurrent.Callable[String] {
+            def call(): String = {
+              ManifestTable.commitWithStats(df, s"$root/$name",
+                append = false, key)
+              name
+            }
+          })
+        }
+        .map(_.get())
+        .map(name =>
+          name -> canon(ManifestTable.read(spark, s"$root/$name")))
+        .toMap
+      finally pool.shutdownNow()
+    }
+    val serial = commitAll(1)
+    assert(serial.size == 14 && serial("products").size == 7)
+    assert(commitAll(3) == serial)
+  }
+
   test("mapping Type column coerces projected columns; untyped and " +
       "typeless files keep the old semantics") {
     import graft.model.ColumnMapping
