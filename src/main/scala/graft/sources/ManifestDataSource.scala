@@ -2458,7 +2458,8 @@ final case class ManifestWriterFactory(schema: StructType,
 
     def drop(): Unit = if (writer != null) {
       try writer.close() catch { case _: Throwable => () }
-      java.nio.file.Files.deleteIfExists(abs); ()
+      java.nio.file.Files.deleteIfExists(abs)
+      java.nio.file.Files.deleteIfExists(ManifestTable.crcOf(abs)); ()
     }
   }
 }

@@ -842,14 +842,17 @@ object ManifestTable {
 
   /** Write `df` as parquet under `data/<dir>`, hive-partitioned by
     * `partitionBy`, as `df.write.mode("errorifexists").parquet(...)`
-    * does (same format, options, commit protocol and checks), with a
+    * does (same format, options and checks), with a
     * [[ManifestStatsTracker]] gathering each file's [[FileStats]] over
-    * `statsCols` inside the write's own tasks. Returns (table-relative
-    * path, stats) per written file, sorted by path. */
+    * `statsCols` inside the write's own tasks. The tasks write their
+    * files in place under attempt-unique final names
+    * ([[ManifestCommitProtocol]]): the stage holds exactly the written
+    * files and their `.crc` sidecars, and the caller's manifest publish
+    * is the commit. Returns (table-relative path, stats) per written
+    * file, sorted by path. */
   private def writeFiles(df: DataFrame, table: String, dir: String,
       statsCols: Seq[String],
       partitionBy: Seq[String] = Nil): Seq[(String, FileStats)] = {
-    import org.apache.spark.internal.io.FileCommitProtocol
     import org.apache.spark.sql.execution.SQLExecution
     import org.apache.spark.sql.execution.datasources.{
       BasicWriteJobStatsTracker, FileFormatWriter}
@@ -873,12 +876,9 @@ object ManifestTable {
       org.apache.spark.sql.types.StructType(
         df.schema.filterNot(f => partitionBy.contains(f.name))),
       statsCols, partitionBy.size)
-    val committer = FileCommitProtocol.instantiate(
-      spark.sessionState.conf.fileCommitProtocolClass,
-      java.util.UUID.randomUUID().toString, qualified.toString)
     SQLExecution.withNewExecutionId(qe, Some("save")) {
       FileFormatWriter.write(spark, qe.executedPlan, new ParquetFileFormat,
-        committer,
+        new ManifestCommitProtocol(qualified.toString),
         FileFormatWriter.OutputSpec(qualified.toString, Map.empty, output),
         hadoopConf, output.filter(a => partitionBy.contains(a.name)), None,
         // Spark's basic tracker keeps the task output metrics (bytes
@@ -909,11 +909,13 @@ object ManifestTable {
     * their metadata — the one staging step every writer shares. `dir`
     * is writer-unique (it carries the writer's nonce), so staging is
     * conflict-free and the data write happens exactly once however
-    * many publish attempts follow. `files > 0` coalesces the write to
-    * that many files. With `statsCols` each file's row count, zone,
-    * NDV and histogram lines are recorded from the write tasks
-    * themselves ([[writeFiles]]): one job, no pass over written data.
-    * Without `statsCols` nothing is recorded. */
+    * many publish attempts follow: the files are written in place,
+    * so staging renames nothing and the publish is the only commit.
+    * `files > 0` coalesces the write to that many files. With
+    * `statsCols` each file's row count, zone, NDV and histogram lines
+    * are recorded from the write tasks themselves ([[writeFiles]]):
+    * one job, no pass over written data. Without `statsCols` nothing
+    * is recorded. */
   private def writeStaged(df: DataFrame, table: String, dir: String,
       statsCols: Option[Seq[String]] = None,
       files: Int = 0): (Seq[String], FileMeta) = {
@@ -926,9 +928,10 @@ object ManifestTable {
   /** Move the files a write partitioned by ONE integer column staged
     * under `data/<stage>` — as its tracker reported them — to their
     * final table-relative paths `to(value, basename, index)`, `index`
-    * counting the partition's files in name order, then drop the
-    * stage (its markers and checksums). Returns (partition value,
-    * final path, stats) in final-path order. */
+    * counting the partition's files in name order, each with its
+    * `.crc` sidecar renamed alongside, then drop the emptied stage.
+    * Returns (partition value, final path, stats) in final-path
+    * order. */
   private def flatten(table: String, stage: String,
       written: Seq[(String, FileStats)])
       (to: (Int, String, Int) => String): Seq[(Int, String, FileStats)] = {
@@ -937,8 +940,10 @@ object ManifestTable {
       .toSeq.flatMap { case (v, fs) =>
         fs.sortBy(_._1).zipWithIndex.map { case ((f, st), i) =>
           val dst = to(v, f.split('/').last, i)
-          Files.createDirectories(Paths.get(table, dst).getParent)
-          Files.move(Paths.get(table, f), Paths.get(table, dst))
+          val (from, into) = (Paths.get(table, f), Paths.get(table, dst))
+          Files.createDirectories(into.getParent)
+          Files.move(from, into)
+          if (Files.exists(crcOf(from))) Files.move(crcOf(from), crcOf(into))
           (v, dst, st)
         }
       }
@@ -962,7 +967,7 @@ object ManifestTable {
       .parquet(files.map(f => root.resolve(f).toString): _*)
 
   /** Append the per-file identity columns every DV operation keys on:
-    * `__b` (file basename — staged part names carry task UUIDs, so
+    * `__b` (file basename — staged part names carry a UUID per file, so
     * basenames are snapshot-unique) and `__p` (the physical row
     * position `_metadata.row_index`). Must be projected directly on
     * the file-source relation (the hidden `_metadata` column does not
@@ -1844,7 +1849,7 @@ object ManifestTable {
     val nonce = newNonce()
     // ONE job rewrites every group: tag each input row with its
     // group through a broadcast basename→group lookup on the scan's
-    // `_metadata.file_name` (staged part-file names carry task UUIDs,
+    // `_metadata.file_name` (staged part-file names carry a UUID per file,
     // so basenames are unique; like the DV mask, the lookup ships as a
     // broadcast variable — no broadcast job, no stage boundary),
     // cluster by group so each group lands whole in one task, and
@@ -1895,11 +1900,9 @@ object ManifestTable {
     // flatten the partitioned staging layout into per-group dirs; a
     // group whose inputs were all empty wrote no partition — give it
     // an explicit empty file so its rows-preserving identity (and the
-    // snapshot's schema) survive. One task that writes several groups
-    // gives each group's file the SAME part name, and deletion vectors
-    // key on the basename, so every output takes its group's `g<gi>-`
-    // prefix: a later DV on one group's file must not mask rows of
-    // another group's.
+    // snapshot's schema) survive. Every output takes its group's
+    // `g<gi>-` prefix, so its basename names its group (the staged
+    // names are already unique: each file has its own UUID).
     val moved = flatten(table, s".c-$nonce-stage", written) {
       (gi, name, _) => s"data/c-$nonce-$gi/g$gi-$name" }
     val staged: Seq[Seq[(String, FileStats)]] = multi.indices.map { gi =>
@@ -2231,6 +2234,11 @@ object ManifestTable {
     (v, m0.files.size, after)
   }
 
+  /** The checksum sidecar Hadoop's local file system writes beside
+    * data file `p` (and verifies on every read of it). */
+  private[sources] def crcOf(p: Path): Path =
+    p.resolveSibling(s".${p.getFileName}.crc")
+
   private def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
       Using.resource(Files.walk(p)) { st =>
@@ -2247,8 +2255,9 @@ object ManifestTable {
     * to the retained window, storage stops growing without bound. The
     * ONLY place the data directory is ever listed (a maintenance job,
     * not a read path), and still metadata-sized work: the candidate
-    * set is file names, never file contents. Write-marker files
-    * (`_SUCCESS`) are left alone.
+    * set is file names, never file contents. Only `.parquet` files not
+    * named `_…` are candidates, and each deleted file's `.crc`
+    * checksum sidecar goes with it.
     *
     * `graceMs` is the IN-FLIGHT-WRITER guard (Delta/Iceberg's
     * retention window in miniature): an unreferenced file younger
@@ -2281,7 +2290,7 @@ object ManifestTable {
     val dead = all.filterNot(p => live.contains(
         root.relativize(p).toString))
       .filter(p => Files.getLastModifiedTime(p).toMillis <= cutoff)
-    dead.foreach(Files.delete)
+    dead.foreach { p => Files.delete(p); Files.deleteIfExists(crcOf(p)) }
     vs.dropRight(keepVersions).foreach(v =>
       Files.delete(manifestDir(table).resolve(s"v$v")))
     (live.size, dead.size)

@@ -3418,6 +3418,166 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  /** Every regular file under `table`'s `data/`, table-relative and
+    * sorted. */
+  private def dataFiles(table: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(table)
+    scala.util.Using.resource(Files.walk(root.resolve("data"))) { st =>
+      st.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => root.relativize(p).toString).toSeq.sorted
+    }
+  }
+
+  /** The `.crc` checksum sidecar of table-relative data file `f`. */
+  private def crcOf(f: String): String = {
+    val i = f.lastIndexOf('/')
+    s"${f.take(i + 1)}.${f.drop(i + 1)}.crc"
+  }
+
+  /** (result, commands of the OS processes `body` started on this
+    * thread), from an in-process JFR recording of `jdk.ProcessStart`
+    * events: a count that host timing noise cannot move. */
+  private def processStarts[T](body: => T): (T, Seq[String]) = {
+    import scala.jdk.CollectionConverters._
+    val rec = new jdk.jfr.Recording()
+    val dump = Files.createTempFile("graft-spawns", ".jfr")
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      val out = try body finally rec.stop()
+      rec.dump(dump)
+      val me = Thread.currentThread().getId
+      val cmds = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala
+        .filter(e => e.getEventType.getName == "jdk.ProcessStart" &&
+          Option(e.getThread).exists(_.getJavaThreadId == me))
+        .map(_.getString("command")).toSeq
+      (out, cmds)
+    } finally { rec.close(); Files.deleteIfExists(dump) }
+  }
+
+  test("ManifestTable staging: commitWithStats (one and three files), " +
+      "mergeByKeyDv and compact leave exactly the manifest's new files " +
+      "and their .crc sidecars — no _temporary tree, no _SUCCESS") {
+    import graft.sources.ManifestTable
+    val table = Files.createTempDirectory("graft-stage-footprint").toString
+    def rows(lo: Long, hi: Long, parts: Int) =
+      spark.range(lo, hi, 1L, parts).select($"id".as("k"),
+        concat(lit("v"), $"id".cast("string")).as("v"))
+    def staged(op: => Long): Unit = {
+      val prev = ManifestTable.versions(table).lastOption
+      val (before, old) = prev.fold((Set.empty[String], Set.empty[String]))(
+        p => (dataFiles(table).toSet,
+          ManifestTable.snapshotFor(table, Some(p)).files.toSet))
+      val v = op
+      val added = ManifestTable.snapshotFor(table, Some(v)).files
+        .filterNot(old)
+      assert(added.nonEmpty, s"v$v added no file")
+      assert(dataFiles(table).filterNot(before) ==
+        added.flatMap(f => Seq(f, crcOf(f))).sorted, s"v$v")
+    }
+    staged(ManifestTable.commitWithStats(rows(0L, 100L, 1), table,
+      append = false, Seq("k"), None))
+    staged(ManifestTable.commitWithStats(rows(100L, 400L, 3), table,
+      append = true, Seq("k"), None))
+    staged(ManifestTable.mergeByKeyDv(spark, table,
+      Seq((5L, "a"), (500L, "b")).toDF("k", "v"), "k",
+      dvMaxFraction = 0.5)._1)
+    staged(ManifestTable.compact(spark, table, Long.MaxValue / 2)._1)
+    assert(ManifestTable.read(spark, table).count() == 401L)
+  }
+
+  test("ManifestTable.commitWithStats: a write that fails in one task " +
+      "publishes no version and leaves no stage directory behind") {
+    import graft.sources.ManifestTable
+    import scala.jdk.CollectionConverters._
+    val table = Files.createTempDirectory("graft-failed-write").toString
+    ManifestTable.commitWithStats(spark.range(0L, 10L).toDF("k"), table,
+      append = false, Seq("k"), None)
+    val versions = ManifestTable.versions(table)
+    def entries = scala.util.Using.resource(
+      Files.walk(java.nio.file.Paths.get(table, "data")))(
+      _.iterator().asScala.map(_.toString).toSeq.sorted)
+    val before = entries
+    // the failing task writes part of its file first; the other task
+    // has committed its file by the time the failure aborts the job
+    val boom = udf { (k: Long) =>
+      if (k == 99L) {
+        Thread.sleep(300L)
+        throw new IllegalStateException("boom")
+      }
+      k
+    }
+    intercept[Exception] {
+      ManifestTable.commitWithStats(
+        spark.range(0L, 100L, 1L, 2).select(boom($"id").as("k")), table,
+        append = true, Seq("k"), None)
+    }
+    assert(ManifestTable.versions(table) == versions)
+    assert(entries == before)
+  }
+
+  test("ManifestTable.commitWithStats: a one-file commit starts no OS " +
+      "process on the committing thread") {
+    import graft.sources.ManifestTable
+    def commit(): Long = ManifestTable.commitWithStats(
+      spark.range(0L, 50L, 1L, 1).toDF("k"),
+      Files.createTempDirectory("graft-spawns").toString,
+      append = false, Seq("k"), None)
+    commit()
+    // the recording sees what this thread starts
+    val (_, probe) = processStarts(
+      new ProcessBuilder("true").start().waitFor())
+    assert(probe.size == 1, probe)
+    val (v, cmds) = processStarts(commit())
+    assert(v == 1L)
+    assert(cmds.isEmpty, cmds)
+  }
+
+  test("ManifestTable.compact and compactClustered: every file a " +
+      "compacted manifest names keeps its .crc sidecar") {
+    import graft.sources.ManifestTable
+    val table = Files.createTempDirectory("graft-compact-crc").toString
+    for (m <- 0 to 2)
+      ManifestTable.commitWithStats((1L to 90L).map(k => (k, k % 7L))
+        .toDF("k", "j").filter($"k" % 3 === m).coalesce(1), table,
+        append = true, "k")
+    def sidecars(v: Long): Unit =
+      ManifestTable.snapshotFor(table, Some(v)).files.foreach { f =>
+        assert(Files.isRegularFile(java.nio.file.Paths.get(table, crcOf(f))),
+          s"v$v: $f")
+      }
+    val (v1, _, _) = ManifestTable.compact(spark, table, Long.MaxValue / 2)
+    sidecars(v1)
+    val (v2, _, _) = ManifestTable.compactClustered(spark, table,
+      Long.MaxValue / 2, Seq("k", "j"))
+    assert(v2 == v1 + 1L)
+    sidecars(v2)
+    assert(ManifestTable.read(spark, table).select("k").as[Long].collect()
+      .toSet == (1L to 90L).toSet)
+  }
+
+  test("ManifestTable.vacuum: every .crc left under data/ has its data " +
+      "file") {
+    import graft.sources.ManifestTable
+    val table = Files.createTempDirectory("graft-vacuum-crc").toString
+    for (m <- 0 to 2)
+      ManifestTable.commitWithStats((1L to 90L).toDF("k")
+        .filter($"k" % 3 === m).coalesce(1), table, append = true, "k")
+    ManifestTable.compact(spark, table, Long.MaxValue / 2)
+    val (kept, deleted) =
+      ManifestTable.vacuum(table, keepVersions = 1, graceMs = 0L)
+    assert(kept == 1 && deleted == 3, s"kept=$kept deleted=$deleted")
+    val all = dataFiles(table).toSet
+    val crcs = all.filter(_.endsWith(".crc"))
+    crcs.foreach { c =>
+      val i = c.lastIndexOf('/')
+      val data = c.take(i + 1) + c.drop(i + 2).stripSuffix(".crc")
+      assert(all.contains(data), s"orphaned checksum $c")
+    }
+    assert(crcs.size == 1, all)
+  }
+
   /** Assert every file version `v` of `table` added over `v - 1`
     * (`added` of them) records the `#stats`/`#sstats`/`#ndv`/`#nrows`
     * lines a single-file commitWithStats of that file on `cols`
