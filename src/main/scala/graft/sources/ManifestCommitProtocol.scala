@@ -23,10 +23,12 @@ private[sources] final class ManifestCommitProtocol(stage: String)
   @transient private lazy val added =
     scala.collection.mutable.ArrayBuffer.empty[String]
 
+  /** Create the stage in-process, from the path part of its URI: a
+    * local stage comes as a [[GraftLocalFileSystem]] URI, which no
+    * `java.nio` provider serves. */
   override def setupJob(job: JobContext): Unit = {
-    // in-process: Hadoop's local `mkdirs` may start a `chmod` per level
     java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(new Path(stage).toUri))
+      java.nio.file.Paths.get(new Path(stage).toUri.getPath))
     ()
   }
 

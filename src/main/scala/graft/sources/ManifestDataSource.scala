@@ -750,9 +750,12 @@ object ManifestScan {
     * so deletion-vector masking stays position-exact on splits. Any
     * metadata hiccup (unreadable footer) falls back to one
     * whole-file partition — splitting is an optimization, never a
-    * correctness step. */
+    * correctness step. `conf` opens the footer; a planning pass
+    * builds one for all its files. */
   def splitPartitions(s: ManifestV2.FileSlice, rel: String,
-      targetBytes: Long): Seq[InputPartition] = {
+      targetBytes: Long,
+      conf: => org.apache.hadoop.conf.Configuration)
+      : Seq[InputPartition] = {
     def whole = Seq(
       ManifestFilePartition(s.path, rel, s.dv): InputPartition)
     if (targetBytes <= 0L) return whole
@@ -763,8 +766,7 @@ object ManifestScan {
     val blocks =
       try {
         val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new org.apache.hadoop.fs.Path(s.path),
-            new org.apache.hadoop.conf.Configuration())
+          .fromPath(new org.apache.hadoop.fs.Path(s.path), conf)
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         try {
           import scala.jdk.CollectionConverters._
@@ -1480,11 +1482,13 @@ class ManifestScan(required: StructType, pushed: Array[Filter],
       case None =>
         val root = java.nio.file.Paths.get(opts.path)
         val spj = spjEnabled
+        // for the footers of the files big enough to split
+        lazy val conf = new org.apache.hadoop.conf.Configuration(false)
         surviving.flatMap { s =>
           val rel = root.relativize(
             java.nio.file.Paths.get(s.path)).toString
           val parts = ManifestScan.splitPartitions(s, rel,
-            opts.splitBytes)
+            opts.splitBytes, conf)
           if (!spj) parts
           else {
             // key-grouped report: every partition carries its tuple
@@ -1970,15 +1974,20 @@ private[sources] object ManifestParquet {
       fields: _*)
   }
 
+  /** A parquet writer of local file `abs`, opened through
+    * [[GraftLocalFileSystem]] (no `chmod` process for the file or its
+    * `.crc`) with a configuration that loads no default resources. */
   def openWriter(abs: java.nio.file.Path,
       msgType: org.apache.parquet.schema.MessageType)
       : org.apache.parquet.hadoop.ParquetWriter[
         org.apache.parquet.example.data.Group] = {
     java.nio.file.Files.createDirectories(abs.getParent)
+    val conf = new org.apache.hadoop.conf.Configuration(false)
     org.apache.parquet.hadoop.example.ExampleParquetWriter
       .builder(org.apache.parquet.hadoop.util.HadoopOutputFile
-        .fromPath(new org.apache.hadoop.fs.Path(abs.toString),
-          new org.apache.hadoop.conf.Configuration()))
+        .fromPath(new org.apache.hadoop.fs.Path(
+          GraftLocalFileSystem.local(abs.toAbsolutePath.toString, conf)),
+          conf))
       .withType(msgType)
       .build()
   }
@@ -2503,6 +2512,10 @@ final case class ManifestKeyedPartition(base: ManifestFilePartition,
 final case class ManifestReaderFactory(required: StructType,
     filters: Seq[Filter] = Seq.empty)
     extends PartitionReaderFactory {
+  // built once per deserialized factory, shared read-only by its
+  // readers (`ManifestColumnarReader.readConf`)
+  @transient private lazy val conf =
+    ManifestColumnarReader.readConf(required)
 
   override def supportColumnarReads(partition: InputPartition)
       : Boolean = !partition.isInstanceOf[ManifestMetaPartition]
@@ -2515,7 +2528,7 @@ final case class ManifestReaderFactory(required: StructType,
       case ManifestFilePartition(path, rel, dv, start, length,
           rowOffset) =>
         new ManifestColumnarReader(path, rel, start, length, required,
-          dv, rowOffset, filters)
+          conf, dv, rowOffset, filters)
       case other => throw new IllegalStateException(
         s"columnar read of non-file partition $other")
     }
@@ -2553,19 +2566,20 @@ final case class ManifestReaderFactory(required: StructType,
   * long vector filled from the running file ordinal; the batch is
   * re-wrapped in required order (the vectors are shared — no copy).
   * Byte range [start, start+length) selects row groups by the
-  * parquet midpoint rule — the split seam.
+  * parquet midpoint rule — the split seam. `conf` is
+  * [[ManifestColumnarReader.readConf]] of `required`, which the
+  * reader only reads.
   */
 final class ManifestColumnarReader(path: String, rel: String,
     start: Long, length: Long, required: StructType,
+    conf: org.apache.hadoop.conf.Configuration,
     dv: Array[Long] = Array.empty, rowOffset: Long = 0L,
     filters: Seq[Filter] = Seq.empty)
     extends PartitionReader[
       org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, VectorizedParquetRecordReader}
+  import org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader
   import org.apache.spark.sql.vectorized.ColumnarBatch
 
-  private val dataSchema = StructType(required.fields.filterNot(f =>
-    f.name == "_graft_file" || f.name == "_graft_pos"))
   private val wantsFile = required.fieldNames.contains("_graft_file")
   private val posVector =
     if (!required.fieldNames.contains("_graft_pos")) null
@@ -2573,11 +2587,11 @@ final class ManifestColumnarReader(path: String, rel: String,
       .OnHeapColumnVector(ManifestColumnarReader.BatchRows, LongType)
 
   private val reader: VectorizedParquetRecordReader = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    conf.set(org.apache.parquet.hadoop.ParquetInputFormat
-      .READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
-    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA,
-      dataSchema.json)
+    // the task context holds its own copy (a `JobConf`) of `conf`:
+    // this file's filter predicate goes there
+    val ctx = new org.apache.hadoop.mapreduce.task
+      .TaskAttemptContextImpl(conf,
+        new org.apache.hadoop.mapreduce.TaskAttemptID())
     // ---- INTRA-FILE predicate skipping: translate the scan's
     // pushed source filters to a parquet FilterPredicate against
     // THIS file's footer schema (absent / drifted columns simply do
@@ -2609,20 +2623,9 @@ final class ManifestColumnarReader(path: String, rel: String,
           .reduceOption(
             org.apache.parquet.filter2.predicate.FilterApi.and)
           .foreach(p => org.apache.parquet.hadoop.ParquetInputFormat
-            .setFilterPredicate(conf, p))
+            .setFilterPredicate(ctx.getConfiguration, p))
       } catch { case scala.util.control.NonFatal(_) => () }
     }
-    val sql = org.apache.spark.sql.internal.SQLConf
-    conf.setBoolean(sql.CASE_SENSITIVE.key, false)
-    conf.setBoolean(sql.PARQUET_BINARY_AS_STRING.key, false)
-    conf.setBoolean(sql.PARQUET_INT96_AS_TIMESTAMP.key, true)
-    conf.setBoolean(sql.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key, true)
-    // manifest tables never carry TIMESTAMP(NANOS) (messageTypeOf
-    // forbids it; Spark stages micros/INT96), so the legacy
-    // nanos-as-long toggle is moot — set, because the schema
-    // converter reads it with no default
-    conf.setBoolean(sql.LEGACY_PARQUET_NANOS_AS_LONG.key, false)
-    conf.set(sql.SESSION_LOCAL_TIMEZONE.key, "UTC")
     // files are written by this engine (Spark 4 / the DSv2 writer) —
     // modern proleptic-Gregorian values, CORRECTED on both rebases
     val r = new VectorizedParquetRecordReader(null, "CORRECTED",
@@ -2634,9 +2637,6 @@ final class ManifestColumnarReader(path: String, rel: String,
     val split = new org.apache.hadoop.mapred.FileSplit(
       new org.apache.hadoop.fs.Path(path), start, len,
       Array.empty[String])
-    val ctx = new org.apache.hadoop.mapreduce.task
-      .TaskAttemptContextImpl(conf,
-        new org.apache.hadoop.mapreduce.TaskAttemptID())
     r.initialize(split, ctx)
     if (wantsFile)
       r.initBatch(
@@ -2652,13 +2652,14 @@ final class ManifestColumnarReader(path: String, rel: String,
     r
   }
 
-  // batch column order = dataSchema then the appended constant; remap
-  // to `required` order, the position vector in its slot (shared
-  // vectors, no copy)
+  // batch column order = the file columns, then the appended
+  // constant; remap to `required` order, the position vector in its
+  // slot (shared vectors, no copy)
   private val inner: ColumnarBatch = reader.resultBatch()
   private val ordered: Array[org.apache.spark.sql.vectorized
       .ColumnVector] = {
-    val batchOrder = dataSchema.fieldNames ++
+    val batchOrder =
+      ManifestColumnarReader.fileSchema(required).fieldNames ++
       (if (wantsFile) Array("_graft_file") else Array.empty[String])
     val idx = batchOrder.zipWithIndex.toMap
     required.fieldNames.map(n =>
@@ -2724,6 +2725,39 @@ final class ManifestColumnarReader(path: String, rel: String,
 object ManifestColumnarReader {
   /** Rows per decoded batch — the vector capacity. */
   val BatchRows = 4096
+
+  /** `required` without the metadata columns the reader fills. */
+  def fileSchema(required: StructType): StructType =
+    StructType(required.fields.filterNot(f =>
+      f.name == "_graft_file" || f.name == "_graft_pos"))
+
+  /** The read configuration of every file a scan requiring `required`
+    * decodes: Spark's read support with the requested schema (the
+    * file columns of `required`) and the session keys its schema
+    * converter reads. No Hadoop default resource is loaded (a
+    * `new Configuration()` parses them again for every file): local
+    * paths need none, and parquet-mr's own defaults apply. */
+  def readConf(required: StructType)
+      : org.apache.hadoop.conf.Configuration = {
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+    val conf = new org.apache.hadoop.conf.Configuration(false)
+    conf.set(org.apache.parquet.hadoop.ParquetInputFormat
+      .READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA,
+      fileSchema(required).json)
+    val sql = org.apache.spark.sql.internal.SQLConf
+    conf.setBoolean(sql.CASE_SENSITIVE.key, false)
+    conf.setBoolean(sql.PARQUET_BINARY_AS_STRING.key, false)
+    conf.setBoolean(sql.PARQUET_INT96_AS_TIMESTAMP.key, true)
+    conf.setBoolean(sql.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key, true)
+    // manifest tables never carry TIMESTAMP(NANOS) (messageTypeOf
+    // forbids it; Spark stages micros/INT96), so the legacy
+    // nanos-as-long toggle is moot — set, because the schema
+    // converter reads it with no default
+    conf.setBoolean(sql.LEGACY_PARQUET_NANOS_AS_LONG.key, false)
+    conf.set(sql.SESSION_LOCAL_TIMEZONE.key, "UTC")
+    conf
+  }
 
   /** JVM-wide decoded-row counter — a local-mode DIAGNOSTIC (specs
     * and the graded row-group-skip probe reset it, run one scan, and

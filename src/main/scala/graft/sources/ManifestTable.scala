@@ -848,8 +848,11 @@ object ManifestTable {
     * files in place under attempt-unique final names
     * ([[ManifestCommitProtocol]]): the stage holds exactly the written
     * files and their `.crc` sidecars, and the caller's manifest publish
-    * is the commit. Returns (table-relative path, stats) per written
-    * file, sorted by path. */
+    * is the commit. A local stage is written through
+    * [[GraftLocalFileSystem]], so the tasks set each file's and
+    * sidecar's mode in-process instead of starting a `chmod` per file.
+    * Returns (table-relative path, stats) per written file, sorted by
+    * path. */
   private def writeFiles(df: DataFrame, table: String, dir: String,
       statsCols: Seq[String],
       partitionBy: Seq[String] = Nil): Seq[(String, FileStats)] = {
@@ -861,10 +864,11 @@ object ManifestTable {
       .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     org.apache.spark.sql.classic.GraftDatasets.checkParquetWrite(df,
       partitionBy)
-    val out = new org.apache.hadoop.fs.Path(
-      Paths.get(table, "data", dir).toString)
+    // a save's conf: `newHadoopConfWithOptions` skips "path"
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val out = new org.apache.hadoop.fs.Path(GraftLocalFileSystem.local(
+      Paths.get(table, "data", dir).toString, hadoopConf))
     val options = Map("path" -> out.toString)
-    val hadoopConf = spark.sessionState.newHadoopConfWithOptions(options)
     val fs = out.getFileSystem(hadoopConf)
     val qualified = out.makeQualified(fs.getUri, fs.getWorkingDirectory)
     require(!fs.exists(qualified),

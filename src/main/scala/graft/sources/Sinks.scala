@@ -79,25 +79,33 @@ object Sinks {
       outDir: String, wrapCols: Int = 95): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
+    // a local dir is written through GraftLocalFileSystem (no `chmod`
+    // process per file); the manifest keeps naming `outDir`'s paths
+    val target = GraftLocalFileSystem.local(outDir,
+      spark.sparkContext.hadoopConfiguration)
+    val local = new org.apache.hadoop.fs.Path(target).toUri.getScheme ==
+      GraftLocalFileSystem.Scheme
     val manifest = df
       .select(col(nameCol).cast("string"), col(htmlCol).cast("string"))
       .as[(String, String)]
       .mapPartitions { it =>
         // executor-side FS handle — resolves HDFS/S3A/local from the
-        // dir's own scheme, the same way the binaryFile source does
-        val conf = new org.apache.hadoop.conf.Configuration()
+        // dir's own scheme, the same way the binaryFile source does;
+        // only a remote file system needs the site configuration
+        val conf = new org.apache.hadoop.conf.Configuration(!local)
         val base = new org.apache.hadoop.fs.Path(outDir)
-        val fs = base.getFileSystem(conf)
-        fs.mkdirs(base)
+        val dst = new org.apache.hadoop.fs.Path(target)
+        val fs = dst.getFileSystem(conf)
+        fs.mkdirs(dst)
         it.map { case (name, html) =>
           val (bytes, pages) =
             PdfRender.render(if (html == null) "" else html, wrapCols)
-          val p = new org.apache.hadoop.fs.Path(base,
-            PdfRender.cleanName(if (name == null) "null" else name)
-              + ".pdf")
-          val out = fs.create(p, true)
+          val file =
+            PdfRender.cleanName(if (name == null) "null" else name) + ".pdf"
+          val out = fs.create(new org.apache.hadoop.fs.Path(dst, file), true)
           try out.write(bytes) finally out.close()
-          (name, p.toString, pages, bytes.length)
+          (name, new org.apache.hadoop.fs.Path(base, file).toString, pages,
+            bytes.length)
         }
       }
       .toDF("name", "pdf_path", "pages", "bytes")

@@ -52,12 +52,26 @@ object Incremental {
     * `LogicalRDD` the sink already built, so no row moves; the work
     * inside runs under the owner session's configuration — the same
     * as calling the batch operation directly (for instance with
-    * adaptive execution, which the clone turns off). */
+    * adaptive execution, which the clone turns off).
+    *
+    * A local `checkpoint` is handed to Spark under
+    * [[graft.sources.GraftLocalFileSystem]]'s scheme. That file system
+    * has no `AbstractFileSystem`, so Spark keeps the offset, commit and
+    * source logs through its `FileSystemBasedCheckpointFileManager`
+    * (one WARN per log at query start) instead of `FileContext`, whose
+    * every log rename starts `readlink` processes; each log file's
+    * mode is set in-process. On a local disk both managers publish a
+    * log file the same way: check that the target is absent, then
+    * rename the written temporary file onto it (what
+    * `AbstractFileSystem.renameInternal` does for `file:`). The
+    * directory layout is the same under either scheme, so a checkpoint
+    * resumes across them. */
   private[graft] def foreachBatchOnOwner(stream: DataFrame,
       checkpoint: String)(f: (DataFrame, Long) => Unit): StreamingQuery = {
     val owner = stream.sparkSession
     stream.writeStream
-      .option("checkpointLocation", checkpoint)
+      .option("checkpointLocation", graft.sources.GraftLocalFileSystem
+        .local(checkpoint, owner.sparkContext.hadoopConfiguration))
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, id: Long) =>
         f(org.apache.spark.sql.classic.GraftDatasets.onSession(owner, batch),

@@ -3435,10 +3435,13 @@ class PipelineSpec extends SparkSpec {
     s"${f.take(i + 1)}.${f.drop(i + 1)}.crc"
   }
 
-  /** (result, commands of the OS processes `body` started on this
-    * thread), from an in-process JFR recording of `jdk.ProcessStart`
-    * events: a count that host timing noise cannot move. */
-  private def processStarts[T](body: => T): (T, Seq[String]) = {
+  /** (result, commands of the OS processes started while `body` ran,
+    * on any thread — write tasks, stream execution, cleaners — or with
+    * `thisThread` on the calling thread only), from an in-process JFR
+    * recording of `jdk.ProcessStart` events: a count that host timing
+    * noise cannot move. */
+  private def processStarts[T](body: => T,
+      thisThread: Boolean = false): (T, Seq[String]) = {
     import scala.jdk.CollectionConverters._
     val rec = new jdk.jfr.Recording()
     val dump = Files.createTempFile("graft-spawns", ".jfr")
@@ -3450,11 +3453,19 @@ class PipelineSpec extends SparkSpec {
       val me = Thread.currentThread().getId
       val cmds = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala
         .filter(e => e.getEventType.getName == "jdk.ProcessStart" &&
-          Option(e.getThread).exists(_.getJavaThreadId == me))
+          (!thisThread ||
+            Option(e.getThread).exists(_.getJavaThreadId == me)))
         .map(_.getString("command")).toSeq
       (out, cmds)
     } finally { rec.close(); Files.deleteIfExists(dump) }
   }
+
+  /** The `chmod` and `readlink` processes among `cmds`. */
+  private def chmodsAndReadlinks(cmds: Seq[String]): Seq[String] =
+    cmds.filter { c =>
+      val exe = c.trim.takeWhile(_ != ' ').split('/').last
+      exe == "chmod" || exe == "readlink"
+    }
 
   test("ManifestTable staging: commitWithStats (one and three files), " +
       "mergeByKeyDv and compact leave exactly the manifest's new files " +
@@ -3527,11 +3538,305 @@ class PipelineSpec extends SparkSpec {
     commit()
     // the recording sees what this thread starts
     val (_, probe) = processStarts(
-      new ProcessBuilder("true").start().waitFor())
+      new ProcessBuilder("true").start().waitFor(), thisThread = true)
     assert(probe.size == 1, probe)
-    val (v, cmds) = processStarts(commit())
+    val (v, cmds) = processStarts(commit(), thisThread = true)
     assert(v == 1L)
     assert(cmds.isEmpty, cmds)
+  }
+
+  test("GraftLocalFileSystem: a 4-file commitWithStats, a streamMerge " +
+      "from start to stop, compact and a DSv2 append start no chmod or " +
+      "readlink process on any thread") {
+    import graft.sources.ManifestTable
+    val work = Files.createTempDirectory("graft-no-spawn").toString
+    // the recording sees what other threads start
+    val (_, probe) = processStarts {
+      val t = new Thread(() => {
+        new ProcessBuilder("true").start().waitFor(); ()
+      })
+      t.start(); t.join()
+    }
+    assert(probe.size == 1, probe)
+    def rows(lo: Long, hi: Long, parts: Int) =
+      spark.range(lo, hi, 1L, parts).select($"id".as("k"),
+        concat(lit("v"), $"id".cast("string")).as("v"), $"id".as("ver"))
+    val table = s"$work/table"
+    val (v1, commit) = processStarts(ManifestTable.commitWithStats(
+      rows(0L, 400L, 4), table, append = false, Seq("k"), None))
+    assert(ManifestTable.snapshotFor(table, Some(v1)).files.size == 4)
+    assert(chmodsAndReadlinks(commit).isEmpty, commit)
+    val src = s"$work/src"
+    rows(390L, 410L, 1).write.parquet(src)
+    val schema = spark.read.parquet(src).schema
+    val (_, merge) = processStarts(ManifestTable.streamMerge(
+      spark.readStream.schema(schema).parquet(src), table,
+      s"$work/ckpt", "k", "ver", dvMaxFraction = 0.5))
+    assert(ManifestTable.versions(table) == Seq(1L, 2L))
+    assert(chmodsAndReadlinks(merge).isEmpty, merge)
+    val (_, compact) = processStarts(
+      ManifestTable.compact(spark, table, Long.MaxValue / 2))
+    assert(ManifestTable.versions(table).size == 3)
+    assert(chmodsAndReadlinks(compact).isEmpty, compact)
+    val (_, append) = processStarts(rows(500L, 540L, 2).write
+      .format("graft-manifest").option("path", table).mode("append")
+      .save())
+    assert(ManifestTable.versions(table).size == 4)
+    assert(chmodsAndReadlinks(append).isEmpty, append)
+    assert(ManifestTable.read(spark, table).count() == 450L)
+  }
+
+  test("GraftLocalFileSystem.local maps relative, absolute and file: " +
+      "paths to its scheme and passes other file systems through") {
+    import graft.sources.GraftLocalFileSystem
+    val conf = new org.apache.hadoop.conf.Configuration(false)
+    def local(p: String) = GraftLocalFileSystem.local(p, conf)
+    assert(GraftLocalFileSystem.Scheme == "graftlocal")
+    assert(local("/tmp/t/data") == "graftlocal:/tmp/t/data")
+    assert(local("/tmp/a b/c") == "graftlocal:/tmp/a b/c")
+    assert(local("file:/tmp/t") == "graftlocal:/tmp/t")
+    assert(local("file:///tmp/t") == "graftlocal:/tmp/t")
+    assert(local("rel/ckpt") ==
+      s"graftlocal:${System.getProperty("user.dir")}/rel/ckpt")
+    for (p <- Seq("graftlocal:/tmp/t", "hdfs://nn:8020/warehouse/t",
+        "s3a://bucket/t/ckpt"))
+      assert(local(p) == p)
+    // without a scheme a path is local only while the default file
+    // system is
+    val hdfs = new org.apache.hadoop.conf.Configuration(false)
+    hdfs.set("fs.defaultFS", "hdfs://nn:8020")
+    assert(GraftLocalFileSystem.local("/warehouse/t", hdfs) ==
+      "/warehouse/t")
+    assert(GraftLocalFileSystem.local("file:/tmp/t", hdfs) ==
+      "graftlocal:/tmp/t")
+  }
+
+  test("GraftLocalFileSystem is scoped to graft's writes: after graft " +
+      "writes and a streamMerge file: resolves to the same LocalFileSystem, " +
+      "the session conf is unchanged, and a listener on the owner's " +
+      "spark.streams receives the MERGE's progress") {
+    import graft.sources.{GraftLocalFileSystem, ManifestTable}
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import scala.jdk.CollectionConverters._
+    val work = Files.createTempDirectory("graft-fs-scope").toString
+    val hconf = spark.sparkContext.hadoopConfiguration
+    def fileFs(c: org.apache.hadoop.conf.Configuration) =
+      org.apache.hadoop.fs.FileSystem.get(java.net.URI.create("file:///"),
+        c).getClass
+    val fileFs0 = fileFs(hconf)
+    val conf0 = spark.conf.getAll
+    val scoping = Seq("fs.file.impl", "fs.graftlocal.impl",
+      "spark.sql.streaming.checkpointFileManagerClass")
+    val hadoop0 = scoping.map(hconf.get)
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[
+      StreamingQueryListener.QueryProgressEvent]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(
+          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(
+          e: StreamingQueryListener.QueryProgressEvent): Unit = {
+        progress.add(e); ()
+      }
+      override def onQueryTerminated(
+          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    val table = s"$work/table"
+    ManifestTable.commitWithStats((1L to 60L).map(k => (k, "base", 0L))
+      .toDF("k", "v", "ver").repartitionByRange(3, $"k"), table,
+      append = false, "k")
+    val src = s"$work/src"
+    Seq((2L, "new", 1L), (70L, "ins", 1L)).toDF("k", "v", "ver")
+      .coalesce(1).write.parquet(src)
+    spark.streams.addListener(listener)
+    try {
+      ManifestTable.streamMerge(
+        spark.readStream.schema("k BIGINT, v STRING, ver BIGINT")
+          .parquet(src), table, s"$work/ckpt", "k", "ver",
+        dvMaxFraction = 0.5)
+      // progress events reach listeners through the listener bus
+      val deadline = System.nanoTime() + 30000000000L
+      while (progress.isEmpty && System.nanoTime() < deadline)
+        Thread.sleep(20L)
+    } finally spark.streams.removeListener(listener)
+    // the one batch, with its input rows (counted once per read of
+    // the batch)
+    val events = progress.asScala.toSeq.map(_.progress)
+    assert(events.map(_.batchId) == Seq(0L), events.map(_.json))
+    assert(events.head.sink.description == "ForeachBatchSink")
+    assert(events.head.numInputRows >= 2L, events.head.json)
+    assert(ManifestTable.read(spark, table).count() == 61L)
+    // `file:` keeps the file system it resolved to before: Hadoop's
+    // LocalFileSystem, or the subclass another library on the class
+    // path registers (hive-exec's ProxyLocalFileSystem)
+    assert(fileFs(hconf) == fileFs0)
+    assert(classOf[org.apache.hadoop.fs.LocalFileSystem]
+      .isAssignableFrom(fileFs0))
+    assert(!classOf[GraftLocalFileSystem].isAssignableFrom(fileFs0))
+    assert(org.apache.hadoop.fs.FileSystem.get(
+      java.net.URI.create("graftlocal:///"), hconf).getClass ==
+      classOf[GraftLocalFileSystem])
+    assert(spark.conf.getAll == conf0)
+    assert(scoping.map(hconf.get) == hadoop0)
+  }
+
+  test("GraftLocalFileSystem: staged data files, .crc sidecars and " +
+      "checkpoint log files get the modes Hadoop's local file system " +
+      "gives them; the sticky bit goes to Hadoop's own chmod") {
+    import graft.sources.{GraftLocalFileSystem, ManifestTable}
+    import java.nio.file.attribute.PosixFilePermissions
+    import scala.jdk.CollectionConverters._
+    val work = Files.createTempDirectory("graft-fs-modes")
+    val hconf = spark.sparkContext.hadoopConfiguration
+    def mode(p: java.nio.file.Path) =
+      PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+    // the reference: a file, its sidecar and a directory made by
+    // Hadoop's file: LocalFileSystem
+    val lfs = org.apache.hadoop.fs.FileSystem.getLocal(hconf)
+    lfs.create(new org.apache.hadoop.fs.Path(
+      work.resolve("ref").toUri), true).close()
+    lfs.mkdirs(new org.apache.hadoop.fs.Path(work.resolve("refdir").toUri))
+    val file = mode(work.resolve("ref"))
+    val dir = mode(work.resolve("refdir"))
+    // under the default umask, 022
+    assert((file, dir) == (("rw-r--r--", "rwxr-xr-x")))
+    assert(mode(work.resolve(".ref.crc")) == file)
+    val table = work.resolve("table").toString
+    ManifestTable.commitWithStats((1L to 60L).map(k => (k, "base", 0L))
+      .toDF("k", "v", "ver").repartitionByRange(2, $"k"), table,
+      append = false, "k")
+    val staged = dataFiles(table)
+    assert(staged.size == 4, staged)
+    staged.foreach(f => assert(mode(work.resolve("table").resolve(f)) ==
+      file, f))
+    val src = work.resolve("src").toString
+    Seq((2L, "new", 1L)).toDF("k", "v", "ver").coalesce(1)
+      .write.parquet(src)
+    val ckpt = work.resolve("ckpt")
+    ManifestTable.streamMerge(
+      spark.readStream.schema("k BIGINT, v STRING, ver BIGINT")
+        .parquet(src), table, ckpt.toString, "k", "ver")
+    val (files, dirs) = scala.util.Using.resource(Files.walk(ckpt))(
+      _.iterator().asScala.toSeq.filterNot(_ == ckpt)
+        .partition(Files.isRegularFile(_)))
+    val logs = files.map(ckpt.relativize(_).toString)
+    for (l <- Seq("metadata", "offsets/0", "commits/0", "sources/0/0"))
+      assert(logs.contains(l) && logs.contains(crcOf(l)), logs)
+    files.foreach(f => assert(mode(f) == file, f))
+    dirs.foreach(d => assert(mode(d) == dir, d))
+    // the nine rwx bits in-process; the sticky bit through Hadoop's
+    // own path (a `chmod` process without libhadoop)
+    val gfs = org.apache.hadoop.fs.FileSystem.get(
+      java.net.URI.create("graftlocal:///"), hconf)
+    val sticky = new org.apache.hadoop.fs.Path(GraftLocalFileSystem.local(
+      work.resolve("sticky").toString, hconf))
+    assert(gfs.mkdirs(sticky))
+    def unixMode(): Int = Files.getAttribute(work.resolve("sticky"),
+      "unix:mode").asInstanceOf[Int] & 0xfff
+    val (_, withSticky) = processStarts(gfs.setPermission(sticky,
+      new org.apache.hadoop.fs.permission.FsPermission(0x3fd.toShort)),
+      thisThread = true)
+    assert(unixMode() == 0x3fd) // 01775
+    if (!org.apache.hadoop.io.nativeio.NativeIO.isAvailable)
+      assert(withSticky.exists(_.contains("chmod")), withSticky)
+    val (_, plain) = processStarts(gfs.setPermission(sticky,
+      new org.apache.hadoop.fs.permission.FsPermission(0x1c0.toShort)),
+      thisThread = true)
+    assert(unixMode() == 0x1c0) // 0700
+    assert(plain.isEmpty, plain)
+  }
+
+  test("streamMerge checkpoints resume across schemes: a checkpoint " +
+      "written under a plain path resumes under graftlocal and the " +
+      "reverse, and a run without new input publishes no version") {
+    import graft.sources.ManifestTable
+    import org.apache.spark.sql.streaming.Trigger
+    val work = Files.createTempDirectory("graft-ckpt-compat").toString
+    val src = s"$work/src"
+    def input(rows: (Long, String, Long)*): Unit =
+      rows.toDF("k", "v", "ver").coalesce(1).write.mode("append")
+        .parquet(src)
+    def stream() = spark.readStream.schema("k BIGINT, v STRING, ver BIGINT")
+      .parquet(src)
+    def seeded(t: String): String = {
+      ManifestTable.commitWithStats((1L to 30L).map(k => (k, "base", 0L))
+        .toDF("k", "v", "ver"), t, append = false, "k")
+      t
+    }
+    // Spark's own foreachBatch query on the plain path: batches merged
+    def plain(t: String, ckpt: String): Int = {
+      val batches = new java.util.concurrent.atomic.AtomicInteger()
+      stream().writeStream.option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          batches.incrementAndGet()
+          ManifestTable.mergeByKeyDv(b.sparkSession, t, b, "k", 0.5); ()
+        }.start().awaitTermination()
+      batches.get
+    }
+    def merged(t: String, ckpt: String): Unit =
+      ManifestTable.streamMerge(stream(), t, ckpt, "k", "ver",
+        dvMaxFraction = 0.5)
+    def v(t: String, k: Long): String = ManifestTable.read(spark, t)
+      .filter($"k" === k).select("v").as[String].head()
+    // plain, then graftlocal
+    val a = seeded(s"$work/a")
+    input((2L, "one", 1L))
+    assert(plain(a, s"$work/ckpt-a") == 1)
+    assert(ManifestTable.versions(a) == Seq(1L, 2L))
+    merged(a, s"$work/ckpt-a")
+    assert(ManifestTable.versions(a) == Seq(1L, 2L))
+    input((3L, "two", 1L))
+    merged(a, s"$work/ckpt-a")
+    assert(ManifestTable.versions(a) == Seq(1L, 2L, 3L))
+    assert((v(a, 2L), v(a, 3L)) == (("one", "two")))
+    // graftlocal, then plain
+    val b = seeded(s"$work/b")
+    merged(b, s"$work/ckpt-b")
+    assert(ManifestTable.versions(b) == Seq(1L, 2L))
+    assert(plain(b, s"$work/ckpt-b") == 0)
+    assert(ManifestTable.versions(b) == Seq(1L, 2L))
+    input((4L, "three", 1L))
+    assert(plain(b, s"$work/ckpt-b") == 1)
+    assert(ManifestTable.versions(b) == Seq(1L, 2L, 3L))
+    assert(ManifestTable.read(spark, b).count() == 30L)
+    assert((v(b, 2L), v(b, 3L), v(b, 4L)) == (("one", "two", "three")))
+  }
+
+  test("graft-manifest scan: reads with and without deletion vectors " +
+      "and pushed filters return the model's rows") {
+    import graft.sources.ManifestTable
+    val table = Files.createTempDirectory("graft-scan-conf").toString
+    ManifestTable.commitWithStats((1L to 90L).map(k => (k, s"v$k", k % 7))
+      .toDF("k", "v", "j").repartitionByRange(6, $"k"), table,
+      append = false, "k")
+    def check(model: Map[Long, (String, Long)]): Unit = {
+      val scan = spark.read.format("graft-manifest").option("path", table)
+        .load()
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select("k", "v", "j").as[(Long, String, Long)].collect()
+          .toSeq.sorted
+      def want(p: Long => Boolean) = model.toSeq.filter(r => p(r._1))
+        .map { case (k, (s, j)) => (k, s, j) }.sorted
+      assert(rows(scan) == want(_ => true))
+      assert(rows(scan.filter($"k".between(20L, 50L))) ==
+        want(k => k >= 20L && k <= 50L))
+      assert(rows(scan.filter($"v" === "v33")) ==
+        want(k => model(k)._1 == "v33"))
+      assert(rows(scan.filter($"j" === 3L && $"k" > 40L)) ==
+        want(k => model(k)._2 == 3L && k > 40L))
+      assert(rows(scan) == rows(ManifestTable.read(spark, table)))
+    }
+    val base = (1L to 90L).map(k => k -> ((s"v$k", k % 7))).toMap
+    check(base)
+    ManifestTable.mergeByKeyDv(spark, table,
+      Seq((5L, "u5", 0L), (33L, "u33", 0L), (61L, "u61", 0L),
+        (100L, "v33", 3L)).toDF("k", "v", "j"), "k", dvMaxFraction = 0.5)
+    val v = ManifestTable.versions(table).last
+    assert(scala.jdk.CollectionConverters.ListHasAsScala(
+      Files.readAllLines(java.nio.file.Paths.get(table, "_manifests",
+        s"v$v"))).asScala.exists(_.startsWith("#dv=")))
+    check(base ++ Map(5L -> (("u5", 0L)), 33L -> (("u33", 0L)),
+      61L -> (("u61", 0L)), 100L -> (("v33", 3L))))
   }
 
   test("ManifestTable.compact and compactClustered: every file a " +
