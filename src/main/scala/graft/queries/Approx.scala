@@ -1996,9 +1996,9 @@ object Approx {
     // LAKEHOUSE DSv2 (L24): the manifest table as a PLANNER citizen
     // — spark.read.format("graft-manifest") gives SQL reads snapshot
     // selection, zone pruning (a range predicate on the stats column
-    // plans ONE InputPartition of four — pinned via the scan RDD's
-    // partition count), metadata-only COUNT(*) through the
-    // aggregate-pushdown seam (pinned via the executed plan's
+    // plans ONE file of four — pinned via the files the scan plans,
+    // however they pack into partitions), metadata-only COUNT(*)
+    // through the aggregate-pushdown seam (pinned via the executed plan's
     // "metadata count" scan), and deletion-vector masking — all
     // through the planner rather than the Scala API. Values equal
     // the oracle's row-level recompute.
@@ -2029,8 +2029,8 @@ object Approx {
       val df = s.read.format("graft-manifest")
         .option("path", table).load()
       val filtered = df.filter(col("o_orderkey").between(5000, 7000))
-      val parts = filtered.rdd.getNumPartitions
-      val total = df.rdd.getNumPartitions
+      val parts = graft.sources.ManifestScanFiles(filtered).size
+      val total = graft.sources.ManifestScanFiles(df).size
       val metaRows = df.count()
       val countPlan = df.groupBy().count()
         .queryExecution.executedPlan.toString
@@ -2048,8 +2048,8 @@ object Approx {
     // — four range-sliced append JOBS, each committing its tasks'
     // staged files as ONE atomic manifest version with zone lines
     // from per-task streamed min/max (no post-write stats scan); the
-    // DSv2 READER then plans one InputPartition for the slice
-    // predicate (pinned via the scan RDD) and the metadata count
+    // DSv2 READER then plans one file for the slice predicate
+    // (pinned via the files the scan plans) and the metadata count
     // answers from the task-counted `#nrows` lines. Values equal the
     // oracle's row-level recompute — the full write→plan→read loop
     // of the lakehouse layer through the planner.
@@ -2078,9 +2078,9 @@ object Approx {
         .getOrElse(-1L)
       val df = s.read.format("graft-manifest")
         .option("path", table).load()
-      val total = df.rdd.getNumPartitions
+      val total = graft.sources.ManifestScanFiles(df).size
       val slice = df.filter(col("o_orderkey").between(5000, 7000))
-      val parts = slice.rdd.getNumPartitions
+      val parts = graft.sources.ManifestScanFiles(slice).size
       slice.agg(count(lit(1)).as("slice_rows"),
           sum("o_orderkey").as("slice_sum"))
         .select(lit(nVersions.toLong).as("versions_n"),
@@ -2145,8 +2145,8 @@ object Approx {
     // (per-task streamed epoch-day and byte-wise string bounds, no
     // post-write scan) and read via format("graft-manifest") with
     // PUSHED date-range + string-equality filters — the scan plans
-    // ONE InputPartition of four (pinned via the RDD's partition
-    // count), and the date column round-trips the custom parquet
+    // ONE file of four (pinned via the files the scan plans), and
+    // the date column round-trips the custom parquet
     // writer/reader. Values equal the oracle's row-level recompute.
     Q("q_z_dsv2_typed",
       """SELECT CAST(4 AS BIGINT) AS files_total,
@@ -2179,12 +2179,12 @@ object Approx {
       }
       val df = s.read.format("graft-manifest")
         .option("path", table).load()
-      val total = df.rdd.getNumPartitions
+      val total = graft.sources.ManifestScanFiles(df).size
       val slice = df.filter(
         col("o_date").between(to_date(lit("1995-01-01")),
           to_date(lit("1997-12-31"))) &&
         col("o_orderpriority") === "1-URGENT")
-      val parts = slice.rdd.getNumPartitions
+      val parts = graft.sources.ManifestScanFiles(slice).size
       slice.agg(count(lit(1)).as("n_rows"),
           sum("o_orderkey").as("key_sum"))
         .select(lit(total.toLong).as("files_total"),
@@ -2476,7 +2476,7 @@ object Approx {
         }
       joined.agg(count(lit(1)).as("n_rows"),
           sum(fact("o_orderkey")).as("key_sum"))
-        .select(lit(fact.rdd.getNumPartitions.toLong)
+        .select(lit(graft.sources.ManifestScanFiles(fact).size.toLong)
             .as("files_total"),
           lit(parts).as("parts_runtime"),
           col("n_rows"), col("key_sum"))
@@ -3229,9 +3229,9 @@ object Approx {
     // rows per partition tuple (one file per value under
     // `col=value/` dirs) and records exact `#pval=` lines; the scan
     // prunes partition predicates BEFORE zone stats, and zone stats
-    // still prune WITHIN partitions. Proof shape (pinned via RDD
-    // partition counts like q_z_dsv2_typed): 2 key-ranged commits ×
-    // 5 priorities = 10 files; priority equality keeps 2; adding the
+    // still prune WITHIN partitions. Proof shape (pinned via the
+    // files the scan plans, like q_z_dsv2_typed): 2 key-ranged
+    // commits × 5 priorities = 10 files; priority equality keeps 2; adding the
     // key range keeps 1. Values equal the oracle's recompute.
     Q("q_z_partitioned",
       """WITH b AS (SELECT min(o_orderkey) AS lo,
@@ -3263,11 +3263,11 @@ object Approx {
       }
       val df = s.read.format("graft-manifest")
         .option("path", table).load()
-      val total = df.rdd.getNumPartitions
+      val total = graft.sources.ManifestScanFiles(df).size
       val eq = df.filter(col("o_orderpriority") === "1-URGENT")
-      val partsEq = eq.rdd.getNumPartitions
+      val partsEq = graft.sources.ManifestScanFiles(eq).size
       val slice = eq.filter(col("o_orderkey") <= cut)
-      val partsBoth = slice.rdd.getNumPartitions
+      val partsBoth = graft.sources.ManifestScanFiles(slice).size
       slice.agg(count(lit(1)).as("n_rows"),
           sum("o_orderkey").as("key_sum"))
         .select(lit(total.toLong).as("files_total"),
@@ -3372,7 +3372,7 @@ object Approx {
         "partition_col => 'bucket', partition_value => '1')").head()
       val b1 = s.read.format("graft-manifest").option("path", dir)
         .load().filter(col("bucket") === 1L)
-      val partsB1 = b1.rdd.getNumPartitions
+      val partsB1 = graft.sources.ManifestScanFiles(b1).size
       val iso = java.time.Instant.ofEpochMilli(tsMid)
         .atZone(java.time.ZoneOffset.UTC)
         .format(java.time.format.DateTimeFormatter
@@ -3412,7 +3412,7 @@ object Approx {
       graft.sources.ManifestTable.commit(
         orders.filter(col("o_orderkey") % 2 === 1)
           .select("o_orderkey", "o_orderstatus"), table, append = true)
-      graft.sources.ManifestTable.read(s, table, mergeSchema = true)
+      graft.sources.ManifestTable.read(s, table)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"),
           count(col("o_orderstatus")).as("with_status"))

@@ -23,14 +23,19 @@ import org.apache.spark.unsafe.types.UTF8String
   *    re-execution of the same DataFrame sees one version even under
   *    concurrent commits — the Delta/Iceberg pin-at-scan rule;
   *  - **zone pruning reaches the planner**: range filters on stats
-  *    columns plan one InputPartition per SURVIVING file — a pruned
-  *    query's scan has fewer partitions, visible in `.explain` and
-  *    `rdd.getNumPartitions`. Integer, DATE (epoch-day) and
-  *    TIMESTAMP (epoch-microsecond) predicates prune on the int64
-  *    `#stats=` lines; STRING predicates prune on the `#sstats=`
-  *    hex-UTF-8 lines by unsigned byte comparison. Pushed filters
-  *    are also re-applied row-level by Spark (declared residual), so
-  *    skipping stays an optimization, never a filter;
+  *    columns plan only the SURVIVING files — a pruned query's scan
+  *    reads fewer files, visible in `.explain` (`files=`). Integer,
+  *    DATE (epoch-day) and TIMESTAMP (epoch-microsecond) predicates
+  *    prune on the int64 `#stats=` lines; STRING predicates prune on
+  *    the `#sstats=` hex-UTF-8 lines by unsigned byte comparison;
+  *  - **exact filters in the reader**: `=`, `<`, `<=`, `>`, `>=`, IN
+  *    and IS NOT NULL on integer, date, timestamp and string columns
+  *    are applied to each opened file's rows by the columnar reader,
+  *    in the same encodings the zones prune with, so Spark plans no
+  *    Filter above the scan; every other filter stays residual;
+  *  - **packed small files**: the surviving files pack into
+  *    partitions by Spark's own `FilePartition` rule, as
+  *    `spark.read.parquet` packs them;
   *  - **metadata-only COUNT(*)**: a global count with no residual
   *    filters answers COMPLETELY from the manifest's `#nrows=` lines
   *    (minus deletion-vector cardinalities) — one small-file read,
@@ -95,9 +100,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * One decoder serves every file read: [[ManifestColumnarReader]],
   * with the projection pushed into the requested schema — column
-  * pruning costs nothing at the I/O layer. Surface contract: FLAT
-  * relational snapshots; nested types fail loudly at schema
-  * inference. Schema is the by-name union of the LIVE files' footers,
+  * pruning costs nothing at the I/O layer. Reads serve every column
+  * type Spark's vectorized reader decodes, arrays, maps and structs
+  * included; writes stay flat. Schema is the by-name union of the
+  * LIVE files' footers,
   * each converted exactly as Spark's parquet inference converts it
   * (decimals, byte/short, INT96 and MICROS timestamps keep their
   * types — a DSv2 read returns what [[ManifestTable.read]] returns),
@@ -265,51 +271,46 @@ object ManifestV2 {
       }
     }
 
-  /** By-name union of the live files' footers — per-LIVE-file
-    * metadata reads, bounded by the snapshot, each converted exactly
-    * as Spark's own parquet inference converts it
-    * ([[ManifestTable.fileSchema]]: INT96 and MICROS timestamps,
-    * decimals, byte/short annotations all keep their Spark types).
-    * Every column reads nullable and without field metadata; nested
-    * columns are refused. Same-name columns must agree on type (loud
-    * otherwise). A table with NO published snapshot yet has no schema
-    * to infer — EMPTY, the write-bootstrap case (the first
-    * `df.write.format("graft-manifest")` creates the table; a read of
-    * it still fails loudly at scan planning). */
-  def schemaFor(opts: ManifestV2Options): StructType = {
-    if (ManifestTable.versions(opts.path).isEmpty &&
-        opts.version.isEmpty)
-      return StructType(Seq.empty)
-    val pinned = resolvePinned(opts)
+  /** The snapshot's read schema: the by-name union of its live files'
+    * footers, each converted exactly as Spark's own parquet inference
+    * converts it ([[ManifestTable.fileSchema]]: INT96 and MICROS
+    * timestamps, decimals, byte/short annotations, arrays, maps and
+    * structs all keep their Spark types), merged by Spark's
+    * `mergeSchema` rule. Every column reads nullable and without field
+    * metadata. The union is cached per snapshot
+    * ([[ManifestTable.snapshotSchema]]), so the footers are read once
+    * per version, or never when the publish seeded it. A table with NO
+    * published snapshot yet has no schema to infer — EMPTY, the
+    * write-bootstrap case (the first `df.write.format("graft-manifest")`
+    * creates the table; a read of it still fails loudly at scan
+    * planning). */
+  def schemaFor(opts: ManifestV2Options): StructType =
+    if (ManifestTable.versions(opts.path).isEmpty && opts.version.isEmpty)
+      StructType(Seq.empty)
+    else schemaOf(opts.path, resolvePinned(opts))
+
+  private def schemaOf(path: String, pinned: Pinned): StructType = {
     require(pinned.slices.nonEmpty,
-      s"graft-manifest: snapshot of ${opts.path} lists no data files")
-    val spark = org.apache.spark.sql.SparkSession.active
-    val hadoopConf = spark.sessionState.newHadoopConf()
-    pinned.slices.map { s =>
-      StructType(ManifestTable.fileSchema(spark, hadoopConf,
-          new org.apache.hadoop.fs.Path(s.path)).fields.map { f =>
-        f.dataType match {
-          case _: StructType | _: ArrayType | _: MapType =>
-            throw new IllegalArgumentException(
-              s"graft-manifest serves flat relational snapshots; " +
-                s"column ${f.name} is nested")
-          case dt => StructField(f.name, dt)
-        }
-      })
-    }.reduce { (a, b) =>
-      val known = a.fieldNames.toSet
-      b.fields.foldLeft(a) { (acc, f) =>
-        if (!known.contains(f.name)) acc.add(f)
-        else {
-          val prev = acc(f.name)
-          require(prev.dataType == f.dataType,
-            s"graft-manifest: column ${f.name} changes type across " +
-              s"live files (${prev.dataType} vs ${f.dataType})")
-          acc
-        }
-      }
-    }
+      s"graft-manifest: snapshot of $path lists no data files")
+    ManifestTable.snapshotSchema(org.apache.spark.sql.SparkSession.active,
+      path, pinned.version,
+      pinned.slices.map(s => java.nio.file.Paths.get(s.path)
+        .toAbsolutePath.toString))
   }
+
+  /** A frame over snapshot `pinned` of the table at `path`, planned
+    * through the `graft-manifest` scan of exactly that snapshot — one
+    * manifest read serves the frame and whatever its caller counts
+    * from `pinned`. Building it starts no Spark job; filters on the
+    * frame push into the scan, whose reader applies the exact ones
+    * ([[ManifestScanBuilder.pushFilters]]). */
+  def frameOf(spark: org.apache.spark.sql.SparkSession, path: String,
+      pinned: Pinned): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.GraftDatasets.ofTable(spark,
+      new ManifestV2Table(schemaOf(path, pinned),
+        ManifestV2Options(path, Some(pinned.version)),
+        declaredPartCols = Some(partitionColsOf(pinned)),
+        pinned = Some(pinned)))
 }
 
 /** The `_graft_file` metadata column: the manifest-relative data
@@ -350,10 +351,12 @@ private[sources] object GraftPosColumn
   * sets `skipSchemaResolution` on UPDATE/MERGE plans, and Spark then
   * never aligns assignments or rewrites the command. SQL-side
   * evolution is the Scala API's job (append evolving data through
-  * the path-based writer). */
+  * the path-based writer). A table built over a `pinned` snapshot
+  * ([[ManifestV2.frameOf]]) scans exactly that snapshot. */
 class ManifestV2Table(schema: StructType, opts: ManifestV2Options,
     acceptAnySchema: Boolean = false,
-    declaredPartCols: Option[Seq[String]] = None)
+    declaredPartCols: Option[Seq[String]] = None,
+    pinned: Option[ManifestV2.Pinned] = None)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with SupportsDelete
@@ -434,7 +437,7 @@ class ManifestV2Table(schema: StructType, opts: ManifestV2Options,
   }
   override def newScanBuilder(
       options: CaseInsensitiveStringMap): ScanBuilder =
-    new ManifestScanBuilder(schema, opts)
+    new ManifestScanBuilder(schema, opts, pinned)
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
@@ -491,7 +494,7 @@ class ManifestV2Table(schema: StructType, opts: ManifestV2Options,
 }
 
 class ManifestScanBuilder(fullSchema: StructType,
-    opts: ManifestV2Options)
+    opts: ManifestV2Options, pinnedAs: Option[ManifestV2.Pinned] = None)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters with SupportsPushDownAggregates
     with SupportsPushDownLimit {
@@ -515,24 +518,32 @@ class ManifestScanBuilder(fullSchema: StructType,
   // ONE resolution serves every planning call of this scan — a
   // concurrent commit between pushFilters, pushAggregation and
   // planInputPartitions cannot split the read across versions. Lazy:
-  // the STREAMING path never resolves a batch snapshot at all.
-  private lazy val pinned = ManifestV2.resolvePinned(opts)
+  // the STREAMING path never resolves a batch snapshot at all. A
+  // table built over a pinned snapshot hands it in.
+  private lazy val pinned =
+    pinnedAs.getOrElse(ManifestV2.resolvePinned(opts))
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     if (metaAgg.isEmpty) required = requiredSchema
 
-  /** Filters usable for ZONE/partition pruning are remembered (and
-    * surfaced in explain): ranges, equalities, and IN sets on
-    * prunable columns. ALL filters are returned residual — Spark
-    * re-applies them row-level, so the zones only ever skip, never
-    * filter. */
+  /** The filters the columnar reader evaluates EXACTLY are taken
+    * (and surfaced in explain): `=`, `<`, `<=`, `>`, `>=`, IN and IS
+    * NOT NULL on integer, date, timestamp and string columns
+    * ([[ManifestScan.rowTestsOf]]). They prune files by zone and
+    * partition values and then filter each opened file's rows inside
+    * the reader, so Spark plans no Filter above the scan and a read
+    * with new bounds compiles nothing. Only the others are returned
+    * residual, for Spark to apply row-level — except under CBO
+    * (`spark.sql.cbo.enabled`), where Catalyst estimates a Filter's
+    * rows from the scan's column histograms: there every filter stays
+    * residual too, so that estimate (and the join plan it drives)
+    * survives, and the reader's own application is redundant. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(f =>
-      ManifestScan.longRangesOf(Seq(f), fullSchema).nonEmpty ||
-        ManifestScan.strRangesOf(Seq(f), fullSchema).nonEmpty ||
-        ManifestScan.longInSetsOf(Seq(f), fullSchema).nonEmpty ||
-        ManifestScan.strInSetsOf(Seq(f), fullSchema).nonEmpty)
-    filters
+    val (exact, residual) = filters.partition(f =>
+      ManifestScan.rowTestsOf(f, fullSchema).isDefined)
+    pushed = exact
+    if (org.apache.spark.sql.internal.SQLConf.get.cboEnabled) filters
+    else residual
   }
   override def pushedFilters(): Array[Filter] = pushed
 
@@ -750,19 +761,20 @@ object ManifestScan {
     * so deletion-vector masking stays position-exact on splits. Any
     * metadata hiccup (unreadable footer) falls back to one
     * whole-file partition — splitting is an optimization, never a
-    * correctness step. `conf` opens the footer; a planning pass
-    * builds one for all its files. */
+    * correctness step. A whole-file partition starts at 0 and carries
+    * the file's size (`Long.MaxValue` when unknown); every range of a
+    * split file starts past the file's magic bytes. `conf` opens the
+    * footer; a planning pass builds one for all its files. */
   def splitPartitions(s: ManifestV2.FileSlice, rel: String,
       targetBytes: Long,
       conf: => org.apache.hadoop.conf.Configuration)
-      : Seq[InputPartition] = {
-    def whole = Seq(
-      ManifestFilePartition(s.path, rel, s.dv): InputPartition)
-    if (targetBytes <= 0L) return whole
+      : Seq[ManifestFilePartition] = {
     val size =
       try java.nio.file.Files.size(java.nio.file.Paths.get(s.path))
-      catch { case _: java.io.IOException => return whole }
-    if (size <= targetBytes + targetBytes / 2) return whole
+      catch { case _: java.io.IOException => Long.MaxValue }
+    def whole = Seq(ManifestFilePartition(s.path, rel, s.dv, 0L, size))
+    if (targetBytes <= 0L || size == Long.MaxValue ||
+        size <= targetBytes + targetBytes / 2) return whole
     val blocks =
       try {
         val in = org.apache.parquet.hadoop.util.HadoopInputFile
@@ -793,7 +805,6 @@ object ManifestScan {
       val end =
         if (i + 1 < groups.length) groups(i + 1)._1 else size
       ManifestFilePartition(s.path, rel, s.dv, pos, end - pos, rb)
-        : InputPartition
     }
   }
 
@@ -965,18 +976,6 @@ object ManifestScan {
       .mapValues(_.map(_._2).reduce(_ intersect _)).toMap
   }
 
-  /** Does a file survive the pushed predicates, given its zone
-    * lines? Absent lines always survive (skipping is an
-    * optimization, never a filter); a file KNOWN empty skips
-    * exactly. */
-  def survives(rows: Option[Long],
-      lines: Seq[(String, Long, Long)],
-      sLines: Seq[(String, String, String)],
-      longRanges: Map[String, (Long, Long)],
-      strRanges: Seq[(String, StrRange)]): Boolean =
-    survivesAll(rows, lines, sLines, Seq.empty, longRanges,
-      strRanges, Map.empty, Map.empty)
-
   /** Full pruning check: zone lines, PARTITION VALUES (exact — a
     * pval acts as a degenerate [v, v] zone and is checked FIRST by
     * prepending; a NULL partition value prunes under any predicate
@@ -1065,6 +1064,171 @@ object ManifestScan {
         }
       }
     }
+  }
+
+  /** The slices of `pinned` (a snapshot of the table at `path`) that
+    * survive zone and partition pruning under `filters`: the files a
+    * scan pushed exactly these filters plans, before any LIMIT trim or
+    * runtime filter. */
+  def staticSurvivors(pinned: ManifestV2.Pinned, path: String,
+      filters: Seq[Filter], schema: StructType): Seq[ManifestV2.FileSlice] = {
+    val root = java.nio.file.Paths.get(path)
+    val longRanges = longRangesOf(filters, schema)
+    val strRanges = strRangesOf(filters, schema)
+    val inLongs = longInSetsOf(filters, schema)
+    val inStrs = strInSetsOf(filters, schema)
+    pinned.slices.filter { s =>
+      val rel = root.relativize(java.nio.file.Paths.get(s.path)).toString
+      survivesAll(s.rows, pinned.stats.getOrElse(rel, Seq.empty),
+        pinned.sstats.getOrElse(rel, Seq.empty),
+        pinned.pvals.getOrElse(rel, Seq.empty),
+        longRanges, strRanges, inLongs, inStrs)
+    }
+  }
+
+  /** `filter` as the row tests the columnar reader evaluates EXACTLY
+    * on its columns' vectors (one per conjunct of an And), or None when
+    * the reader cannot and Spark must apply it. `=`, `<`, `<=`, `>`,
+    * `>=` and IN compare integer, date and timestamp columns in the
+    * int64 zone encoding ([[literalLong]], what [[longRangesOf]] prunes
+    * with) and string columns by unsigned bytes (UTF8String's binary
+    * order, what [[strRangesOf]] prunes with); IS NOT NULL tests any
+    * top-level column. A NULL never passes a comparison, and a column
+    * a file lacks reads as NULL. */
+  def rowTestsOf(filter: Filter, schema: StructType): Option[Seq[RowTest]] = {
+    import org.apache.spark.sql.vectorized.ColumnVector
+    def typeOf(a: String) = schema.fields.find(_.name == a).map(_.dataType)
+    def widthOf(a: String): Option[Int] = typeOf(a).collect {
+      case LongType | TimestampType => 8
+      case IntegerType | DateType => 4
+      case ShortType => 2
+      case ByteType => 1
+    }
+    def utf8(a: String, v: Any): Option[UTF8String] =
+      if (!typeOf(a).contains(StringType)) None
+      else v match {
+        case s: String => Some(UTF8String.fromString(s))
+        case u: UTF8String => Some(u.clone())
+        case _ => None
+      }
+    def cmp(a: String, v: Any)(keep: Int => Boolean): Option[Seq[RowTest]] =
+      widthOf(a).flatMap(w => literalLong(schema, a, v).map { x =>
+        new RowTest(a) {
+          def apply(c: ColumnVector, i: Int): Boolean = !c.isNullAt(i) &&
+            keep(java.lang.Long.compare(RowTest.longAt(c, w, i), x))
+        }: RowTest
+      }).orElse(utf8(a, v).map { u =>
+        new RowTest(a) {
+          def apply(c: ColumnVector, i: Int): Boolean = !c.isNullAt(i) &&
+            keep(c.getUTF8String(i).binaryCompare(u))
+        }
+      }).map(Seq(_))
+    filter match {
+      case EqualTo(a, v) => cmp(a, v)(_ == 0)
+      case LessThan(a, v) => cmp(a, v)(_ < 0)
+      case LessThanOrEqual(a, v) => cmp(a, v)(_ <= 0)
+      case GreaterThan(a, v) => cmp(a, v)(_ > 0)
+      case GreaterThanOrEqual(a, v) => cmp(a, v)(_ >= 0)
+      case In(a, vs) if vs.nonEmpty =>
+        val longs = vs.toSeq.map(literalLong(schema, a, _))
+        val strs = vs.toSeq.map(utf8(a, _))
+        widthOf(a).filter(_ => longs.forall(_.isDefined)).map { w =>
+          val set = longs.flatten.distinct.sorted.toArray
+          new RowTest(a) {
+            def apply(c: ColumnVector, i: Int): Boolean = !c.isNullAt(i) &&
+              java.util.Arrays.binarySearch(set, RowTest.longAt(c, w, i)) >= 0
+          }: RowTest
+        }.orElse(Option.when(strs.forall(_.isDefined)) {
+          val set = new java.util.HashSet[UTF8String]()
+          strs.flatten.foreach(set.add)
+          new RowTest(a) {
+            def apply(c: ColumnVector, i: Int): Boolean = !c.isNullAt(i) &&
+              set.contains(c.getUTF8String(i))
+          }
+        }).map(Seq(_))
+      case IsNotNull(a) if typeOf(a).isDefined =>
+        Some(Seq(new RowTest(a) {
+          def apply(c: ColumnVector, i: Int): Boolean = !c.isNullAt(i)
+        }))
+      case And(l, r) =>
+        for { x <- rowTestsOf(l, schema); y <- rowTestsOf(r, schema) }
+          yield x ++ y
+      case _ => None
+    }
+  }
+
+  /** A scan's per-file partitions packed by Spark's own rule, what
+    * `spark.read.parquet` of the same files plans: the split size is
+    * `FilePartition.maxSplitBytes` over the files' bytes and open
+    * costs, and `FilePartition.getFilePartitions` packs whole files,
+    * largest first, so many small files share a task instead of each
+    * taking one. A packed partition keeps each file's own DV,
+    * `_graft_file` and row offsets ([[ManifestPackedPartition]]).
+    * Row-group ranges of split files (`start > 0`) stay one per
+    * partition. */
+  def pack(parts: Seq[ManifestFilePartition]): Seq[InputPartition] = {
+    import org.apache.spark.sql.execution.datasources.{FilePartition,
+      PartitionedFile}
+    val (whole, ranges) = parts.partition(_.start == 0L)
+    if (whole.size <= 1) return parts
+    val spark = org.apache.spark.sql.SparkSession.active
+    def bytes(p: ManifestFilePartition): Long =
+      if (p.length == Long.MaxValue) 0L else p.length
+    val maxSplit = FilePartition.maxSplitBytes(spark,
+      parts.map(bytes).sum + parts.map(_.path).distinct.size *
+        spark.sessionState.conf.filesOpenCostInBytes)
+    val files = whole.map(p => PartitionedFile(InternalRow.empty,
+      org.apache.spark.paths.SparkPath.fromPathString(p.path), 0L,
+      bytes(p)) -> p)
+    val partOf = files.toMap
+    FilePartition.getFilePartitions(spark,
+        files.map(_._1).sortBy(-_.length), maxSplit)
+      .map(fp => fp.files.map(partOf) match {
+        case Array(one) => one: InputPartition
+        case many => ManifestPackedPartition(many)
+      }) ++ ranges
+  }
+}
+
+/** The data files the `graft-manifest` scans of a frame read — what
+  * zone pruning kept, however packing groups the files into
+  * partitions. */
+object ManifestScanFiles
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+  /** The manifest-relative files the scans in `df`'s physical plan
+    * read (static planning: before runtime filters). */
+  def apply(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    of(collect(df.queryExecution.executedPlan) {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.inputPartitions
+    }.flatten)
+
+  /** The manifest-relative files `parts` read. */
+  def of(parts: Seq[InputPartition]): Seq[String] =
+    parts.flatMap {
+      case p: ManifestFilePartition => Seq(p.rel)
+      case p: ManifestPackedPartition => p.files.toSeq.map(_.rel)
+      case p: ManifestKeyedPartition => Seq(p.base.rel)
+      case _ => Nil
+    }.distinct
+}
+
+/** One pushed filter as the columnar reader evaluates it on a row of
+  * its column's vector ([[ManifestScan.rowTestsOf]]). */
+private[sources] abstract class RowTest(val col: String) {
+  def apply(v: org.apache.spark.sql.vectorized.ColumnVector, i: Int): Boolean
+}
+
+private[sources] object RowTest {
+  /** Row `i` of an integer, date or timestamp vector of `width` bytes,
+    * in the int64 zone encoding (date = epoch days, timestamp = epoch
+    * microseconds). */
+  def longAt(v: org.apache.spark.sql.vectorized.ColumnVector, width: Int,
+      i: Int): Long = width match {
+    case 8 => v.getLong(i)
+    case 4 => v.getInt(i).toLong
+    case 2 => v.getShort(i).toLong
+    case _ => v.getByte(i).toLong
   }
 }
 
@@ -1248,27 +1412,15 @@ class ManifestScan(required: StructType, pushed: Array[Filter],
     * [[surviving]]; the key-grouped report reads the static set (it
     * must be stable across re-planning). */
   private lazy val survivingStatic: Seq[ManifestV2.FileSlice] = {
-    val root = java.nio.file.Paths.get(opts.path)
-    val longRanges = ManifestScan.longRangesOf(pushed.toSeq, fullSchema)
-    val strRanges = ManifestScan.strRangesOf(pushed.toSeq, fullSchema)
-    val inLongs = ManifestScan.longInSetsOf(pushed.toSeq, fullSchema)
-    val inStrs = ManifestScan.strInSetsOf(pushed.toSeq, fullSchema)
-    val kept = pinned.slices.filter { s =>
-      val rel = root.relativize(
-        java.nio.file.Paths.get(s.path)).toString
-      ManifestScan.survivesAll(s.rows,
-        pinned.stats.getOrElse(rel, Seq.empty),
-        pinned.sstats.getOrElse(rel, Seq.empty),
-        pinned.pvals.getOrElse(rel, Seq.empty),
-        longRanges, strRanges, inLongs, inStrs)
-    }
+    val kept = ManifestScan.staticSurvivors(pinned, opts.path,
+      pushed.toSeq, fullSchema)
     limit match {
       case None => kept
-      // the trim is only sound when NO residual predicate sits above
-      // (our pushed filters are all residual — a row-level filter
-      // could drop proven rows, making later files load-bearing);
-      // Spark only offers pushLimit on direct Limit-over-scan plans
-      // today, but guard rather than trust that forever
+      // the trim is only sound when no row filter applies: the
+      // pushed filters are row filters the reader applies, so they
+      // can drop proven rows and make later files load-bearing.
+      // Spark offers pushLimit over a scan whose filters were all
+      // pushed — exactly the case this guard keeps whole
       case Some(_) if pushed.nonEmpty => kept
       case Some(k) =>
         // pushed LIMIT (partial): keep files only until the
@@ -1472,7 +1624,7 @@ class ManifestScan(required: StructType, pushed: Array[Filter],
           .map { case (f, v) => s"$f=$v" }.mkString(", ") + "]"
     case None =>
       s"graft-manifest ${opts.path} v${pinned.version} " +
-        s"[files=${planInputPartitions().length}, " +
+        s"[files=${surviving.size}, " +
         s"zonePruned=${pushed.mkString(", ")}]"
   }
 
@@ -1481,35 +1633,32 @@ class ManifestScan(required: StructType, pushed: Array[Filter],
       case Some((_, vals)) => Array(ManifestMetaPartition(vals))
       case None =>
         val root = java.nio.file.Paths.get(opts.path)
-        val spj = spjEnabled
         // for the footers of the files big enough to split
         lazy val conf = new org.apache.hadoop.conf.Configuration(false)
-        surviving.flatMap { s =>
+        val parts = surviving.flatMap { s =>
           val rel = root.relativize(
             java.nio.file.Paths.get(s.path)).toString
-          val parts = ManifestScan.splitPartitions(s, rel,
-            opts.splitBytes, conf)
-          if (!spj) parts
-          else {
-            // key-grouped report: every partition carries its tuple
-            // (splits of one file share the key and group back)
-            val key = keyOf(rel)
-            parts.map {
-              case p: ManifestFilePartition =>
-                ManifestKeyedPartition(p, key): InputPartition
-              case other => other
-            }
-          }
-        }.toArray
+          ManifestScan.splitPartitions(s, rel, opts.splitBytes, conf)
+        }
+        // key-grouped report: every partition carries its file's tuple
+        // (splits of one file share the key and group back), so files
+        // are never packed together
+        if (spjEnabled) parts.map(p =>
+          ManifestKeyedPartition(p, keyOf(p.rel)): InputPartition).toArray
+        else ManifestScan.pack(parts).toArray
     }
 
-  /** The pushed filters ride along so the columnar reader can skip
-    * ROW GROUPS and PAGES inside each surviving file (zone stats
-    * prune per file; OPTIMIZE makes files big — the intra-file skip
-    * is what keeps a selective predicate cheap on a 1 GiB compacted
-    * file). */
+  /** The pushed filters ride along: the columnar reader applies them
+    * to every row it serves, and skips ROW GROUPS inside each
+    * surviving file by them (zone stats prune per file; OPTIMIZE
+    * makes files big — the intra-file skip is what keeps a selective
+    * predicate cheap on a 1 GiB compacted file). `tested` carries the
+    * types of the filtered columns the output does not. */
   override def createReaderFactory(): PartitionReaderFactory =
-    ManifestReaderFactory(required, pushed.toSeq)
+    ManifestReaderFactory(required, pushed.toSeq,
+      StructType(fullSchema.filter(f =>
+        pushed.exists(_.references.contains(f.name)) &&
+          !required.fieldNames.contains(f.name))))
 }
 
 /** The CDC micro-batch source: offset = manifest version; batch
@@ -2482,14 +2631,21 @@ final case class ManifestMetaPartition(values: Array[Any])
 /** `rel` is the manifest-relative path — served as the `_graft_file`
   * metadata column (the row-level operation GROUP id). `start` /
   * `length` bound the parquet ROW GROUPS this partition reads (byte
-  * range, midpoint rule — `Long.MaxValue` length = whole file):
-  * large files plan several row-group-aligned partitions instead of
-  * one straggler task. `rowOffset` is the file-ordinal of the
-  * range's first row — what keeps deletion-vector positions (and the
-  * `_graft_pos` row id) correct on a split read. */
+  * range, midpoint rule — a whole file starts at 0, and `Long.MaxValue`
+  * length = the whole file, size unknown): large files plan several
+  * row-group-aligned partitions instead of one straggler task.
+  * `rowOffset` is the file-ordinal of the range's first row — what
+  * keeps deletion-vector positions (and the `_graft_pos` row id)
+  * correct on a split read. */
 final case class ManifestFilePartition(path: String, rel: String,
     dv: Array[Long], start: Long = 0L,
     length: Long = Long.MaxValue, rowOffset: Long = 0L)
+    extends InputPartition
+
+/** Several whole small files read by one task, one after the other
+  * ([[ManifestScan.pack]]) — each with its own deletion vector,
+  * `_graft_file` value and row ordinals. */
+final case class ManifestPackedPartition(files: Array[ManifestFilePartition])
     extends InputPartition
 
 /** [[ManifestFilePartition]] plus its decoded `#pval=` tuple — the
@@ -2508,14 +2664,20 @@ final case class ManifestKeyedPartition(base: ManifestFilePartition,
 /** Every data file reads COLUMNAR ([[ManifestColumnarReader]]); the
   * one row reader left answers a metadata aggregate's one-row
   * partition, which decodes no file. A batch never mixes the two:
-  * a scan plans either that one partition or file partitions. */
+  * a scan plans either that one partition or file partitions.
+  * `filters` are the scan's exact pushed filters, which every reader
+  * applies to its rows; `tested` holds the filtered columns that
+  * `required` lacks, which the readers decode but do not serve. */
 final case class ManifestReaderFactory(required: StructType,
-    filters: Seq[Filter] = Seq.empty)
+    filters: Seq[Filter] = Seq.empty, tested: StructType = new StructType())
     extends PartitionReaderFactory {
+  // the columns a reader decodes, and their read configuration —
   // built once per deserialized factory, shared read-only by its
   // readers (`ManifestColumnarReader.readConf`)
+  @transient private lazy val decoded = StructType(
+    ManifestColumnarReader.fileSchema(required).fields ++ tested.fields)
   @transient private lazy val conf =
-    ManifestColumnarReader.readConf(required)
+    ManifestColumnarReader.readConf(decoded)
 
   override def supportColumnarReads(partition: InputPartition)
       : Boolean = !partition.isInstanceOf[ManifestMetaPartition]
@@ -2525,10 +2687,12 @@ final case class ManifestReaderFactory(required: StructType,
     partition match {
       case ManifestKeyedPartition(base, _) =>
         createColumnarReader(base)
+      case ManifestPackedPartition(files) =>
+        new ManifestChainReader(files.iterator.map(createColumnarReader))
       case ManifestFilePartition(path, rel, dv, start, length,
           rowOffset) =>
         new ManifestColumnarReader(path, rel, start, length, required,
-          conf, dv, rowOffset, filters)
+          decoded, conf, dv, rowOffset, filters)
       case other => throw new IllegalStateException(
         s"columnar read of non-file partition $other")
     }
@@ -2551,34 +2715,61 @@ final case class ManifestReaderFactory(required: StructType,
     }
 }
 
+/** The readers of a packed partition's files, drained in order: each
+  * opens when the previous one is exhausted and closes before the
+  * next opens. */
+private[sources] final class ManifestChainReader(
+    readers: Iterator[PartitionReader[
+      org.apache.spark.sql.vectorized.ColumnarBatch]])
+    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
+  private var current: PartitionReader[
+    org.apache.spark.sql.vectorized.ColumnarBatch] = null
+
+  override def next(): Boolean = {
+    while (current == null || !current.next()) {
+      close()
+      if (!readers.hasNext) return false
+      current = readers.next()
+    }
+    true
+  }
+  override def get(): org.apache.spark.sql.vectorized.ColumnarBatch =
+    current.get()
+  override def close(): Unit =
+    if (current != null) { current.close(); current = null }
+}
+
 /** VECTORIZED file reader — the one decoder of every manifest scan:
   * Spark's own [[org.apache.spark.sql.execution.datasources
   * .parquet.VectorizedParquetRecordReader]] decodes the parquet
   * pages straight into ColumnarBatch vectors (the same reader the
-  * built-in parquet source runs), so the DSv2 scan feeds whole-stage
-  * codegen columnar instead of materializing one boxed Group per row.
-  * The requested schema rides the standard `ParquetReadSupport` conf
+  * built-in parquet source runs, nested columns included), so the
+  * DSv2 scan feeds whole-stage codegen columnar instead of
+  * materializing one boxed Group per row. The decoded schema
+  * (`decoded`: the file columns of `required`, then the filtered
+  * columns it lacks) rides the standard `ParquetReadSupport` conf
   * seam, which also gives the merged-footer evolution contract for
-  * free: a required column ABSENT from this file's footer is clipped
-  * to a constant-NULL vector by the reader's missing-column handling.
+  * free: a column ABSENT from this file's footer is clipped to a
+  * constant-NULL vector by the reader's missing-column handling.
   * `_graft_file` (when required) lands as a constant string vector
   * through the reader's partition-column seam, `_graft_pos` as a
   * long vector filled from the running file ordinal; the batch is
   * re-wrapped in required order (the vectors are shared — no copy).
   * Byte range [start, start+length) selects row groups by the
   * parquet midpoint rule — the split seam. `conf` is
-  * [[ManifestColumnarReader.readConf]] of `required`, which the
-  * reader only reads.
+  * [[ManifestColumnarReader.readConf]] of `decoded`, which the
+  * reader only reads. `filters` are exact ([[ManifestScan
+  * .rowTestsOf]]): every row the reader serves passes all of them.
   */
 final class ManifestColumnarReader(path: String, rel: String,
-    start: Long, length: Long, required: StructType,
+    start: Long, length: Long, required: StructType, decoded: StructType,
     conf: org.apache.hadoop.conf.Configuration,
     dv: Array[Long] = Array.empty, rowOffset: Long = 0L,
     filters: Seq[Filter] = Seq.empty)
     extends PartitionReader[
       org.apache.spark.sql.vectorized.ColumnarBatch] {
   import org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader
-  import org.apache.spark.sql.vectorized.ColumnarBatch
+  import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 
   private val wantsFile = required.fieldNames.contains("_graft_file")
   private val posVector =
@@ -2592,40 +2783,6 @@ final class ManifestColumnarReader(path: String, rel: String,
     val ctx = new org.apache.hadoop.mapreduce.task
       .TaskAttemptContextImpl(conf,
         new org.apache.hadoop.mapreduce.TaskAttemptID())
-    // ---- INTRA-FILE predicate skipping: translate the scan's
-    // pushed source filters to a parquet FilterPredicate against
-    // THIS file's footer schema (absent / drifted columns simply do
-    // not convert — Spark's ParquetFilters discipline), so the
-    // decoder skips whole ROW GROUPS by min/max + dictionary +
-    // bloom, and PAGES by the column index. DV'd and `_graft_pos`
-    // reads skip the skip: the deletion-vector mapping, the position
-    // vector and split `rowOffset` arithmetic need the running
-    // ordinal to equal the file row index, which only holds when no
-    // row group or page is elided. Any
-    // metadata hiccup disables it — pushdown is an optimization,
-    // never a correctness step (Spark re-applies every filter
-    // row-level above the scan).
-    if (filters.nonEmpty && dv.isEmpty && posVector == null) {
-      try {
-        val inF = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new org.apache.hadoop.fs.Path(path), conf)
-        val fr = org.apache.parquet.hadoop.ParquetFileReader.open(inF)
-        val msgType =
-          try fr.getFooter.getFileMetaData.getSchema
-          finally fr.close()
-        val pf = new org.apache.spark.sql.execution.datasources
-          .parquet.ParquetFilters(msgType,
-            true, true, true, true, 10, false,
-            org.apache.spark.sql.catalyst.util.RebaseDateTime
-              .RebaseSpec(org.apache.spark.sql.internal
-                .LegacyBehaviorPolicy.CORRECTED, None))
-        filters.flatMap(f => pf.createFilter(f))
-          .reduceOption(
-            org.apache.parquet.filter2.predicate.FilterApi.and)
-          .foreach(p => org.apache.parquet.hadoop.ParquetInputFormat
-            .setFilterPredicate(ctx.getConfiguration, p))
-      } catch { case scala.util.control.NonFatal(_) => () }
-    }
     // files are written by this engine (Spark 4 / the DSv2 writer) —
     // modern proleptic-Gregorian values, CORRECTED on both rebases
     val r = new VectorizedParquetRecordReader(null, "CORRECTED",
@@ -2637,7 +2794,42 @@ final class ManifestColumnarReader(path: String, rel: String,
     val split = new org.apache.hadoop.mapred.FileSplit(
       new org.apache.hadoop.fs.Path(path), start, len,
       Array.empty[String])
-    r.initialize(split, ctx)
+    // ---- INTRA-FILE predicate skipping: translate the pushed source
+    // filters to a parquet FilterPredicate against THIS file's footer
+    // schema (absent / drifted columns simply do not convert — Spark's
+    // ParquetFilters discipline), so the decoder skips whole ROW
+    // GROUPS by min/max + dictionary + bloom. DV'd and `_graft_pos`
+    // reads skip the skip: the deletion-vector mapping, the position
+    // vector and split `rowOffset` arithmetic need the running ordinal
+    // to equal the file row index, which only holds when no row group
+    // is elided. The footer is read once, range-filtered to this
+    // split, and handed to the decoder, as Spark's parquet source
+    // does; a conversion hiccup only disables the skip — the reader
+    // applies every filter to the rows anyway.
+    if (filters.nonEmpty && dv.isEmpty && posVector == null) {
+      import org.apache.spark.sql.execution.datasources.parquet.{
+        ParquetFilters, ParquetFooterReader}
+      val opened = ParquetFooterReader.openFileAndReadFooter(conf,
+        org.apache.spark.sql.execution.datasources.PartitionedFile(
+          InternalRow.empty,
+          org.apache.spark.paths.SparkPath.fromPathString(path), start,
+          len), true)
+      try {
+        val pf = new ParquetFilters(
+          opened.footer.getFileMetaData.getSchema,
+          true, true, true, true, 10, false,
+          org.apache.spark.sql.catalyst.util.RebaseDateTime
+            .RebaseSpec(org.apache.spark.sql.internal
+              .LegacyBehaviorPolicy.CORRECTED, None))
+        filters.flatMap(f => pf.createFilter(f))
+          .reduceOption(
+            org.apache.parquet.filter2.predicate.FilterApi.and)
+          .foreach(p => org.apache.parquet.hadoop.ParquetInputFormat
+            .setFilterPredicate(ctx.getConfiguration, p))
+      } catch { case scala.util.control.NonFatal(_) => () }
+      r.initialize(split, ctx, Some(opened.inputFile),
+        Some(opened.inputStream), Some(opened.footer))
+    } else r.initialize(split, ctx)
     if (wantsFile)
       r.initBatch(
         StructType(Seq(StructField("_graft_file", StringType,
@@ -2652,35 +2844,36 @@ final class ManifestColumnarReader(path: String, rel: String,
     r
   }
 
-  // batch column order = the file columns, then the appended
+  // batch column order = the decoded columns, then the appended
   // constant; remap to `required` order, the position vector in its
   // slot (shared vectors, no copy)
   private val inner: ColumnarBatch = reader.resultBatch()
-  private val ordered: Array[org.apache.spark.sql.vectorized
-      .ColumnVector] = {
-    val batchOrder =
-      ManifestColumnarReader.fileSchema(required).fieldNames ++
-      (if (wantsFile) Array("_graft_file") else Array.empty[String])
-    val idx = batchOrder.zipWithIndex.toMap
-    required.fieldNames.map(n =>
-      if (n == "_graft_pos") posVector else inner.column(idx(n)))
-  }
+  private val column: Map[String, Int] = (decoded.fieldNames ++
+    (if (wantsFile) Array("_graft_file") else Array.empty[String]))
+    .zipWithIndex.toMap
+  private val ordered: Array[ColumnVector] = required.fieldNames.map(n =>
+    if (n == "_graft_pos") posVector else inner.column(column(n)))
 
-  // ---- DELETION-VECTOR masking, columnar (the Iceberg
+  // the pushed filters as row tests over their decoded vectors
+  private val tests: Array[RowTest] = filters.flatMap(f =>
+    ManifestScan.rowTestsOf(f, decoded).getOrElse(
+      throw new IllegalStateException(
+        s"pushed filter $f is not exact over $decoded"))).toArray
+  private val tested: Array[ColumnVector] =
+    tests.map(t => inner.column(column(t.col)))
+
+  // ---- LIVE-ROW mapping, columnar (the Iceberg
   // ColumnVectorWithFilter / row-id-mapping shape): per batch, build
-  // the LIVE ordinals' index mapping (dv is sorted; one merge pass)
-  // and serve delegating vectors that translate rowId through it —
-  // dead rows vanish with zero copying, and merge-on-read tables
-  // keep vectorized scan speed.
+  // the index mapping of the rows that are not deleted (dv is sorted;
+  // one merge pass) and pass every filter, and serve delegating
+  // vectors that translate rowId through it — dead and filtered rows
+  // vanish with zero copying, and merge-on-read tables keep
+  // vectorized scan speed.
+  private val masked = dv.nonEmpty || tests.nonEmpty
   private val mapping = new Array[Int](ManifestColumnarReader.BatchRows)
-  private val mapped: Array[FilteredColumnVector] =
-    if (dv.isEmpty) Array.empty
-    else ordered.map(new FilteredColumnVector(_, mapping))
-  private val out: ColumnarBatch =
-    if (dv.isEmpty) new ColumnarBatch(
-      ordered.map(v => v: org.apache.spark.sql.vectorized.ColumnVector))
-    else new ColumnarBatch(
-      mapped.map(v => v: org.apache.spark.sql.vectorized.ColumnVector))
+  private val out: ColumnarBatch = new ColumnarBatch(
+    if (masked) ordered.map(v => new FilteredColumnVector(v, mapping))
+    else ordered)
   // next file ordinal = rows served so far within this partition's
   // byte range (row groups stream in order), offset by the range's
   // first ordinal — `_metadata.row_index`
@@ -2690,7 +2883,15 @@ final class ManifestColumnarReader(path: String, rel: String,
     while (i < dv.length && dv(i) < rowOffset) i += 1
     i
   }
-  private var live = 0
+
+  private def passes(i: Int): Boolean = {
+    var t = 0
+    while (t < tests.length) {
+      if (!tests(t)(tested(t), i)) return false
+      t += 1
+    }
+    true
+  }
 
   override def next(): Boolean = {
     if (!reader.nextBatch()) return false
@@ -2700,13 +2901,13 @@ final class ManifestColumnarReader(path: String, rel: String,
       var i = 0
       while (i < n) { posVector.putLong(i, ordinal + i); i += 1 }
     }
-    if (dv.isEmpty) out.setNumRows(n)
+    if (!masked) out.setNumRows(n)
     else {
-      live = 0
+      var live = 0
       var i = 0
       while (i < n) {
         if (dvIdx < dv.length && dv(dvIdx) == ordinal + i) dvIdx += 1
-        else { mapping(live) = i; live += 1 }
+        else if (passes(i)) { mapping(live) = i; live += 1 }
         i += 1
       }
       out.setNumRows(live)
@@ -2731,20 +2932,19 @@ object ManifestColumnarReader {
     StructType(required.fields.filterNot(f =>
       f.name == "_graft_file" || f.name == "_graft_pos"))
 
-  /** The read configuration of every file a scan requiring `required`
-    * decodes: Spark's read support with the requested schema (the
-    * file columns of `required`) and the session keys its schema
-    * converter reads. No Hadoop default resource is loaded (a
-    * `new Configuration()` parses them again for every file): local
-    * paths need none, and parquet-mr's own defaults apply. */
-  def readConf(required: StructType)
+  /** The read configuration of every file a scan decoding `decoded`
+    * (file columns only) reads: Spark's read support with that
+    * requested schema and the session keys its schema converter reads.
+    * No Hadoop default resource is loaded (a `new Configuration()`
+    * parses them again for every file): local paths need none, and
+    * parquet-mr's own defaults apply. */
+  def readConf(decoded: StructType)
       : org.apache.hadoop.conf.Configuration = {
     import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
     val conf = new org.apache.hadoop.conf.Configuration(false)
     conf.set(org.apache.parquet.hadoop.ParquetInputFormat
       .READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
-    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA,
-      fileSchema(required).json)
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, decoded.json)
     val sql = org.apache.spark.sql.internal.SQLConf
     conf.setBoolean(sql.CASE_SENSITIVE.key, false)
     conf.setBoolean(sql.PARQUET_BINARY_AS_STRING.key, false)
@@ -2767,15 +2967,23 @@ object ManifestColumnarReader {
 }
 
 /** A zero-copy VIEW over a batch vector that translates row ids
-  * through a live-rows index mapping — how deletion vectors mask in
-  * COLUMNAR reads (the batch's numRows shrinks to the live count;
-  * accessor i reads underlying row mapping(i)). Flat relational
-  * types only — exactly the manifest surface contract. */
+  * through a live-rows index mapping — how deletion vectors and the
+  * reader's exact filters mask in COLUMNAR reads (the batch's numRows
+  * shrinks to the live count; accessor i reads underlying row
+  * mapping(i)). Arrays and maps are served through the mapping, and a
+  * struct's fields are views over the same mapping. */
 private[sources] final class FilteredColumnVector(
     inner: org.apache.spark.sql.vectorized.ColumnVector,
     mapping: Array[Int])
     extends org.apache.spark.sql.vectorized.ColumnVector(
       inner.dataType()) {
+  private lazy val children: Array[FilteredColumnVector] =
+    inner.dataType() match {
+      case st: StructType => st.fields.indices
+        .map(o => new FilteredColumnVector(inner.getChild(o), mapping))
+        .toArray
+      case _ => Array.empty
+    }
   override def close(): Unit = () // the reader owns the inner vector
   override def hasNull: Boolean = inner.hasNull
   override def numNulls(): Int = inner.numNulls()
@@ -2798,14 +3006,10 @@ private[sources] final class FilteredColumnVector(
     inner.getDecimal(mapping(i), precision, scale)
   override def getArray(i: Int)
       : org.apache.spark.sql.vectorized.ColumnarArray =
-    throw new UnsupportedOperationException(
-      "manifest tables serve flat relational columns")
+    inner.getArray(mapping(i))
   override def getMap(i: Int)
       : org.apache.spark.sql.vectorized.ColumnarMap =
-    throw new UnsupportedOperationException(
-      "manifest tables serve flat relational columns")
-  override def getChild(i: Int)
-      : org.apache.spark.sql.vectorized.ColumnVector =
-    throw new UnsupportedOperationException(
-      "manifest tables serve flat relational columns")
+    inner.getMap(mapping(i))
+  override def getChild(o: Int)
+      : org.apache.spark.sql.vectorized.ColumnVector = children(o)
 }

@@ -316,23 +316,52 @@ object ManifestTable {
     * version) or wins the version this attempt tries to link (the
     * retry then sees its tag) — never a double append. The
     * exactly-once seam of [[commitTagged]] and of the DSv2 streaming
-    * sink's epochs. */
+    * sink's epochs.
+    *
+    * The published version's schema is seeded ([[appendSeeds]]):
+    * `staged` comes from one write, so every staged file carries the
+    * first one's footer schema, and the union is the carried
+    * snapshot's union merged with that one footer — so the first read
+    * of an appended version opens one footer, not all of them. With no
+    * known union to extend nothing is seeded, and the read unions the
+    * footers itself. */
   private def publishAppend(table: String, staged: Seq[String],
-      meta: FileMeta, append: Boolean, tag: Option[String]): Long =
-    publishLoop(table, "commit") { snapshot =>
+      meta: FileMeta, append: Boolean, tag: Option[String]): Long = {
+    var prev: Option[(Long, Seq[String])] = None
+    var published = Seq.empty[String]
+    val v = publishLoop(table, "commit") { snapshot =>
+      published = Seq.empty
       taggedIn(table, tag, snapshot) match {
         case Some(v) => Left(v)
         case None =>
-          val prev =
-            if (append)
-              snapshot.lastOption.map(manifestOf(table, _))
-                .getOrElse(emptyManifest)
-            else emptyManifest
+          val base =
+            if (append) snapshot.lastOption.map(b => b -> manifestOf(table, b))
+            else None
+          val carried = base.map(_._2).getOrElse(emptyManifest)
+          prev = base.map { case (b, m) => b -> m.files }
+          published = carried.files ++ staged
           Right(tag.map(t => s"#tag=$t").toSeq ++
-            (prev.meta ++ meta).lines(prev.files ++ staged) ++
-            prev.files ++ staged)
+            (carried.meta ++ meta).lines(published) ++ published)
       }
     }
+    // the seed only saves a later read its footers: the version is
+    // published, so a failure here must not fail the commit
+    if (published.nonEmpty) try {
+      // the carried snapshot's union: cached, or resolved from its own
+      // seed (one footer), so a chain of unread appends stays seeded
+      val carried = prev match {
+        case Some((b, files)) if files.nonEmpty =>
+          val key = schemaKey(table, b, files)
+          Option(schemaCache.get(key)).orElse(
+            Option(appendSeeds.get(key)).map(_ =>
+              snapshotSchema(SparkSession.active, table, b, files)))
+        case _ => Some(org.apache.spark.sql.types.StructType(Nil))
+      }
+      carried.foreach(union => appendSeeds.put(
+        schemaKey(table, v, published), (union, staged.headOption)))
+    } catch { case scala.util.control.NonFatal(_) => () }
+    v
+  }
 
   /** Publish a REPLACEMENT as the next snapshot — the one publish
     * every rewriting writer shares: the SQL row-level operations
@@ -356,10 +385,11 @@ object ManifestTable {
   private[graft] def publishReplace(table: String,
       replaced: Seq[String], staged: Seq[String], meta: FileMeta,
       expectDvs: Dvs, dvUpdates: Dvs = noDvs,
-      what: String = "row-level-operation"): (Long, Int) = {
+      what: String = "row-level-operation",
+      seed: Option[SchemaSeed] = None): (Long, Int) = {
     val dropped = replaced.toSet
     val inputs = dropped ++ dvUpdates.keySet
-    var after = 0
+    var after = Seq.empty[String]
     val v = publishLoop(table, what) { snapshot =>
       require(snapshot.nonEmpty,
         s"publishReplace on $table needs an existing snapshot")
@@ -372,11 +402,12 @@ object ManifestTable {
         s"concurrent DV landed on a $what input of $table — aborting " +
           "rather than resurrecting the rival's deletes")
       val carried = cur.files.filterNot(dropped)
-      after = carried.size + staged.size
+      after = carried ++ staged
       Right((cur.meta ++ FileMeta(dvs = dvUpdates)).lines(carried) ++
         meta.lines(staged) ++ carried ++ staged)
     }
-    (v, after)
+    seed.foreach(seedSchema(table, v, after, _, replaced.nonEmpty))
+    (v, after.size)
   }
 
   /** Compressed deletion-vector POSITION encoding for `#dv=` lines —
@@ -500,6 +531,11 @@ object ManifestTable {
           try {
             Files.createLink(manifestDir(table).resolve(s"v$v"), tmp)
             Files.delete(tmp)
+            // a table dropped and re-created at this path publishes
+            // its version numbers again: forget the dropped table's v
+            val key = (Paths.get(table).toAbsolutePath.toString, v)
+            tagCache.remove(key)
+            atCache.remove(key)
             return v
           } catch {
             case _: FileAlreadyExistsException =>
@@ -524,31 +560,75 @@ object ManifestTable {
   private val atCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long), Long]()
 
-  /** Session-cached MERGED read schema of a published snapshot.
-    * Manifests are immutable, so (table, version) keys the union of
-    * that snapshot's file footers forever. The mergeSchema footer
-    * union is a distributed job — a MERGE paid it up to three times
-    * (schema check, match scan, rewrite scan) and a partition
-    * OPTIMIZE once per group; with the cache each snapshot pays it
-    * once and every other read passes the schema EXPLICITLY, which
-    * skips footer inference at planning. Semantics are mergeSchema's
-    * own: a file missing an evolved column reads that column as NULL
-    * — and because the union runs over the WHOLE snapshot, a
-    * candidate subset that happens to predate an evolved column now
-    * reads under the full table schema instead of crashing a later
-    * select of the evolved column. */
+  /** Cached read schema of a published snapshot: the by-name union of
+    * its live files' footers, with `mergeSchema`'s semantics — a file
+    * missing an evolved column reads it as NULL, and a candidate subset
+    * that predates an evolved column still reads under the full table
+    * schema. The union is read once per snapshot, on the driver
+    * ([[snapshotSchema]], no Spark job), from the seed an append left
+    * ([[appendSeeds]]), or seeded by the rewrite that made the version
+    * ([[publishReplace]]). [[read]],
+    * [[readPrunedTyped]], every `graft-manifest` scan
+    * ([[ManifestV2.schemaFor]]) and every MERGE, DELETE and compaction
+    * scan of the version use it, so none infers a schema while it
+    * plans. Keyed by [[schemaKey]]. */
   private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long),
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, String),
       org.apache.spark.sql.types.StructType]()
 
-  private def snapshotSchema(spark: SparkSession, table: String,
+  /** Appended versions whose union is not cached yet, by
+    * [[schemaKey]]: the carried snapshot's union and one staged file
+    * (none when nothing was staged), whose footer the version's first
+    * [[snapshotSchema]] merges into that union instead of reading
+    * every footer. Kept apart from [[schemaCache]] so the commit
+    * itself reads no footer. */
+  private val appendSeeds =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, String),
+      (org.apache.spark.sql.types.StructType, Option[String])]()
+
+  /** The [[schemaCache]] key of snapshot `version` of `table` whose
+    * live data files are `files` (relative to `table`, or absolute):
+    * the table, the version and a SHA-256 of the files' absolute
+    * paths in order. Data files are immutable and every write names
+    * its own, so the file list fixes the union. The version number
+    * alone does not: a table dropped and re-created at the same path
+    * publishes v1, v2, … again over other files, possibly with other
+    * columns. */
+  private def schemaKey(table: String, version: Long,
+      files: Seq[String]): (String, Long, String) = {
+    val root = Paths.get(table).toAbsolutePath
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    files.foreach { f =>
+      md.update(root.resolve(f).toString
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      md.update('\n'.toByte)
+    }
+    (root.toString, version,
+      java.util.HexFormat.of().formatHex(md.digest()))
+  }
+
+  /** The cached union schema of snapshot `version` of `table`, whose
+    * data files are `files` (relative to `table`, or absolute): on a
+    * miss, each file's footer converted as Spark's inference converts
+    * it ([[fileSchema]]), unioned in file order by Spark's own merge
+    * rule ([[org.apache.spark.sql.classic.GraftDatasets.unionOf]]) —
+    * or, for an append's seed, the carried union and its one staged
+    * footer. */
+  private[sources] def snapshotSchema(spark: SparkSession, table: String,
       version: Long, files: Seq[String])
       : org.apache.spark.sql.types.StructType =
-    schemaCache.computeIfAbsent(
-      (Paths.get(table).toAbsolutePath.toString, version),
-      _ => spark.read.option("mergeSchema", "true")
-        .parquet(files.map(f =>
-          Paths.get(table).resolve(f).toString): _*).schema)
+    schemaCache.computeIfAbsent(schemaKey(table, version, files), key => {
+      require(files.nonEmpty, s"snapshot v$version of $table lists " +
+        "no data files — there is no schema to read")
+      val hadoopConf = spark.sessionState.newHadoopConf()
+      def footer(f: String) = fileSchema(spark, hadoopConf,
+        new org.apache.hadoop.fs.Path(Paths.get(table).resolve(f).toString))
+      org.apache.spark.sql.classic.GraftDatasets.unionOf(
+        Option(appendSeeds.remove(key)) match {
+          case Some((carried, staged)) => carried +: staged.map(footer).toSeq
+          case None => files.map(footer)
+        })
+    })
 
   /** The read schema Spark's own inference gives `files` without
     * `mergeSchema`, computed on the driver with no Spark job. Spark
@@ -599,32 +679,36 @@ object ManifestTable {
       converter)
   }
 
-  /** The cached merged schema of (table, version), if any. */
+  /** The cached merged schema of the published snapshot `version` of
+    * `table`, if any. */
   private[graft] def cachedSchema(table: String, version: Long)
       : Option[org.apache.spark.sql.types.StructType] =
     Option(schemaCache.get(
-      (Paths.get(table).toAbsolutePath.toString, version)))
+      schemaKey(table, version, manifestOf(table, version).files)))
 
-  /** Publish-time seed of [[schemaCache]], for a writer that read
-    * snapshot `latest` under its merged schema `schema`, dropped some
-    * of its files (`dropped`) and staged new ones whose written
-    * schemas are `staged`. Version `v` gets `schema` without a footer
-    * union when that IS the union by construction: the publish won
-    * `latest + 1`, so no rival file landed in between; every staged
-    * file was written with exactly `schema`'s fields; and one was
-    * staged, or none was dropped. The new snapshot's files are then
-    * a subset of `latest`'s, whose union is `schema`, plus files of
-    * `schema` — the same fields and types, so the next writer on the
-    * table skips the union job. */
-  private def seedSchema(table: String, latest: Long, v: Long,
-      schema: org.apache.spark.sql.types.StructType, dropped: Boolean,
-      staged: Seq[org.apache.spark.sql.types.StructType]): Unit = {
+  /** What a rewriting writer knows of its publish's schema: it read
+    * snapshot `base` under its union `schema`, and wrote each staged
+    * file with one of the schemas `written`. */
+  private[graft] final case class SchemaSeed(base: Long,
+      schema: org.apache.spark.sql.types.StructType,
+      written: Seq[org.apache.spark.sql.types.StructType])
+
+  /** Publish-time seed of [[schemaCache]] for version `v` of a
+    * rewrite, whose files are `files`: the writer's `seed.schema`,
+    * without a footer union, when that IS the union by construction.
+    * It is when the publish won `seed.base + 1`, so no rival file
+    * landed in between; every staged file was written with exactly
+    * `schema`'s fields; and one was staged, or none was dropped. The
+    * new snapshot's files are then a subset of the base's, whose
+    * union is `schema`, plus files of `schema` — the same fields and
+    * types, so the next writer on the table skips the union. */
+  private def seedSchema(table: String, v: Long, files: Seq[String],
+      seed: SchemaSeed, dropped: Boolean): Unit = {
     def fields(s: org.apache.spark.sql.types.StructType) =
       s.fields.toSeq.map(f => (f.name, f.dataType, f.metadata))
-    if (v == latest + 1 && (staged.nonEmpty || !dropped) &&
-        staged.forall(s => fields(s) == fields(schema)))
-      schemaCache.putIfAbsent(
-        (Paths.get(table).toAbsolutePath.toString, v), schema)
+    if (v == seed.base + 1 && (seed.written.nonEmpty || !dropped) &&
+        seed.written.forall(s => fields(s) == fields(seed.schema)))
+      schemaCache.putIfAbsent(schemaKey(table, v, files), seed.schema)
   }
 
   private def commitTimeOf(table: String, version: Long): Long =
@@ -1016,12 +1100,12 @@ object ManifestTable {
 
   /** The LIVE rows of `files` under the snapshot's DVs, scanned under
     * `schema`: [[withFilePos]] + [[maskDvs]] + drop the identity
-    * columns, or the plain scan when no file carries a DV. Every
-    * Scala-API snapshot read ([[read]], [[readPrunedTyped]],
-    * [[readChanges]]) comes through here with its schema already
-    * known — [[footerSchema]] for Spark's first-file semantics,
-    * [[snapshotSchema]] for a footer union — so building the frame
-    * starts no Spark job and collecting it runs the scan as one. */
+    * columns, or the plain scan when no file carries a DV. The
+    * change feed ([[readChanges]]), the delta commit's copy-on-write
+    * fallback and clustered OPTIMIZE read through here with their
+    * schema already known, so building the frame starts no Spark job.
+    * [[read]] and [[readPrunedTyped]] do not: they plan through the
+    * `graft-manifest` scan ([[ManifestV2.frameOf]]). */
   private def readLive(spark: SparkSession, root: Path,
       files: Seq[String], dvs: Dvs,
       schema: org.apache.spark.sql.types.StructType): DataFrame = {
@@ -1034,9 +1118,9 @@ object ManifestTable {
   /** Predicate-pruned snapshot read: plan the scan from the
     * manifest's `#stats=` zone lines — only files whose [min, max]
     * intersects [lo, hi] on `statsCol` are opened (files without
-    * stats always scan: skipping never filters). The row-level
-    * BETWEEN still applies to the scanned files, so the result is
-    * exact regardless of how coarse the zones are. Returns
+    * stats always scan: skipping never filters). The scan's reader
+    * applies the BETWEEN to every row of the files it opens, so the
+    * result is exact regardless of how coarse the zones are. Returns
     * (frame, files in snapshot, files scanned) — the skip arithmetic
     * a 100 TB reader reports. */
   def readPruned(spark: SparkSession, table: String, statsCol: String,
@@ -1085,68 +1169,41 @@ object ManifestTable {
       preds: Seq[(String, Any, Any)],
       version: Option[Long]): (DataFrame, Int, Int) = {
     import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
     require(preds.nonEmpty, "need at least one prune predicate")
-    val (v, Manifest(files, meta)) = snapshotOf(table, version)
-    require(files.nonEmpty,
-      s"snapshot v$v of $table lists no data files — a pruned read " +
-        "has no schema to produce; read() an earlier version or " +
-        "commit data first")
-    def encLong(x: Any): Option[Long] = x match {
-      case l: Long => Some(l)
-      case i: Int => Some(i.toLong)
-      case d: java.time.LocalDate => Some(d.toEpochDay)
-      case d: java.sql.Date => Some(d.toLocalDate.toEpochDay)
-      case t: java.sql.Timestamp =>
-        Some(Math.floorDiv(t.getTime, 1000L) * 1000000L +
-          t.getNanos / 1000L)
-      case i: java.time.Instant =>
-        Some(Math.multiplyExact(i.getEpochSecond, 1000000L) +
-          i.getNano / 1000L)
-      case _ => None
+    def zoned(x: Any): Boolean = x match {
+      case _: Long | _: Int | _: java.time.LocalDate | _: java.sql.Date |
+          _: java.sql.Timestamp | _: java.time.Instant => true
+      case _ => false
     }
-    // each predicate encodes to ONE zone form: int64 (integer, date,
-    // timestamp — against #stats) or bytes (string — against #sstats)
-    val enc: Seq[Either[(String, Long, Long),
-        (String, ManifestScan.StrRange)]] = preds.map {
-      case (c, lo: String, hi: String) =>
-        Right((c, ManifestScan.StrRange(Some(StrStat.bytesOf(lo)), true,
-          Some(StrStat.bytesOf(hi)), true)))
-      case (c, lo, hi) =>
-        (encLong(lo), encLong(hi)) match {
-          case (Some(l), Some(h)) => Left((c, l, h))
-          case _ => throw new IllegalArgumentException(
-            s"prune bounds for $c must both be integer, date, " +
-              s"timestamp, or string values: ($lo, $hi)")
-        }
+    preds.foreach { case (c, lo, hi) =>
+      val ok = (lo, hi) match {
+        case (_: String, _: String) => true
+        case _ => zoned(lo) && zoned(hi)
+      }
+      if (!ok) throw new IllegalArgumentException(
+          s"prune bounds for $c must both be integer, date, " +
+            s"timestamp, or string values: ($lo, $hi)")
     }
-    // the DSv2 scan's own file test: an entry recorded for ANOTHER
-    // column never prunes (the file simply scans — skipping is an
-    // optimization, never a filter), a file KNOWN empty (#nrows=0)
-    // skips exactly, and a DV'd file's zones stay conservative
-    // (deleting rows only narrows the true range). A file meets every
-    // range on a column iff it meets their intersection, so repeated
-    // integer predicates on one column fold into one range; string
-    // ranges are each checked.
-    val longRanges = enc.collect { case Left(r) => r }.groupBy(_._1)
-      .map { case (c, rs) => c -> (rs.map(_._2).max, rs.map(_._3).min) }
-    val strRanges = enc.collect { case Right(r) => r }
-    val kept = files.filter(f => ManifestScan.survives(meta.rows.get(f),
-      meta.stats.getOrElse(f, Seq.empty),
-      meta.sstats.getOrElse(f, Seq.empty), longRanges, strRanges))
-    // the schema Spark would infer from the files the scan reads
-    // (all of them when pruning kept none), read on the driver
-    val root = Paths.get(table)
-    val base =
-      if (kept.nonEmpty)
-        readLive(spark, root, kept, meta.dvs,
-          footerSchema(spark, root, kept))
-      else
-        scanOf(spark, root, files, footerSchema(spark, root, files))
-          .filter(lit(false))
-    val filtered = preds.foldLeft(base) { case (d, (c, lo, hi)) =>
+    val pinned = ManifestV2.resolvePinned(ManifestV2Options(table, version))
+    require(pinned.slices.nonEmpty,
+      s"snapshot v${pinned.version} of $table lists no data files — a " +
+        "pruned read has no schema to produce; read() an earlier " +
+        "version or commit data first")
+    val frame = ManifestV2.frameOf(spark, table, pinned)
+    // the bounds as the source filters Spark pushes into the scan, so
+    // the count is the scan's own file test over the same snapshot: an
+    // entry recorded for ANOTHER column never prunes, a file KNOWN
+    // empty (#nrows=0) skips, a DV'd file's zones stay conservative,
+    // and repeated ranges on one column meet in their intersection
+    val kept = ManifestScan.staticSurvivors(pinned, table,
+      preds.flatMap { case (c, lo, hi) =>
+        Seq(GreaterThanOrEqual(c, lo), LessThanOrEqual(c, hi)) },
+      frame.schema)
+    val filtered = preds.foldLeft(frame) { case (d, (c, lo, hi)) =>
       d.filter(col(c).between(lit(lo), lit(hi)))
     }
-    (filtered, files.size, kept.size)
+    (filtered, pinned.slices.size, kept.size)
   }
 
   /** METADATA-ONLY row count: when every live file of the snapshot
@@ -1295,9 +1352,10 @@ object ManifestTable {
     *
     * `dvMaxFraction = 0.0` is exactly classic [[deleteRange]]: pure
     * zone-level planning, no match scan, every candidate rewritten.
-    * Read-side cost of a DV: a per-row (file, position) lookup in a
-    * broadcast vector during scans of that file ([[maskDvs]]),
-    * purged by the next [[compact]] of its group. [[countRows]]
+    * Read-side cost of a DV: reads skip the file's dead positions in
+    * the columnar reader's live-row mapping, and DML scans look each
+    * row's position up in a broadcast vector ([[maskDvs]]), until the
+    * next [[compact]] of its group purges it. [[countRows]]
     * stays exact (live = physical − |dv|); [[statsBounds]] degrades
     * to None while DVs are live (exact-or-None).
     *
@@ -1683,14 +1741,14 @@ object ManifestTable {
     val meta =
       if (keepCols.isEmpty) FileMeta()
       else rewrittenMeta ++ (if (insEmpty) FileMeta() else insMeta)
-    val (v, after) = publishReplace(table, cowFiles,
-      rewritten ++ insertStaged, meta, m.meta.dvs, dvUpdates, "merge")
     // rewrites are written as the union of tableSchema's base rows
     // and the batch, inserts as the batch: both carry exactly
     // tableSchema when the batch's fields match it
-    seedSchema(table, latest, v, tableSchema, dropped = cowFiles.nonEmpty,
-      staged = if (rewritten.isEmpty && insertStaged.isEmpty) Nil
-        else Seq(up.schema))
+    val (v, after) = publishReplace(table, cowFiles,
+      rewritten ++ insertStaged, meta, m.meta.dvs, dvUpdates, "merge",
+      Some(SchemaSeed(latest, tableSchema,
+        if (rewritten.isEmpty && insertStaged.isEmpty) Nil
+        else Seq(up.schema))))
     (v, cowFiles.size, dvFiles.size, after)
     } catch {
       case t: Throwable =>
@@ -1963,12 +2021,11 @@ object ManifestTable {
       }
     }.reduce(_ ++ _)
     // rivals' appends since our snapshot ride along untouched
-    val (v, after) = publishReplace(table, multi.flatten,
-      staged.flatten.map(_._1), meta, m0.meta.dvs, what = "compacted")
     // every group's output is written from `src`, read under the
     // snapshot's schema
-    seedSchema(table, latest, v, srcSchema, dropped = true,
-      staged = Seq(src.schema))
+    val (v, after) = publishReplace(table, multi.flatten,
+      staged.flatten.map(_._1), meta, m0.meta.dvs, what = "compacted",
+      seed = Some(SchemaSeed(latest, srcSchema, Seq(src.schema))))
     (v, files.size, after)
   }
 
@@ -2325,26 +2382,22 @@ object ManifestTable {
   }
 
   /** Read a snapshot: the given version, or the latest. Scans exactly
-    * the manifest's file list — the data directory is never listed.
-    * `mergeSchema = true` unions the listed files' footers (the S16
+    * the manifest's file list — the data directory is never listed —
+    * through the `graft-manifest` scan over that one pinned snapshot
+    * ([[ManifestV2.frameOf]]): small files pack into Spark-sized
+    * partitions and deletion vectors mask inside the reader. The
+    * schema is the union of the listed files' footers (the S16
     * read-side evolution contract applied to a snapshot: a commit
     * that ADDED columns reads as one frame with the older commits'
-    * missing columns as NULL — and because the merge runs over the
-    * manifest's file list, its cost is per-LIVE-file, bounded by the
-    * snapshot, not the directory's full history). The union is the
-    * version's cached [[snapshotSchema]], so it is paid once per
-    * snapshot; without `mergeSchema` the schema is Spark's first-file
-    * inference, read on the driver ([[footerSchema]]), and building
-    * the frame starts no Spark job. */
+    * missing columns as NULL, what `spark.read.option("mergeSchema",
+    * "true")` gives the same files). The union is the version's cached
+    * [[snapshotSchema]], paid once per snapshot on the driver or
+    * seeded by the publish, so building the frame starts no Spark
+    * job. */
   def read(spark: SparkSession, table: String,
-      version: Option[Long] = None,
-      mergeSchema: Boolean = false): DataFrame = {
-    val (v, m) = snapshotOf(table, version)
-    val root = Paths.get(table)
-    readLive(spark, root, m.files, m.meta.dvs,
-      if (mergeSchema) snapshotSchema(spark, table, v, m.files)
-      else footerSchema(spark, root, m.files))
-  }
+      version: Option[Long] = None): DataFrame =
+    ManifestV2.frameOf(spark, table,
+      ManifestV2.resolvePinned(ManifestV2Options(table, version)))
 }
 
 /** The `#ndv=` register sketch: a fixed-[[M]] HyperLogLog whose

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.pipelines.{Attributes, Importer}
-import graft.sources.{Sinks, Sources}
+import graft.sources.{ManifestScanFiles, Sinks, Sources}
 import graft.streaming.Incremental
 
 /** End-to-end specs: the §7.2 importer slice over the committed CSV
@@ -1464,7 +1464,9 @@ class PipelineSpec extends SparkSpec {
     assert(filtered.rdd.getNumPartitions == 1,
       s"expected 1 surviving file, got " +
         s"${filtered.rdd.getNumPartitions}")
-    assert(df.rdd.getNumPartitions == 3)
+    assert(ManifestScanFiles(df).size == 3)
+    assert(unpacked(spark.read.format("graft-manifest")
+      .option("path", table).load().rdd.getNumPartitions) == 3)
     assert(filtered.agg(sum($"k")).as[Long].head() ==
       (81L to 100L).sum)
     // residual row filter still applies inside a surviving file
@@ -2032,7 +2034,7 @@ class PipelineSpec extends SparkSpec {
     Seq((100L, "v100", 9L)).toDF("k", "s", "extra")
       .write.format("graft-manifest").option("path", table)
       .mode("append").save()
-    val ev = ManifestTable.read(spark, table, mergeSchema = true)
+    val ev = ManifestTable.read(spark, table)
     assert(ev.columns.toSeq == Seq("k", "s", "extra"))
     assert(ev.filter($"k" === 100L).select("extra").as[Long]
       .collect().toSeq == Seq(9L))
@@ -2312,6 +2314,63 @@ class PipelineSpec extends SparkSpec {
     spark.sql(s"DROP TABLE gtest.$t2")
     spark.sql(s"DROP TABLE gtest.$t")
     assert(!Files.exists(java.nio.file.Paths.get(dir)))
+  }
+
+  test("a table dropped and re-created at the same path reads as the " +
+      "new table: DROP, then CREATE with other columns, INSERT and " +
+      "SELECT return the new schema and rows, and an idempotence tag " +
+      "the dropped table published commits again") {
+    import graft.sources.ManifestTable
+    val root = Files.createTempDirectory("graft-recreate-root").toString
+    spark.conf.set("spark.sql.catalog.grec", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.grec.root", root)
+    val dir = s"$root/t"
+    spark.sql("CREATE TABLE grec.t (k BIGINT, s STRING) " +
+      "USING `graft-manifest`")
+    spark.sql("INSERT INTO grec.t " +
+      "SELECT id AS k, CAST(id AS STRING) AS s FROM range(0, 5)")
+    spark.sql("INSERT INTO grec.t SELECT id AS k, 'b' AS s FROM range(5, 8)")
+    // every read surface reads (and caches) the first table's v1, v2
+    assert(spark.sql("SELECT * FROM grec.t").count() == 8L)
+    assert(ManifestTable.read(spark, dir, Some(1L)).count() == 5L)
+    assert(ManifestTable.readPruned(spark, dir, "k", 0L, 3L)._1
+      .count() == 4L)
+    assert(ManifestTable.cachedSchema(dir, 2L).isDefined)
+    spark.sql("DROP TABLE grec.t")
+    spark.sql("CREATE TABLE grec.t (id INT, name STRING, price DOUBLE) " +
+      "USING `graft-manifest`")
+    spark.sql("INSERT INTO grec.t VALUES (1, 'a', 1.5), (2, 'b', 2.5)")
+    spark.sql("INSERT INTO grec.t VALUES (3, 'c', 3.5)")
+    val want = Seq((1, "a", 1.5), (2, "b", 2.5), (3, "c", 3.5))
+    def rows(df: org.apache.spark.sql.DataFrame) = {
+      assert(df.columns.toSeq == Seq("id", "name", "price"), df.schema)
+      df.as[(Int, String, Double)].collect().sorted.toSeq
+    }
+    assert(rows(spark.sql("SELECT * FROM grec.t")) == want)
+    assert(rows(spark.sql("SELECT * FROM grec.t VERSION AS OF 1")) ==
+      want.take(2))
+    assert(rows(ManifestTable.read(spark, dir)) == want)
+    assert(rows(ManifestTable.read(spark, dir, Some(1L))) == want.take(2))
+    assert(rows(ManifestTable.readPrunedTyped(spark, dir,
+      Seq(("id", 2, 3)), None)._1) == want.drop(1))
+    spark.sql("DROP TABLE grec.t")
+    // an idempotence tag the dropped table published (and a retry
+    // looked up) does not swallow the re-created table's commit
+    val tagged = Files.createTempDirectory("graft-retag").toString
+    ManifestTable.commitTagged(spark.range(0L, 3L).toDF("k"), tagged,
+      append = true, Some("batch-0"))
+    assert(ManifestTable.commitTagged(spark.range(0L, 3L).toDF("k"),
+      tagged, append = true, Some("batch-0")) == 1L)
+    scala.util.Using.resource(Files.walk(java.nio.file.Paths.get(tagged))) {
+      st => st.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => Files.delete(p))
+    }
+    ManifestTable.commit(spark.range(5L, 7L).toDF("k"), tagged,
+      append = true)
+    assert(ManifestTable.commitTagged(spark.range(7L, 9L).toDF("k"),
+      tagged, append = true, Some("batch-0")) == 2L)
+    assert(ManifestTable.read(spark, tagged).as[Long].collect().sorted
+      .toSeq == Seq(5L, 6L, 7L, 8L))
   }
 
   test("SQL MERGE INTO / UPDATE: group-based copy-on-write through " +
@@ -2690,7 +2749,7 @@ class PipelineSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("only ADD COLUMN"), e.getMessage)
     // and the Scala read surface agrees with the SQL one
-    assert(ManifestTable.read(spark, s"$root/$t", mergeSchema = true)
+    assert(ManifestTable.read(spark, s"$root/$t")
       .count() == 4L)
   }
 
@@ -2783,7 +2842,9 @@ class PipelineSpec extends SparkSpec {
     assert(snap.pvals.values.forall(_.nonEmpty),
       "every file carries its #pval line")
     val df = spark.sql(s"SELECT * FROM gpart.$t")
-    assert(df.rdd.getNumPartitions == 6)
+    assert(ManifestScanFiles(df).size == 6)
+    assert(unpacked(spark.sql(s"SELECT * FROM gpart.$t")
+      .rdd.getNumPartitions) == 6)
     // partition Eq prunes to the 2 'a' files
     val eq = spark.sql(s"SELECT * FROM gpart.$t WHERE cat = 'a'")
     assert(eq.rdd.getNumPartitions == 2, eq.rdd.getNumPartitions)
@@ -2791,7 +2852,9 @@ class PipelineSpec extends SparkSpec {
     // IN prunes to 4 files
     val in = spark.sql(
       s"SELECT * FROM gpart.$t WHERE cat IN ('a', 'c')")
-    assert(in.rdd.getNumPartitions == 4, in.rdd.getNumPartitions)
+    assert(ManifestScanFiles(in).size == 4, ManifestScanFiles(in))
+    assert(unpacked(spark.sql(s"SELECT * FROM gpart.$t WHERE cat IN " +
+      "('a', 'c')").rdd.getNumPartitions) == 4)
     assert(in.count() == 200L)
     // zone stats prune WITHIN partitions: k is implicitly zoned?
     // no statsColumns on the SQL INSERT path — but partition + a
@@ -3248,17 +3311,22 @@ class PipelineSpec extends SparkSpec {
       limit.foreach(b.pushLimit)
       b.build().asInstanceOf[org.apache.spark.sql.connector.read.Batch]
     }
-    // LIMIT 10 ≤ one file's 25 counted rows → ONE InputPartition
-    assert(scanOf(Some(10), Array.empty)
-      .planInputPartitions().length == 1)
+    def filesOf(b: org.apache.spark.sql.connector.read.Batch) =
+      ManifestScanFiles.of(b.planInputPartitions().toSeq).size
+    def partsOf(b: org.apache.spark.sql.connector.read.Batch) =
+      unpacked(b.planInputPartitions().length)
+    // LIMIT 10 ≤ one file's 25 counted rows → ONE file
+    assert(filesOf(scanOf(Some(10), Array.empty)) == 1)
+    assert(partsOf(scanOf(Some(10), Array.empty)) == 1)
     // LIMIT 60 needs three 25-row files
-    assert(scanOf(Some(60), Array.empty)
-      .planInputPartitions().length == 3)
-    // a residual filter disables the trim (later files may hold the
+    assert(filesOf(scanOf(Some(60), Array.empty)) == 3)
+    assert(partsOf(scanOf(Some(60), Array.empty)) == 3)
+    // a pushed row filter disables the trim (later files may hold the
     // matching rows)
-    assert(scanOf(Some(1), Array(
-        org.apache.spark.sql.sources.GreaterThanOrEqual("k", 90L)))
-      .planInputPartitions().length == 1) // zone-pruned, not trimmed
+    val ge90 = Array[org.apache.spark.sql.sources.Filter](
+      org.apache.spark.sql.sources.GreaterThanOrEqual("k", 90L))
+    assert(filesOf(scanOf(Some(1), ge90)) == 1) // zone-pruned, not trimmed
+    assert(partsOf(scanOf(Some(1), ge90)) == 1)
     // end-to-end: values exact through the planner
     assert(df.limit(10).collect().length == 10)
     assert(spark.read.format("graft-manifest").option("path", dir)
@@ -4326,6 +4394,9 @@ class PipelineSpec extends SparkSpec {
       .files.map(f => java.nio.file.Paths.get(t, f).toString)
     def inferred(t: String, v: Long): StructType =
       spark.read.parquet(filesOf(t, v): _*).schema
+    def union(t: String, v: Long): StructType =
+      spark.read.option("mergeSchema", "true")
+        .parquet(filesOf(t, v): _*).schema
     tables.foreach { t =>
       val (frames, jobs) = jobsOf(Seq(
         "read" -> ManifestTable.read(spark, t),
@@ -4337,10 +4408,12 @@ class PipelineSpec extends SparkSpec {
         "readChanges empty" ->
           ManifestTable.readChanges(spark, t, 2L, Some(2L))._1))
       assert(jobs == 0, s"$t: building the reads started $jobs jobs")
-      val want = Map("read" -> inferred(t, 2L),
-        "read v1" -> inferred(t, 1L),
-        "readPruned" -> inferred(t, 2L),
-        "readPrunedTyped" -> inferred(t, 2L),
+      // read and readPruned* return the snapshot's footer union;
+      // readChanges keeps the first-file inference
+      val want = Map("read" -> union(t, 2L),
+        "read v1" -> union(t, 1L),
+        "readPruned" -> union(t, 2L),
+        "readPrunedTyped" -> union(t, 2L),
         "readChanges" -> spark.read.parquet(filesOf(t, 2L).last).schema,
         "readChanges empty" -> inferred(t, 2L))
       frames.foreach { case (name, df) =>
@@ -4350,15 +4423,13 @@ class PipelineSpec extends SparkSpec {
       assert(frames.toMap.apply("read").count() ==
         spark.read.parquet(filesOf(t, 2L): _*).count())
       assert(frames.toMap.apply("readChanges empty").count() == 0L)
-      val union = spark.read.option("mergeSchema", "true")
-        .parquet(filesOf(t, 2L): _*).schema
-      assert(ManifestTable.read(spark, t, mergeSchema = true).schema ==
-        union, t)
+      assert(ManifestTable.read(spark, t).schema == union(t, 2L), t)
     }
-    // each evolved table read its schema from the smaller path
+    // each evolved table reads the evolved column wherever it sits;
+    // time travel reads the older snapshot's own union
     assert(ManifestTable.read(spark, tables(0)).columns.contains("extra"))
-    assert(!ManifestTable.read(spark, tables(1)).columns.contains("extra"))
-    assert(ManifestTable.read(spark, tables(1), mergeSchema = true)
+    assert(ManifestTable.read(spark, tables(1)).columns.contains("extra"))
+    assert(!ManifestTable.read(spark, tables(1), Some(1L))
       .columns.contains("extra"))
     assert(ManifestTable.read(spark, tables(2)).schema("ts").dataType ==
       org.apache.spark.sql.types.TimestampType)
@@ -4440,6 +4511,162 @@ class PipelineSpec extends SparkSpec {
     assert(ManifestTable.read(spark, table).select("k", "v")
       .as[(Long, String)].collect().toSet == model.toSet)
     assert(antiJoined(Long.MinValue, Long.MaxValue) == model.toSet)
+  }
+
+  test("a pruned read is one manifest scan: new Long, date, timestamp " +
+      "and string bounds compile nothing, no Filter sits above the " +
+      "scan, scanned counts the files it plans, and a seeded version " +
+      "builds its reads without opening a footer") {
+    import graft.sources.ManifestTable
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import java.time.{Instant, LocalDate}
+    def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val t = Files.createTempDirectory("graft-pruned-scan").toString
+    // 4 range-sliced files over every zone kind, then a DV
+    ManifestTable.commitWithStats(spark.range(0L, 400L, 1L, 4).select(
+        $"id".as("k"),
+        date_add(lit(LocalDate.ofEpochDay(19000L)), $"id".cast("int"))
+          .as("d"),
+        timestamp_seconds($"id" + 1700000000L).as("ts"),
+        format_string("s%04d", $"id").as("s")),
+      t, append = false, Seq("k", "d", "ts", "s"), None)
+    ManifestTable.deleteRangeDv(spark, t, "k", 150L, 152L,
+      dvMaxFraction = 0.5)
+    def day(i: Long) = LocalDate.ofEpochDay(19000L + i)
+    def sec(i: Long) = Instant.ofEpochSecond(1700000000L + i)
+    def str(i: Long) = f"s$i%04d"
+    def filters(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.collect {
+        case f: org.apache.spark.sql.execution.FilterExec => f }
+    def read(preds: Seq[(String, Any, Any)]) =
+      ManifestTable.readPrunedTyped(spark, t, preds, None)
+    // per bound kind: a first read compiles its plan; a second with
+    // new bounds compiles nothing, collecting or counting
+    val cases: Seq[(Long, Long) => Seq[(String, Any, Any)]] = Seq(
+      (lo, hi) => Seq(("k", lo, hi)),
+      (lo, hi) => Seq(("d", day(lo), day(hi))),
+      (lo, hi) => Seq(("ts", sec(lo), sec(hi))),
+      (lo, hi) => Seq(("s", str(lo), str(hi))))
+    cases.foreach { bounds =>
+      Seq((140L, 160L), (260L, 262L)).zipWithIndex.foreach {
+        case ((lo, hi), i) =>
+          val c0 = compiles()
+          val (df, files, scanned) = read(bounds(lo, hi))
+          val rows = df.select("k").as[Long].collect().sorted.toSeq
+          assert(rows == (lo to hi).filterNot(k => k >= 150L && k <= 152L),
+            bounds(lo, hi))
+          assert(df.count() == rows.size)
+          assert(i == 0 || compiles() == c0,
+            s"${bounds(lo, hi)} compiled ${compiles() - c0} classes")
+          assert(filters(df).isEmpty, df.queryExecution.executedPlan)
+          assert(files == 4 && scanned == ManifestScanFiles(df).size &&
+            scanned < files, (files, scanned, ManifestScanFiles(df)))
+      }
+    }
+    // the Long entry point: a second point read compiles nothing
+    def point(k: Long) = {
+      val (df, _, scanned) = ManifestTable.readPruned(spark, t, "k", k, k)
+      (df.select("s").as[String].collect().toSeq, scanned,
+        ManifestScanFiles(df).size)
+    }
+    assert(point(222L) == ((Seq("s0222"), 1, 1)))
+    val c0 = compiles()
+    val (pointRead, pointJobs) = jobsOf(point(333L))
+    assert(pointRead == ((Seq("s0333"), 1, 1)))
+    assert(pointJobs == 1, s"a point read started $pointJobs jobs")
+    assert(compiles() == c0, s"${compiles() - c0} classes compiled")
+    // a MERGE seeds its version's schema: every read of that version
+    // plans under the seeded instance, so none unions the footers
+    val (v, _, _, _) = ManifestTable.mergeByKeyDv(spark, t,
+      Seq((5L, day(5L), java.sql.Timestamp.from(sec(5L)), "new"))
+        .toDF("k", "d", "ts", "s"), "k", dvMaxFraction = 0.5)
+    val seeded = ManifestTable.cachedSchema(t, v)
+    assert(seeded.isDefined)
+    def tableSchema(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collectFirst {
+        case r: org.apache.spark.sql.execution.datasources.v2
+            .DataSourceV2Relation => r.table.schema()
+      }
+    val built = Seq(ManifestTable.read(spark, t),
+      ManifestTable.readPruned(spark, t, "k", 5L, 5L)._1,
+      spark.read.format("graft-manifest").option("path", t).load())
+    built.foreach(df => assert(tableSchema(df).exists(_ eq seeded.get),
+      df.queryExecution.analyzed))
+    assert(built(1).select("s").as[String].collect().toSeq == Seq("new"))
+  }
+
+  test("an append seeds its version's schema: the first read of an " +
+      "appended version merges the carried union with one staged " +
+      "footer, across unread appends and an added column") {
+    import graft.sources.ManifestTable
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val t = Files.createTempDirectory("graft-append-seed").toString
+    def files() = ManifestTable.snapshotFor(t, None).files
+    ManifestTable.commit(spark.range(0L, 10L, 1L, 2).toDF("k"), t,
+      append = false)
+    assert(ManifestTable.read(spark, t).columns.toSeq == Seq("k"))
+    val first = files()
+    ManifestTable.commit(spark.range(10L, 20L, 1L, 2).toDF("k"), t,
+      append = true)
+    val second = files().diff(first)
+    ManifestTable.commit(spark.range(20L, 30L, 1L, 2)
+      .select($"id".as("k"), ($"id" * 2L).as("x")), t, append = true)
+    // the first two commits' footers are no longer needed: unreadable
+    (first ++ second).foreach(f => Files.write(
+      java.nio.file.Paths.get(t, f), Array[Byte](1, 2, 3)))
+    assert(ManifestTable.read(spark, t).schema == StructType(Seq(
+      StructField("k", LongType), StructField("x", LongType))))
+    assert(ManifestTable.cachedSchema(t, 3L).isDefined)
+  }
+
+  test("a many-file read plans through the manifest scan: building " +
+      "read and readPruned of 600- and 10,000-file tables starts no " +
+      "job, and the 600-file read packs like spark.read.parquet and " +
+      "returns its rows with and without DVs") {
+    import graft.sources.ManifestTable
+    val t = Files.createTempDirectory("graft-600").toString
+    ManifestTable.commitWithStats(spark.range(0L, 24000L, 1L, 600)
+      .select($"id".as("k"), ($"id" % 7L).as("v")), t, append = false, "k")
+    def paths(table: String) = ManifestTable.snapshotFor(table, None).files
+      .map(f => java.nio.file.Paths.get(table, f).toString)
+    assert(paths(t).size == 600)
+    val (frames, jobs) = jobsOf(Seq(ManifestTable.read(spark, t),
+      ManifestTable.readPruned(spark, t, "k", 100L, 5000L)._1))
+    assert(jobs == 0, s"building the 600-file reads started $jobs jobs")
+    val parquet = spark.read.parquet(paths(t): _*)
+    assert(frames.head.rdd.getNumPartitions ==
+      parquet.rdd.getNumPartitions)
+    assert(frames.head.rdd.getNumPartitions < 600)
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.select("k", "v").as[(Long, Long)].collect().sorted.toSeq
+    assert(sorted(frames.head) == sorted(parquet))
+    assert(sorted(frames(1)) == sorted(parquet.filter($"k".between(100L,
+      5000L))))
+    // DVs on 12 files: the packed read masks each file's own rows
+    ManifestTable.deleteRangeDv(spark, t, "k", 400L, 880L,
+      dvMaxFraction = 1.0)
+    val dvd = ManifestTable.snapshotFor(t, None).dvs.count(_._2.nonEmpty)
+    assert(dvd >= 12, dvd)
+    assert(sorted(ManifestTable.read(spark, t)) ==
+      sorted(parquet.filter(!$"k".between(400L, 880L))))
+    // 10,000 files: one small data file hard-linked under 10,000 names
+    // and a manifest that lists the links
+    val big = Files.createTempDirectory("graft-10k").toString
+    val src = java.nio.file.Paths.get(paths(t).head)
+    val links = (0 until 10000).map { i =>
+      val dir = java.nio.file.Paths.get(big, "data", s"l${i / 1000}")
+      Files.createDirectories(dir)
+      Files.createLink(dir.resolve(s"f$i.parquet"), src)
+      s"data/l${i / 1000}/f$i.parquet"
+    }
+    Files.createDirectories(java.nio.file.Paths.get(big, "_manifests"))
+    Files.write(java.nio.file.Paths.get(big, "_manifests", "v1"),
+      links.mkString("", "\n", "\n").getBytes("UTF-8"))
+    val (bigFrames, bigJobs) = jobsOf(Seq(ManifestTable.read(spark, big),
+      ManifestTable.readPruned(spark, big, "k", 0L, 10L)._1))
+    assert(bigJobs == 0,
+      s"building the 10,000-file reads started $bigJobs jobs")
+    assert(bigFrames.forall(_.columns.toSeq == Seq("k", "v")))
   }
 
   test("a graft-manifest write of a non-flat frame is refused while " +

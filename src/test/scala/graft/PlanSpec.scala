@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.ManifestScanFiles
 import org.apache.spark.sql.DataFrame
 
 /** Plan-regression specs: assert the PHYSICAL plan shapes the engine
@@ -62,7 +63,16 @@ class PlanSpec extends SparkSpec {
       plan.contains("files=1"),
       s"pruned scan must plan ONE surviving InputPartition:\n$plan")
     assert(filtered.rdd.getNumPartitions == 1)
-    assert(df.rdd.getNumPartitions == 3)
+    // one InputPartition per file where Spark's rule packs none
+    assert(unpacked(spark.read.format("graft-manifest")
+      .option("path", table).load().rdd.getNumPartitions) == 3)
+    // the 3 files pack by Spark's own rule: as many partitions as
+    // spark.read.parquet plans for them
+    assert(ManifestScanFiles(df).size == 3)
+    assert(df.rdd.getNumPartitions == spark.read.parquet(
+      ManifestTable.snapshotFor(table, None).files
+        .map(f => java.nio.file.Paths.get(table, f).toString): _*)
+      .rdd.getNumPartitions)
     val countPlan = df.groupBy().count()
       .queryExecution.executedPlan.toString
     assert(countPlan.contains("metadata agg agg_0=120"),
@@ -1198,9 +1208,9 @@ class PlanSpec extends SparkSpec {
     }.toSet
     assert(tsKinds == Set("INT96", "INT64"), tsKinds)
     assertSame(spark.read.option("mergeSchema", "true").parquet(cdcOut),
-      ManifestTable.read(spark, dir, Some(2L), mergeSchema = true))
+      ManifestTable.read(spark, dir, Some(2L)))
 
-    val want = ManifestTable.read(spark, dir, mergeSchema = true)
+    val want = ManifestTable.read(spark, dir)
     assert(want.schema("price").dataType == DecimalType(12, 2) &&
       want.schema("b").dataType == ByteType &&
       want.schema("h").dataType == ShortType)
@@ -1236,7 +1246,7 @@ class PlanSpec extends SparkSpec {
     // the replacement write
     val upd = spark.sql(s"UPDATE g_par.$t SET x = x + 1 WHERE l < 100")
     assertColumnar(upd.queryExecution.executedPlan)
-    val updated = ManifestTable.read(spark, dir, mergeSchema = true)
+    val updated = ManifestTable.read(spark, dir)
     assertSame(updated, want.withColumn("x",
       when(col("l") < 100L, col("x") + 1).otherwise(col("x"))))
     assertSame(load(), updated)

@@ -915,6 +915,118 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("in-reader filter law: random exact predicates over DV'd, split " +
+      "and packed partitions equal Spark's own filter over the files " +
+      "minus the DV rows, and a LIMIT over a filtered read keeps only " +
+      "matching rows") {
+    import graft.sources.{ManifestFilePartition, ManifestPackedPartition,
+      ManifestTable}
+    import java.time.{Instant, LocalDate}
+    import org.apache.spark.sql.Column
+    val table = java.nio.file.Files
+      .createTempDirectory("graft-filter-law").toString
+    val rnd = new scala.util.Random(7L)
+    def opt[A](a: A): Option[A] = if (rnd.nextInt(8) == 0) None else Some(a)
+    val extremes = Seq(Long.MinValue, Long.MaxValue, -1L, 0L, 1L)
+    var id = 0L
+    def batch(n: Int) = (0 until n).map { _ =>
+      id += 1
+      (id,
+        opt(if (rnd.nextInt(40) == 0) extremes(rnd.nextInt(extremes.size))
+          else rnd.nextInt(400) - 200L),
+        opt(rnd.nextInt(100) - 50),
+        opt(LocalDate.ofEpochDay(18000L + rnd.nextInt(60))),
+        opt(Instant.ofEpochSecond(1600000000L + rnd.nextInt(1000),
+          rnd.nextInt(3) * 1000L)),
+        opt(Seq("", "a", "ab", "b", "\u00e9", "z", "zz")(rnd.nextInt(7))))
+    }.toDF("id", "k", "i", "d", "ts", "s")
+    for (_ <- 0 until 5)
+      ManifestTable.commitWithStats(batch(300).coalesce(1), table,
+        append = true, Seq("k", "s"), None)
+    // one file of many small row groups, which a small splitBytes
+    // splits into ranges
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val prev = hconf.get("parquet.block.size")
+    try {
+      hconf.set("parquet.block.size", "8192")
+      hconf.set("parquet.page.size", "2048")
+      ManifestTable.commitWithStats(batch(3000).coalesce(1), table,
+        append = true, Seq("k", "s"), None)
+    } finally {
+      if (prev == null) hconf.unset("parquet.block.size")
+      else hconf.set("parquet.block.size", prev)
+      hconf.unset("parquet.page.size")
+    }
+    ManifestTable.deleteRangeDv(spark, table, "k", -20L, 20L,
+      dvMaxFraction = 0.5)
+    ManifestTable.deleteRangeDv(spark, table, "i", 10L, 12L,
+      dvMaxFraction = 0.5)
+    val snap = ManifestTable.snapshotFor(table, None)
+    assert(snap.dvs.values.count(_.nonEmpty) >= 2, snap.dvs.keys)
+    // the reference: Spark's own scan of the files, minus the DV rows
+    val dead = snap.dvs.toSeq.flatMap { case (f, ps) =>
+      ps.map(p => (f.split('/').last, p)) }.toDF("__b", "__p")
+    val reference = spark.read.parquet(snap.files
+        .map(f => java.nio.file.Paths.get(table, f).toString): _*)
+      .select(col("*"), col("_metadata.file_name").as("__b"),
+        col("_metadata.row_index").as("__p"))
+      .join(dead, Seq("__b", "__p"), "left_anti")
+      .drop("__b", "__p").cache()
+    val packed = ManifestTable.read(spark, table)
+    val split = spark.read.format("graft-manifest").option("path", table)
+      .option("splitBytes", "8192").load()
+    def partsOf(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.collect {
+        case b: org.apache.spark.sql.execution.datasources.v2
+            .BatchScanExec => b.inputPartitions
+      }.flatten
+    assert(partsOf(packed).exists(_.isInstanceOf[ManifestPackedPartition]))
+    assert(partsOf(split).count {
+      case p: ManifestFilePartition => p.start > 0L
+      case _ => false
+    } > 1)
+    val values: Map[String, Seq[Any]] = Map(
+      "k" -> Seq(Long.MinValue, Long.MaxValue, -200L, -1L, 0L, 5L, 199L,
+        500L),
+      "i" -> Seq(-51, -50, 0, 7, 11, 49, 50),
+      "d" -> Seq(17999L, 18000L, 18030L, 18059L, 18060L)
+        .map(LocalDate.ofEpochDay),
+      "ts" -> Seq(Instant.ofEpochSecond(1600000000L),
+        Instant.ofEpochSecond(1600000500L, 1000L),
+        Instant.ofEpochSecond(1600000999L, 2000L),
+        Instant.ofEpochSecond(1600001000L)),
+      "s" -> Seq("", "a", "aa", "b", "\u00e9", "z", "zzz"))
+    val leaf: Gen[Column] = for {
+      c <- Gen.oneOf(values.keys.toSeq.sorted)
+      v <- Gen.oneOf(values(c))
+      vs <- Gen.someOf(values(c))
+      op <- Gen.oneOf("=", "<", "<=", ">", ">=", "in", "notnull")
+    } yield op match {
+      case "=" => col(c) === lit(v)
+      case "<" => col(c) < lit(v)
+      case "<=" => col(c) <= lit(v)
+      case ">" => col(c) > lit(v)
+      case ">=" => col(c) >= lit(v)
+      case "in" => col(c).isin(vs.toSeq: _*)
+      case _ => col(c).isNotNull
+    }
+    val preds = samples(leaf, 24) ++
+      samples(Gen.zip(leaf, leaf).map { case (a, b) => a && b }, 12) ++
+      Seq(col("k") > 5L && col("k") < 0L, // an empty range
+        col("k") >= Long.MinValue && col("k") <= Long.MaxValue)
+    preds.foreach { p =>
+      val want = reference.filter(p).select("id").as[Long].collect().toSet
+      for (df <- Seq(packed, split))
+        assert(df.filter(p).select("id").as[Long].collect().toSet == want,
+          s"$p")
+      // the limit proof only counts rows once no filter can drop them
+      val got = packed.filter(p).limit(7).select("id").as[Long].collect()
+      assert(got.length == math.min(7, want.size) && got.forall(want),
+        s"LIMIT 7 over $p: ${got.toSeq}")
+    }
+    reference.unpersist()
+  }
+
   test("binary quantization law: codes match the scalar MSB-first pack " +
       "and hamming equals the sign-disagreement count") {
     import graft.operators.Similarity

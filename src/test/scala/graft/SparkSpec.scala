@@ -36,4 +36,14 @@ abstract class SparkSpec extends AnyFunSuite {
 
   def assertSameRows(a: DataFrame, b: DataFrame): Unit =
     assert(canon(a) == canon(b))
+
+  /** `body` with Spark's per-file open cost raised to its split size,
+    * so a file scan planned inside packs no two files into one
+    * partition: one InputPartition per whole file. */
+  def unpacked[T](body: => T): T = {
+    val k = "spark.sql.files.openCostInBytes"
+    val prev = spark.conf.getOption(k)
+    spark.conf.set(k, spark.conf.get("spark.sql.files.maxPartitionBytes"))
+    try body finally prev.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  }
 }
