@@ -1751,9 +1751,9 @@ object Approx {
     // LAKEHOUSE MERGE-ON-READ: deletion-vector DELETE (L20 — Delta
     // DVs / Iceberg v2 position deletes): a 5-key purge against a
     // 4-file snapshot commits ZERO rewritten data files — the dead
-    // positions ride a #dv= manifest line and readers anti-join them
-    // out. Values equal the NOT-BETWEEN oracle, the metadata row
-    // count stays exact (live = physical − |dv|), and the pruned
+    // positions ride a #dv= manifest line and readers skip them.
+    // Values equal the NOT-BETWEEN oracle, the metadata row count
+    // stays exact (live = physical − |dv|), and the pruned
     // read both skips on zones and masks the vector. This is the
     // write-amplification fix for CDC at 100 TB: copy-on-write
     // rewrites a whole zone-overlapping file per touched key.

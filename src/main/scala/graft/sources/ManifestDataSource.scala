@@ -42,9 +42,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    zero data I/O, through the planner's aggregate-pushdown seam;
   *    declined (normal scan) whenever any live file lacks a count;
   *  - **deletion vectors apply**: each InputPartition carries its
-  *    file's dead positions and the reader skips them by ordinal —
-  *    a DSv2 read of a DV'd snapshot is value-identical to
-  *    [[ManifestTable.read]];
+  *    file's dead positions and the reader skips them by ordinal;
   *  - **SQL DELETE**: the table implements `SupportsDelete`, so
   *    `DELETE FROM <catalog>.<table> WHERE k BETWEEN a AND b` plans
   *    through Catalyst onto [[ManifestTable.deleteRangeDv]] — a
@@ -98,17 +96,20 @@ import org.apache.spark.unsafe.types.UTF8String
   *    counts — CBO join cardinality and broadcast decisions run on
   *    manifest arithmetic.
   *
-  * One decoder serves every file read: [[ManifestColumnarReader]],
+  * It is the one reader of manifest tables: [[ManifestTable.read]],
+  * `readPruned*` and `readChanges`, and every DELETE, MERGE and
+  * OPTIMIZE scan plan through it, over a snapshot pinned for the scan
+  * (narrowed to the operation's files where it reads a subset), and
+  * key their deletion vectors on its `_graft_file`/`_graft_pos` row
+  * ids. One decoder serves every file read: [[ManifestColumnarReader]],
   * with the projection pushed into the requested schema — column
   * pruning costs nothing at the I/O layer. Reads serve every column
   * type Spark's vectorized reader decodes, arrays, maps and structs
   * included; writes stay flat. Schema is the by-name union of the
-  * LIVE files' footers,
-  * each converted exactly as Spark's parquet inference converts it
-  * (decimals, byte/short, INT96 and MICROS timestamps keep their
-  * types — a DSv2 read returns what [[ManifestTable.read]] returns),
-  * under the S16 read-side evolution contract: files missing a late
-  * column read it as NULL.
+  * LIVE files' footers, each converted exactly as Spark's parquet
+  * inference converts it (decimals, byte/short, INT96 and MICROS
+  * timestamps keep their types), under the S16 read-side evolution
+  * contract: files missing a late column read it as NULL.
   */
 class ManifestTableProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-manifest"
@@ -223,9 +224,15 @@ object ManifestV2 {
 
   /** Resolve the snapshot ONCE — callers hold the result so every
     * subsequent planning/execution step sees the same version. */
-  def resolvePinned(opts: ManifestV2Options): Pinned = {
-    val snap = ManifestTable.snapshotFor(opts.path, opts.version)
-    val root = java.nio.file.Paths.get(opts.path)
+  def resolvePinned(opts: ManifestV2Options): Pinned =
+    pinnedOf(opts.path, ManifestTable.snapshotFor(opts.path, opts.version))
+
+  /** `snap` of the table at `path` as the [[Pinned]] a scan plans from:
+    * one slice per file `snap` lists, in order. A snapshot narrowed to
+    * some of its files scans exactly those. */
+  private[sources] def pinnedOf(path: String,
+      snap: ManifestTable.Snapshot): Pinned = {
+    val root = java.nio.file.Paths.get(path)
     val slices = snap.files.map { f =>
       FileSlice(root.resolve(f).toString,
         snap.dvs.getOrElse(f, Seq.empty).toArray,
@@ -303,11 +310,18 @@ object ManifestV2 {
     * manifest read serves the frame and whatever its caller counts
     * from `pinned`. Building it starts no Spark job; filters on the
     * frame push into the scan, whose reader applies the exact ones
-    * ([[ManifestScanBuilder.pushFilters]]). */
+    * ([[ManifestScanBuilder.pushFilters]]). The frame reads under the
+    * union of `pinned`'s files, or under `schema` where given: a
+    * snapshot narrowed to some files reads under the whole one's. */
   def frameOf(spark: org.apache.spark.sql.SparkSession, path: String,
       pinned: Pinned): org.apache.spark.sql.DataFrame =
+    frameOf(spark, path, pinned, schemaOf(path, pinned))
+
+  private[sources] def frameOf(spark: org.apache.spark.sql.SparkSession,
+      path: String, pinned: Pinned,
+      schema: StructType): org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.GraftDatasets.ofTable(spark,
-      new ManifestV2Table(schemaOf(path, pinned),
+      new ManifestV2Table(schema,
         ManifestV2Options(path, Some(pinned.version)),
         declaredPartCols = Some(partitionColsOf(pinned)),
         pinned = Some(pinned)))
@@ -2146,8 +2160,7 @@ private[sources] object ManifestParquet {
   * .format("graft-manifest").mode("append")` — the S17e pattern
   * applied to the lakehouse layer): each task stages ONE parquet
   * file under the job's writer-unique `data/w-<nonce>/` prefix —
-  * with the nonce ALSO in the file basename, because deletion-vector
-  * masking and compaction key on snapshot-unique basenames — and
+  * with the nonce ALSO in the file basename — and
   * reports the path and its manifest metadata in its commit
   * message; the job-level `BatchWrite.commit` then runs exactly ONE
   * optimistic manifest publish — the whole distributed write is
@@ -2548,10 +2561,9 @@ final case class ManifestWriterFactory(schema: StructType,
     * (constant columns run-length-encode). */
   private final class OneFile(rel: String,
       pvals: Seq[(String, String)]) {
-    // nonce IN the basename: basenames must be snapshot-unique
-    // (DV masking / compaction key on them), and taskIds restart
-    // per application — two appends from different applications
-    // must never stage the same basename
+    // nonce IN the basename: taskIds restart per application, and
+    // two appends from different applications never stage the same
+    // basename
     private val abs = java.nio.file.Paths.get(table).resolve(rel)
     private val msgType = ManifestParquet.messageTypeOf(schema)
     private val stats = new FileStats(schema, statsCols)

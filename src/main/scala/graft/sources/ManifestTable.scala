@@ -101,7 +101,7 @@ object ManifestTable {
   private val noSStats: SStats = Map.empty
 
   /** Per-file DELETION VECTOR: the sorted distinct 0-based row
-    * positions (parquet `_metadata.row_index`) deleted from the file
+    * positions (a scan's `_graft_pos`) deleted from the file
     * — the merge-on-read half of DML (Delta deletion vectors /
     * Iceberg v2 position deletes): a small DELETE or MERGE marks the
     * dead positions in the manifest instead of rewriting every
@@ -567,11 +567,11 @@ object ManifestTable {
     * schema. The union is read once per snapshot, on the driver
     * ([[snapshotSchema]], no Spark job), from the seed an append left
     * ([[appendSeeds]]), or seeded by the rewrite that made the version
-    * ([[publishReplace]]). [[read]],
-    * [[readPrunedTyped]], every `graft-manifest` scan
-    * ([[ManifestV2.schemaFor]]) and every MERGE, DELETE and compaction
-    * scan of the version use it, so none infers a schema while it
-    * plans. Keyed by [[schemaKey]]. */
+    * ([[publishReplace]]). Every scan of the version reads under it —
+    * [[read]], [[readPrunedTyped]], [[readChanges]], every
+    * `graft-manifest` scan ([[ManifestV2.schemaFor]]) and every DML
+    * and compaction scan ([[liveFrame]]), whichever files it reads —
+    * so none infers a schema while it plans. Keyed by [[schemaKey]]. */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long, String),
       org.apache.spark.sql.types.StructType]()
@@ -629,27 +629,6 @@ object ManifestTable {
           case None => files.map(footer)
         })
     })
-
-  /** The read schema Spark's own inference gives `files` without
-    * `mergeSchema`, computed on the driver with no Spark job. Spark
-    * sorts the leaves by qualified path and reads the first data
-    * file's footer (`ParquetUtils.splitFiles`, then
-    * `mergeSchemasInParallel` over that one file, which launches a
-    * job); this reads the same footer here and converts it with the
-    * same `readSchemaFromFooter` and a converter built from the same
-    * session settings, so the schema is exactly the inferred one
-    * while planning a read starts no job. */
-  private def footerSchema(spark: SparkSession, root: Path,
-      files: Seq[String]): org.apache.spark.sql.types.StructType = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    require(files.nonEmpty,
-      s"no data files under $root to read a schema from")
-    val hadoopConf = spark.sessionState.newHadoopConf()
-    val paths = files.map(f => new HPath(root.resolve(f).toString))
-    val fs = paths.head.getFileSystem(hadoopConf)
-    fileSchema(spark, hadoopConf, paths.map(fs.makeQualified)
-      .minBy(_.toString))
-  }
 
   /** The Spark schema of ONE data file: its footer (row groups
     * skipped) converted by `readSchemaFromFooter` with a converter
@@ -979,19 +958,11 @@ object ManifestTable {
     tracker.files.map { case (rel, st) => (s"data/$dir/$rel", st) }
   }
 
-  /** `written`'s files with their stats as [[FileMeta]] over `cols`.
-    * Deletion vectors and compaction key on basenames, so two of one
-    * stage's files sharing one fail loudly (writers stage UUID-named
-    * files: an invariant check). */
+  /** `written`'s files with their stats as [[FileMeta]] over `cols`. */
   private def metaOf(written: Seq[(String, FileStats)],
-      cols: Seq[String]): FileMeta = {
-    require(written.map(_._1.split('/').last).distinct.size ==
-        written.size,
-      s"basename collision across ${written.map(_._1)} — per-file " +
-        "metadata would be corrupted")
+      cols: Seq[String]): FileMeta =
     written.map { case (f, st) => st.meta(f, cols) }
       .foldLeft(FileMeta())(_ ++ _)
-  }
 
   /** Stage `df` under `data/<dir>` and return its data files with
     * their metadata — the one staging step every writer shares. `dir`
@@ -1047,72 +1018,34 @@ object ManifestTable {
     if (files.isEmpty) Seq.empty
     else files.map(f => cols(f).toSet).reduce(_ intersect _).toSeq.sorted
 
-  /** Scan `files` (paths relative to `root`) under an explicit read
-    * schema: planning the frame starts no footer-inference job. */
-  private def scanOf(spark: SparkSession, root: Path, files: Seq[String],
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.read.schema(schema)
-      .parquet(files.map(f => root.resolve(f).toString): _*)
+  /** A frame over `files` of snapshot `version` of `table`, whose
+    * manifest `m` the caller already parsed: the `graft-manifest` scan
+    * ([[ManifestV2.frameOf]]) of that snapshot narrowed to those files,
+    * each masked inside the reader by its deletion vector — `m`'s, or
+    * the one `dvs` gives it. The frame reads under the snapshot's
+    * cached union ([[snapshotSchema]]), whichever files it holds, so
+    * building it starts no Spark job; [[withRowIds]] selects each
+    * row's identity from the scan. */
+  private def liveFrame(spark: SparkSession, table: String, version: Long,
+      m: Manifest, files: Seq[String], dvs: Dvs = noDvs): DataFrame =
+    ManifestV2.frameOf(spark, table,
+      ManifestV2.pinnedOf(table, Snapshot(version, files, m.meta.stats,
+        m.meta.rows, m.meta.dvs ++ dvs, m.meta.sstats, m.meta.pvals,
+        m.meta.ndvs)),
+      snapshotSchema(spark, table, version, m.files))
 
-  /** Append the per-file identity columns every DV operation keys on:
-    * `__b` (file basename — staged part names carry a UUID per file, so
-    * basenames are snapshot-unique) and `__p` (the physical row
-    * position `_metadata.row_index`). Must be projected directly on
-    * the file-source relation (the hidden `_metadata` column does not
-    * survive joins); [[maskDvs]]' row filter reads both, inside the
-    * scan's own stage. */
-  private def withFilePos(df: DataFrame): DataFrame = {
+  /** `df`, a [[liveFrame]], with the scan's row-id columns `ids`
+    * appended: `_graft_file` (the row's manifest-relative data file)
+    * and `_graft_pos` (its physical position in that file, what a
+    * `#dv=` line records). Selected straight off the scan, before any
+    * filter or join; a table column of either name would shadow them,
+    * so it is refused. */
+  private def withRowIds(df: DataFrame, ids: String*): DataFrame = {
     import org.apache.spark.sql.functions.col
-    // _metadata.file_name IS the basename — the constant metadata
-    // field costs nothing per row, where a regexp_extract over
-    // file_path measured ~5x the whole DV mask's runtime (it ran
-    // per row on the scan side)
-    df.select(col("*"),
-      col("_metadata.file_name").as("__b"),
-      col("_metadata.row_index").as("__p"))
-  }
-
-  /** Drop a snapshot's deletion vectors from a frame carrying
-    * [[withFilePos]]'s (`__b`, `__p`) columns, restricted to `files`.
-    * No-op (same frame back) when none of the files carry a DV. The
-    * mask is a row filter evaluated in the scan's stage: one
-    * `SparkContext.broadcast` ships the DV'd files' sorted positions
-    * (manifest-metadata-sized; broadcasting starts no job), and a
-    * deterministic UDF binary-searches a row's position in its
-    * file's vector. The positions reach the generated code as a
-    * reference object, never as literals, so a read over a new DV
-    * set compiles nothing new; and unlike a broadcast anti-join
-    * there is no broadcast job and no stage boundary — at 100 TB the
-    * mask stays a per-row lookup on the scan, never a shuffle. */
-  private def maskDvs(spark: SparkSession, df: DataFrame, dvs: Dvs,
-      files: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, udf}
-    val relevant = files.flatMap(f => dvs.get(f).filter(_.nonEmpty)
-      .map(ps => f.split('/').last -> ps.toArray))
-    if (relevant.isEmpty) df
-    else {
-      val dead = spark.sparkContext.broadcast(relevant.toMap)
-      val live = udf((b: String, p: Long) => dead.value.get(b)
-        .forall(ps => java.util.Arrays.binarySearch(ps, p) < 0))
-      df.filter(live(col("__b"), col("__p")))
-    }
-  }
-
-  /** The LIVE rows of `files` under the snapshot's DVs, scanned under
-    * `schema`: [[withFilePos]] + [[maskDvs]] + drop the identity
-    * columns, or the plain scan when no file carries a DV. The
-    * change feed ([[readChanges]]), the delta commit's copy-on-write
-    * fallback and clustered OPTIMIZE read through here with their
-    * schema already known, so building the frame starts no Spark job.
-    * [[read]] and [[readPrunedTyped]] do not: they plan through the
-    * `graft-manifest` scan ([[ManifestV2.frameOf]]). */
-  private def readLive(spark: SparkSession, root: Path,
-      files: Seq[String], dvs: Dvs,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val raw = scanOf(spark, root, files, schema)
-    if (!files.exists(f => dvs.get(f).exists(_.nonEmpty))) raw
-    else maskDvs(spark, withFilePos(raw), dvs, files)
-      .drop("__b", "__p")
+    require(!df.columns.exists(Set("_graft_file", "_graft_pos")),
+      s"a table column named _graft_file or _graft_pos collides with " +
+        s"the scan's row ids: ${df.columns.toSeq}")
+    df.select(col("*") +: ids.map(col): _*)
   }
 
   /** Predicate-pruned snapshot read: plan the scan from the
@@ -1274,11 +1207,14 @@ object ManifestTable {
     * NON-maintenance versions or dedup downstream — the same caveat
     * Delta documents for change feeds across OPTIMIZE. Cost is
     * manifest-diff + a scan of only the ADDED files, never the
-    * snapshot. Returns (frame, files added). */
+    * snapshot: the `graft-manifest` scan of `toVersion` narrowed to
+    * them, read under `toVersion`'s schema union as [[read]] reads it
+    * ([[liveFrame]]). `toVersion`'s DVs apply to the added files too:
+    * a row both inserted and DV-deleted inside the window is not a
+    * change the consumer should see. Returns (frame, files added). */
   def readChanges(spark: SparkSession, table: String,
       sinceVersion: Long,
       toVersion: Option[Long] = None): (DataFrame, Int) = {
-    import org.apache.spark.sql.functions.lit
     val vs = versions(table)
     require(vs.nonEmpty, s"no published version in $table")
     val to = toVersion.getOrElse(vs.last)
@@ -1288,24 +1224,8 @@ object ManifestTable {
       s"sinceVersion $sinceVersion is after toVersion $to")
     val before = manifestOf(table, sinceVersion).files.toSet
     val toM = manifestOf(table, to)
-    val toFiles = toM.files
-    val added = toFiles.filterNot(before)
-    val root = Paths.get(table)
-    val frame =
-      if (added.nonEmpty)
-        // toVersion's DVs apply to the added files too: a row both
-        // inserted and DV-deleted inside the window is not a change
-        // the consumer should see
-        readLive(spark, root, added, toM.meta.dvs,
-          footerSchema(spark, root, added))
-      else {
-        require(toFiles.nonEmpty,
-          s"snapshot v$to of $table lists no data files — an empty " +
-            "diff has no schema to produce")
-        scanOf(spark, root, toFiles, footerSchema(spark, root, toFiles))
-          .filter(lit(false))
-      }
-    (frame, added.size)
+    val added = toM.files.filterNot(before)
+    (liveFrame(spark, table, to, toM, added), added.size)
   }
 
   /** Copy-on-write range DELETE — the DML half of the lakehouse
@@ -1352,12 +1272,12 @@ object ManifestTable {
     *
     * `dvMaxFraction = 0.0` is exactly classic [[deleteRange]]: pure
     * zone-level planning, no match scan, every candidate rewritten.
-    * Read-side cost of a DV: reads skip the file's dead positions in
-    * the columnar reader's live-row mapping, and DML scans look each
-    * row's position up in a broadcast vector ([[maskDvs]]), until the
-    * next [[compact]] of its group purges it. [[countRows]]
-    * stays exact (live = physical − |dv|); [[statsBounds]] degrades
-    * to None while DVs are live (exact-or-None).
+    * Read-side cost of a DV: every scan, DML and OPTIMIZE included,
+    * skips the file's dead positions in the columnar reader's live-row
+    * mapping ([[liveFrame]]), until the next [[compact]] of its group
+    * purges it. [[countRows]] stays exact (live = physical − |dv|);
+    * [[statsBounds]] degrades to None while DVs are live
+    * (exact-or-None).
     *
     * Concurrency: the [[compact]]/CoW conflict rules, PLUS abort if
     * a rival DV landed on any of our inputs between plan and publish
@@ -1389,7 +1309,6 @@ object ManifestTable {
     }
     if (candidates.isEmpty)
       return (latest, 0, 0, m.files.size)
-    val root = Paths.get(table)
     // [lo, hi] is the column's ZONE ENCODING: integer values as-is,
     // DATE columns epoch days, TIMESTAMP columns epoch micros — the
     // same int64 the #stats= lines carry (and what the SQL DELETE
@@ -1408,29 +1327,23 @@ object ManifestTable {
       val e = encOf(df)
       e.isNotNull && e.between(lo, hi)
     }
-    // snapshot schema cached per version; explicit-schema scans skip
-    // the per-call mergeSchema footer-union job (and a candidate set
-    // predating an evolved column reads it as NULL instead of
-    // dropping it)
-    val tableSchema = snapshotSchema(spark, table, latest, m.files)
     def liveOf(files: Seq[String]): DataFrame =
-      maskDvs(spark, withFilePos(scanOf(spark, root, files, tableSchema)),
-        m.meta.dvs, files)
+      liveFrame(spark, table, latest, m, files)
     // DV vs rewrite, per candidate: one counting scan of the
     // candidates (dv mode only — CoW mode keeps the pure zone-level
     // plan and never pays a pre-scan)
     val (dvFiles, cowFiles) =
       if (dvMaxFraction <= 0.0) (Seq.empty[String], candidates)
       else {
-        val cand = liveOf(candidates)
-        val byBase = cand.groupBy(col("__b"))
+        val cand = withRowIds(liveOf(candidates), "_graft_file")
+        val byFile = cand.groupBy(col("_graft_file"))
           .agg(sum(when(matchPredOf(cand), 1L).otherwise(0L)).as("__m"),
             count(lit(1)).as("__n"))
           .collect().map(r => r.getString(0) ->
             (if (r.isNullAt(1)) 0L else r.getLong(1), r.getLong(2)))
           .toMap
         val split = candidates.flatMap { f =>
-          byBase.get(f.split('/').last) match {
+          byFile.get(f) match {
             case None | Some((0L, _)) => None // proven empty: carry
             case Some((mm, nn)) if mm <= dvMaxPositions.toLong &&
                 mm.toDouble <= dvMaxFraction * nn => Some((f, true))
@@ -1447,11 +1360,10 @@ object ManifestTable {
     val dvUpdates: Dvs =
       if (dvFiles.isEmpty) noDvs
       else {
-        val pathOf = dvFiles.map(f => f.split('/').last -> f).toMap
-        val dvSrc = liveOf(dvFiles)
+        val dvSrc = withRowIds(liveOf(dvFiles), "_graft_file", "_graft_pos")
         val hits = dvSrc.filter(matchPredOf(dvSrc))
-          .select(col("__b"), col("__p"))
-          .collect().map(r => (pathOf(r.getString(0)), r.getLong(1)))
+          .select(col("_graft_file"), col("_graft_pos"))
+          .collect().map(r => (r.getString(0), r.getLong(1)))
         hits.groupBy(_._1).view.mapValues { ps =>
           (m.meta.dvs.getOrElse(ps.head._1, Seq.empty) ++ ps.map(_._2))
             .distinct.sorted
@@ -1468,8 +1380,7 @@ object ManifestTable {
       if (cowFiles.isEmpty) (Seq.empty[String], FileMeta())
       else {
         val cowSrc = liveOf(cowFiles)
-        writeStaged(
-          cowSrc.filter(not(matchPredOf(cowSrc))).drop("__b", "__p"),
+        writeStaged(cowSrc.filter(not(matchPredOf(cowSrc))),
           table, s"d-$nonce", Some(colsInAll(cowFiles)(m.meta.zoneCols)))
       }
     // everything deleted: keep the snapshot readable (its schema
@@ -1479,8 +1390,7 @@ object ManifestTable {
       if (rewritten.nonEmpty || !m.files.forall(cowFiles.toSet))
         (rewritten, rewrittenMeta)
       else {
-        val (empty, _) = writeStaged(
-          scanOf(spark, root, cowFiles, tableSchema).limit(0).coalesce(1),
+        val (empty, _) = writeStaged(liveOf(cowFiles).limit(0).coalesce(1),
           table, s"d-$nonce-empty")
         (empty, FileMeta(rows = empty.map(_ -> 0L).toMap))
       }
@@ -1616,25 +1526,19 @@ object ManifestTable {
     val zoneless = m.files.toSet -- zonedFiles
     val candidates = m.files.filter(f =>
       hitFiles.contains(f) || zoneless.contains(f))
-    val root = Paths.get(table)
     val nonce = newNonce()
     // align the batch to the table schema (by name, loud on drift) —
-    // the snapshot's merged schema is cached per version and passed
-    // explicitly to every scan below, so the footer-union job runs
-    // at most once per snapshot instead of once per read site
+    // the snapshot's merged schema is cached per version, and every
+    // scan below reads under it
     val tableSchema = snapshotSchema(spark, table, latest, m.files)
     val tableCols = tableSchema.fieldNames.toSeq
     require(updates.columns.toSet == tableCols.toSet,
       s"updates schema ${updates.columns.toSeq} must match table " +
         s"columns $tableCols")
-    require(!tableCols.contains("__b") && !tableCols.contains("__p"),
-      s"mergeByKey's internal columns collide with table columns of " +
-        s"$table")
     val up = up0.select(tableCols.map(col): _*)
     val upKeys = up.select(col(keyCol)).distinct()
     def liveOf(files: Seq[String]): DataFrame =
-      maskDvs(spark, withFilePos(scanOf(spark, root, files, tableSchema)),
-        m.meta.dvs, files)
+      liveFrame(spark, table, latest, m, files)
     // DV vs rewrite, per candidate (dv mode only): ONE match scan
     // answers both the budget split and the DV position lists — the
     // matched live rows' (file, pos) pairs are collected once;
@@ -1651,20 +1555,20 @@ object ManifestTable {
       if (dvMaxFraction <= 0.0 || candidates.isEmpty)
         (Seq.empty[String], candidates, noDvs)
       else {
-        val pathOf = candidates.map(f => f.split('/').last -> f).toMap
-        val matched = liveOf(candidates)
-          .join(broadcast(upKeys), Seq(keyCol), "left_semi")
-          .select(col("__b"), col("__p"))
-          .collect().map(r => (pathOf(r.getString(0)), r.getLong(1)))
+        val matched =
+          withRowIds(liveOf(candidates), "_graft_file", "_graft_pos")
+            .join(broadcast(upKeys), Seq(keyCol), "left_semi")
+            .select(col("_graft_file"), col("_graft_pos"))
+            .collect().map(r => (r.getString(0), r.getLong(1)))
         val mCount: Map[String, Long] =
           matched.groupBy(_._1).view.mapValues(_.length.toLong).toMap
         val missing = candidates.filter(f =>
           mCount.getOrElse(f, 0L) > 0L && !m.meta.rows.contains(f))
         val scannedN: Map[String, Long] =
           if (missing.isEmpty) Map.empty
-          else liveOf(missing).groupBy(col("__b"))
-            .agg(count(lit(1)).as("__n")).collect()
-            .map(r => pathOf(r.getString(0)) -> r.getLong(1)).toMap
+          else withRowIds(liveOf(missing), "_graft_file")
+            .groupBy(col("_graft_file")).agg(count(lit(1)).as("__n"))
+            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
         def liveN(f: String): Long = scannedN.getOrElse(f,
           m.meta.rows(f) -
             m.meta.dvs.get(f).map(_.size.toLong).getOrElse(0L))
@@ -1701,9 +1605,7 @@ object ManifestTable {
     val (rewritten, rewrittenMeta, inserts) =
       if (cowFiles.isEmpty) (Seq.empty[String], FileMeta(), up)
       else {
-        val base = liveOf(cowFiles)
-          .select(tableCols.map(col): _*)
-          .localCheckpoint(eager = false)
+        val base = liveOf(cowFiles).localCheckpoint(eager = false)
         val baseKeys = base.select(col(keyCol)).distinct()
           .localCheckpoint(eager = false)
         toFree = Seq(base, baseKeys)
@@ -1790,7 +1692,7 @@ object ManifestTable {
       ndvs: Ndvs = noNdvs): (Long, Int, Int) = {
     require(dvMaxFraction >= 0.0 && dvMaxFraction <= 1.0,
       s"dvMaxFraction must be in [0, 1]: $dvMaxFraction")
-    val (_, m) = snapshotOf(table)
+    val (latest, m) = snapshotOf(table)
     deletes.keys.foreach(f => require(m.files.contains(f),
       s"delta commit deletes from $f, which is not live in $table"))
     // merged per-file vectors; split into keep-as-DV vs rewrite
@@ -1803,17 +1705,17 @@ object ManifestTable {
         .exists(n => all.size.toDouble > dvMaxFraction * n)
       !(overCap || overFrac)
     }
-    val root = Paths.get(table)
     val nonce = newNonce()
-    // CoW fallback: rewrite each over-budget file live-minus-DV —
-    // ONE staged file per input, keeping its partition tuple and
-    // re-recording its zone columns (or, stat-less, just its exact
-    // #nrows count) in the rewrite job itself
+    // CoW fallback: rewrite each over-budget file live-minus-DV, the
+    // merged vector masking in the reader and the snapshot's union as
+    // the schema (as every rewrite writes) — ONE staged file per
+    // input, keeping its partition tuple and re-recording its zone
+    // columns (or, stat-less, just its exact #nrows count) in the
+    // rewrite job itself
     val rewrites = rewrite.keys.toSeq.sorted.zipWithIndex.map {
       case (f, i) =>
         val (out, meta) = writeStaged(
-          readLive(spark, root, Seq(f), Map(f -> rewrite(f)),
-            footerSchema(spark, root, Seq(f))),
+          liveFrame(spark, table, latest, m, Seq(f), Map(f -> rewrite(f))),
           table, s"dx-$nonce-$i", Some(colsInAll(Seq(f))(m.meta.zoneCols)),
           files = 1)
         require(out.size == 1,
@@ -1858,9 +1760,9 @@ object ManifestTable {
     * Grouping runs DRIVER-SIDE over the manifest's file list — the
     * same manifest-sized metadata every commit already reads; the
     * data itself moves through ONE distributed job for ALL groups
-    * (inputs tagged with their group id by a broadcast
-    * basename→group lookup, clustered by group, written partitioned
-    * by group), so a nightly OPTIMIZE over thousands of groups never
+    * (inputs tagged with their group id by a broadcast lookup on the
+    * scan's `_graft_file`, clustered by group, written partitioned by
+    * group), so a nightly OPTIMIZE over thousands of groups never
     * serializes group-at-a-time on the driver. Groups that are
     * already one file are carried untouched (no write amplification
     * on compacted state — re-running compact is a no-op publish...
@@ -1909,27 +1811,26 @@ object ManifestTable {
       g.size == 1 && !g.exists(hasDv))
     if (multi.isEmpty) return (latest, files.size, files.size)
     val nonce = newNonce()
-    // ONE job rewrites every group: tag each input row with its
-    // group through a broadcast basename→group lookup on the scan's
-    // `_metadata.file_name` (staged part-file names carry a UUID per file,
-    // so basenames are unique; like the DV mask, the lookup ships as a
-    // broadcast variable — no broadcast job, no stage boundary),
-    // cluster by group so each group lands whole in one task, and
-    // write partitioned by group — N groups never become N sequential
-    // driver-looped jobs. The snapshot's cached merged schema keeps
-    // the union-schema evolution contract (groups spanning a
-    // schema-evolution boundary rewrite under it, late columns NULL)
-    // without re-running the footer-union job per OPTIMIZE.
+    // ONE job rewrites every group: tag each input row with its group
+    // through a lookup on the scan's `_graft_file` (the manifest path,
+    // shipped as a broadcast variable — no broadcast job, no stage
+    // boundary), cluster by group so each group lands whole in one
+    // task, and write partitioned by group — N groups never become N
+    // sequential driver-looped jobs. The scan reads under the
+    // snapshot's cached union (groups spanning a schema-evolution
+    // boundary rewrite under it, late columns NULL), and DV'd inputs
+    // rewrite through the reader's mask: their dead rows fall out
+    // here, once, instead of at every later read.
     import org.apache.spark.sql.functions.{col, udf}
     val groupOf = spark.sparkContext.broadcast(
-      multi.zipWithIndex.flatMap { case (grp, gi) =>
-        grp.map(f => f.split('/').last -> gi) }.toMap)
+      multi.zipWithIndex.flatMap { case (grp, gi) => grp.map(_ -> gi) }
+        .toMap)
     val srcSchema = snapshotSchema(spark, table, latest, m0.files)
-    val src = scanOf(spark, root, multi.flatten, srcSchema)
-    val dataCols = src.columns.toSeq
-    require(!dataCols.contains("__grp") &&
-        !dataCols.contains("__b") && !dataCols.contains("__p"),
-      s"compact's internal columns collide with table columns of $table")
+    val src = withRowIds(
+      liveFrame(spark, table, latest, m0, multi.flatten), "_graft_file")
+    val dataCols = srcSchema.fieldNames.toSeq
+    require(!dataCols.contains("__grp"),
+      s"compact's internal column collides with a table column of $table")
     // groups that paid down merge-on-read debt: the inputs' manifest
     // arithmetic no longer bounds their output EXACTLY (the masked
     // rows may have held the min/max), so their outputs' stats and
@@ -1950,12 +1851,9 @@ object ManifestTable {
       if (grp.exists(hasDv)) colsInAll(counted)(m0.meta.zoneCols)
       else Seq.empty }
     val tracked = dvCols.flatten.distinct
-    // DV'd inputs rewrite through their mask (the dead rows fall out
-    // here, once, instead of at every subsequent read)
-    val grp = udf((b: String) => groupOf.value(b))
+    val grp = udf((f: String) => groupOf.value(f))
     val written = writeFiles(
-      maskDvs(spark, withFilePos(src), m0.meta.dvs, multi.flatten)
-        .withColumn("__grp", grp(col("__b")))
+      src.withColumn("__grp", grp(col("_graft_file")))
         .repartition(multi.size, col("__grp"))
         .select((dataCols.map(col) :+ col("__grp")): _*),
       table, s".c-$nonce-stage", tracked, partitionBy = Seq("__grp"))
@@ -2025,7 +1923,7 @@ object ManifestTable {
     // snapshot's schema
     val (v, after) = publishReplace(table, multi.flatten,
       staged.flatten.map(_._1), meta, m0.meta.dvs, what = "compacted",
-      seed = Some(SchemaSeed(latest, srcSchema, Seq(src.schema))))
+      seed = Some(SchemaSeed(latest, srcSchema, Seq(srcSchema))))
     (v, files.size, after)
   }
 
@@ -2060,15 +1958,13 @@ object ManifestTable {
     * partition tuple independently (multi-column layouts never merge
     * across partitions). Outputs inherit their tuple's pval lines
     * and zone stats re-derived by the rewrite's own tasks; DV'd
-    * inputs rewrite through
-    * their mask, paying down merge-on-read debt. Everything else is
-    * carried by reference: cost scales with the selected partition's
-    * bytes, not the table's. Same optimistic conflict rules as
-    * [[compact]]. */
+    * inputs rewrite through the reader's mask ([[liveFrame]]), paying
+    * down merge-on-read debt. Everything else is carried by
+    * reference: cost scales with the selected partition's bytes, not
+    * the table's. Same optimistic conflict rules as [[compact]]. */
   def compactPartition(spark: SparkSession, table: String,
       targetBytes: Long, partCol: String, value: Any)
       : (Long, Int, Int) = {
-    import org.apache.spark.sql.functions.col
     require(targetBytes > 0,
       s"targetBytes must be positive: $targetBytes")
     val (latest, m0) = snapshotOf(table)
@@ -2088,22 +1984,15 @@ object ManifestTable {
       fs.size > 1 || fs.exists(hasDv) }
     if (todo.isEmpty) return (latest, m0.files.size, m0.files.size)
     val nonce = newNonce()
-    // one cached footer-union for the snapshot instead of one
-    // mergeSchema job PER PARTITION GROUP in the driver loop below
-    val tableSchema = snapshotSchema(spark, table, latest, m0.files)
     val stagedAll = todo.zipWithIndex.map { case ((tuple, fs), gi) =>
-      val src = scanOf(spark, root, fs, tableSchema)
-      val dataCols = src.columns.toSeq
       val bytes = fs.map(f => Files.size(root.resolve(f))).sum
       val nOut = math.max(1L,
         (bytes + targetBytes - 1) / targetBytes).toInt
       val counted = fs.filterNot(f => m0.meta.rows.get(f).contains(0L))
       // the group's stats ride its rewrite job's tasks
       val (outs, meta) = writeStaged(
-        maskDvs(spark, withFilePos(src), m0.meta.dvs, fs)
-          .select(dataCols.map(col): _*),
-        table, s"cp-$nonce-$gi", Some(colsInAll(counted)(m0.meta.zoneCols)),
-        files = nOut)
+        liveFrame(spark, table, latest, m0, fs), table, s"cp-$nonce-$gi",
+        Some(colsInAll(counted)(m0.meta.zoneCols)), files = nOut)
       (outs, meta ++ FileMeta(pvals = outs.map(_ -> tuple).toMap))
     }
     val (v, after) = publishReplace(table, todo.flatMap(_._2),
@@ -2121,7 +2010,8 @@ object ManifestTable {
     * maps prune nothing); after the clustered rewrite each file owns
     * a contiguous Hilbert range ≈ a box in cluster-column space, and
     * range predicates on ANY cluster column skip files again. The
-    * rewrite applies and purges deletion vectors like [[compact]].
+    * rewrite reads through the reader's deletion-vector mask and
+    * purges the vectors, like [[compact]].
     *
     * Mechanics: each cluster column is scaled into [0, 2^bits) from
     * its snapshot min/max — metadata-only via [[statsBounds]] when
@@ -2156,8 +2046,7 @@ object ManifestTable {
     require(m0.files.nonEmpty,
       s"snapshot v$latest of $table lists no data files")
     val root = Paths.get(table)
-    val src = readLive(spark, root, m0.files, m0.meta.dvs,
-      snapshotSchema(spark, table, latest, m0.files))
+    val src = liveFrame(spark, table, latest, m0, m0.files)
     val dataCols = src.columns.toSeq
     require(clusterCols.forall(dataCols.contains),
       s"cluster columns $clusterCols must exist in $dataCols")
@@ -2389,8 +2278,8 @@ object ManifestTable {
     * schema is the union of the listed files' footers (the S16
     * read-side evolution contract applied to a snapshot: a commit
     * that ADDED columns reads as one frame with the older commits'
-    * missing columns as NULL, what `spark.read.option("mergeSchema",
-    * "true")` gives the same files). The union is the version's cached
+    * missing columns as NULL, what Spark's `mergeSchema` inference
+    * gives the same files). The union is the version's cached
     * [[snapshotSchema]], paid once per snapshot on the driver or
     * seeded by the publish, so building the frame starts no Spark
     * job. */

@@ -4392,8 +4392,6 @@ class PipelineSpec extends SparkSpec {
     }
     def filesOf(t: String, v: Long) = ManifestTable.snapshotFor(t, Some(v))
       .files.map(f => java.nio.file.Paths.get(t, f).toString)
-    def inferred(t: String, v: Long): StructType =
-      spark.read.parquet(filesOf(t, v): _*).schema
     def union(t: String, v: Long): StructType =
       spark.read.option("mergeSchema", "true")
         .parquet(filesOf(t, v): _*).schema
@@ -4408,14 +4406,14 @@ class PipelineSpec extends SparkSpec {
         "readChanges empty" ->
           ManifestTable.readChanges(spark, t, 2L, Some(2L))._1))
       assert(jobs == 0, s"$t: building the reads started $jobs jobs")
-      // read and readPruned* return the snapshot's footer union;
-      // readChanges keeps the first-file inference
+      // every read returns its snapshot's footer union; readChanges
+      // reads the toVersion snapshot's, as read(to) does
       val want = Map("read" -> union(t, 2L),
         "read v1" -> union(t, 1L),
         "readPruned" -> union(t, 2L),
         "readPrunedTyped" -> union(t, 2L),
-        "readChanges" -> spark.read.parquet(filesOf(t, 2L).last).schema,
-        "readChanges empty" -> inferred(t, 2L))
+        "readChanges" -> union(t, 2L),
+        "readChanges empty" -> union(t, 2L))
       frames.foreach { case (name, df) =>
         assert(df.schema == want(name), s"$t $name")
       }
@@ -4631,7 +4629,8 @@ class PipelineSpec extends SparkSpec {
       .map(f => java.nio.file.Paths.get(table, f).toString)
     assert(paths(t).size == 600)
     val (frames, jobs) = jobsOf(Seq(ManifestTable.read(spark, t),
-      ManifestTable.readPruned(spark, t, "k", 100L, 5000L)._1))
+      ManifestTable.readPruned(spark, t, "k", 100L, 5000L)._1,
+      ManifestTable.readChanges(spark, t, 1L)._1))
     assert(jobs == 0, s"building the 600-file reads started $jobs jobs")
     val parquet = spark.read.parquet(paths(t): _*)
     assert(frames.head.rdd.getNumPartitions ==
@@ -4659,14 +4658,206 @@ class PipelineSpec extends SparkSpec {
       Files.createLink(dir.resolve(s"f$i.parquet"), src)
       s"data/l${i / 1000}/f$i.parquet"
     }
+    // and manifests that list the first half, then all of them
     Files.createDirectories(java.nio.file.Paths.get(big, "_manifests"))
     Files.write(java.nio.file.Paths.get(big, "_manifests", "v1"),
+      links.take(5000).mkString("", "\n", "\n").getBytes("UTF-8"))
+    Files.write(java.nio.file.Paths.get(big, "_manifests", "v2"),
       links.mkString("", "\n", "\n").getBytes("UTF-8"))
     val (bigFrames, bigJobs) = jobsOf(Seq(ManifestTable.read(spark, big),
-      ManifestTable.readPruned(spark, big, "k", 0L, 10L)._1))
+      ManifestTable.readPruned(spark, big, "k", 0L, 10L)._1,
+      ManifestTable.readChanges(spark, big, 1L)._1))
     assert(bigJobs == 0,
       s"building the 10,000-file reads started $bigJobs jobs")
     assert(bigFrames.forall(_.columns.toSeq == Seq("k", "v")))
+    assert(ManifestScanFiles(bigFrames(2)).size == 5000)
+  }
+
+  test("rows are identified by manifest path: two live files sharing a " +
+      "basename keep their own deletion vectors through readChanges, " +
+      "DV DELETE and MERGE, and OPTIMIZE, and a table column named " +
+      "like a row id is refused") {
+    import graft.sources.ManifestTable
+    // one parquet file of (k, v) rows in position order, copied to
+    // `rel` under `table`
+    def place(table: String, rel: String, ks: Seq[Long], tag: String): Unit = {
+      val tmp = Files.createTempDirectory("graft-basename-src")
+        .resolve("w").toString
+      ks.map(k => (k, s"$tag$k")).toDF("k", "v").coalesce(1)
+        .write.parquet(tmp)
+      val st = Files.list(java.nio.file.Paths.get(tmp))
+      val part = try scala.jdk.CollectionConverters.IteratorHasAsScala(
+          st.iterator()).asScala
+        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
+        finally st.close()
+      val dst = java.nio.file.Paths.get(table, rel)
+      Files.createDirectories(dst.getParent)
+      Files.copy(part, dst)
+    }
+    // v1 lists data/c/part.parquet; v2 lists data/a/part.parquet (k
+    // 1..10, positions 0 and 1 deleted) and data/b/part.parquet (k
+    // 11..20): every file shares one basename
+    def mk(): String = {
+      val t = Files.createTempDirectory("graft-basename").toString
+      place(t, "data/c/part.parquet", Seq(100L), "c")
+      place(t, "data/a/part.parquet", 1L to 10L, "a")
+      place(t, "data/b/part.parquet", 11L to 20L, "b")
+      val m = java.nio.file.Paths.get(t, "_manifests")
+      Files.createDirectories(m)
+      Files.write(m.resolve("v1"), "data/c/part.parquet\n".getBytes("UTF-8"))
+      Files.write(m.resolve("v2"), Seq("#dv=data/a/part.parquet|0,1",
+          "data/a/part.parquet", "data/b/part.parquet")
+        .mkString("", "\n", "\n").getBytes("UTF-8"))
+      t
+    }
+    val model: Map[Long, String] =
+      ((3L to 10L).map(k => k -> s"a$k") ++
+        (11L to 20L).map(k => k -> s"b$k")).toMap
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, String)] =
+      df.select("k", "v").as[(Long, String)].collect().toSeq.sorted
+    def current(t: String) = rows(ManifestTable.read(spark, t))
+    // the change feed v1 -> v2: both files are added, each under its
+    // own vector
+    val feed = mk()
+    val (changes, added) = ManifestTable.readChanges(spark, feed, 1L)
+    // a DV DELETE of a key of data/a
+    val del = mk()
+    val (_, dRw, dDv, _) = ManifestTable.deleteRangeDv(spark, del, "k",
+      5L, 5L, dvMaxFraction = 0.5)
+    // a DV MERGE of a key of data/a
+    val mer = mk()
+    val (_, mRw, mDv, _) = ManifestTable.mergeByKeyDv(spark, mer,
+      Seq((6L, "new6")).toDF("k", "v"), "k", dvMaxFraction = 0.5)
+    // OPTIMIZE rewrites both files through their own vectors
+    val cp = mk()
+    ManifestTable.compact(spark, cp, Long.MaxValue / 2)
+    def dvs(t: String) = ManifestTable.snapshotFor(t, None).dvs
+      .filter(_._2.nonEmpty)
+    val got = Map(
+      "readChanges" -> ((added, rows(changes))),
+      "deleteRangeDv" -> ((dRw, dDv, dvs(del), current(del))),
+      "mergeByKeyDv" -> ((mRw, mDv, dvs(mer), current(mer))),
+      "compact" -> ((dvs(cp), current(cp))))
+    val want = Map(
+      "readChanges" -> ((2, model.toSeq.sorted)),
+      "deleteRangeDv" -> ((0, 1,
+        Map("data/a/part.parquet" -> Seq(0L, 1L, 4L)),
+        (model - 5L).toSeq.sorted)),
+      "mergeByKeyDv" -> ((0, 1,
+        Map("data/a/part.parquet" -> Seq(0L, 1L, 5L)),
+        model.updated(6L, "new6").toSeq.sorted)),
+      "compact" -> ((Map.empty[String, Seq[Long]], model.toSeq.sorted)))
+    val wrong = want.keys.toSeq.sorted.filter(k => got(k) != want(k))
+    assert(wrong.isEmpty,
+      wrong.map(k => s"$k: ${got(k)} != ${want(k)}").mkString("\n"))
+    // a table column named like a row id would shadow the scan's
+    // row ids: every scan that keys on them refuses it
+    val named = Files.createTempDirectory("graft-rowid-name").toString
+    ManifestTable.commitWithStats(spark.range(0L, 40L, 1L, 2)
+        .select($"id".as("k"), ($"id" * 2L).as("_graft_pos")),
+      named, append = false, "k")
+    Seq[() => Any](
+      () => ManifestTable.deleteRangeDv(spark, named, "k", 3L, 3L,
+        dvMaxFraction = 0.5),
+      () => ManifestTable.mergeByKeyDv(spark, named,
+        Seq((3L, 9L)).toDF("k", "_graft_pos"), "k", dvMaxFraction = 0.5),
+      () => ManifestTable.compact(spark, named, Long.MaxValue / 2)
+    ).foreach { op =>
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains("_graft_pos"), e.getMessage)
+    }
+    assert(ManifestTable.versions(named) == Seq(1L))
+  }
+
+  test("every ManifestTable scan plans through the graft-manifest scan: " +
+      "the change feed, DELETE, MERGE, the delta fallback and every " +
+      "OPTIMIZE execute no file-source scan and no _metadata column") {
+    import graft.sources.{ManifestScan, ManifestTable}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution,
+      SparkPlan}
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    object Plans
+        extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        plans.add(qe.executedPlan)
+    }
+    // 4 range-sliced files, k 1..400, zones and counts on k
+    def seeded(): String = {
+      val t = Files.createTempDirectory("graft-one-path").toString
+      ManifestTable.commitWithStats(spark.range(1L, 401L, 1L, 4)
+          .select($"id".as("k"), ($"id" % 5L).as("g")),
+        t, append = false, "k")
+      t
+    }
+    // the plans `op` executed: none scans a file source or reads
+    // `_metadata`, every V2 scan is the manifest scan, and (unless the
+    // op reads its table only through a checkpoint) one plan has one
+    def check(what: String, scans: Boolean = true)(op: => Any): Unit = {
+      plans.clear()
+      jobsOf(op) // drains the listener bus: every plan is delivered
+      val seen = scala.jdk.CollectionConverters.IteratorHasAsScala(
+        plans.iterator()).asScala.toSeq
+      assert(seen.nonEmpty, s"$what executed no plan")
+      seen.foreach { p =>
+        assert(Plans.collectWithSubqueries(p) {
+          case f: FileSourceScanExec => f }.isEmpty, s"$what:\n$p")
+        assert(!p.toString.contains("_metadata"), s"$what:\n$p")
+        assert(Plans.collectWithSubqueries(p) { case b: BatchScanExec => b }
+          .forall(_.scan.isInstanceOf[ManifestScan]), s"$what:\n$p")
+      }
+      assert(!scans || seen.exists(p => Plans.collectWithSubqueries(p) {
+        case b: BatchScanExec => b }.nonEmpty), s"$what: no manifest scan")
+    }
+    spark.listenerManager.register(listener)
+    try {
+      check("deleteRangeDv DV")(ManifestTable.deleteRangeDv(spark,
+        seeded(), "k", 150L, 152L, dvMaxFraction = 0.5))
+      check("deleteRangeDv copy-on-write")(ManifestTable.deleteRangeDv(
+        spark, seeded(), "k", 150L, 250L, dvMaxFraction = 0.0))
+      check("deleteRangeDv full purge")(ManifestTable.deleteRangeDv(spark,
+        seeded(), "k", 0L, 1000L, dvMaxFraction = 0.0))
+      val upd = Seq((5L, 9L), (150L, 9L), (1000L, 9L)).toDF("k", "g")
+      check("mergeByKeyDv DV")(ManifestTable.mergeByKeyDv(spark,
+        seeded(), upd, "k", dvMaxFraction = 0.5))
+      // the copy-on-write MERGE reads its inputs through a lazy
+      // checkpoint of their scan, so no executed plan shows the scan
+      check("mergeByKeyDv copy-on-write", scans = false)(
+        ManifestTable.mergeByKeyDv(spark, seeded(), upd, "k",
+          dvMaxFraction = 0.0))
+      val dl = seeded()
+      val dlf = ManifestTable.snapshotFor(dl, None).files
+      check("applyDeltaCommit fallback") {
+        val (_, _, rw) = ManifestTable.applyDeltaCommit(spark, dl,
+          Map(dlf(1) -> (0L until 60L)), Seq.empty, Map.empty, Map.empty,
+          Map.empty, Map.empty, Map.empty, dvMaxFraction = 0.5)
+        assert(rw == 1)
+      }
+      val cp = seeded()
+      ManifestTable.deleteRangeDv(spark, cp, "k", 10L, 12L,
+        dvMaxFraction = 0.5)
+      check("compact with a DV group")(
+        ManifestTable.compact(spark, cp, Long.MaxValue / 2))
+      val pt = Files.createTempDirectory("graft-one-path-part").toString
+      for (c <- 0 to 1)
+        (1L to 90L).map(i => (i + 90 * c, i % 3)).toDF("k", "bucket")
+          .coalesce(1).write.format("graft-manifest").option("path", pt)
+          .option("partitionColumns", "bucket").option("statsColumns", "k")
+          .mode("append").save()
+      check("compactPartition")(ManifestTable.compactPartition(spark, pt,
+        Long.MaxValue / 2, "bucket", 0L))
+      check("compactClustered")(ManifestTable.compactClustered(spark,
+        seeded(), Long.MaxValue / 2, Seq("k", "g")))
+      val ch = seeded()
+      ManifestTable.commit(spark.range(500L, 520L).select($"id".as("k"),
+        lit(1L).as("g")), ch, append = true)
+      check("readChanges")(
+        ManifestTable.readChanges(spark, ch, 1L)._1.collect())
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("a graft-manifest write of a non-flat frame is refused while " +

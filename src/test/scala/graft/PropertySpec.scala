@@ -963,18 +963,23 @@ class PropertySpec extends SparkSpec {
       dvMaxFraction = 0.5)
     val snap = ManifestTable.snapshotFor(table, None)
     assert(snap.dvs.values.count(_.nonEmpty) >= 2, snap.dvs.keys)
-    // the reference: Spark's own scan of the files, minus the DV rows
+    // the reference: Spark's own scan of each file, its rows keyed by
+    // (manifest path, row index), minus the DV rows
     val dead = snap.dvs.toSeq.flatMap { case (f, ps) =>
-      ps.map(p => (f.split('/').last, p)) }.toDF("__b", "__p")
-    val reference = spark.read.parquet(snap.files
-        .map(f => java.nio.file.Paths.get(table, f).toString): _*)
-      .select(col("*"), col("_metadata.file_name").as("__b"),
-        col("_metadata.row_index").as("__p"))
-      .join(dead, Seq("__b", "__p"), "left_anti")
-      .drop("__b", "__p").cache()
+      ps.map(p => (f, p)) }.toDF("__f", "__p")
+    val reference = snap.files.map(f => spark.read
+        .parquet(java.nio.file.Paths.get(table, f).toString)
+        .select(col("*"), lit(f).as("__f"),
+          col("_metadata.row_index").as("__p")))
+      .reduce(_ unionByName _)
+      .join(dead, Seq("__f", "__p"), "left_anti").cache()
     val packed = ManifestTable.read(spark, table)
     val split = spark.read.format("graft-manifest").option("path", table)
       .option("splitBytes", "8192").load()
+    // the scan's row ids, which DML scans key their vectors on
+    def rowIds(df: org.apache.spark.sql.DataFrame, p: Column) =
+      df.select(col("*"), col("_graft_file"), col("_graft_pos")).filter(p)
+        .select("_graft_file", "_graft_pos").as[(String, Long)].collect()
     def partsOf(df: org.apache.spark.sql.DataFrame) =
       df.queryExecution.executedPlan.collect {
         case b: org.apache.spark.sql.execution.datasources.v2
@@ -1016,9 +1021,15 @@ class PropertySpec extends SparkSpec {
         col("k") >= Long.MinValue && col("k") <= Long.MaxValue)
     preds.foreach { p =>
       val want = reference.filter(p).select("id").as[Long].collect().toSet
-      for (df <- Seq(packed, split))
+      val wantIds = reference.filter(p).select("__f", "__p")
+        .as[(String, Long)].collect().toSet
+      for (df <- Seq(packed, split)) {
         assert(df.filter(p).select("id").as[Long].collect().toSet == want,
           s"$p")
+        val ids = rowIds(df, p)
+        assert(ids.length == wantIds.size && ids.toSet == wantIds,
+          s"row ids under $p")
+      }
       // the limit proof only counts rows once no filter can drop them
       val got = packed.filter(p).limit(7).select("id").as[Long].collect()
       assert(got.length == math.min(7, want.size) && got.forall(want),
